@@ -214,7 +214,7 @@ LATERAL TABLE(FEDERATED_SEARCH('stream_corpus_ix', 3, `qv`));"""
 
     // the GRAPH-family twin (judge r16 task 1): the identical three-verb
     // change set on an 'hnsw' registration drives the persisted graphs
-    // AND the docs sidecar through hnswPayloadCdcStream; efSearch =
+    // AND the docs sidecar through cdcStream(HnswSearch.WithDocs); efSearch =
     // numCandidates ≥ corpus makes the beam exhaustive per segment, so
     // the same strict exact-top-3 gate covers the reference's actual
     // Atlas index family under maintenance. Single-phase on the board

@@ -485,7 +485,8 @@ private[graft] object EntryQueriesIndex {
       val emb = t(s, dir, "embeddings")
       // tag v2: the pristine layout gained the post-build consolidation —
       // a stale unconsolidated store under the old tag must not serve
-      val store = deleteLifecycleStore(s, dir, "ivfdel_v2") { p =>
+      val store = deleteLifecycleStore(s, dir, "ivfdel_v2",
+          graft.operators.IvfSearch) { p =>
         graft.operators.IvfSearch.writeIndex(emb, "vec_id", "embedding",
           p, nList = 8)
         // consolidate the fresh store once (build-then-optimize): the
@@ -493,10 +494,7 @@ private[graft] object EntryQueriesIndex {
         // downstream clone/serve/compact pays the listing; one file per
         // cell is the shape the lifecycle should start from
         graft.operators.IvfSearch.compactIndex(s, p)
-      }((p, ids) => graft.operators.IvfSearch.deleteFromIndex(s, p, ids,
-          "vec_id"),
-        (df, p) => graft.operators.IvfSearch.appendToIndex(df, "vec_id",
-          "embedding", p, epoch = 1L))
+      }
       val queries = annQueries(s, dir)
       def serve(phase: String) =
         graft.operators.IvfSearch.searchIndex(s, store, queries,
@@ -610,34 +608,16 @@ private[graft] object EntryQueriesIndex {
     // (the 4x near-exact point of the compressed at-rest ladder — FAISS
     // IVF,SQ8: coarse cells prune directories, per-dimension affine
     // codes drive the scan, exact re-rank from the source corpus)
-    "q_ivfsq_index_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val queries = annQueries(s, dir)
-      val approx = graft.operators.IvfSqIndex.searchIndex(s,
-        ivfSqIndexStore(s, dir), queries,
-        "query_id", "qv", emb, "vec_id", "embedding",
-        k = 3, metric = "dot", nProbe = 8, numCandidates = 200)
-      VectorSearch.recallContract(approx, annGroundTruth(s, dir), queries,
-        "query_id", "match_id", 1)
-        .orderBy("query_id")
-    }),
+    "q_ivfsq_index_recall" -> ((s, dir) => compressedServe(s, dir, "ivfsq",
+      graft.operators.IvfSqIndex, filtered = false)),
 
     // RADIUS from the IVF-PQ store: reconstructed-code pre-pass at the
     // lossy family's wider margin, exact re-score at the true threshold
     // (precision 1.0 by construction); probes the ONE store
     // q_ivfpq_index_recall built. Completes range_search across the
     // at-rest ladder: ivf / ivfsq / ivfpq.
-    "q_ivfpq_radius_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val queries = annQueries(s, dir)
-      val approx = graft.operators.IvfPqIndex.radiusIndex(s,
-        ivfPqIndexStore(s, dir), queries, "query_id", "qv",
-        emb, "vec_id", "embedding",
-        threshold = 0.3, metric = "cosine", nProbe = 12)
-      VectorSearch.radiusRecallContract(approx, radiusGroundTruth(s, dir),
-        queries, "query_id", "match_id", minFrac = 0.4)
-        .orderBy("query_id")
-    }),
+    "q_ivfpq_radius_recall" -> ((s, dir) =>
+      compressedRadius(s, dir, "ivfpq", graft.operators.IvfPqIndex)),
 
     // ANN scoreDetails (the vector-side q_bm25_explain — Atlas
     // $vectorSearch explain/searchMeta): the serve's own observability
@@ -659,17 +639,8 @@ private[graft] object EntryQueriesIndex {
     // at the true threshold — precision 1.0 by construction (subset of
     // exact is pinned inside radiusRecallContract's precision gate),
     // recall contracted like q_ivf_radius_recall at the same nProbe.
-    "q_ivfsq_radius_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val queries = annQueries(s, dir)
-      val approx = graft.operators.IvfSqIndex.radiusIndex(s,
-        ivfSqIndexStore(s, dir), queries, "query_id", "qv",
-        emb, "vec_id", "embedding",
-        threshold = 0.3, metric = "cosine", nProbe = 12)
-      VectorSearch.radiusRecallContract(approx, radiusGroundTruth(s, dir),
-        queries, "query_id", "match_id", minFrac = 0.4)
-        .orderBy("query_id")
-    }),
+    "q_ivfsq_radius_recall" -> ((s, dir) =>
+      compressedRadius(s, dir, "ivfsq", graft.operators.IvfSqIndex)),
 
     // RADIUS on an hnsw registration, served from the GRAPH (previously
     // the one family whose radius fell back to an LSH raw-vector
@@ -705,17 +676,8 @@ private[graft] object EntryQueriesIndex {
     // (the composed 100 TB layout — coarse cells prune directories, PQ
     // residual codes compress the scan ~32x, exact re-rank from the
     // source corpus; recall contract is the hash gate)
-    "q_ivfpq_index_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val queries = annQueries(s, dir)
-      val approx = graft.operators.IvfPqIndex.searchIndex(s,
-        ivfPqIndexStore(s, dir), queries,
-        "query_id", "qv", emb, "vec_id", "embedding",
-        k = 3, metric = "dot", nProbe = 8, numCandidates = 200)
-      VectorSearch.recallContract(approx, annGroundTruth(s, dir), queries,
-        "query_id", "match_id", 1)
-        .orderBy("query_id")
-    }),
+    "q_ivfpq_index_recall" -> ((s, dir) => compressedServe(s, dir, "ivfpq",
+      graft.operators.IvfPqIndex, filtered = false)),
 
     // --- FILTERED IVF-PQ serve: payload pushdown on the compressed store --
     // The code store carries `label` as payload, so the predicate
@@ -724,43 +686,15 @@ private[graft] object EntryQueriesIndex {
     // ~32x fewer bytes). nProbe raised for the ~1/4-selective predicate
     // (the 1/selectivity budget rule); contract against the exact
     // FILTERED ground truth.
-    "q_ivfpq_filtered_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfpqf_index_" +
-        indexTag(dir)
-      if (!graft.operators.FsUtil.exists(s, s"$path/stats/_SUCCESS"))
-        graft.operators.IvfPqIndex.writeIndex(emb, "vec_id", "embedding",
-          path, nList = 16, m = 8, kCodes = 16, payload = Seq("label"))
-      val queries = annQueries(s, dir)
-      val approx = graft.operators.IvfPqIndex.searchIndex(s, path, queries,
-        "query_id", "qv", emb, "vec_id", "embedding",
-        k = 3, metric = "dot", nProbe = 12, numCandidates = 200,
-        filter = FilteredPred)
-      VectorSearch.recallContract(approx, annFilteredGroundTruth(s, dir),
-        queries, "query_id", "match_id", 1)
-        .orderBy("query_id")
-    }),
+    "q_ivfpq_filtered_recall" -> ((s, dir) => compressedServe(s, dir,
+      "ivfpq", graft.operators.IvfPqIndex, filtered = true)),
 
     // --- FILTERED IVF-SQ serve: payload pushdown on the SQ8 store ---------
     // The q_ivfpq_filtered_recall twin at the near-exact 4x point of the
     // compressed ladder: `label` rides the code rows, the predicate
     // evaluates inside the pruned affine scan, survivors re-rank exact.
-    "q_ivfsq_filtered_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfsqf_index_" +
-        indexTag(dir)
-      if (!graft.operators.FsUtil.exists(s, s"$path/stats/_SUCCESS"))
-        graft.operators.IvfSqIndex.writeIndex(emb, "vec_id", "embedding",
-          path, nList = 16, payload = Seq("label"))
-      val queries = annQueries(s, dir)
-      val approx = graft.operators.IvfSqIndex.searchIndex(s, path, queries,
-        "query_id", "qv", emb, "vec_id", "embedding",
-        k = 3, metric = "dot", nProbe = 12, numCandidates = 200,
-        filter = FilteredPred)
-      VectorSearch.recallContract(approx, annFilteredGroundTruth(s, dir),
-        queries, "query_id", "match_id", 1)
-        .orderBy("query_id")
-    }),
+    "q_ivfsq_filtered_recall" -> ((s, dir) => compressedServe(s, dir,
+      "ivfsq", graft.operators.IvfSqIndex, filtered = true)),
 
     // --- index DELETE protocol, IVF-SQ (contract) --------------------------
     // q_ivfpq_delete's twin on the SQ8 store: same lifecycle, same gates
@@ -769,19 +703,12 @@ private[graft] object EntryQueriesIndex {
     // a tombstone leak surfaces instead of being join-masked).
     "q_ivfsq_delete" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      compressedDeleteLifecycle(s, dir, "ivfsqdel") { p =>
+      compressedDeleteLifecycle(s, dir, "ivfsqdel",
+          graft.operators.IvfSqIndex) { p =>
         graft.operators.IvfSqIndex.writeIndex(emb, "vec_id", "embedding",
           p, nList = 8)
         graft.operators.IvfSqIndex.compactIndex(s, p)
-      }(
-        (p, ids) => graft.operators.IvfSqIndex.deleteFromIndex(s, p, ids,
-          "vec_id"),
-        (df, p) => graft.operators.IvfSqIndex.appendToIndex(df, "vec_id",
-          "embedding", p, epoch = 1L),
-        p => graft.operators.IvfSqIndex.compactIndex(s, p),
-        (p, queries) => graft.operators.IvfSqIndex.searchIndex(s, p,
-          queries, "query_id", "qv", emb, "vec_id", "embedding",
-          k = 3, metric = "dot", nProbe = 8, numCandidates = 200))
+      }
     }),
 
     // --- index DELETE protocol, IVF-PQ (contract) --------------------------
@@ -796,20 +723,13 @@ private[graft] object EntryQueriesIndex {
     // over the SURVIVING corpus.
     "q_ivfpq_delete" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      compressedDeleteLifecycle(s, dir, "ivfpqdel") { p =>
+      compressedDeleteLifecycle(s, dir, "ivfpqdel",
+          graft.operators.IvfPqIndex) { p =>
         graft.operators.IvfPqIndex.writeIndex(emb, "vec_id", "embedding",
           p, nList = 8, m = 8, kCodes = 16)
         // consolidate once (build-then-optimize, the q_ivf_delete rule)
         graft.operators.IvfPqIndex.compactIndex(s, p)
-      }(
-        (p, ids) => graft.operators.IvfPqIndex.deleteFromIndex(s, p, ids,
-          "vec_id"),
-        (df, p) => graft.operators.IvfPqIndex.appendToIndex(df, "vec_id",
-          "embedding", p, epoch = 1L),
-        p => graft.operators.IvfPqIndex.compactIndex(s, p),
-        (p, queries) => graft.operators.IvfPqIndex.searchIndex(s, p,
-          queries, "query_id", "qv", emb, "vec_id", "embedding",
-          k = 3, metric = "dot", nProbe = 8, numCandidates = 200))
+      }
     }),
 
     // --- SQL surface: CUBE grouping sets with grouping() flags ------------

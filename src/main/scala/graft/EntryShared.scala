@@ -633,19 +633,17 @@ private[graft] object EntryShared {
     * build runs once per corpus content), tombstone every label%5==3
     * vector at the store's current epoch, then LWW-revive the even-id
     * half by re-ingesting at a later epoch. One implementation of the
-    * delete/revive recipe so a sixth index family adds a serve fn and
-    * knobs, not a fourth copy of the harness.
+    * delete/revive recipe over any celled store.
     */
   def deleteLifecycleStore(s: SparkSession, dir: String, tag: String,
-      doneMarker: String = "stats/_SUCCESS")(build: String => Unit)(
-      delete: (String, DataFrame) => Any,
-      revive: (DataFrame, String) => Any): String = {
+      store: graft.operators.CelledStore)(build: String => Unit): String = {
     val emb = t(s, dir, "embeddings")
-    val store = clonedStore(s, dir, tag, doneMarker)(build)
-    delete(store, emb.filter(col("label") % 5 === 3).select("vec_id"))
-    revive(emb.filter(col("label") % 5 === 3 && col("vec_id") % 2 === 0),
-      store)
-    store
+    val path = clonedStore(s, dir, tag, "stats/_SUCCESS")(build)
+    store.deleteFromIndex(s, path,
+      emb.filter(col("label") % 5 === 3).select("vec_id"), "vec_id")
+    store.appendToIndex(emb.filter(col("label") % 5 === 3 && col("vec_id") % 2 === 0),
+      "vec_id", "embedding", path, epoch = 1L)
+    path
   }
 
   /** The full contract-gated delete lifecycle for a LOSSY/compressed
@@ -658,14 +656,11 @@ private[graft] object EntryShared {
     * corpus). The serve's re-rank corpus is deliberately the FULL table
     * so a tombstone leak surfaces instead of being join-masked.
     */
-  def compressedDeleteLifecycle(s: SparkSession, dir: String,
-      tag: String)(build: String => Unit)(
-      delete: (String, DataFrame) => Any,
-      revive: (DataFrame, String) => Any,
-      compact: String => Any,
-      serve: (String, DataFrame) => DataFrame): DataFrame = {
+  def compressedDeleteLifecycle(s: SparkSession, dir: String, tag: String,
+      store: graft.operators.CompressedCelledStore[_])(
+      build: String => Unit): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val store = deleteLifecycleStore(s, dir, tag)(build)(delete, revive)
+    val path = deleteLifecycleStore(s, dir, tag, store)(build)
     val queries = annQueries(s, dir)
     val surviving = emb.filter(col("label") % 5 =!= 3 ||
       col("vec_id") % 2 === 0)
@@ -675,7 +670,9 @@ private[graft] object EntryShared {
     val dead = emb.filter(col("label") % 5 === 3 && col("vec_id") % 2 =!= 0)
       .select(col("vec_id").as("match_id"))
     def phaseDf(phase: String) = {
-      val approx = serve(store, queries).localCheckpoint()
+      val approx = store.searchIndex(s, path, queries, "query_id", "qv", emb,
+        "vec_id", "embedding", k = 3, metric = "dot", nProbe = 8,
+        numCandidates = 200).localCheckpoint()
       val noDead = queries.select("query_id").join(
           approx.join(dead, Seq("match_id"), "left_semi")
             .select(col("query_id"), lit(false).as("__hit")).distinct(),
@@ -689,7 +686,7 @@ private[graft] object EntryShared {
           col("recall_ok"), col("no_deleted"))
     }
     val served = phaseDf("served").localCheckpoint()
-    compact(store)
+    store.compactIndex(s, path)
     served.unionByName(phaseDf("compacted"))
       .orderBy("phase", "query_id")
   }
@@ -710,43 +707,67 @@ private[graft] object EntryShared {
     path
   }
 
-  /** Its IVF twin: index once (content-addressed path; centroids are
-    * written last, so their _SUCCESS implies the whole index landed),
-    * probed by q_ivf_index_recall AND q_ivf_radius_recall — the
+  /** The celled twins: one build-once store per family ("ivf", "ivfsq",
+    * "ivfpq") over the embeddings table — content-addressed path; stats
+    * are written last, so their _SUCCESS implies the whole index landed —
+    * probed by q_<family>_index_recall AND q_<family>_radius_recall: the
     * benchmark times the PROBES, never a rebuild.
     */
-  def ivfIndexStore(s: SparkSession, dir: String): String = {
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_index_" +
-      indexTag(dir)
-    if (!graft.operators.FsUtil.exists(s, s"$path/centroids/_SUCCESS"))
-      graft.operators.IvfSearch.writeIndex(t(s, dir, "embeddings"),
-        "vec_id", "embedding", path, nList = 16)
-    path
-  }
-
-  /** The SQ8 twin of [[ivfIndexStore]]: one build-once store probed by
-    * q_ivfsq_index_recall AND q_ivfsq_radius_recall.
-    */
-  def ivfSqIndexStore(s: SparkSession, dir: String): String = {
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfsq_index_" +
+  def celledIndexStore(s: SparkSession, dir: String, family: String,
+      store: graft.operators.CelledStore): String = {
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft_${family}_index_" +
       indexTag(dir)
     if (!graft.operators.FsUtil.exists(s, s"$path/stats/_SUCCESS"))
-      graft.operators.IvfSqIndex.writeIndex(t(s, dir, "embeddings"),
-        "vec_id", "embedding", path, nList = 16)
+      store.buildIndex(t(s, dir, "embeddings"), "vec_id", "embedding", path,
+        nList = 16, dim = 64, payload = Nil)
     path
+  }
+  def ivfIndexStore(s: SparkSession, dir: String): String =
+    celledIndexStore(s, dir, "ivf", graft.operators.IvfSearch)
+
+  /** A compressed celled family's probe of the embeddings corpus, exact
+    * re-rank from the source table — the q_<family>_index_recall serve
+    * (`filtered`: the q_<family>_filtered_recall one over a store
+    * carrying `label` as payload, the predicate riding the pruned scan).
+    */
+  def compressedServe(s: SparkSession, dir: String, family: String,
+      store: graft.operators.CompressedCelledStore[_],
+      filtered: Boolean): DataFrame = {
+    val emb = t(s, dir, "embeddings")
+    val path = if (!filtered) celledIndexStore(s, dir, family, store) else {
+      val p = s"${System.getProperty("java.io.tmpdir")}/graft_${family}f_index_" +
+        indexTag(dir)
+      if (!graft.operators.FsUtil.exists(s, s"$p/stats/_SUCCESS"))
+        store.buildIndex(emb, "vec_id", "embedding", p, nList = 16, dim = 64,
+          payload = Seq("label"))
+      p
+    }
+    val queries = annQueries(s, dir)
+    val approx = store.searchIndex(s, path, queries, "query_id", "qv", emb,
+      "vec_id", "embedding", k = 3, metric = "dot",
+      nProbe = if (filtered) 12 else 8, numCandidates = 200,
+      filter = if (filtered) FilteredPred else lit(true))
+    VectorSearch.recallContract(approx,
+      if (filtered) annFilteredGroundTruth(s, dir) else annGroundTruth(s, dir),
+      queries, "query_id", "match_id", 1)
+      .orderBy("query_id")
   }
 
-  /** The PQ twin: one build-once store probed by q_ivfpq_index_recall
-    * AND q_ivfpq_radius_recall.
+  /** A compressed celled family's radius over its build-once store — the
+    * q_<family>_radius_recall serve, contracted like q_ivf_radius_recall.
     */
-  def ivfPqIndexStore(s: SparkSession, dir: String): String = {
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_index_" +
-      indexTag(dir)
-    if (!graft.operators.FsUtil.exists(s, s"$path/centroids/_SUCCESS"))
-      graft.operators.IvfPqIndex.writeIndex(t(s, dir, "embeddings"),
-        "vec_id", "embedding", path, nList = 16, m = 8, kCodes = 16)
-    path
+  def compressedRadius(s: SparkSession, dir: String, family: String,
+      store: graft.operators.CompressedCelledStore[_]): DataFrame = {
+    val emb = t(s, dir, "embeddings")
+    val queries = annQueries(s, dir)
+    val approx = store.radiusIndex(s, celledIndexStore(s, dir, family, store),
+      queries, "query_id", "qv", emb, "vec_id", "embedding",
+      threshold = 0.3, metric = "cosine", nProbe = 12)
+    VectorSearch.radiusRecallContract(approx, radiusGroundTruth(s, dir),
+      queries, "query_id", "match_id", minFrac = 0.4)
+      .orderBy("query_id")
   }
+
 
   /** A FRESH mutable copy of a content-addressed pristine store: `build`
     * runs once per (corpus content, tag) — the index-once discipline

@@ -155,25 +155,13 @@ object BqSearch {
 
     val coded = encode(corpus, cId, cVec, model)
 
-    val qRows = queries
-      .select(col(qId).cast("long"), col(qVec).cast("array<float>"))
-      .filter(col(qId).isNotNull && col(qVec).isNotNull)
-      .limit(maxQueries + 1).collect()
-    require(qRows.length <= maxQueries,
-      s"bqTopK: query batch exceeds maxQueries=$maxQueries — split the batch")
-    require(qRows.length.toLong * numCandidates <= 10000000L,
-      s"bqTopK: |queries|*numCandidates = ${qRows.length.toLong * numCandidates} " +
-        "exceeds 10M (per-task heap bound) — split the batch or narrow the budget")
-
+    val qRows = PqSearch.collectQueries(queries, qId, qVec, maxQueries,
+      numCandidates, "bqTopK").toSeq
     val qCoded =
       if (model.words == 1)
-        qRows.toSeq.map { r =>
-          (r.getLong(0), encodeVec(model, r.getSeq[Float](1).toArray)(0))
-        }.toDF(qId, "__qcode")
+        qRows.map { case (id, q) => (id, encodeVec(model, q)(0)) }.toDF(qId, "__qcode")
       else
-        qRows.toSeq.map { r =>
-          (r.getLong(0), encodeVec(model, r.getSeq[Float](1).toArray))
-        }.toDF(qId, "__qcode")
+        qRows.map { case (id, q) => (id, encodeVec(model, q)) }.toDF(qId, "__qcode")
 
     val candidates = coded
       .crossJoin(broadcast(qCoded))

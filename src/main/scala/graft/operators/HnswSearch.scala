@@ -42,7 +42,71 @@ import graft.operators.VectorSearch.scoreF32
   * so shards stay under it (at 100 TB: shards of ~1-2M vectors, i.e.
   * nShards in the tens of thousands, each an independent task).
   */
-object HnswSearch {
+object HnswSearch extends MaintainedStore[(Long, Int)] {
+
+  /** Graph-only stores need no self-tombstone on upsert: serve-time
+    * last-writer-wins ([[searchIndex]]) lets a later epoch's vector
+    * supersede the id, so tombstones carry ONLY true deletes — keeping
+    * the live-tombstone count (which widens the serve beam) at
+    * actual-delete traffic, not upsert traffic.
+    */
+  def upsertTombstones: Boolean = false
+  def append(df: DataFrame, idCol: String, valueCol: String, path: String,
+      epoch: Long): (Long, Int) = appendToIndex(df, idCol, valueCol, path, epoch)
+  def delete(spark: org.apache.spark.sql.SparkSession, path: String,
+      ids: DataFrame, idCol: String, epoch: Long): Unit =
+    deleteFromIndex(spark, path, ids, idCol, Some(epoch))
+  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
+      excludeEpoch: Long): (Long, Long) = compactIndex(spark, path, excludeEpoch)
+
+  /** An HNSW store that also keeps a `corpus/` docs SIDECAR (id →
+    * content plus every payload column, epoch-partitioned next to the
+    * graphs), so a maintained registration resolves hits WITHOUT the
+    * original source frame (the SQL facade's cdc=true contract). UNLIKE
+    * the graph-only store, EVERY changed id tombstones — not only true
+    * deletes — because the sidecar has no serve-time LWW: an upsert must
+    * kill its old sidecar row the way the celled stores do, so a
+    * tombstone-filtered scan of `corpus/` is exactly the live corpus
+    * with no per-statement LWW aggregate (the 100 TB posture: resolution
+    * joins a pruned scan, never a full-corpus group-by). Rent: upsert
+    * traffic widens the graph serve beam like delete traffic until the
+    * next [[compactIndex]], which is sidecar-aware (it applies the
+    * tombstone rule to `corpus/` in the same lease), so dead sidecar
+    * rows cannot resurrect past a compaction.
+    */
+  object WithDocs extends MaintainedStore[(Long, Int)] {
+    def upsertTombstones: Boolean = true
+    def delete(spark: org.apache.spark.sql.SparkSession, path: String,
+        ids: DataFrame, idCol: String, epoch: Long): Unit =
+      HnswSearch.delete(spark, path, ids, idCol, epoch)
+    def compact(spark: org.apache.spark.sql.SparkSession, path: String,
+        excludeEpoch: Long): (Long, Long) = compactIndex(spark, path, excludeEpoch)
+
+    /** The graph append, then the sidecar rows at the SAME epoch: same
+      * columns as the base corpus (id + payload) AT the base types, the
+      * vector re-cast exactly as the base write cast it. The sidecar
+      * append is schema-checked against the base corpus LOUDLY — a
+      * change record missing a payload column would otherwise strand
+      * half a row. An at-least-once replay overwrites its own epoch
+      * partition (epochWrite's dynamic-overwrite contract), so the pair
+      * stays idempotent.
+      */
+    def append(df: DataFrame, idCol: String, valueCol: String, path: String,
+        epoch: Long): (Long, Int) = {
+      val appended = appendToIndex(df, idCol, valueCol, path, epoch)
+      val baseSchema = df.sparkSession.read.parquet(s"$path/corpus").schema
+      val base = baseSchema.fieldNames.filterNot(_ == "epoch").toSeq
+      IndexMaintenance.requirePayloadCompatible(baseSchema, df.schema,
+        base.filterNot(c => c == "id" || c == valueCol), path)
+      val docs = df.select(base.map {
+        case "id" => col(idCol).cast("long").as("id")
+        case c if c == valueCol => col(valueCol).cast("array<float>").as(c)
+        case c => col(c)
+      }: _*).withColumn("epoch", lit(epoch))
+      IndexMaintenance.epochWrite(docs, Seq("epoch"), epoch, s"$path/corpus")
+      appended
+    }
+  }
 
   /** splitmix64-derived node level: floor(-ln(u) * mL), u in (0,1] from
     * the id's hash — no RNG state, so the level of a node is a pure
@@ -551,7 +615,7 @@ object HnswSearch {
       IndexMaintenance.epochWrite(nodes, Seq("shard", "epoch"), epoch,
         s"$path/nodes")
     }
-    // per-batch caller (hnswIndexStream / hnswCdcStream): this batch's
+    // per-batch caller (the maintenance streams): this batch's
     // checkpoint blocks release now, not at a future GC
     IndexMaintenance.unpersistCheckpoint(slim)
     IndexMaintenance.unpersistCheckpoint(nodes)
@@ -644,12 +708,7 @@ object HnswSearch {
       ids: DataFrame, idCol: String, epoch: Option[Long] = None): Long = {
     require(FsUtil.exists(spark, s"$path/_meta"),
       s"hnsw index at '$path' does not exist or is unreachable")
-    IndexMaintenance.withStoreLock(spark, path) {
-      IndexMaintenance.recoverSwap(spark, s"$path/nodes")
-      val e = epoch.getOrElse(Tombstones.maxEpochIn(spark, s"$path/nodes"))
-      Tombstones.write(spark, path, ids, idCol, e)
-      e
-    }
+    Tombstones.deleteUnderLock(spark, path, "nodes", ids, idCol, epoch)
   }
 
   /** Search a persisted index: graphs restore per shard from stored

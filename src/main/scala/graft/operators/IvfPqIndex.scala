@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TopKHeap
-import graft.operators.VectorSearch.{scoreCol, scoreF32}
+import graft.operators.VectorSearch.scoreF32
 
 /** IVF-PQ: the composed at-rest ANN layout for corpora where BOTH scan
   * pruning and memory compression matter (Jégou 2011 §V; the layout
@@ -22,61 +21,99 @@ import graft.operators.VectorSearch.{scoreCol, scoreF32}
   * `numCandidates` joins the source corpus by id — at scale a
   * point-lookup join against the primary store.
   */
-object IvfPqIndex {
+object IvfPqIndex extends CompressedCelledStore[Array[Int]] {
+
+  val reservedCols: Set[String] =
+    Set("id", "vec", "cell", "epoch", "codes", "v", "rv")
+  protected def codeRow: Encoder[(Long, Array[Int], Int)] =
+    Encoders.product[(Long, Array[Int], Int)]
+  /** PQ is LOSSY (unlike SQ8's half-step error), so the radius margin
+    * defaults wide.
+    */
+  protected def radiusMargin: Double = 0.2
+  protected def codecAt(spark: SparkSession, path: String,
+      centroids: Array[Array[Float]]): CodeScan[Array[Int]] =
+    PqCodec(loadCodebooks(spark, path), centroids)
+
+  private[graft] def buildIndex(corpus: DataFrame, cId: String, cVec: String,
+      path: String, nList: Int, dim: => Int, payload: Seq[String]): Unit =
+    writeIndex(corpus, cId, cVec, path, nList = nList, payload = payload)
+
+  /** Residual PQ codes: a vector is coded as the PQ codes of its
+    * residual against its cell centroid; decoding reconstructs centroid +
+    * residual sub-centroids; the scan scores codes through one ADC lookup
+    * table per (query, probed cell), built from the query's residual
+    * (l2 decomposes over residual subspaces; dot(q, c + r) =
+    * dot(q, c) + dot(q, r) — the LUT on q against the residual books plus
+    * a per-cell constant, so scores stay comparable ACROSS cells).
+    */
+  private final case class PqCodec(cb: PqSearch.Codebooks,
+      centroids: Array[Array[Float]]) extends CodeScan[Array[Int]] {
+    def width: Int = centroids.headOption.map(_.length).getOrElse(cb.m * cb.dsub)
+    def encode(v: Column, cell: Column): Column =
+      PqSearch.encodeUdf(cb)(residualUdf(centroids)(v, cell))
+    def decode(codes: Column, cell: Column): Column = {
+      val cs = centroids; val books = cb
+      udf((codes: Seq[Int], cell: Int) => {
+        val base = cs(cell)
+        val out = java.util.Arrays.copyOf(base, base.length)
+        var s = 0
+        while (s < books.m) {
+          val book = books.books(s)(codes(s))
+          var j = 0
+          while (j < books.dsub) { out(s * books.dsub + j) += book(j); j += 1 }
+          s += 1
+        }
+        out
+      }).apply(codes, cell)
+    }
+    def prepare(qVecs: Array[Array[Float]], probes: Array[Array[Int]],
+        metric: String): RowKernel[Array[Int]] = {
+      val m = cb.m; val kCodes = cb.kCodes
+      val adcMetric = if (metric == "l2") "l2" else "dot"
+      val lutOf = new scala.collection.mutable.HashMap[(Int, Int), (Array[Double], Double)]
+      for (qi <- qVecs.indices; cell <- probes(qi)) {
+        val q = qVecs(qi)
+        val base = if (adcMetric == "l2")
+          Array.tabulate(width)(i => q(i) - centroids(cell)(i)) else q
+        val lut = PqSearch.adcLut(base, cb, adcMetric)
+        val const = if (adcMetric == "dot") scoreF32("dot", q, centroids(cell)) else 0.0
+        lutOf((qi, cell)) = (lut, const)
+      }
+      new AdcKernel(lutOf.toMap, m, kCodes)
+    }
+    def save(spark: SparkSession, path: String): Unit =
+      PqSearch.saveCodebooks(spark, s"$path/codebooks", cb)
+  }
+
+  private final class AdcKernel(luts: Map[(Int, Int), (Array[Double], Double)],
+      m: Int, kCodes: Int) extends RowKernel[Array[Int]] {
+    def score(qi: Int, cell: Int, codes: Array[Int]): Double = {
+      val (lut, const) = luts((qi, cell))
+      PqSearch.adcScore(lut, const, codes, m, kCodes)
+    }
+  }
 
   /** Build + persist: `path/corpus` is (id, codes) parquet partitioned
     * by `cell`; `path/centroids` and `path/codebooks` hold the trained
     * model. Codebooks train on residuals (vector − its cell centroid).
-    * Centroids are written LAST so their _SUCCESS implies a complete
-    * index.
+    * Stats are written LAST so their _SUCCESS implies a complete index.
     */
   def writeIndex(
       corpus: DataFrame, cId: String, cVec: String, path: String,
       nList: Int = 16, m: Int = 8, kCodes: Int = 16, iters: Int = 2,
-      dim: Int = 64, payload: Seq[String] = Nil): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // payload columns ride alongside the CODES (the filtered-search
-    // layout [[IvfSearch.writeIndex]] pioneered): a metadata predicate
-    // evaluates inside the partition-pruned ADC scan as a parquet
-    // PushedFilter, so a filtered probe of a compressed store still
-    // never joins back to the source corpus
-    val reserved = Set("id", "vec", "cell", "epoch", "codes", "v", "rv")
-    payload.foreach(p => require(!reserved(p),
-      s"payload column '$p' collides with a reserved store column ($reserved)"))
-    val centroids = IvfSearch.trainCentroids(corpus, cVec, cId, nList, iters, dim)
-    val resid = residualUdf(centroids)
-    // materialized once: codebook training scans it `iters` times, then
-    // the encode pass and the drift-baseline aggregation read it again —
-    // unmaterialized, each pass would replay the corpus scan + cell
-    // assignment + residual computation
-    val celled = corpus.select(col(cId).cast("long").as("id") +:
-        IvfSearch.nearestCell(centroids)(col(cVec)).as("cell") +:
-        col(cVec).as("v") +: payload.map(col): _*)
-      .withColumn("rv", resid(col("v"), col("cell")))
-      .localCheckpoint()
-    // finally: a failed training pass, parquet write, or drift
-    // aggregation must not pin the checkpointed blocks for the session
-    // lifetime (the [[Tombstones.write]] rule)
-    try {
-      val cb = PqSearch.trainCodebooks(
-        celled.select(col("id"), col("rv")), "id", "rv", m, kCodes, iters, dim)
-      celled.select(col("id") +: col("cell") +:
-          PqSearch.encodeUdf(cb)(col("rv")).as("codes") +: payload.map(col): _*)
-        .withColumn("epoch", lit(-1L))
-        .write.partitionBy("cell", "epoch").mode("overwrite")
-        .parquet(s"$path/corpus")
-      PqSearch.saveCodebooks(spark, s"$path/codebooks", cb)
-      centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-      // training baseline for online-append drift detection (same
-      // assigned-centroid distance as the IVF family)
-      IvfSearch.writeStats(spark, path, IvfSearch.celledStats(
-        celled.withColumn("__dist",
-          IvfSearch.cellDist(centroids)(col("v"), col("cell"))), nList))
-    } finally IndexMaintenance.unpersistCheckpoint(celled)
-  }
+      dim: Int = 64, payload: Seq[String] = Nil): Unit =
+    writeCoded(corpus, cId, cVec, path, nList, iters, dim, payload) {
+      (celled, centroids) => PqCodec(PqSearch.trainCodebooks(
+        celled.select(col("id"), col("rv")), "id", "rv", m, kCodes, iters, dim),
+        centroids)
+    }
+
+  /** Codebooks train on residuals: materialized with the celled rows,
+    * since training scans them `iters` times.
+    */
+  override protected def trainingCols(centroids: Array[Array[Float]]): Seq[Column] =
+    Seq(residualUdf(centroids)(col("v"), col("cell")).as("rv"))
 
   private def residualUdf(centroids: Array[Array[Float]]) = {
     val cs = centroids
@@ -86,251 +123,9 @@ object IvfPqIndex {
     })
   }
 
-  /** Append newly arrived vectors WITHOUT retraining: cells from the
-    * stored coarse centroids, codes from the stored codebooks — the
-    * same offline-retrain / online-append split as
-    * [[IvfSearch.appendToIndex]]. Rows land in their cell's partition
-    * directory (dynamic-partition append); probe pruning is unchanged.
-    * Returns the batch's [[AppendStats]] against the training baseline
-    * — drift hurts doubly here (wrong cell AND a codebook trained on a
-    * different residual distribution), so the retrain signal matters
-    * even more than for plain IVF.
-    */
-  def appendToIndex(df: DataFrame, cId: String, cVec: String, path: String,
-      epoch: Long = -1L): AppendStats = {
-    val spark = df.sparkSession
-    val centroids = IvfSearch.loadCentroids(spark, path)
-    val cb = loadCodebooks(spark, path)
-    // a payload store's appends MUST carry the same payload columns at
-    // the same TYPES — the store's own schema is the contract
-    // ([[IndexMaintenance.requirePayloadCompatible]]: the name half
-    // keeps filtered probes from serving NULL, the type half keeps
-    // mixed-type files from failing the store at compaction)
-    val storeSchema = spark.read.parquet(s"$path/corpus").schema
-    val payloadCols = storeSchema.fieldNames
-      .filterNot(Set("id", "codes", "cell", "epoch")).toSeq
-    IndexMaintenance.requirePayloadCompatible(storeSchema, df.schema,
-      payloadCols, path)
-    val celled = df.select(col(cId).cast("long").as("id") +:
-        IvfSearch.nearestCell(centroids)(col(cVec)).as("cell") +:
-        col(cVec).as("v") +: payloadCols.map(col): _*)
-      .localCheckpoint()
-    try {
-      // epoch >= 0: idempotent replay via dynamic partition overwrite,
-      // under the store lease with swap recovery first (the
-      // IvfSearch.appendToIndex exactly-once + recovery rule)
-      val coded = celled
-        .withColumn("rv", residualUdf(centroids)(col("v"), col("cell")))
-        .select(col("id") +: col("cell") +:
-          PqSearch.encodeUdf(cb)(col("rv")).as("codes") +: payloadCols.map(col): _*)
-        .withColumn("epoch", lit(epoch))
-      IndexMaintenance.withStoreLock(spark, path) {
-        IndexMaintenance.recoverSwap(spark, s"$path/corpus")
-        IndexMaintenance.epochWrite(coded, Seq("cell", "epoch"), epoch,
-          s"$path/corpus")
-      }
-      IvfSearch.driftVerdict(
-        IvfSearch.celledStats(celled.withColumn("__dist",
-          IvfSearch.cellDist(centroids)(col("v"), col("cell"))), centroids.length),
-        centroids.length, IvfSearch.loadStats(spark, path))
-    } finally IndexMaintenance.unpersistCheckpoint(celled)
-  }
-
-  /** Compact the celled code store — identical layout to the IVF
-    * corpus, one shared compactor (see [[IvfSearch.compactIndex]]).
-    */
-  def compactIndex(spark: SparkSession, path: String,
-      excludeEpoch: Long = Long.MinValue): (Long, Long) =
-    IvfSearch.compactIndex(spark, path, excludeEpoch)
-
-  /** Delete documents' codes from the store — identical layout, one
-    * shared tombstone protocol (see [[IvfSearch.deleteFromIndex]] and
-    * [[Tombstones]]): dead code rows never reach the ADC scan
-    * ([[searchIndex]] filters them), a later re-append out-lives the
-    * delete, and [[compactIndex]] heals physically + retires the
-    * tombstones. Returns the tombstone epoch used.
-    */
-  def deleteFromIndex(spark: SparkSession, path: String,
-      ids: DataFrame, idCol: String, epoch: Option[Long] = None): Long =
-    IvfSearch.deleteFromIndex(spark, path, ids, idCol, epoch)
-
   /** Codebook shape is derived from the persisted rows — see
     * [[PqSearch.loadCodebooks]] (one loader for both index families).
     */
   def loadCodebooks(spark: SparkSession, path: String): PqSearch.Codebooks =
     PqSearch.loadCodebooks(spark, s"$path/codebooks")
-
-  /** RADIUS search from the persisted IVF-PQ store — the compressed
-    * twin of [[IvfSearch.radiusIndex]] (FAISS `range_search` on
-    * `IVFx,PQy`): probe cells, RECONSTRUCT each scanned code row once
-    * (centroid + residual sub-centroids — the decode view a threshold
-    * on cosine/l2 needs, where the ADC LUT only orders), admit at a
-    * RELAXED threshold, then re-score the admitted pairs EXACTLY
-    * against `corpus` by id and cut at the true threshold — precision
-    * 1.0 by construction. PQ is LOSSY (unlike SQ8's half-step error),
-    * so `margin` defaults wider; widening it only grows the exact
-    * re-score's input, never breaks precision. `filter` rides the
-    * pruned scan (payload pushdown).
-    */
-  def radiusIndex(
-      spark: SparkSession, path: String,
-      queries: DataFrame, qId: String, qVec: String,
-      corpus: DataFrame, cId: String, cVec: String,
-      threshold: Double, metric: String = "cosine", nProbe: Int = 4,
-      margin: Double = 0.2, filter: Column = lit(true)): DataFrame = {
-    require(margin >= 0, s"radiusIndex: margin must be >= 0, got $margin")
-    val centroids = IvfSearch.loadCentroids(spark, path)
-    val cb = loadCodebooks(spark, path)
-    val probed = queries.select(col(qId), col(qVec),
-      explode(IvfSearch.nearestCells(centroids, nProbe)(col(qVec))).as("cell"))
-    val cells = probed.select("cell").distinct().collect().map(_.getInt(0))
-    val cs = centroids
-    val rec = udf((codes: Seq[Int], cell: Int) => {
-      val base = cs(cell)
-      val out = java.util.Arrays.copyOf(base, base.length)
-      var s = 0
-      while (s < cb.m) {
-        val book = cb.books(s)(codes(s))
-        var j = 0
-        while (j < cb.dsub) { out(s * cb.dsub + j) += book(j); j += 1 }
-        s += 1
-      }
-      out
-    })
-    val celled = Tombstones.filterLive(spark, path,
-        spark.read.parquet(s"$path/corpus")
-          .filter(col("cell").isin(cells.map(Int.box).toIndexedSeq: _*))
-          .filter(filter),
-        "id", "epoch")
-      .select(col("id").as("match_id"),
-        rec(col("codes"), col("cell")).as("__rcvec"), col("cell"))
-    val relaxed = threshold + (if (metric == "l2") margin else -margin)
-    val admitted = probed.join(celled, "cell")
-      .withColumn("__ascore",
-        VectorSearch.scoreCol(metric)(col(qVec), col("__rcvec")))
-      .filter(if (metric == "l2") col("__ascore") <= relaxed
-        else col("__ascore") >= relaxed)
-      .select(col(qId), col(qVec), col("match_id"))
-    admitted
-      .join(corpus.select(col(cId).cast("long").as("match_id"),
-        col(cVec).cast("array<float>").as("__cvec")), "match_id")
-      .withColumn("score",
-        VectorSearch.scoreCol(metric)(col(qVec), col("__cvec")))
-      .filter(VectorSearch.radiusPred(metric, threshold))
-      .groupBy(col(qId), col("match_id"))
-      .agg((if (metric == "l2") min(col("score")) else max(col("score")))
-        .as("score"))
-  }
-
-  /** Probe a persisted IVF-PQ index. The probed-cell union becomes an IN
-    * filter on the partition column (directory pruning, like
-    * [[IvfSearch.searchIndex]]); the scan reads ONLY (id, codes, cell).
-    * `corpus` supplies full vectors for the exact re-rank of the
-    * `numCandidates` ADC survivors.
-    */
-  def searchIndex(
-      spark: SparkSession, path: String,
-      queries: DataFrame, qId: String, qVec: String,
-      corpus: DataFrame, cId: String, cVec: String,
-      k: Int, metric: String = "dot", nProbe: Int = 4,
-      numCandidates: Int = 100, maxQueries: Int = 10000,
-      filter: Column = lit(true)): DataFrame = {
-    VectorSearch.requireNumCandidates(numCandidates)
-    require(k <= numCandidates, s"k=$k exceeds numCandidates=$numCandidates")
-    import spark.implicits._
-    val centroids = IvfSearch.loadCentroids(spark, path)
-    val cb = loadCodebooks(spark, path)
-    // shape comes from the persisted model, never from the caller
-    val m = cb.m; val kCodes = cb.kCodes
-    val dim = centroids.headOption.map(_.length).getOrElse(cb.m * cb.dsub)
-
-    val qRows = queries
-      .select(col(qId).cast("long"), col(qVec).cast("array<float>"))
-      .filter(col(qId).isNotNull && col(qVec).isNotNull)
-      .limit(maxQueries + 1).collect()
-    require(qRows.length <= maxQueries,
-      s"searchIndex: query batch exceeds maxQueries=$maxQueries — split the batch")
-    require(qRows.length.toLong * numCandidates <= 10000000L,
-      s"searchIndex: |queries|*numCandidates = ${qRows.length.toLong * numCandidates} " +
-        "exceeds 10M (per-task heap bound) — split the batch or narrow the budget")
-    val qIds = qRows.map(_.getLong(0))
-    val qVecs = qRows.map(_.getSeq[Float](1).toArray)
-
-    // probe set per query (driver-side: |Q| bounded, nList small)
-    val probes: Array[Array[Int]] = qVecs.map { q =>
-      centroids.indices
-        .map(i => (i, scoreF32("l2", q, centroids(i))))
-        .sortBy { case (i, d) => (d, i) }
-        .take(nProbe).map(_._1).toArray
-    }
-    val cells = probes.flatten.distinct.sorted
-
-    // per (query, probed cell): ADC LUT over the query's residual
-    // (l2 decomposes over residual subspaces; dot(q, c + r) =
-    // dot(q, c) + dot(q, r) — LUT on q against the residual books plus a
-    // per-cell constant, so scores stay comparable ACROSS cells)
-    val adcMetric = if (metric == "l2") "l2" else "dot"
-    val asc = adcMetric == "l2"
-    val lutOf = new scala.collection.mutable.HashMap[(Int, Int), (Array[Double], Double)]
-    for (qi <- qVecs.indices; cell <- probes(qi)) {
-      val q = qVecs(qi)
-      val base = if (adcMetric == "l2")
-        Array.tabulate(dim)(i => q(i) - centroids(cell)(i)) else q
-      val lut = new Array[Double](m * kCodes)
-      var s = 0
-      while (s < m) {
-        val sub = java.util.Arrays.copyOfRange(base, s * cb.dsub, (s + 1) * cb.dsub)
-        var c = 0
-        while (c < kCodes) {
-          lut(s * kCodes + c) = scoreF32(adcMetric, sub, cb.books(s)(c))
-          c += 1
-        }
-        s += 1
-      }
-      val const = if (adcMetric == "dot") scoreF32("dot", q, centroids(cell)) else 0.0
-      lutOf((qi, cell)) = (lut, const)
-    }
-    val probersOf: Map[Int, Array[Int]] =
-      cells.map(cell => cell -> qVecs.indices.filter(qi => probes(qi).contains(cell)).toArray).toMap
-    val bc = spark.sparkContext.broadcast((qIds, lutOf.toMap, probersOf))
-    val mm = m; val kk = kCodes; val cand = numCandidates; val ascL = asc
-
-    // tombstoned code rows die before the ADC scan (same delete protocol
-    // as IvfSearch.searchIndex — see [[Tombstones]]; deletes heal
-    // physically at compactIndex, which this store shares with IVF).
-    // `filter` (over the store's payload columns — see [[writeIndex]])
-    // evaluates inside the same pruned scan as a parquet PushedFilter,
-    // so a FILTERED probe of the compressed store admits only matching
-    // rows into the ADC shortlist — no join back to the source corpus
-    val coded = Tombstones.filterLive(spark, path,
-        spark.read.parquet(s"$path/corpus")
-          .filter(col("cell").isin(cells.map(Int.box).toIndexedSeq: _*))
-          .filter(filter),
-        "id", "epoch")
-      .select(col("id"), col("codes"), col("cell"))
-    val candidates = coded.as[(Long, Seq[Int], Int)].mapPartitions { it =>
-      val (ids, luts, probers) = bc.value
-      val heaps = scala.collection.mutable.HashMap.empty[Int, TopKHeap]
-      it.foreach { case (mid, codesSeq, cell) =>
-        val codes = codesSeq.toArray
-        val qis = probers.getOrElse(cell, Array.emptyIntArray)
-        var j = 0
-        while (j < qis.length) {
-          val qi = qis(j)
-          val (lut, const) = luts((qi, cell))
-          var approx = const
-          var s = 0
-          while (s < mm) { approx += lut(s * kk + codes(s)); s += 1 }
-          heaps.getOrElseUpdate(qi, new TopKHeap(cand, ascL)).insert(mid, approx)
-          j += 1
-        }
-      }
-      heaps.iterator.flatMap { case (qi, h) =>
-        (0 until h.n).map(i => (ids(qi), h.ids(i), h.scores(i)))
-      }
-    }.toDF(qId, "match_id", "__approx")
-
-    PqSearch.cutAndRerank(candidates, queries, qId, qVec, corpus, cId, cVec,
-      k, metric, numCandidates, asc)
-  }
 }

@@ -48,7 +48,23 @@ case class AppendStats(
     baselineOccupancySkew: Double,
     retrainRecommended: Boolean)
 
-object IvfSearch {
+object IvfSearch extends CelledStore {
+
+  private[graft] def storedCol: String = "vec"
+  val reservedCols: Set[String] = Set("id", "vec", "cell", "epoch")
+  protected def storeId(id: Column): Column = id.as("id")
+  protected def codecAt(spark: org.apache.spark.sql.SparkSession, path: String,
+      centroids: Array[Array[Float]]): CellCodec = RawCodec
+
+  /** Raw vectors: stored as-is, decoded as-is. */
+  private object RawCodec extends CellCodec {
+    def encode(v: Column, cell: Column): Column = v
+    def decode(stored: Column, cell: Column): Column = stored
+  }
+
+  private[graft] def buildIndex(corpus: DataFrame, cId: String, cVec: String,
+      path: String, nList: Int, dim: => Int, payload: Seq[String]): Unit =
+    writeIndex(corpus, cId, cVec, path, nList = nList, payload = payload)
 
   /** Drift thresholds: a batch whose mean assigned-centroid distance
     * exceeds 1.5× the training baseline, or whose occupancy skew
@@ -66,6 +82,10 @@ object IvfSearch {
     var centroids: Array[Array[Float]] = corpus
       .orderBy(col(cId)).limit(nList).select(cVec).collect()
       .map(_.getSeq[Float](0).toArray)
+    // centroids take the corpus' own width (`dim` only sizes an empty
+    // corpus): a wider `dim` would zero-pad them and make every probe's
+    // width check refuse the very vectors they were trained on
+    val width = centroids.headOption.map(_.length).getOrElse(dim)
     val scale = 1e7
     (1 to iters).foreach { _ =>
       val assigned = corpus.select(
@@ -75,7 +95,7 @@ object IvfSearch {
         .groupBy("cell", "dim")
         .agg(sum(round(col("v") * scale).cast("long")).as("s"), count(lit(1)).as("n"))
         .collect()
-      val acc = Array.fill(nList)(new Array[Float](dim))
+      val acc = Array.fill(nList)(new Array[Float](width))
       val counts = new Array[Long](nList)
       sums.foreach { r =>
         val cell = r.getInt(0); val d = r.getInt(1)
@@ -90,11 +110,20 @@ object IvfSearch {
     centroids
   }
 
+  /** A vector whose width differs from the centroids' would be scored
+    * over the common prefix only and land in a wrong cell — refuse it.
+    */
+  private def requireWidth(q: Array[Float], cs: Array[Array[Float]]): Unit =
+    if (cs.nonEmpty && q.length != cs(0).length)
+      throw new IllegalArgumentException(s"vector has ${q.length} dims, " +
+        s"the index's centroids have ${cs(0).length}")
+
   /** Column: index of the nearest centroid (L2), ties to the lower id. */
   def nearestCell(centroids: Array[Array[Float]])(vec: Column): Column = {
     val cs = centroids
     udf((v: Seq[Float]) => {
       val q = v.toArray
+      requireWidth(q, cs)
       var best = 0; var bestD = Double.MaxValue
       var i = 0
       while (i < cs.length) {
@@ -109,13 +138,17 @@ object IvfSearch {
   /** Column: indices of the `nProbe` nearest centroids, best first. */
   def nearestCells(centroids: Array[Array[Float]], nProbe: Int)(vec: Column): Column = {
     val cs = centroids
-    udf((v: Seq[Float]) => {
-      val q = v.toArray
-      cs.indices
-        .map(i => (i, scoreF32("l2", q, cs(i))))
-        .sortBy { case (i, d) => (d, i) }
-        .take(nProbe).map(_._1)
-    }).apply(vec)
+    udf((v: Seq[Float]) => probeCells(cs, v.toArray, nProbe)).apply(vec)
+  }
+
+  /** The `nProbe` nearest centroids of `q` (L2, ties to the lower id). */
+  private[operators] def probeCells(cs: Array[Array[Float]], q: Array[Float],
+      nProbe: Int): Array[Int] = {
+    requireWidth(q, cs)
+    cs.indices
+      .map(i => (i, scoreF32("l2", q, cs(i))))
+      .sortBy { case (i, d) => (d, i) }
+      .take(nProbe).map(_._1).toArray
   }
 
   /** IVF top-k: train (or reuse) centroids, cell-partition the corpus,
@@ -133,16 +166,28 @@ object IvfSearch {
       nearestCell(centroids)(col(cVec)).as("cell"))
     val probed = queries.select(col(qId), col(qVec),
       explode(nearestCells(centroids, nProbe)(col(qVec))).as("cell"))
-    val asc = metric == "l2"
+    ranked(cellTopK(probed, celled, qId, qVec, k, metric), qId)
+  }
+
+  /** Exact top-k per query over the (query, probed cell) ⋈ celled
+    * (match_id, __cvec, cell) pairs: qId → matches[, candidates_scanned].
+    */
+  private def cellTopK(probed: DataFrame, celled: DataFrame, qId: String,
+      qVec: String, k: Int, metric: String, counted: Boolean = false): DataFrame = {
+    val topK = graft.functions.TopKByScore
+      .topK(col("match_id"), col("score"), k, metric == "l2").as("matches")
     val scored = probed.join(celled, "cell")
       .withColumn("score", scoreCol(metric)(col(qVec), col("__cvec")))
       .groupBy(col(qId))
-      .agg(graft.functions.TopKByScore.topK(col("match_id"), col("score"), k, asc).as("matches"))
-    scored
-      .select(col(qId), posexplode(col("matches")).as(Seq("rank0", "m")))
+    if (counted) scored.agg(topK, count(lit(1)).as("candidates_scanned"))
+    else scored.agg(topK)
+  }
+
+  /** (qId, match_id, score, rank) rows of a matches array, rank 1 = best. */
+  private def ranked(matches: DataFrame, qId: String): DataFrame =
+    matches.select(col(qId), posexplode(col("matches")).as(Seq("rank0", "m")))
       .select(col(qId), col("m.id").as("match_id"), col("m.score").as("score"),
         (col("rank0") + 1).cast("int").as("rank"))
-  }
 
   /** [[ivfTopK]] tuned from a `numCandidates` budget — the reference's
     * ANN knob (README.md:364,368) instead of raw nProbe: candidates per
@@ -185,15 +230,7 @@ object IvfSearch {
       nList: Int = 16, iters: Int = 2, dim: Int = 64,
       payload: Seq[String] = Nil): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
-    // payload columns ride ALONGSIDE the vectors in the store (the
-    // filtered-search layout: a metadata predicate evaluates inside the
-    // partition-pruned probe scan as a parquet PushedFilter, instead of
-    // joining back to the source corpus per query batch). Reserved
-    // store column names can't be payload.
-    val reserved = Set("id", "vec", "cell", "epoch")
-    payload.foreach(p => require(!reserved(p),
-      s"payload column '$p' collides with a reserved store column ($reserved)"))
+    requirePayload(payload)
     val centroids = trainCentroids(corpus, cVec, cId, nList, iters, dim)
     val celled = corpus.select(col(cId).as("id") +: col(cVec).as("vec") +:
       nearestCell(centroids)(col(cVec)).as("cell") +: payload.map(col): _*)
@@ -203,9 +240,7 @@ object IvfSearch {
     celled.withColumn("epoch", lit(-1L))
       .write.partitionBy("cell", "epoch").mode("overwrite")
       .parquet(s"$path/corpus")
-    centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    saveCentroids(spark, path, centroids)
     // training baseline for online-append drift detection — aggregated
     // over the parquet just written, not the source plan, so the build
     // never pays a second corpus scan + assignment pass
@@ -274,126 +309,6 @@ object IvfSearch {
         retrainRecommended = false)
   }
 
-  /** Append newly arrived vectors to a persisted index WITHOUT
-    * retraining: cells come from the STORED centroids, rows land in
-    * their cell's partition directory (dynamic-partition append). This
-    * is the continuous-ingestion path — the at-rest analog of the
-    * reference's perpetual INSERT keeping its collection searchable as
-    * new embeddings arrive (README.md:432-445): index once, append
-    * forever, probe pruning unchanged. Centroids drift only at the next
-    * full [[writeIndex]] — the standard IVF split of offline retrain /
-    * online append. Returns the batch's [[AppendStats]]: sustained
-    * distribution drift against stored centroids silently degrades
-    * recall, so every append measures itself against the training
-    * baseline and recommends the retrain when it leaves the regime.
-    */
-  def appendToIndex(
-      df: DataFrame, cId: String, cVec: String, path: String,
-      epoch: Long = -1L): AppendStats = {
-    val spark = df.sparkSession
-    val centroids = loadCentroids(spark, path)
-    // a payload store's appends MUST carry the same payload columns at
-    // the same TYPES — an epoch written without them would serve NULL
-    // under a filtered probe, and a mixed-type column fails the whole
-    // store at compaction. The store's own schema (not caller memory)
-    // is the contract ([[IndexMaintenance.requirePayloadCompatible]]).
-    val storeSchema = spark.read.parquet(s"$path/corpus").schema
-    val payloadCols = storeSchema.fieldNames
-      .filterNot(Set("id", "vec", "cell", "epoch")).toSeq
-    IndexMaintenance.requirePayloadCompatible(storeSchema, df.schema,
-      payloadCols, path)
-    // assign cells once; the partition write and the drift aggregation
-    // both read the materialized assignment
-    val celled = df.select(col(cId).as("id") +: col(cVec).as("vec") +:
-        nearestCell(centroids)(col(cVec)).as("cell") +: payloadCols.map(col): _*)
-      .localCheckpoint()
-    // epoch >= 0: IDEMPOTENT append — a replayed micro-batch overwrites
-    // its own (cell, epoch) partitions instead of duplicating vectors
-    // (the streaming fronts always tag; ad-hoc batch appends default to
-    // the plain append into the base segment). The write runs under the
-    // store lease with swap recovery FIRST: a bare write after a
-    // compactor crashed mid-swap would CREATE a fresh corpus dir holding
-    // only this epoch, and the next compaction's recovery would then
-    // discard the real store as debris.
-    try {
-      IndexMaintenance.withStoreLock(spark, path) {
-        IndexMaintenance.recoverSwap(spark, s"$path/corpus")
-        IndexMaintenance.epochWrite(celled.withColumn("epoch", lit(epoch)),
-          Seq("cell", "epoch"), epoch, s"$path/corpus")
-      }
-      driftVerdict(
-        celledStats(celled.withColumn("__dist",
-          cellDist(centroids)(col("vec"), col("cell"))), centroids.length),
-        centroids.length, loadStats(spark, path))
-      // per-batch caller (ivfIndexStream / ivfCdcStream): release this
-      // batch's checkpoint blocks in the finally, not at a future GC —
-      // even when the write or the drift aggregation throws
-    } finally IndexMaintenance.unpersistCheckpoint(celled)
-  }
-
-  def loadCentroids(spark: org.apache.spark.sql.SparkSession, path: String): Array[Array[Float]] =
-    spark.read.parquet(s"$path/centroids").orderBy("cell").collect()
-      .map(_.getSeq[Float](1).toArray)
-
-  /** Delete `ids` from a persisted index (IVF or IVF-PQ — both share
-    * the `corpus/cell=/epoch=` layout) WITHOUT rewriting it: a
-    * tombstone epoch lands under the store lock and the rows die at
-    * serve time immediately ([[searchIndex]] filters them); the next
-    * [[compactIndex]] removes them physically and retires the
-    * tombstone. Default epoch = the store's newest segment epoch
-    * ("delete what's here now"): every current row of the id dies, a
-    * LATER append of the same id out-lives the delete — the
-    * last-writer-wins order appends already follow. Returns the
-    * tombstone epoch used.
-    */
-  def deleteFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      ids: DataFrame, idCol: String, epoch: Option[Long] = None): Long = {
-    require(FsUtil.exists(spark, s"$path/centroids"),
-      s"index at '$path' does not exist or is unreachable")
-    IndexMaintenance.withStoreLock(spark, path) {
-      IndexMaintenance.recoverSwap(spark, s"$path/corpus")
-      val e = epoch.getOrElse(Tombstones.maxEpochIn(spark, s"$path/corpus"))
-      Tombstones.write(spark, path, ids, idCol, e)
-      e
-    }
-  }
-
-  /** Compact the celled corpus to one file per (cell, epoch-segment) —
-    * cures the per-append small-file decay (see [[IndexMaintenance]];
-    * crash recovery of an interrupted swap runs first); probe pruning
-    * and results are unchanged (same rows, same `cell=` partition
-    * values; asserted in IvfSpec). All CLOSED epochs merge into the
-    * base segment; `excludeEpoch` (a stream's in-flight epoch) keeps
-    * its own partitions so its at-least-once replay can still
-    * overwrite itself. Works for any store with the `corpus/cell=`
-    * layout, so [[IvfPqIndex]] delegates here too. Returns (data files
-    * before, after).
-    */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      excludeEpoch: Long = Long.MinValue): (Long, Long) = {
-    require(FsUtil.exists(spark, s"$path/centroids"),
-      s"ivf index at '$path' does not exist or is unreachable")
-    IndexMaintenance.withStoreLock(spark, path) {
-      IndexMaintenance.recoverSwap(spark, s"$path/corpus")
-      // deletes heal here: tombstoned rows drop PHYSICALLY from closed
-      // segments (the in-flight epoch stays untouched — its
-      // at-least-once replay must be able to overwrite itself; the
-      // retained tombstone keeps its dead rows filtered at serve time).
-      // The rule reads ORIGINAL epochs, so it runs before the
-      // closed-epoch remap.
-      val applyTombstones: DataFrame => DataFrame = df =>
-        if (!Tombstones.exists(spark, path)) df
-        else Tombstones.filterLive(spark, path,
-            df.filter(col("epoch") =!= excludeEpoch), "id", "epoch")
-          .unionByName(df.filter(col("epoch") === excludeEpoch))
-      val res = IndexMaintenance.compactPartitionedDir(spark, s"$path/corpus",
-        Seq("cell", "epoch"), loadCentroids(spark, path).length * 2,
-        applyTombstones.andThen(IndexMaintenance.closedEpochsToBase(excludeEpoch)))
-      Tombstones.clearApplied(spark, path, excludeEpoch)
-      res
-    }
-  }
-
   /** Fixed-radius probe of a persisted index — FAISS `range_search` on
     * IVFFlat: `nProbe` cells per query from the stored centroids, EXACT
     * scoring of only the probed cells' vectors (the same partition-dir
@@ -412,24 +327,9 @@ object IvfSearch {
       spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, qId: String, qVec: String,
       threshold: Double, metric: String = "cosine", nProbe: Int = 4,
-      filter: Column = lit(true)): DataFrame = {
-    val centroids = loadCentroids(spark, path)
-    val probed = queries.select(col(qId), col(qVec),
-      explode(nearestCells(centroids, nProbe)(col(qVec))).as("cell"))
-    val cells = probed.select("cell").distinct().collect().map(_.getInt(0))
-    val celled = Tombstones.filterLive(spark, path,
-        spark.read.parquet(s"$path/corpus")
-          .filter(col("cell").isin(cells.map(Int.box).toIndexedSeq: _*))
-          .filter(filter),
-        "id", "epoch")
-      .select(col("id").as("match_id"), col("vec").as("__cvec"), col("cell"))
-    probed.join(celled, "cell")
-      .withColumn("score", scoreCol(metric)(col(qVec), col("__cvec")))
-      .filter(VectorSearch.radiusPred(metric, threshold))
-      .groupBy(col(qId), col("match_id"))
-      .agg((if (metric == "l2") min(col("score")) else max(col("score")))
-        .as("score"))
-  }
+      filter: Column = lit(true)): DataFrame =
+    radiusScan(spark, path, queries, qId, qVec, threshold, metric, nProbe,
+      margin = 0.0, filter, exact = None)
 
   /** Probe a persisted index. The union of probed cells across the query
     * batch (a driver-side collect bounded by nList — small by
@@ -453,28 +353,12 @@ object IvfSearch {
       queries: DataFrame, qId: String, qVec: String,
       k: Int, metric: String = "dot", nProbe: Int = 4,
       filter: Column = lit(true)): DataFrame = {
-    val centroids = loadCentroids(spark, path)
-    val probed = queries.select(col(qId), col(qVec),
-      explode(nearestCells(centroids, nProbe)(col(qVec))).as("cell"))
-    val cells = probed.select("cell").distinct().collect().map(_.getInt(0))
-    // tombstoned rows die before scoring: a deleted id must not occupy a
-    // top-k slot even transiently (filterLive is a no-op join-free path
-    // when the store has no tombstones dir)
-    val celled = Tombstones.filterLive(spark, path,
-        spark.read.parquet(s"$path/corpus")
-          .filter(col("cell").isin(cells.map(Int.box).toIndexedSeq: _*))
-          .filter(filter),
-        "id", "epoch")
-      .select(col("id").as("match_id"), col("vec").as("__cvec"), col("cell"))
-    val asc = metric == "l2"
-    probed.join(celled, "cell")
-      .withColumn("score", scoreCol(metric)(col(qVec), col("__cvec")))
-      .groupBy(col(qId))
-      .agg(graft.functions.TopKByScore.topK(col("match_id"), col("score"), k, asc).as("matches"))
-      .select(col(qId), posexplode(col("matches")).as(Seq("rank0", "m")))
-      .select(col(qId), col("m.id").as("match_id"), col("m.score").as("score"),
-        (col("rank0") + 1).cast("int").as("rank"))
+    val (_, probed, live) = probeLive(spark, path, queries, qId, qVec, nProbe, filter)
+    ranked(cellTopK(probed, liveVectors(live), qId, qVec, k, metric), qId)
   }
+
+  private def liveVectors(live: DataFrame): DataFrame =
+    live.select(col("id").as("match_id"), col("vec").as("__cvec"), col("cell"))
 
   /** [[searchIndex]] with serve-time OBSERVABILITY — the vector-side
     * analogue of the BM25 scoreDetails frame (Atlas $vectorSearch's
@@ -495,22 +379,10 @@ object IvfSearch {
       queries: DataFrame, qId: String, qVec: String,
       k: Int, metric: String = "dot", nProbe: Int = 4,
       filter: Column = lit(true)): DataFrame = {
-    val centroids = loadCentroids(spark, path)
-    val probed = queries.select(col(qId), col(qVec),
-      explode(nearestCells(centroids, nProbe)(col(qVec))).as("cell"))
-    val cells = probed.select("cell").distinct().collect().map(_.getInt(0))
-    val celled = Tombstones.filterLive(spark, path,
-        spark.read.parquet(s"$path/corpus")
-          .filter(col("cell").isin(cells.map(Int.box).toIndexedSeq: _*))
-          .filter(filter),
-        "id", "epoch")
-      .select(col("id").as("match_id"), col("vec").as("__cvec"), col("cell"))
-    val asc = metric == "l2"
-    val agg = probed.join(celled, "cell")
-      .withColumn("score", scoreCol(metric)(col(qVec), col("__cvec")))
-      .groupBy(col(qId))
-      .agg(graft.functions.TopKByScore.topK(col("match_id"), col("score"), k, asc).as("matches"),
-        count(lit(1)).as("candidates_scanned"))
+    val (centroids, probed, live) =
+      probeLive(spark, path, queries, qId, qVec, nProbe, filter)
+    val agg = cellTopK(probed, liveVectors(live), qId, qVec, k, metric,
+      counted = true)
     // left-join back onto the query frame: a query whose probed cells
     // yield ZERO candidates (everything tombstoned or filtered out) must
     // surface with candidates_scanned = 0 and a null match row — the

@@ -1,9 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.functions.TopKHeap
 
 /** IVF-SQ: the celled at-rest layout with SCALAR-quantized codes —
   * FAISS's `IVFx,SQ8` (Jégou's coarse pruning + an 8-bit per-dimension
@@ -20,7 +18,55 @@ import graft.functions.TopKHeap
   * decomposes affinely — approx(q, code) = Σ q·lo + Σ (q·Δ/255)·code —
   * so serving never dequantizes into floats.
   */
-object IvfSqIndex {
+object IvfSqIndex extends CompressedCelledStore[Array[Byte]] {
+
+  val reservedCols: Set[String] = Set("id", "vec", "cell", "epoch", "codes", "v")
+  protected def codeRow: Encoder[(Long, Array[Byte], Int)] =
+    Encoders.product[(Long, Array[Byte], Int)]
+  /** Absorbs the SQ8 half-step quantization error, so near-boundary
+    * vectors aren't lost to rounding in the radius pre-pass.
+    */
+  protected def radiusMargin: Double = 0.05
+  protected def codecAt(spark: SparkSession, path: String,
+      centroids: Array[Array[Float]]): CodeScan[Array[Byte]] =
+    SqCodec(SqSearch.loadModel(spark, s"$path/sqmodel"))
+
+  private[graft] def buildIndex(corpus: DataFrame, cId: String, cVec: String,
+      path: String, nList: Int, dim: => Int, payload: Seq[String]): Unit =
+    writeIndex(corpus, cId, cVec, path, nList = nList, dim = dim,
+      payload = payload)
+
+  /** SQ8 codes over the raw vector (out-of-range values saturate — the
+    * SQ clamp rule). Decoding dequantizes ([[SqSearch.decodeVec]] — the
+    * affine raw-dot decomposition can't bound cosine/l2 thresholds); the
+    * scan is [[SqSearch.sqTopK]]'s per-query affine kernel: dot ->
+    * (const, w), l2 compares against the dequantized value directly.
+    *
+    * Metric contract (the [[SqSearch.sqTopK]] family rule): "cosine"
+    * SELECTS candidates by raw dot over the affine codes and re-ranks
+    * the survivors with true cosine — on an UNNORMALIZED corpus the
+    * shortlist is biased toward large-norm vectors, so either normalize
+    * stored/query vectors or widen `numCandidates`. Only "l2" switches
+    * the scan itself; every other metric scans affinely on dot.
+    */
+  private final case class SqCodec(m: SqSearch.SqModel)
+      extends CodeScan[Array[Byte]] {
+    def width: Int = m.dim
+    def encode(v: Column, cell: Column): Column = SqSearch.encodeUdfOf(m)(v)
+    def decode(codes: Column, cell: Column): Column = SqSearch.decodeUdfOf(m)(codes)
+    def prepare(qVecs: Array[Array[Float]], probes: Array[Array[Int]],
+        metric: String): RowKernel[Array[Byte]] =
+      new AffineKernel(qVecs.map(SqSearch.affinePrep(_, m, metric == "l2")), m,
+        metric == "l2")
+    def save(spark: SparkSession, path: String): Unit =
+      SqSearch.saveModel(spark, s"$path/sqmodel", m)
+  }
+
+  private final class AffineKernel(qs: Array[(Double, Array[Double])],
+      model: SqSearch.SqModel, l2: Boolean) extends RowKernel[Array[Byte]] {
+    def score(qi: Int, cell: Int, codes: Array[Byte]): Double =
+      SqSearch.affineScore(qs(qi), codes, model, l2)
+  }
 
   /** Build + persist: `path/corpus` is (id, codes BINARY[, payload])
     * parquet partitioned by (cell, epoch); `path/centroids` and
@@ -31,252 +77,8 @@ object IvfSqIndex {
   def writeIndex(
       corpus: DataFrame, cId: String, cVec: String, path: String,
       nList: Int = 16, iters: Int = 2, dim: Int = 64,
-      payload: Seq[String] = Nil): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val reserved = Set("id", "vec", "cell", "epoch", "codes", "v")
-    payload.foreach(p => require(!reserved(p),
-      s"payload column '$p' collides with a reserved store column ($reserved)"))
-    val centroids = IvfSearch.trainCentroids(corpus, cVec, cId, nList, iters, dim)
-    val m = SqSearch.trainModel(corpus, cVec, dim)
-    val enc = SqSearch.encodeUdfOf(m)
-    val celled = corpus.select(col(cId).cast("long").as("id") +:
-        IvfSearch.nearestCell(centroids)(col(cVec)).as("cell") +:
-        col(cVec).as("v") +: payload.map(col): _*)
-      .localCheckpoint()
-    // finally: a failed parquet write or drift aggregation must not pin
-    // the checkpointed blocks for the session lifetime (the
-    // [[Tombstones.write]] rule)
-    try {
-      celled.select(col("id") +: col("cell") +: enc(col("v")).as("codes") +:
-          payload.map(col): _*)
-        .withColumn("epoch", lit(-1L))
-        .write.partitionBy("cell", "epoch").mode("overwrite")
-        .parquet(s"$path/corpus")
-      SqSearch.saveModel(spark, s"$path/sqmodel", m)
-      centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-      IvfSearch.writeStats(spark, path, IvfSearch.celledStats(
-        celled.withColumn("__dist",
-          IvfSearch.cellDist(centroids)(col("v"), col("cell"))), nList))
-    } finally IndexMaintenance.unpersistCheckpoint(celled)
-  }
-
-  /** Append WITHOUT retraining: cells from the stored centroids, codes
-    * from the stored bounds (out-of-range values saturate — the SQ
-    * clamp rule), the store-schema payload contract enforced like
-    * [[IvfSearch.appendToIndex]]'s. Returns the batch's drift verdict.
-    */
-  def appendToIndex(df: DataFrame, cId: String, cVec: String, path: String,
-      epoch: Long = -1L): AppendStats = {
-    val spark = df.sparkSession
-    val centroids = IvfSearch.loadCentroids(spark, path)
-    val m = SqSearch.loadModel(spark, s"$path/sqmodel")
-    val storeSchema = spark.read.parquet(s"$path/corpus").schema
-    val payloadCols = storeSchema.fieldNames
-      .filterNot(Set("id", "codes", "cell", "epoch")).toSeq
-    IndexMaintenance.requirePayloadCompatible(storeSchema, df.schema,
-      payloadCols, path)
-    val celled = df.select(col(cId).cast("long").as("id") +:
-        IvfSearch.nearestCell(centroids)(col(cVec)).as("cell") +:
-        col(cVec).as("v") +: payloadCols.map(col): _*)
-      .localCheckpoint()
-    try {
-      val coded = celled.select(col("id") +: col("cell") +:
-          SqSearch.encodeUdfOf(m)(col("v")).as("codes") +:
-          payloadCols.map(col): _*)
-        .withColumn("epoch", lit(epoch))
-      IndexMaintenance.withStoreLock(spark, path) {
-        IndexMaintenance.recoverSwap(spark, s"$path/corpus")
-        IndexMaintenance.epochWrite(coded, Seq("cell", "epoch"), epoch,
-          s"$path/corpus")
-      }
-      IvfSearch.driftVerdict(
-        IvfSearch.celledStats(celled.withColumn("__dist",
-          IvfSearch.cellDist(centroids)(col("v"), col("cell"))), centroids.length),
-        centroids.length, IvfSearch.loadStats(spark, path))
-    } finally IndexMaintenance.unpersistCheckpoint(celled)
-  }
-
-  /** Compact / delete: the layout is [[IvfSearch]]'s, so the machinery
-    * is too (one compactor, one tombstone protocol — see
-    * [[Tombstones]]).
-    */
-  def compactIndex(spark: SparkSession, path: String,
-      excludeEpoch: Long = Long.MinValue): (Long, Long) =
-    IvfSearch.compactIndex(spark, path, excludeEpoch)
-
-  def deleteFromIndex(spark: SparkSession, path: String,
-      ids: DataFrame, idCol: String, epoch: Option[Long] = None): Long =
-    IvfSearch.deleteFromIndex(spark, path, ids, idCol, epoch)
-
-  /** RADIUS search from the persisted SQ8 store (FAISS `range_search`
-    * posture on the compressed celled layout): probe cells like
-    * [[IvfSearch.radiusIndex]], DEQUANTIZE each scanned code row once
-    * ([[SqSearch.decodeVec]] — the affine raw-dot decomposition can't
-    * bound cosine/l2 thresholds), admit candidates at a RELAXED
-    * threshold (`margin` absorbs the half-step quantization error so
-    * near-boundary vectors aren't lost to rounding), then re-score the
-    * admitted pairs EXACTLY against `corpus` by id and cut at the true
-    * threshold — precision 1.0 by construction, recall bounded by cell
-    * probing exactly as the uncompressed radius. `filter` rides the
-    * pruned scan (payload pushdown).
-    */
-  def radiusIndex(
-      spark: SparkSession, path: String,
-      queries: DataFrame, qId: String, qVec: String,
-      corpus: DataFrame, cId: String, cVec: String,
-      threshold: Double, metric: String = "cosine", nProbe: Int = 4,
-      margin: Double = 0.05, filter: Column = lit(true)): DataFrame = {
-    require(margin >= 0, s"radiusIndex: margin must be >= 0, got $margin")
-    val centroids = IvfSearch.loadCentroids(spark, path)
-    val m = SqSearch.loadModel(spark, s"$path/sqmodel")
-    val probed = queries.select(col(qId), col(qVec),
-      explode(IvfSearch.nearestCells(centroids, nProbe)(col(qVec))).as("cell"))
-    val cells = probed.select("cell").distinct().collect().map(_.getInt(0))
-    val dq = SqSearch.decodeUdfOf(m)
-    val celled = Tombstones.filterLive(spark, path,
-        spark.read.parquet(s"$path/corpus")
-          .filter(col("cell").isin(cells.map(Int.box).toIndexedSeq: _*))
-          .filter(filter),
-        "id", "epoch")
-      .select(col("id").as("match_id"), dq(col("codes")).as("__dqvec"),
-        col("cell"))
-    val relaxed = threshold + (if (metric == "l2") margin else -margin)
-    val admitted = probed.join(celled, "cell")
-      .withColumn("__ascore",
-        VectorSearch.scoreCol(metric)(col(qVec), col("__dqvec")))
-      .filter(if (metric == "l2") col("__ascore") <= relaxed
-        else col("__ascore") >= relaxed)
-      .select(col(qId), col(qVec), col("match_id"))
-    admitted
-      .join(corpus.select(col(cId).cast("long").as("match_id"),
-        col(cVec).cast("array<float>").as("__cvec")), "match_id")
-      .withColumn("score",
-        VectorSearch.scoreCol(metric)(col(qVec), col("__cvec")))
-      .filter(VectorSearch.radiusPred(metric, threshold))
-      .groupBy(col(qId), col("match_id"))
-      .agg((if (metric == "l2") min(col("score")) else max(col("score")))
-        .as("score"))
-  }
-
-  /** Probe the store: partition-pruned scan of the probed cells' CODES
-    * (never a float vector), per-query affine scan — dot decomposes as
-    * const + Σ w·code with the weights precomputed per query ([[SqSearch
-    * .sqTopK]]'s kernel, restricted to each cell's probers like
-    * [[IvfPqIndex.searchIndex]]) — then exact re-rank of the
-    * `numCandidates` survivors against `corpus`. `filter` rides the
-    * pruned scan (payload pushdown); tombstoned rows die first.
-    *
-    * Metric contract (the [[SqSearch.sqTopK]] family rule): "cosine"
-    * SELECTS candidates by raw dot over the affine codes and re-ranks
-    * the survivors with true cosine — on an UNNORMALIZED corpus the
-    * shortlist is biased toward large-norm vectors, so either normalize
-    * stored/query vectors or widen `numCandidates`. Only "l2" switches
-    * the scan itself; every other metric scans affinely on dot.
-    */
-  def searchIndex(
-      spark: SparkSession, path: String,
-      queries: DataFrame, qId: String, qVec: String,
-      corpus: DataFrame, cId: String, cVec: String,
-      k: Int, metric: String = "dot", nProbe: Int = 4,
-      numCandidates: Int = 100, maxQueries: Int = 10000,
-      filter: Column = lit(true)): DataFrame = {
-    VectorSearch.requireNumCandidates(numCandidates)
-    require(k <= numCandidates, s"k=$k exceeds numCandidates=$numCandidates")
-    import spark.implicits._
-    val centroids = IvfSearch.loadCentroids(spark, path)
-    val m = SqSearch.loadModel(spark, s"$path/sqmodel")
-    val dim = m.dim
-
-    val qRows = queries
-      .select(col(qId).cast("long"), col(qVec).cast("array<float>"))
-      .filter(col(qId).isNotNull && col(qVec).isNotNull)
-      .limit(maxQueries + 1).collect()
-    require(qRows.length <= maxQueries,
-      s"searchIndex: query batch exceeds maxQueries=$maxQueries — split the batch")
-    require(qRows.length.toLong * numCandidates <= 10000000L,
-      s"searchIndex: |queries|*numCandidates = ${qRows.length.toLong * numCandidates} " +
-        "exceeds 10M (per-task heap bound) — split the batch or narrow the budget")
-    val qIds = qRows.map(_.getLong(0))
-    val qVecs = qRows.map(_.getSeq[Float](1).toArray)
-    qVecs.foreach(q => require(q.length == dim,
-      s"searchIndex: query vector has ${q.length} dims, model expects $dim"))
-
-    val probes: Array[Array[Int]] = qVecs.map { q =>
-      centroids.indices
-        .map(i => (i, VectorSearch.scoreF32("l2", q, centroids(i))))
-        .sortBy { case (i, d) => (d, i) }
-        .take(nProbe).map(_._1).toArray
+      payload: Seq[String] = Nil): Unit =
+    writeCoded(corpus, cId, cVec, path, nList, iters, dim, payload) {
+      (celled, _) => SqCodec(SqSearch.trainModel(celled, "v", dim))
     }
-    val cells = probes.flatten.distinct.sorted
-
-    // per-query affine scan state (sqTopK's kernel): dot -> (const, w);
-    // l2 compares against the dequantized value directly
-    val l2 = metric == "l2"
-    val prepped = qVecs.map { q =>
-      if (l2) (0.0, q.map(_.toDouble))
-      else {
-        var const = 0.0
-        val w = new Array[Double](dim)
-        var d = 0
-        while (d < dim) {
-          const += q(d).toDouble * m.lo(d)
-          w(d) = q(d).toDouble * (m.hi(d) - m.lo(d)) / 255.0
-          d += 1
-        }
-        (const, w)
-      }
-    }
-    val probersOf: Map[Int, Array[Int]] =
-      cells.map(cell => cell ->
-        qVecs.indices.filter(qi => probes(qi).contains(cell)).toArray).toMap
-    val bc = spark.sparkContext.broadcast((qIds, prepped, probersOf, m))
-    val cand = numCandidates; val ascL = l2
-
-    val coded = Tombstones.filterLive(spark, path,
-        spark.read.parquet(s"$path/corpus")
-          .filter(col("cell").isin(cells.map(Int.box).toIndexedSeq: _*))
-          .filter(filter),
-        "id", "epoch")
-      .select(col("id"), col("codes"), col("cell"))
-    val candidates = coded.as[(Long, Array[Byte], Int)].mapPartitions { it =>
-      val (ids, qs, probers, model) = bc.value
-      val heaps = scala.collection.mutable.HashMap.empty[Int, TopKHeap]
-      it.foreach { case (mid, codes, cell) =>
-        val qis = probers.getOrElse(cell, Array.emptyIntArray)
-        var j = 0
-        while (j < qis.length) {
-          val qi = qis(j)
-          val (const, w) = qs(qi)
-          var approx = const
-          var d = 0
-          if (ascL) {
-            while (d < codes.length) {
-              val c = codes(d) & 0xff
-              val delta = model.hi(d) - model.lo(d)
-              val dv = model.lo(d) + c * delta / 255.0
-              val diff = w(d) - dv
-              approx += diff * diff
-              d += 1
-            }
-          } else {
-            while (d < codes.length) {
-              approx += w(d) * (codes(d) & 0xff)
-              d += 1
-            }
-          }
-          heaps.getOrElseUpdate(qi, new TopKHeap(cand, ascL)).insert(mid, approx)
-          j += 1
-        }
-      }
-      heaps.iterator.flatMap { case (qi, h) =>
-        (0 until h.n).map(i => (ids(qi), h.ids(i), h.scores(i)))
-      }
-    }.toDF(qId, "match_id", "__approx")
-
-    PqSearch.cutAndRerank(candidates, queries, qId, qVec, corpus, cId, cVec,
-      k, metric, numCandidates, ascL)
-  }
 }

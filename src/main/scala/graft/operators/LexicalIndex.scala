@@ -46,7 +46,21 @@ import org.apache.spark.sql.functions._
   * family) — re-ingesting a document would double its postings. The
   * streaming front-ends pair this with the cross-epoch dedup stores.
   */
-object LexicalIndex {
+object LexicalIndex extends MaintainedStore[Long] {
+
+  /** An upsert re-ingests a live id, which the append contract forbids
+    * (it would double the postings and the stats partial): every changed
+    * id tombstones first — which also writes the NEGATIVE stats partial
+    * for the dying rows, so n/avgdl heal in the same breath — and the
+    * live document lands at a later epoch with its own positive partial.
+    */
+  def upsertTombstones: Boolean = true
+  def append(df: DataFrame, idCol: String, valueCol: String, path: String,
+      epoch: Long): Long = appendToIndex(df, idCol, valueCol, path, epoch)
+  def delete(spark: SparkSession, path: String, ids: DataFrame, idCol: String,
+      epoch: Long): Unit = deleteFromIndex(spark, path, ids, idCol, Some(epoch))
+  def compact(spark: SparkSession, path: String, excludeEpoch: Long): (Long, Long) =
+    compactIndex(spark, path, excludeEpoch)
 
   /** Posting-store partition fan-out. 64 directories keeps listing cheap
     * while a 3-term query prunes ~95% of a corpus-sized store.
@@ -255,20 +269,13 @@ object LexicalIndex {
       IndexMaintenance.recoverSwap(spark, s"$path/stats")
       require(FsUtil.exists(spark, s"$path/stats"),
         s"lexical index at '$path' does not exist or is unreachable")
-      // deletes heal here (see deleteFromIndex): tombstoned rows drop
-      // PHYSICALLY from closed segments before the epoch remap (the rule
-      // reads original epochs); the in-flight epoch stays untouched so
-      // its replay can overwrite itself, its tombstones retained. The
-      // stats rewrite needs no delete logic — the negative partials the
-      // delete wrote merge into the summed segments like any other row.
-      val applyTombstones: DataFrame => DataFrame = df =>
-        if (!Tombstones.exists(spark, path)) df
-        else Tombstones.filterLive(spark, path,
-            df.filter(col("epoch") =!= excludeEpoch), "id", "epoch")
-          .unionByName(df.filter(col("epoch") === excludeEpoch))
+      // deletes heal here (see deleteFromIndex) before the epoch remap.
+      // The stats rewrite needs no delete logic — the negative partials
+      // the delete wrote merge into the summed segments like any other row.
       val counts = IndexMaintenance.compactPartitionedDir(
         spark, s"$path/postings", Seq("bucket", "epoch"), NBuckets * 2,
-        applyTombstones.andThen(IndexMaintenance.closedEpochsToBase(excludeEpoch)))
+        (Tombstones.applyToClosed(spark, path, excludeEpoch) _)
+          .andThen(IndexMaintenance.closedEpochsToBase(excludeEpoch)))
       IndexMaintenance.rewriteDir(spark, s"$path/stats",
         partitionCols = Seq("epoch")) { df =>
         IndexMaintenance.closedEpochsToBase(excludeEpoch)(df)

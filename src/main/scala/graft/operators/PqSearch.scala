@@ -233,38 +233,14 @@ object PqSearch {
 
     val coded = encode(corpus, cId, cVec, cb)
 
-    val qRows = queries
-      .select(col(qId).cast("long"), col(qVec).cast("array<float>"))
-      .filter(col(qId).isNotNull && col(qVec).isNotNull)
-      .limit(maxQueries + 1).collect()
-    require(qRows.length <= maxQueries,
-      s"pqTopK: query batch exceeds maxQueries=$maxQueries — split the batch")
-    // per-task heap memory is |Q| x numCandidates x 16B — bound the
-    // product, not just the factors (10k x 10k would be 1.6 GB per task)
-    require(qRows.length.toLong * numCandidates <= 10000000L,
-      s"pqTopK: |queries|*numCandidates = ${qRows.length.toLong * numCandidates} " +
-        "exceeds 10M (per-task heap bound) — split the batch or narrow the budget")
-
+    val qRows = collectQueries(queries, qId, qVec, maxQueries, numCandidates,
+      "pqTopK")
     val adcMetric = if (metric == "l2") "l2" else "dot"
     val asc = adcMetric == "l2"
-    // flattened LUT per query: lut(s * kCodes + c) = partial score of the
-    // query's subspace-s slice against codebook entry c
-    val luts = qRows.map { r =>
-      val q = r.getSeq[Float](1).toArray
+    val luts = qRows.map { case (id, q) =>
       require(q.length == m * cb.dsub,
         s"pqTopK: query vector has ${q.length} dims, codebooks expect ${m * cb.dsub}")
-      val lut = new Array[Double](m * kCodes)
-      var s = 0
-      while (s < m) {
-        val sub = java.util.Arrays.copyOfRange(q, s * cb.dsub, (s + 1) * cb.dsub)
-        var c = 0
-        while (c < kCodes) {
-          lut(s * kCodes + c) = scoreF32(adcMetric, sub, cb.books(s)(c))
-          c += 1
-        }
-        s += 1
-      }
-      (r.getLong(0), lut)
+      (id, adcLut(q, cb, adcMetric))
     }
     val bc = spark.sparkContext.broadcast(luts)
     val mm = m; val kk = kCodes; val cand = numCandidates
@@ -278,11 +254,7 @@ object PqSearch {
         val codes = codesSeq.toArray
         var qi = 0
         while (qi < qs.length) {
-          val lut = qs(qi)._2
-          var approx = 0.0
-          var s = 0
-          while (s < mm) { approx += lut(s * kk + codes(s)); s += 1 }
-          heaps(qi)._2.insert(mid, approx)
+          heaps(qi)._2.insert(mid, adcScore(qs(qi)._2, 0.0, codes, mm, kk))
           qi += 1
         }
       }
@@ -293,6 +265,57 @@ object PqSearch {
 
     cutAndRerank(candidates, queries, qId, qVec, corpus, cId, cVec,
       k, metric, numCandidates, asc)
+  }
+
+  /** Shared head of every broadcast code scan: the (id, vector) query
+    * batch, bounded by `maxQueries` and by |queries| × numCandidates —
+    * per-task heap memory is |Q| × numCandidates × 16 B, so the PRODUCT
+    * is bounded, not just the factors (10k × 10k would be 1.6 GB per
+    * task).
+    */
+  private[operators] def collectQueries(queries: DataFrame, qId: String,
+      qVec: String, maxQueries: Int, numCandidates: Int,
+      who: String): Array[(Long, Array[Float])] = {
+    val qRows = queries
+      .select(col(qId).cast("long"), col(qVec).cast("array<float>"))
+      .filter(col(qId).isNotNull && col(qVec).isNotNull)
+      .limit(maxQueries + 1).collect()
+    require(qRows.length <= maxQueries,
+      s"$who: query batch exceeds maxQueries=$maxQueries — split the batch")
+    require(qRows.length.toLong * numCandidates <= 10000000L,
+      s"$who: |queries|*numCandidates = ${qRows.length.toLong * numCandidates} " +
+        "exceeds 10M (per-task heap bound) — split the batch or narrow the budget")
+    qRows.map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+  }
+
+  /** The ADC lookup table of query `q`: lut(s * kCodes + c) = partial
+    * score of the query's subspace-s slice against codebook entry c.
+    */
+  private[operators] def adcLut(q: Array[Float], cb: Codebooks,
+      adcMetric: String): Array[Double] = {
+    val lut = new Array[Double](cb.m * cb.kCodes)
+    var s = 0
+    while (s < cb.m) {
+      val sub = java.util.Arrays.copyOfRange(q, s * cb.dsub, (s + 1) * cb.dsub)
+      var c = 0
+      while (c < cb.kCodes) {
+        lut(s * cb.kCodes + c) = scoreF32(adcMetric, sub, cb.books(s)(c))
+        c += 1
+      }
+      s += 1
+    }
+    lut
+  }
+
+  /** The ADC approximate score of one code row: `const` plus the code's
+    * LUT entry per subspace.
+    */
+  private[operators] def adcScore(lut: Array[Double], const: Double,
+      codes: Array[Int], m: Int, kCodes: Int): Double = {
+    var approx = const
+    var s = 0
+    while (s < m) { approx += lut(s * kCodes + codes(s)); s += 1 }
+    approx
   }
 
   /** Shared tail of every ADC scan ([[pqTopK]], [[IvfPqIndex

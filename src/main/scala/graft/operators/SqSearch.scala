@@ -200,6 +200,51 @@ object SqSearch {
     * weights, bounded exactly like the PQ path; the corpus side stays
     * fully distributed and ships only (id, codes).
     */
+  /** Per-query scan state: for dot, (const = Σ q·lo, w_d = q_d·Δ_d/255)
+    * so approx = const + Σ w_d·code_d; for l2, (0, q) and the dequantized
+    * value lo_d + code_d·Δ_d/255 is compared directly.
+    */
+  private[operators] def affinePrep(q: Array[Float], m: SqModel,
+      l2: Boolean): (Double, Array[Double]) =
+    if (l2) (0.0, q.map(_.toDouble))
+    else {
+      var const = 0.0
+      val w = new Array[Double](m.dim)
+      var d = 0
+      while (d < m.dim) {
+        const += q(d).toDouble * m.lo(d)
+        w(d) = q(d).toDouble * (m.hi(d) - m.lo(d)) / 255.0
+        d += 1
+      }
+      (const, w)
+    }
+
+  /** The approximate score of one code row under [[affinePrep]]'s state
+    * (l2: squared distance to the dequantized row).
+    */
+  private[operators] def affineScore(prep: (Double, Array[Double]),
+      codes: Array[Byte], m: SqModel, l2: Boolean): Double = {
+    val (const, w) = prep
+    var approx = const
+    var d = 0
+    if (l2) {
+      while (d < codes.length) {
+        val c = codes(d) & 0xff
+        val delta = m.hi(d) - m.lo(d)
+        val dv = m.lo(d) + c * delta / 255.0
+        val diff = w(d) - dv
+        approx += diff * diff
+        d += 1
+      }
+    } else {
+      while (d < codes.length) {
+        approx += w(d) * (codes(d) & 0xff)
+        d += 1
+      }
+    }
+    approx
+  }
+
   def sqTopK(
       queries: DataFrame, qId: String, qVec: String,
       corpus: DataFrame, cId: String, cVec: String,
@@ -213,36 +258,12 @@ object SqSearch {
 
     val coded = encode(corpus, cId, cVec, model)
 
-    val qRows = queries
-      .select(col(qId).cast("long"), col(qVec).cast("array<float>"))
-      .filter(col(qId).isNotNull && col(qVec).isNotNull)
-      .limit(maxQueries + 1).collect()
-    require(qRows.length <= maxQueries,
-      s"sqTopK: query batch exceeds maxQueries=$maxQueries — split the batch")
-    require(qRows.length.toLong * numCandidates <= 10000000L,
-      s"sqTopK: |queries|*numCandidates = ${qRows.length.toLong * numCandidates} " +
-        "exceeds 10M (per-task heap bound) — split the batch or narrow the budget")
-
     val l2 = metric == "l2"
-    // per-query scan state: for dot, (const = Σ q·lo, w_d = q_d·Δ_d/255)
-    // so approx = const + Σ w_d·code_d; for l2 the dequantized value
-    // lo_d + code_d·Δ_d/255 is compared directly.
-    val prepped = qRows.map { r =>
-      val q = r.getSeq[Float](1).toArray
+    val prepped = PqSearch.collectQueries(queries, qId, qVec, maxQueries,
+        numCandidates, "sqTopK").map { case (id, q) =>
       require(q.length == dim,
         s"sqTopK: query vector has ${q.length} dims, model expects $dim")
-      if (l2) (r.getLong(0), 0.0, q.map(_.toDouble))
-      else {
-        var const = 0.0
-        val w = new Array[Double](dim)
-        var d = 0
-        while (d < dim) {
-          const += q(d).toDouble * model.lo(d)
-          w(d) = q(d).toDouble * (model.hi(d) - model.lo(d)) / 255.0
-          d += 1
-        }
-        (r.getLong(0), const, w)
-      }
+      (id, affinePrep(q, model, l2))
     }
     val bcQ = spark.sparkContext.broadcast(prepped)
     val bcM = spark.sparkContext.broadcast(model)
@@ -251,29 +272,11 @@ object SqSearch {
     val candidates = coded.as[(Long, Array[Byte])].mapPartitions { it =>
       val qs = bcQ.value
       val m = bcM.value
-      val heaps = qs.map { case (id, _, _) => (id, new TopKHeap(cand, l2)) }
+      val heaps = qs.map { case (id, _) => (id, new TopKHeap(cand, l2)) }
       it.foreach { case (mid, codes) =>
         var qi = 0
         while (qi < qs.length) {
-          val (_, const, w) = qs(qi)
-          var approx = const
-          var d = 0
-          if (l2) {
-            while (d < codes.length) {
-              val c = codes(d) & 0xff
-              val delta = m.hi(d) - m.lo(d)
-              val dv = m.lo(d) + c * delta / 255.0
-              val diff = w(d) - dv
-              approx += diff * diff
-              d += 1
-            }
-          } else {
-            while (d < codes.length) {
-              approx += w(d) * (codes(d) & 0xff)
-              d += 1
-            }
-          }
-          heaps(qi)._2.insert(mid, approx)
+          heaps(qi)._2.insert(mid, affineScore(qs(qi)._2, codes, m, l2))
           qi += 1
         }
       }

@@ -176,6 +176,35 @@ object Tombstones {
         .drop("__tomb_id", "__tomb_epoch")
     }
 
+  /** Delete `ids` from the store at `root` whose rows live under
+    * `root/dataDir`: the tombstone lands under the store lock, after
+    * swap recovery, at `epoch` — by default the newest segment epoch
+    * ("delete what's here now": every current row of the id dies, a
+    * LATER append of it out-lives the delete). Returns the epoch used.
+    */
+  def deleteUnderLock(spark: SparkSession, root: String, dataDir: String,
+      ids: DataFrame, idCol: String, epoch: Option[Long]): Long =
+    IndexMaintenance.withStoreLock(spark, root) {
+      IndexMaintenance.recoverSwap(spark, s"$root/$dataDir")
+      val e = epoch.getOrElse(maxEpochIn(spark, s"$root/$dataDir"))
+      write(spark, root, ids, idCol, e)
+      e
+    }
+
+  /** The compaction half of the rule over a store's (id, epoch) rows:
+    * tombstoned rows drop PHYSICALLY from closed segments, while the
+    * in-flight `excludeEpoch` stays untouched — its at-least-once replay
+    * must be able to overwrite itself, and the retained tombstone keeps
+    * its dead rows filtered at serve time. Reads ORIGINAL epochs, so it
+    * runs before any closed-epoch remap.
+    */
+  def applyToClosed(spark: SparkSession, root: String,
+      excludeEpoch: Long)(df: DataFrame): DataFrame =
+    if (!exists(spark, root)) df
+    else filterLive(spark, root, df.filter(col("epoch") =!= excludeEpoch),
+        "id", "epoch")
+      .unionByName(df.filter(col("epoch") === excludeEpoch))
+
   /** After compaction physically applied the rule to all CLOSED
     * segments: drop fully-applied tombstone epochs, keep those that can
     * still affect the in-flight epoch's replays (epoch ≥

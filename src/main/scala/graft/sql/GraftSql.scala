@@ -124,7 +124,7 @@ class GraftSql(
         require(k <= big.numCandidates,
           s"k=$k exceeds the registration's numCandidates=${big.numCandidates}")
         graft.operators.IvfSearch.searchIndex(spark,
-          ivfStoreFor(big.df, big.contentCol, big.vecCol, big),
+          celledStoreFor(big),
           qv, "__qid", "__qvec", k, metric,
           nProbe = nProbeFor, filter = p.map(expr).getOrElse(lit(true)))
       case ("pq", None) =>
@@ -165,7 +165,7 @@ class GraftSql(
         // per-task heap bound. A predicate rides the pruned ADC scan —
         // same pushdown posture as "ivf" at 1/32 the scanned bytes.
         graft.operators.IvfPqIndex.searchIndex(spark,
-          ivfPqStoreFor(big.df, big.contentCol, big.vecCol, big),
+          celledStoreFor(big),
           qv, "__qid", "__qvec", c, "__cid", "__cvec", k, metric,
           nProbe = nProbeFor, numCandidates = pool, maxQueries = 10000,
           filter = p.map(expr).getOrElse(lit(true)))
@@ -173,7 +173,7 @@ class GraftSql(
         // the SQ8 celled store: same probe/re-rank shape as "ivfpq" on
         // 4x-compressed near-exact codes (per-dimension affine scan)
         graft.operators.IvfSqIndex.searchIndex(spark,
-          ivfSqStoreFor(big.df, big.contentCol, big.vecCol, big),
+          celledStoreFor(big),
           qv, "__qid", "__qvec", c, "__cid", "__cvec", k, metric,
           nProbe = nProbeFor, numCandidates = pool, maxQueries = 10000,
           filter = p.map(expr).getOrElse(lit(true)))
@@ -401,23 +401,16 @@ class GraftSql(
         // re-score, precision 1.0 — nProbe 12/16 is the setting the
         // radius recall contract measured (q_ivf_radius_recall)
         graft.operators.IvfSearch.radiusIndex(spark,
-          ivfStoreFor(src, contentCol, vecCol, big), qv, "__qid", "__qvec",
+          celledStoreFor(big), qv, "__qid", "__qvec",
           threshold, "cosine", nProbe = 12, filter = storeFilter)
-      case big: DfCorpus if big.indexType == "ivfsq" =>
-        // the SQ8 store serves the radius from its compressed cells:
-        // dequantized relaxed-threshold pre-pass, exact re-score cut at
+      case big: DfCorpus if GraftSql.CompressedStores.contains(big.indexType) =>
+        // the SQ8 / PQ stores serve the radius from their compressed
+        // cells: decoded relaxed-threshold pre-pass (the codec's own
+        // margin — wider for the lossy PQ codes), exact re-score cut at
         // the true threshold (precision 1.0; recall contracted by
-        // q_ivfsq_radius_recall at the same nProbe)
-        graft.operators.IvfSqIndex.radiusIndex(spark,
-          ivfSqStoreFor(src, contentCol, vecCol, big), qv, "__qid", "__qvec",
-          c, "__cid", "__cvec", threshold, "cosine", nProbe = 12,
-          filter = storeFilter)
-      case big: DfCorpus if big.indexType == "ivfpq" =>
-        // the PQ store's twin: reconstructed (centroid + residual
-        // sub-centroid) pre-pass at a wider margin for the lossy codes,
-        // exact re-score (q_ivfpq_radius_recall pins the recall)
-        graft.operators.IvfPqIndex.radiusIndex(spark,
-          ivfPqStoreFor(src, contentCol, vecCol, big), qv, "__qid", "__qvec",
+        // q_ivfsq_radius_recall / q_ivfpq_radius_recall at the same nProbe)
+        GraftSql.CompressedStores(big.indexType).radiusIndex(spark,
+          celledStoreFor(big), qv, "__qid", "__qvec",
           c, "__cid", "__cvec", threshold, "cosine", nProbe = 12,
           filter = storeFilter)
       case big: DfCorpus if big.indexType == "hnsw" =>
@@ -640,7 +633,7 @@ class GraftSql(
     val ranked = (ref, pred) match {
       case (big: DfCorpus, None) if big.indexType == "ivf" =>
         graft.operators.VectorSearch.groupMaxSimIndex(spark,
-            ivfStoreFor(big.df, big.contentCol, big.vecCol, big),
+            celledStoreFor(big),
             qv, "__qid", "__qvec",
             allMembers.select("__cid", "__gid"), "__cid", "__gid",
             k, "cosine",
@@ -792,6 +785,15 @@ object GraftSql {
     */
   private[sql] val AtRestFamilies: Seq[String] =
     Seq("hnsw", "ivf", "ivfpq", "ivfsq")
+
+  /** The celled families' stores by family name: the compressed pair,
+    * then all three.
+    */
+  private[sql] val CompressedStores
+      : Map[String, graft.operators.CompressedCelledStore[_]] =
+    Map("ivfpq" -> graft.operators.IvfPqIndex, "ivfsq" -> graft.operators.IvfSqIndex)
+  private[sql] val CelledStores: Map[String, graft.operators.CelledStore] =
+    CompressedStores + ("ivf" -> graft.operators.IvfSearch)
 
   /** Families a cdc=true registration may declare — the payload stores
     * whose CDC fronts replace vectors and metadata (ivf natively; the

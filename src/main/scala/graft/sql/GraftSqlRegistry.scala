@@ -99,8 +99,8 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
         "re-register under one of them or drop cdc")
     // cdc + lexicalIndex is the maintained TEXT corpus: MAINTAIN drives
     // a second CDC front onto the declared lexical store (postings and
-    // the BM25 global constants heal exactly, lexCdcStream's contract),
-    // so HYBRID/PRF keep serving keyed changes — a delete record (NULL
+    // the BM25 global constants heal exactly, the lexical store's CDC
+    // contract), so HYBRID/PRF keep serving keyed changes — a delete record (NULL
     // vector) deletes the document from BOTH stores, an insert indexes
     // its text, and text shapes resolve contents from the live store.
     // normalize-at-build (the Atlas cosine posture, reference
@@ -223,7 +223,7 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
 
   /** Apply a keyed change stream to a CDC-declared registration's
     * persisted store — the SQL-reachable form of the operator-level
-    * [[graft.streaming.Streams.ivfCdcStream]] front (judge r15 task 6:
+    * [[graft.streaming.Streams.cdcStream]] front (judge r15 task 6:
     * a `registerSearchCorpus` store was build-once with no way to track
     * a change topic). The change records must carry the registration's
     * content and vector columns plus every payload column the store
@@ -271,14 +271,7 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     }
     // the store must exist before the first CDC batch (the CDC front
     // appends/tombstones, it never bootstraps)
-    val path = big.indexType match {
-      case "ivf" => ivfStoreFor(big.df, big.contentCol, big.vecCol, big)
-      case "ivfpq" => ivfPqStoreFor(big.df, big.contentCol, big.vecCol, big)
-      case "ivfsq" => ivfSqStoreFor(big.df, big.contentCol, big.vecCol, big)
-      case "hnsw" => hnswStoreFor(big)
-      case other => throw new IllegalStateException(
-        s"cdc registration on unsupported family '$other'")
-    }
+    val path = storeFor(big)
     // the checkpoint is PER (name, registration) and re-issues reuse it:
     // the store's writer claim is bound to the first checkpoint's
     // namespace, so a fresh checkpoint per MAINTAIN would refuse itself
@@ -333,17 +326,8 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
       case Some(interval) => Trigger.ProcessingTime(interval)
       case None => Trigger.AvailableNow()
     })
-    val q = big.indexType match {
-      case "ivf" => graft.streaming.Streams.ivfCdcStream(
-        recs, "__cid", big.vecCol, path, ckpt, seqCol, trigger = trig)
-      case "ivfpq" => graft.streaming.Streams.ivfPqCdcStream(
-        recs, "__cid", big.vecCol, path, ckpt, seqCol, trigger = trig)
-      case "ivfsq" => graft.streaming.Streams.ivfSqCdcStream(
-        recs, "__cid", big.vecCol, path, ckpt, seqCol, trigger = trig)
-      // the graph family: nodes + docs sidecar in one sub-epoch dance
-      case _ => graft.streaming.Streams.hnswPayloadCdcStream(
-        recs, "__cid", big.vecCol, path, ckpt, seqCol, trigger = trig)
-    }
+    val q = graft.streaming.Streams.cdcStream(maintainedStoreFor(big),
+      recs, "__cid", big.vecCol, path, ckpt, seqCol, trigger = trig)
     started.add(q)
     lastStartedStream.set(q)
     trackMaintStream(name, q)
@@ -352,7 +336,7 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     // vector) deletes the document's postings with exact n/avgdl
     // healing, an insert indexes its text, and an upsert (same content,
     // new vector) re-ingests the identical text — a stats no-op by
-    // construction, proven exact by lexCdcStream's sub-epoch contract.
+    // construction, proven exact by the lexical store's sub-epoch contract.
     // Its own store, its own claim, its own checkpoint namespace (an
     // explicit checkpointDir gets a caller-owned '/lex' sibling).
     if (lexDeclared.getOrElse(name, false)) {
@@ -366,9 +350,9 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
           "graft_sql_maint_lex_")
         val lexRecs = recs.withColumn("__ltext",
           when(col(big.vecCol).isNotNull, col(big.contentCol)))
-        val lq = graft.streaming.Streams.lexCdcStream(
-          lexRecs, "__cid", "__ltext", lexPath, lexCkpt, seqCol,
-          trigger = trig)
+        val lq = graft.streaming.Streams.cdcStream(
+          graft.operators.LexicalIndex, lexRecs, "__cid", "__ltext", lexPath,
+          lexCkpt, seqCol, trigger = trig)
         started.add(lq)
         trackMaintStream(name, lq)
       } catch { case t: Throwable =>
@@ -415,12 +399,8 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     val famPath = storePath(big.indexType, big.tag)
     val compacted = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
     if (graft.operators.FsUtil.exists(spark, famPath)) {
-      val (b, a) = big.indexType match {
-        case "ivf" => graft.operators.IvfSearch.compactIndex(spark, famPath)
-        case "ivfpq" => graft.operators.IvfPqIndex.compactIndex(spark, famPath)
-        case "ivfsq" => graft.operators.IvfSqIndex.compactIndex(spark, famPath)
-        case _ => graft.operators.HnswSearch.compactIndex(spark, famPath)
-      }
+      val (b, a) = maintainedStoreFor(big).compact(spark, famPath,
+        excludeEpoch = Long.MinValue)
       compacted += ((big.indexType, b, a))
     }
     lexTags.get(name).map(t => storePath("lex", t))
@@ -659,19 +639,8 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     */
   private[sql] def liveStoreCanon(big: DfCorpus): DataFrame = {
     import org.apache.spark.sql.functions._
-    val (path, vecExpr) = big.indexType match {
-      case "ivf" =>
-        (ivfStoreFor(big.df, big.contentCol, big.vecCol, big), col("vec"))
-      case "ivfpq" =>
-        (ivfPqStoreFor(big.df, big.contentCol, big.vecCol, big),
-          col(big.vecCol))
-      case "ivfsq" =>
-        (ivfSqStoreFor(big.df, big.contentCol, big.vecCol, big),
-          col(big.vecCol))
-      case "hnsw" => (hnswStoreFor(big), col(big.vecCol))
-      case other => throw new IllegalStateException(
-        s"cdc registration on unsupported family '$other'")
-    }
+    val path = storeFor(big)
+    val vecExpr = col(if (big.indexType == "ivf") "vec" else big.vecCol)
     graft.operators.Tombstones.filterLive(spark, path,
         spark.read.parquet(s"$path/corpus"), "id", "epoch")
       .withColumn("__cid", col("id"))
@@ -706,7 +675,7 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     val path = storePath("hnsw", big.tag)
     GraftSql.hnswBuildLock.synchronized {
       if (!graft.operators.FsUtil.exists(spark, s"$path/_meta/_SUCCESS")) {
-        if (big.cdcKeyed) {
+        val c = if (big.cdcKeyed) {
           // a cdc registration's graphs get a docs SIDECAR (`corpus/`,
           // epoch-partitioned) carrying content + every payload column
           // next to the adjacency: the graph stores only (id, vec), and
@@ -722,39 +691,55 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
               org.apache.spark.sql.functions.lit(-1L))
             .write.mode("overwrite").partitionBy("epoch")
             .parquet(s"$path/corpus")
-          val shards = graft.operators.HnswSearch.shardsFor(withIds.count())
-          graft.operators.HnswSearch.writeIndex(withIds, "__cid", "__cvec",
-            path, nShards = shards, m = 8, efConstruction = 64,
-            metric = "dot")
-        } else {
-          val c = canonSource(big)
-          val shards = graft.operators.HnswSearch.shardsFor(c.count())
-          graft.operators.HnswSearch.writeIndex(c, "__cid", "__cvec", path,
-            nShards = shards, m = 8, efConstruction = 64, metric = "dot")
-        }
+          withIds
+        } else canonSource(big)
+        val shards = graft.operators.HnswSearch.shardsFor(c.count())
+        graft.operators.HnswSearch.writeIndex(c, "__cid", "__cvec", path,
+          nShards = shards, m = 8, efConstruction = 64, metric = "dot")
       }
     }
     path
   }
 
-  /** Build-once persisted IVF store for a beyond-cap registration, laid
-    * out for FILTERED serving: every non-reserved source column rides
-    * as PAYLOAD next to the vectors, so a metadata predicate evaluates
-    * inside the partition-pruned probe scan as a parquet PushedFilter —
-    * no join back to the source corpus per statement (the at-scale
-    * contract of [[graft.operators.IvfSearch.searchIndex]]). Same
-    * build-once/lock discipline as [[hnswStoreFor]].
+  /** The maintenance sink of a store-backed registration's family (the
+    * store itself is built by [[storeFor]]): the celled store, or the
+    * hnsw graphs — with their docs sidecar on a cdc registration.
     */
-  private[sql] def ivfStoreFor(src: DataFrame, contentCol: String,
-      vecCol: String, big: DfCorpus): String = {
-    val path = storePath("ivf", big.tag)
+  private[sql] def maintainedStoreFor(
+      big: DfCorpus): graft.operators.MaintainedStore[_] = big.indexType match {
+    case "hnsw" if big.cdcKeyed => graft.operators.HnswSearch.WithDocs
+    case "hnsw" => graft.operators.HnswSearch
+    case f => GraftSql.CelledStores(f)
+  }
+
+  /** The build-once persisted store of a store-backed registration. */
+  private[sql] def storeFor(big: DfCorpus): String =
+    if (big.indexType == "hnsw") hnswStoreFor(big) else celledStoreFor(big)
+
+  /** Build-once persisted celled store (ivf / ivfpq / ivfsq) for a
+    * beyond-cap registration, laid out for FILTERED serving: every
+    * non-reserved source column rides as PAYLOAD next to the vectors or
+    * codes, so a metadata predicate evaluates inside the
+    * partition-pruned probe scan as a parquet PushedFilter — no join
+    * back to the source corpus per statement (an unfiltered probe's
+    * scan never reads them — parquet column pruning — so the unfiltered
+    * ladder pays nothing for the layout). Same build-once/lock
+    * discipline as [[hnswStoreFor]]; every celled `writeIndex` writes
+    * its stats last, so their _SUCCESS implies the whole store landed.
+    */
+  private[sql] def celledStoreFor(big: DfCorpus): String = {
+    val store = GraftSql.CelledStores(big.indexType)
+    val path = storePath(big.indexType, big.tag)
     GraftSql.hnswBuildLock.synchronized {
-      if (!graft.operators.FsUtil.exists(spark, s"$path/centroids/_SUCCESS")) {
-        val (withIds, payload) = payloadSource(src, contentCol, vecCol,
-          Set("id", "vec", "cell", "epoch"), "ivf",
-          idFromContentOnly = big.cdcKeyed)
-        graft.operators.IvfSearch.writeIndex(withIds, "__cid", "__cvec",
-          path, nList = 16, payload = payload)
+      if (!graft.operators.FsUtil.exists(spark, s"$path/stats/_SUCCESS")) {
+        // a compressed store discards raw vectors, so a cdc one keeps
+        // them as payload (see payloadSource)
+        val (withIds, payload) = payloadSource(big.df, big.contentCol,
+          big.vecCol, store.reservedCols, big.indexType,
+          idFromContentOnly = big.cdcKeyed,
+          keepVecPayload = big.cdcKeyed && store.storedCol != "vec")
+        store.buildIndex(withIds, "__cid", "__cvec", path, nList = 16,
+          dim = corpusDim(withIds, big.tag), payload = payload)
       }
     }
     path
@@ -824,49 +809,6 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
           .select(col("__cid"), col("__w.*"))
       else keyed.dropDuplicates("__cid")
     (deduped, payload)
-  }
-
-  /** Build-once persisted IVF-PQ store for a beyond-cap registration —
-    * the composed 100 TB layout (coarse cells prune directories, PQ
-    * residual codes compress the scan) on the SQL surface, laid out for
-    * FILTERED serving like [[ivfStoreFor]]: every non-reserved source
-    * column rides as payload next to the codes (an unfiltered probe's
-    * scan never reads them — parquet column pruning — so the unfiltered
-    * ladder pays nothing for the layout). Same build-once/lock
-    * discipline as [[hnswStoreFor]].
-    */
-  private[sql] def ivfPqStoreFor(src: DataFrame, contentCol: String,
-      vecCol: String, big: DfCorpus): String = {
-    val path = storePath("ivfpq", big.tag)
-    GraftSql.hnswBuildLock.synchronized {
-      if (!graft.operators.FsUtil.exists(spark, s"$path/stats/_SUCCESS")) {
-        val (withIds, payload) = payloadSource(src, contentCol, vecCol,
-          Set("id", "vec", "cell", "epoch", "codes", "v", "rv"), "ivfpq",
-          idFromContentOnly = big.cdcKeyed, keepVecPayload = big.cdcKeyed)
-        graft.operators.IvfPqIndex.writeIndex(withIds, "__cid", "__cvec",
-          path, nList = 16, m = 8, kCodes = 16, payload = payload)
-      }
-    }
-    path
-  }
-
-  /** The SQ8 twin of [[ivfPqStoreFor]] — the near-exact 4× point of the
-    * compressed ladder, same payload-carrying filtered-serving layout.
-    */
-  private[sql] def ivfSqStoreFor(src: DataFrame, contentCol: String,
-      vecCol: String, big: DfCorpus): String = {
-    val path = storePath("ivfsq", big.tag)
-    GraftSql.hnswBuildLock.synchronized {
-      if (!graft.operators.FsUtil.exists(spark, s"$path/stats/_SUCCESS")) {
-        val (withIds, payload) = payloadSource(src, contentCol, vecCol,
-          Set("id", "vec", "cell", "epoch", "codes", "v"), "ivfsq",
-          idFromContentOnly = big.cdcKeyed, keepVecPayload = big.cdcKeyed)
-        graft.operators.IvfSqIndex.writeIndex(withIds, "__cid", "__cvec",
-          path, nList = 16, dim = corpusDim(withIds, big.tag),
-          payload = payload)
-      }
-    }
-    path
   }
 
   /** BM25 index artifacts — postings and corpus stats — for a

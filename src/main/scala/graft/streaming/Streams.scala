@@ -54,7 +54,7 @@ object Streams {
     * currently holds the max) never kills a higher-hash writer's older
     * rows, and can kill logically newer ones. Exactly ONE writer — one
     * stream checkpoint, or one manual append/delete cadence — may own a
-    * store's epoch order; the CDC fronts enforce their own ordering
+    * store's epoch order; [[cdcStream]] enforces its own ordering
     * within one checkpoint via sub-epochs (2e / 2e+1) for this reason.
     */
   private[streaming] def epochNamespace(checkpointDir: String): Long =
@@ -222,81 +222,70 @@ object Streams {
       .start()
   }
 
-  /** Continuous vector indexing: every micro-batch of arriving vectors
-    * appends to a persisted IVF index (cells assigned from the STORED
-    * centroids — [[graft.operators.IvfSearch.appendToIndex]]), so
-    * searchers see them on their next probe. The reference's perpetual
-    * embed→index pipeline (README.md:432-445) in at-rest form; pairs
-    * with an offline `writeIndex` retrain cadence.
+  /** Whether micro-batch `epoch` ends a compaction cycle: the in-stream
+    * maintenance cadence that keeps file counts bounded by N×partitions
+    * instead of growing with ingestion history. Safe by construction:
+    * `foreachBatch` serializes the compaction with the stream's own
+    * appends, the in-flight epoch is excluded so its replay stays
+    * idempotent, and the store lease
+    * ([[graft.operators.IndexMaintenance.withStoreLock]]) makes any
+    * OTHER process's compactor fail fast rather than race the swap.
     */
-  def ivfIndexStream(
-      vectors: DataFrame, idCol: String, vecCol: String,
+  private def compactsAfter(epoch: Long, compactEvery: Long): Boolean =
+    compactEvery > 0 && epoch % compactEvery == compactEvery - 1
+
+  /** Continuous indexing: every micro-batch of arriving rows appends to
+    * a persisted `store` — the reference's perpetual embed→index
+    * pipeline (README.md:432-445) in at-rest form. The celled stores
+    * assign cells (and codes) from the STORED model, so new vectors
+    * become searchable through the partition-pruned probe without any
+    * retraining in the stream (offline `writeIndex` retrains on its own
+    * cadence — the online-append/offline-retrain split); hnsw builds
+    * each batch its OWN segment graphs (the Lucene posture: existing
+    * graphs are never mutated); the lexical index appends postings and a
+    * stats partial, so stream ≡ batch by construction (postings are
+    * per-document rows and the partials sum exactly). New-ids contract:
+    * front with [[dedupStream]]/the curation fronts.
+    *
+    * Epoch-tagged: an at-least-once replay of a micro-batch overwrites
+    * its own epoch partitions instead of duplicating rows (exactly-once
+    * through the idempotent-sink pattern). `onAppend` receives the
+    * store's per-batch report (the celled stores' drift
+    * [[graft.operators.AppendStats]] — the caller's hook for alerting /
+    * scheduling the offline retrain; hnsw's (rows appended, segments
+    * built); the lexical index's documents appended). `compactEvery` > 0
+    * compacts after every Nth batch (see [[compactsAfter]]) — for hnsw
+    * the rebuild IS the segment merge.
+    */
+  def indexStream[S](store: graft.operators.MaintainedStore[S],
+      rows: DataFrame, idCol: String, valueCol: String,
       indexPath: String, checkpointDir: String,
-      onStats: graft.operators.AppendStats => Unit = _ => (),
+      onAppend: S => Unit = (_: S) => (),
       compactEvery: Long = 0): StreamingQuery = {
-    claimStore(vectors, indexPath, checkpointDir)
-    vectors.writeStream
+    claimStore(rows, indexPath, checkpointDir)
+    rows.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        // per-batch drift report vs the training baseline — the caller's
-        // hook for alerting / scheduling the offline retrain.
-        // epoch-tagged: an at-least-once replay overwrites its own epoch
-        // partitions instead of duplicating vectors
-        onStats(graft.operators.IvfSearch.appendToIndex(
-          batch, idCol, vecCol, indexPath,
-          epoch = epochKey(checkpointDir, epoch)))
-        // in-stream maintenance cadence (see lexicalIndexStream): the
-        // foreachBatch callback serializes it with this stream's appends;
-        // the in-flight epoch is excluded so its replay stays idempotent
-        if (compactEvery > 0 && epoch % compactEvery == compactEvery - 1)
-          graft.operators.IvfSearch.compactIndex(batch.sparkSession, indexPath,
-            excludeEpoch = epochKey(checkpointDir, epoch))
+        val e = epochKey(checkpointDir, epoch)
+        onAppend(store.append(batch, idCol, valueCol, indexPath, e))
+        if (compactsAfter(epoch, compactEvery))
+          store.compact(batch.sparkSession, indexPath, excludeEpoch = e)
         ()
       }
       .start()
   }
 
-  /** Continuous IVF-PQ indexing — [[ivfIndexStream]]'s twin for the
-    * composed index family: every micro-batch assigns cells from the
-    * STORED coarse centroids and codes residuals with the STORED
-    * codebooks ([[graft.operators.IvfPqIndex.appendToIndex]]), so new
-    * vectors become searchable through the partition-pruned probe
-    * without any retraining in the stream. Offline `writeIndex` retrains
-    * on its own cadence, exactly the online-append/offline-retrain split
-    * a 100 TB index runs.
+  /** In-batch CDC resolution: with `seqCol`, the per-id LATEST record
+    * wins (proper change ordering); without it, per-id uniqueness inside
+    * a micro-batch is the caller's contract and is ENFORCED — two
+    * unordered changes to one id are ambiguous, and picking one silently
+    * would be a wrong-answer machine. (A per-id tombstone + upsert pair
+    * counts as two changes; provide seqCol to express "replace".)
+    * localCheckpoint: the resolved set feeds both the tombstone write
+    * and the append.
     */
-  def ivfPqIndexStream(
-      vectors: DataFrame, idCol: String, vecCol: String,
-      indexPath: String, checkpointDir: String,
-      onStats: graft.operators.AppendStats => Unit = _ => (),
-      compactEvery: Long = 0): StreamingQuery = {
-    claimStore(vectors, indexPath, checkpointDir)
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        onStats(graft.operators.IvfPqIndex.appendToIndex(
-          batch, idCol, vecCol, indexPath,
-          epoch = epochKey(checkpointDir, epoch)))
-        if (compactEvery > 0 && epoch % compactEvery == compactEvery - 1)
-          graft.operators.IvfPqIndex.compactIndex(batch.sparkSession, indexPath,
-            excludeEpoch = epochKey(checkpointDir, epoch))
-        ()
-      }
-      .start()
-  }
-
-  /** In-batch CDC resolution shared by the CDC index fronts: with
-    * `seqCol`, the per-id LATEST record wins (proper change ordering);
-    * without it, per-id uniqueness inside a micro-batch is the caller's
-    * contract and is ENFORCED — two unordered changes to one id are
-    * ambiguous, and picking one silently would be a wrong-answer
-    * machine. (A per-id tombstone + upsert pair counts as two changes;
-    * provide seqCol to express "replace".) localCheckpoint: the
-    * resolved set feeds both the tombstone write and the append.
-    */
-  private def resolveCdc(batch: DataFrame, idCol: String, vecCol: String,
+  private def resolveCdc(batch: DataFrame, idCol: String,
       seqCol: Option[String]): DataFrame =
     (seqCol match {
       case Some(sc) =>
@@ -318,344 +307,70 @@ object Streams {
         batch
     }).localCheckpoint()
 
-  /** CDC upsert/delete propagation into a persisted IVF store — the
-    * missing half of [[ivfIndexStream]]'s append-only posture: a keyed
-    * change stream (Kafka compacted-topic convention — a NULL vector is
-    * a tombstone deleting the id, see
-    * [[graft.sources.TopicCatalog]]'s `tombstone`) keeps the index in
-    * step with its source of truth, deletes included.
+  /** CDC upsert/delete propagation into a persisted `store` — the
+    * missing half of [[indexStream]]'s append-only posture: a keyed
+    * change stream (Kafka compacted-topic convention — a NULL value is a
+    * tombstone deleting the id, see [[graft.sources.TopicCatalog]]'s
+    * `tombstone`) keeps the index in step with its source of truth,
+    * deletes included.
     *
     * Per micro-batch e, TWO sub-epochs make upsert a first-class
-    * operation on a store whose serve has no per-id versioning: every
-    * CHANGED id is tombstoned at sub-epoch 2e, and the live rows land
-    * at 2e+1 — so an upsert's new vector out-lives its own tombstone
-    * while every OLDER row of the id (and every plainly-deleted id)
-    * dies under the [[graft.operators.Tombstones]] rule. At-least-once
-    * replays overwrite their own 2e+1 partition and re-append
-    * equivalent 2e tombstones: idempotent. In-batch ordering:
-    * [[resolveCdc]] — with `seqCol` the per-id latest record wins,
-    * without it multiple changes to one id inside a batch are rejected
-    * as ambiguous.
+    * operation: the ids to tombstone land at sub-epoch 2e and the live
+    * rows at 2e+1, so an upsert's new value out-lives its own tombstone
+    * while every OLDER row of the id (and every plainly-deleted id) dies
+    * under the [[graft.operators.Tombstones]] rule. Which ids tombstone
+    * is the store's fact ([[graft.operators.MaintainedStore]]
+    * `upsertTombstones`): every CHANGED id on a store whose serve has no
+    * per-id versioning, only the true deletes on a last-writer-wins
+    * store. At-least-once replays overwrite their own 2e+1 partitions
+    * and re-append equivalent 2e tombstones: idempotent. In-batch
+    * ordering: [[resolveCdc]] — with `seqCol` the per-id latest record
+    * wins, without it multiple changes to one id inside a batch are
+    * rejected as ambiguous.
     *
-    * The live-tombstone table between compactions is CDC-traffic
-    * sized, not index-sized; `compactEvery` applies it physically and
-    * retires it on a cadence (excluding the in-flight append epoch so
-    * its replay stays idempotent).
+    * The live-tombstone table between compactions is CDC-traffic sized,
+    * not index-sized; `compactEvery` applies it physically and retires
+    * it on a cadence (excluding the in-flight append epoch so its replay
+    * stays idempotent). Trigger: AvailableNow by default (drain-and-stop
+    * — the spec/board cadence); a ProcessingTime trigger turns the front
+    * into the reference's run-forever maintenance (the store stays in
+    * step with the topic until the stream is stopped).
     */
-  def ivfCdcStream(
-      records: DataFrame, idCol: String, vecCol: String,
+  def cdcStream[S](store: graft.operators.MaintainedStore[S],
+      records: DataFrame, idCol: String, valueCol: String,
       indexPath: String, checkpointDir: String,
       seqCol: Option[String] = None,
-      onStats: graft.operators.AppendStats => Unit = _ => (),
+      onAppend: S => Unit = (_: S) => (),
       compactEvery: Long = 0,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     claimStore(records, indexPath, checkpointDir)
     records.writeStream
       .option("checkpointLocation", checkpointDir)
-      // AvailableNow by default (drain-and-stop — the spec/board
-      // cadence); a ProcessingTime trigger turns the front into the
-      // reference's run-forever maintenance (the store stays in step
-      // with the topic until the stream is stopped)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
         val spark = batch.sparkSession
-        val resolved = resolveCdc(batch, idCol, vecCol, seqCol)
+        val resolved = resolveCdc(batch, idCol, seqCol)
         try {
-          val changed = resolved.select(idCol).distinct()
-          val live = resolved.filter(col(vecCol).isNotNull)
-          if (!changed.isEmpty) {
-            graft.operators.IvfSearch.deleteFromIndex(spark, indexPath,
-              changed, idCol, Some(epochKey(checkpointDir, 2 * epoch)))
-            if (!live.isEmpty)
-              onStats(graft.operators.IvfSearch.appendToIndex(
-                live, idCol, vecCol, indexPath,
-                epoch = epochKey(checkpointDir, 2 * epoch + 1)))
-          }
-          if (compactEvery > 0 && epoch % compactEvery == compactEvery - 1)
-            graft.operators.IvfSearch.compactIndex(spark, indexPath,
+          // resolveCdc leaves ONE record per id, so the null split is total
+          val victims =
+            if (store.upsertTombstones) resolved.select(idCol).distinct()
+            else resolved.filter(col(valueCol).isNull).select(idCol)
+          val live = resolved.filter(col(valueCol).isNotNull)
+          val anyVictims = !victims.isEmpty
+          if (anyVictims)
+            store.delete(spark, indexPath, victims, idCol,
+              epochKey(checkpointDir, 2 * epoch))
+          // with upsert tombstones every live id is a victim too: no
+          // victims means nothing to append
+          if ((anyVictims || !store.upsertTombstones) && !live.isEmpty)
+            onAppend(store.append(live, idCol, valueCol, indexPath,
+              epochKey(checkpointDir, 2 * epoch + 1)))
+          if (compactsAfter(epoch, compactEvery))
+            store.compact(spark, indexPath,
               excludeEpoch = epochKey(checkpointDir, 2 * epoch + 1))
           // a run-forever stream checkpoints EVERY batch: release this
           // batch's blocks now, not at some future GC
         } finally graft.operators.IndexMaintenance.unpersistCheckpoint(resolved)
-        ()
-      }
-      .start()
-  }
-
-  /** [[ivfCdcStream]]'s twin for the compressed IVF-PQ store — the same
-    * sub-epoch tombstone dance (every changed id tombstones at 2e, live
-    * upserts land at 2e+1 via [[graft.operators.IvfPqIndex
-    * .appendToIndex]], which encodes through the STORED coarse
-    * centroids and codebooks — no retraining per micro-batch), so a
-    * compressed index can track a keyed change stream: without it, a
-    * store whose raw vectors were discarded at encode time has no way
-    * to apply upserts. Replay idempotency, seqCol in-batch resolution,
-    * and the compaction cadence are identical to the IVF front (the
-    * two stores share the `corpus/cell=/epoch=` layout and compactor).
-    */
-  def ivfPqCdcStream(
-      records: DataFrame, idCol: String, vecCol: String,
-      indexPath: String, checkpointDir: String,
-      seqCol: Option[String] = None,
-      onStats: graft.operators.AppendStats => Unit = _ => (),
-      compactEvery: Long = 0,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    claimStore(records, indexPath, checkpointDir)
-    records.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val spark = batch.sparkSession
-        val resolved = resolveCdc(batch, idCol, vecCol, seqCol)
-        try {
-          val changed = resolved.select(idCol).distinct()
-          val live = resolved.filter(col(vecCol).isNotNull)
-          if (!changed.isEmpty) {
-            graft.operators.IvfPqIndex.deleteFromIndex(spark, indexPath,
-              changed, idCol, Some(epochKey(checkpointDir, 2 * epoch)))
-            if (!live.isEmpty)
-              onStats(graft.operators.IvfPqIndex.appendToIndex(
-                live, idCol, vecCol, indexPath,
-                epoch = epochKey(checkpointDir, 2 * epoch + 1)))
-          }
-          if (compactEvery > 0 && epoch % compactEvery == compactEvery - 1)
-            graft.operators.IvfPqIndex.compactIndex(spark, indexPath,
-              excludeEpoch = epochKey(checkpointDir, 2 * epoch + 1))
-        } finally graft.operators.IndexMaintenance.unpersistCheckpoint(resolved)
-        ()
-      }
-      .start()
-  }
-
-  /** [[ivfPqCdcStream]]'s twin for the SQ8 celled store — same
-    * sub-epoch dance, encoding through the stored per-dimension bounds
-    * ([[graft.operators.IvfSqIndex.appendToIndex]], out-of-range values
-    * saturating per the SQ clamp rule).
-    */
-  def ivfSqCdcStream(
-      records: DataFrame, idCol: String, vecCol: String,
-      indexPath: String, checkpointDir: String,
-      seqCol: Option[String] = None,
-      onStats: graft.operators.AppendStats => Unit = _ => (),
-      compactEvery: Long = 0,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    claimStore(records, indexPath, checkpointDir)
-    records.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val spark = batch.sparkSession
-        val resolved = resolveCdc(batch, idCol, vecCol, seqCol)
-        try {
-          val changed = resolved.select(idCol).distinct()
-          val live = resolved.filter(col(vecCol).isNotNull)
-          if (!changed.isEmpty) {
-            graft.operators.IvfSqIndex.deleteFromIndex(spark, indexPath,
-              changed, idCol, Some(epochKey(checkpointDir, 2 * epoch)))
-            if (!live.isEmpty)
-              onStats(graft.operators.IvfSqIndex.appendToIndex(
-                live, idCol, vecCol, indexPath,
-                epoch = epochKey(checkpointDir, 2 * epoch + 1)))
-          }
-          if (compactEvery > 0 && epoch % compactEvery == compactEvery - 1)
-            graft.operators.IvfSqIndex.compactIndex(spark, indexPath,
-              excludeEpoch = epochKey(checkpointDir, 2 * epoch + 1))
-        } finally graft.operators.IndexMaintenance.unpersistCheckpoint(resolved)
-        ()
-      }
-      .start()
-  }
-
-  /** [[ivfCdcStream]]'s twin for HNSW stores. Upserts need NO
-    * self-tombstone here — serve-time last-writer-wins already lets a
-    * later epoch's vector supersede the id ([[graft.operators
-    * .HnswSearch.searchIndex]]) — so tombstones carry ONLY true
-    * deletes, keeping the live-tombstone count (which widens the
-    * serve beam) at actual-delete traffic, not upsert traffic.
-    */
-  def hnswCdcStream(
-      records: DataFrame, idCol: String, vecCol: String,
-      indexPath: String, checkpointDir: String,
-      seqCol: Option[String] = None,
-      onAppend: ((Long, Int)) => Unit = _ => (),
-      compactEvery: Long = 0,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    claimStore(records, indexPath, checkpointDir)
-    records.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val spark = batch.sparkSession
-        val resolved = resolveCdc(batch, idCol, vecCol, seqCol)
-        try {
-          // resolveCdc leaves ONE record per id, so the null split is total
-          val dead = resolved.filter(col(vecCol).isNull).select(idCol)
-          val live = resolved.filter(col(vecCol).isNotNull)
-          if (!dead.isEmpty)
-            graft.operators.HnswSearch.deleteFromIndex(spark, indexPath,
-              dead, idCol, Some(epochKey(checkpointDir, 2 * epoch)))
-          if (!live.isEmpty)
-            onAppend(graft.operators.HnswSearch.appendToIndex(
-              live, idCol, vecCol, indexPath,
-              epoch = epochKey(checkpointDir, 2 * epoch + 1)))
-          if (compactEvery > 0 && epoch % compactEvery == compactEvery - 1)
-            graft.operators.HnswSearch.compactIndex(spark, indexPath,
-              excludeEpoch = epochKey(checkpointDir, 2 * epoch + 1))
-        } finally graft.operators.IndexMaintenance.unpersistCheckpoint(resolved)
-        ()
-      }
-      .start()
-  }
-
-  /** [[hnswCdcStream]]'s payload-store twin for CDC-maintained HNSW
-    * registrations that must resolve hits WITHOUT the original source
-    * frame (the SQL facade's cdc=true contract): the graph nodes AND a
-    * `corpus/` docs sidecar (id → content plus every payload column,
-    * epoch-partitioned next to the graphs) track the keyed change
-    * stream in one sub-epoch dance. UNLIKE [[hnswCdcStream]], EVERY
-    * changed id tombstones at sub-epoch 2e — not only true deletes —
-    * because the sidecar has no serve-time LWW: an upsert must kill its
-    * old sidecar row the way the IVF fronts do, so a tombstone-filtered
-    * scan of `corpus/` is exactly the live corpus with no per-statement
-    * LWW aggregate (the 100 TB posture: resolution joins a pruned scan,
-    * never a full-corpus group-by). Rent: upsert traffic widens the
-    * graph serve beam like delete traffic until the next
-    * [[graft.operators.HnswSearch.compactIndex]]. The sidecar append is
-    * schema-checked against the base corpus LOUDLY — a change record
-    * missing a payload column would otherwise strand half a row.
-    */
-  def hnswPayloadCdcStream(
-      records: DataFrame, idCol: String, vecCol: String,
-      indexPath: String, checkpointDir: String,
-      seqCol: Option[String] = None,
-      compactEvery: Long = 0,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    claimStore(records, indexPath, checkpointDir)
-    records.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val spark = batch.sparkSession
-        val resolved = resolveCdc(batch, idCol, vecCol, seqCol)
-        try {
-          val changed = resolved.select(idCol).distinct()
-          val live = resolved.filter(col(vecCol).isNotNull)
-          if (!changed.isEmpty) {
-            graft.operators.HnswSearch.deleteFromIndex(spark, indexPath,
-              changed, idCol, Some(epochKey(checkpointDir, 2 * epoch)))
-            if (!live.isEmpty) {
-              graft.operators.HnswSearch.appendToIndex(
-                live, idCol, vecCol, indexPath,
-                epoch = epochKey(checkpointDir, 2 * epoch + 1))
-              // docs sidecar: same columns as the base corpus (id +
-              // payload) AT the base types, the vector re-cast exactly
-              // as the base write cast it; at-least-once replays
-              // overwrite their own epoch=2e+1 partition (epochWrite's
-              // dynamic-overwrite contract), so the pair stays
-              // idempotent
-              val baseSchema = spark.read.parquet(s"$indexPath/corpus")
-                .schema
-              val base = baseSchema.fieldNames.filterNot(_ == "epoch").toSeq
-              graft.operators.IndexMaintenance.requirePayloadCompatible(
-                baseSchema, live.schema,
-                base.filterNot(c => c == "id" || c == vecCol), indexPath)
-              val e = epochKey(checkpointDir, 2 * epoch + 1)
-              val docs = live.select(base.map {
-                case "id" => col(idCol).cast("long").as("id")
-                case c if c == vecCol => col(vecCol).cast("array<float>").as(c)
-                case c => col(c)
-              }: _*).withColumn("epoch", lit(e))
-              graft.operators.IndexMaintenance.epochWrite(
-                docs, Seq("epoch"), e, s"$indexPath/corpus")
-            }
-          }
-          // compactIndex is sidecar-aware (it applies the tombstone
-          // rule to corpus/ in the same lease before clearing), so the
-          // cadence knob is safe here — dead sidecar rows cannot
-          // resurrect past a compaction
-          if (compactEvery > 0 && epoch % compactEvery == compactEvery - 1)
-            graft.operators.HnswSearch.compactIndex(spark, indexPath,
-              excludeEpoch = epochKey(checkpointDir, 2 * epoch + 1))
-        } finally graft.operators.IndexMaintenance.unpersistCheckpoint(resolved)
-        ()
-      }
-      .start()
-  }
-
-  /** CDC upsert/delete propagation into a persisted LEXICAL (BM25)
-    * index — [[ivfCdcStream]]'s text twin, completing the protocol
-    * across every at-rest store family: a keyed change stream of
-    * documents (NULL text = tombstone) keeps the postings AND the BM25
-    * global constants in step with the source of truth. Upserts use the
-    * IVF self-tombstone shape — every changed id tombstones at
-    * sub-epoch 2e (which also writes the NEGATIVE stats partial for the
-    * dying rows, so n/avgdl heal in the same breath) and live documents
-    * land at 2e+1 with their own positive partial — replace without
-    * double-counting on a store whose append contract forbids
-    * re-ingesting a live id. Replays are idempotent: the re-run delete
-    * finds its victims already dead and subtracts nothing, the re-run
-    * append overwrites its own 2e+1 partitions.
-    */
-  def lexCdcStream(
-      records: DataFrame, idCol: String, textCol: String,
-      indexPath: String, checkpointDir: String,
-      seqCol: Option[String] = None,
-      compactEvery: Long = 0,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    claimStore(records, indexPath, checkpointDir)
-    records.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val spark = batch.sparkSession
-        val resolved = resolveCdc(batch, idCol, textCol, seqCol)
-        try {
-          val changed = resolved.select(idCol).distinct()
-          val live = resolved.filter(col(textCol).isNotNull)
-          if (!changed.isEmpty) {
-            graft.operators.LexicalIndex.deleteFromIndex(spark, indexPath,
-              changed, idCol, Some(epochKey(checkpointDir, 2 * epoch)))
-            if (!live.isEmpty)
-              graft.operators.LexicalIndex.appendToIndex(
-                live, idCol, textCol, indexPath,
-                epoch = epochKey(checkpointDir, 2 * epoch + 1))
-          }
-          if (compactEvery > 0 && epoch % compactEvery == compactEvery - 1)
-            graft.operators.LexicalIndex.compactIndex(spark, indexPath,
-              excludeEpoch = epochKey(checkpointDir, 2 * epoch + 1))
-        } finally graft.operators.IndexMaintenance.unpersistCheckpoint(resolved)
-        ()
-      }
-      .start()
-  }
-
-  /** Continuous HNSW indexing — [[ivfIndexStream]]'s twin for the
-    * graph family: every micro-batch builds its OWN segment graphs
-    * under its epoch ([[graft.operators.HnswSearch.appendToIndex]] —
-    * the Lucene posture: existing graphs are never mutated, searchers
-    * probe every segment), so arriving vectors become searchable with
-    * zero graph surgery. `compactEvery` merges the accumulated small
-    * segments into rebuilt base graphs on a cadence (the rebuild IS
-    * the segment merge — adjacency is derived state), excluding the
-    * in-flight epoch so its at-least-once replay stays idempotent.
-    * `onAppend` receives (rows appended, segments built) per batch.
-    */
-  def hnswIndexStream(
-      vectors: DataFrame, idCol: String, vecCol: String,
-      indexPath: String, checkpointDir: String,
-      onAppend: ((Long, Int)) => Unit = _ => (),
-      compactEvery: Long = 0): StreamingQuery = {
-    claimStore(vectors, indexPath, checkpointDir)
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        onAppend(graft.operators.HnswSearch.appendToIndex(
-          batch, idCol, vecCol, indexPath,
-          epoch = epochKey(checkpointDir, epoch)))
-        if (compactEvery > 0 && epoch % compactEvery == compactEvery - 1)
-          graft.operators.HnswSearch.compactIndex(batch.sparkSession,
-            indexPath, excludeEpoch = epochKey(checkpointDir, epoch))
         ()
       }
       .start()
@@ -687,23 +402,14 @@ object Streams {
       docs: DataFrame, idCol: String, textCol: String,
       indexPath: String, checkpointDir: String,
       chunkSize: Int = 32, overlap: Int = 8,
-      onStats: graft.operators.AppendStats => Unit = _ => ()): StreamingQuery = {
-    claimStore(docs, indexPath, checkpointDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val chunks = chunkEmbed(batch, idCol, textCol, chunkSize, overlap)
-        onStats(graft.operators.IvfSearch.appendToIndex(
-          chunks, "chunk_uid", "emb", indexPath,
-          epoch = epochKey(checkpointDir, epoch)))
-        ()
-      }
-      .start()
-  }
+      onStats: graft.operators.AppendStats => Unit = _ => ()): StreamingQuery =
+    // chunk+embed are narrow maps, so they run on the stream itself
+    indexStream(graft.operators.IvfSearch,
+      chunkEmbed(docs, idCol, textCol, chunkSize, overlap), "chunk_uid", "emb",
+      indexPath, checkpointDir, onAppend = onStats)
 
   /** Continuous HYBRID ingestion — [[chunkIndexStream]] and
-    * [[lexicalIndexStream]] fused into ONE stream: each micro-batch of
+    * a lexical [[indexStream]] fused into ONE stream: each micro-batch of
     * arriving documents is chunked+embedded into the persisted IVF
     * index AND posted into the persisted lexical index, so the corpus
     * serves vector, keyword, and fused (RRF) retrieval from the moment
@@ -735,62 +441,13 @@ object Streams {
         val b = batch.localCheckpoint()
         val ek = epochKey(checkpointDir, epoch)
         val chunks = chunkEmbed(b, idCol, textCol, chunkSize, overlap)
-        onStats(graft.operators.IvfSearch.appendToIndex(
-          chunks, "chunk_uid", "emb", vectorIndexPath, epoch = ek))
-        graft.operators.LexicalIndex.appendToIndex(
-          b, idCol, textCol, lexicalIndexPath, epoch = ek)
-        if (compactEvery > 0 && epoch % compactEvery == compactEvery - 1) {
-          graft.operators.IvfSearch.compactIndex(b.sparkSession,
-            vectorIndexPath, excludeEpoch = ek)
-          graft.operators.LexicalIndex.compactIndex(b.sparkSession,
-            lexicalIndexPath, excludeEpoch = ek)
-        }
-        ()
-      }
-      .start()
-  }
-
-  /** Continuous LEXICAL indexing — [[chunkIndexStream]]'s twin for the
-    * BM25 side of hybrid retrieval: every micro-batch of arriving
-    * documents appends its postings and a stats partial to a persisted
-    * [[graft.operators.LexicalIndex]], so a continuously-ingested corpus
-    * serves keyword and HYBRID retrieval without a batch re-index (the
-    * vector side appends through [[ivfIndexStream]]; before this twin a
-    * streamed corpus could serve vector-only). Stream ≡ batch by
-    * construction: postings are per-document rows and the stats partials
-    * sum exactly, so any batching of the same documents yields the same
-    * served artifacts (proved in StreamingSpec). New-ids contract as the
-    * vector appends — front with [[dedupStream]]/the curation fronts.
-    *
-    * `compactEvery` > 0 runs [[graft.operators.LexicalIndex.compactIndex]]
-    * after every Nth epoch's append — the in-stream maintenance cadence
-    * that keeps file counts bounded by N×buckets instead of growing with
-    * ingestion history. Safe by construction: `foreachBatch` serializes
-    * the compaction with this stream's own appends, and the store lease
-    * ([[graft.operators.IndexMaintenance.withStoreLock]]) makes any
-    * OTHER process's compactor fail fast rather than race the swap.
-    */
-  def lexicalIndexStream(
-      docs: DataFrame, idCol: String, textCol: String,
-      indexPath: String, checkpointDir: String,
-      compactEvery: Long = 0): StreamingQuery = {
-    claimStore(docs, indexPath, checkpointDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        // epoch-tagged: an at-least-once replay of this micro-batch
-        // overwrites its own epoch partitions instead of duplicating
-        // postings (exactly-once through the idempotent-sink pattern)
-        graft.operators.LexicalIndex.appendToIndex(
-          batch, idCol, textCol, indexPath,
-          epoch = epochKey(checkpointDir, epoch))
-        // compaction must EXCLUDE the in-flight epoch: merging it into
-        // the base segment before this epoch's checkpoint commits would
-        // let a replay re-append rows the merge already absorbed
-        if (compactEvery > 0 && epoch % compactEvery == compactEvery - 1)
-          graft.operators.LexicalIndex.compactIndex(batch.sparkSession,
-            indexPath, excludeEpoch = epochKey(checkpointDir, epoch))
+        onStats(graft.operators.IvfSearch.append(
+          chunks, "chunk_uid", "emb", vectorIndexPath, ek))
+        graft.operators.LexicalIndex.append(b, idCol, textCol, lexicalIndexPath, ek)
+        if (compactsAfter(epoch, compactEvery))
+          Seq(graft.operators.IvfSearch -> vectorIndexPath,
+            graft.operators.LexicalIndex -> lexicalIndexPath).foreach {
+            case (store, path) => store.compact(b.sparkSession, path, ek) }
         ()
       }
       .start()

@@ -358,10 +358,10 @@ class HnswSpec extends SparkSpec {
     val late = emb.filter(col("vec_id") >= 400)
     late.write.mode("overwrite").parquet(srcDir)
     var appended = List.empty[(Long, Int)]
-    graft.streaming.Streams.hnswIndexStream(
+    graft.streaming.Streams.indexStream(graft.operators.HnswSearch,
       graft.streaming.Streams.fileStream(spark, srcDir, late.schema),
       "vec_id", "embedding", path, ckpt,
-      onAppend = s => appended ::= s, compactEvery = 1)
+      onAppend = (s: (Long, Int)) => appended ::= s, compactEvery = 1)
       .awaitTermination()
     assert(appended.nonEmpty && appended.map(_._1).sum == late.count(),
       s"append stats wrong: $appended")
@@ -478,7 +478,7 @@ class HnswSpec extends SparkSpec {
       .unionByName(emb.filter(col("vec_id") === 300)
         .select(lit(50L).as("vec_id"), col("embedding")))
       .write.mode("overwrite").parquet(srcDir)
-    graft.streaming.Streams.hnswCdcStream(
+    graft.streaming.Streams.cdcStream(graft.operators.HnswSearch,
       graft.streaming.Streams.fileStream(spark, srcDir, schema),
       "vec_id", "embedding", path, ckpt).awaitTermination()
     // upserts carry NO tombstone on this store family: the backlog that

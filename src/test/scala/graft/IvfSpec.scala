@@ -122,7 +122,8 @@ class IvfSpec extends SparkSpec {
     val late = emb.filter(col("vec_id") >= 400)
     late.write.mode("overwrite").parquet(srcDir)
     val stream = graft.streaming.Streams.fileStream(spark, srcDir, late.schema)
-    graft.streaming.Streams.ivfIndexStream(stream, "vec_id", "embedding", path, ckpt)
+    graft.streaming.Streams.indexStream(graft.operators.IvfSearch,
+      stream, "vec_id", "embedding", path, ckpt)
       .awaitTermination()
     val q = emb.filter(col("vec_id") === 460)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
@@ -483,8 +484,8 @@ class IvfSpec extends SparkSpec {
         .select(lit(50L).as("vec_id"), col("embedding")))
       .write.mode("overwrite").parquet(srcDir)
     val stream = graft.streaming.Streams.fileStream(spark, srcDir, schema)
-    graft.streaming.Streams.ivfCdcStream(stream, "vec_id", "embedding",
-      path, ckpt).awaitTermination()
+    graft.streaming.Streams.cdcStream(graft.operators.IvfSearch,
+      stream, "vec_id", "embedding", path, ckpt).awaitTermination()
     assert(serveSelf(0L) != Seq(0L), "tombstoned id still serves")
     // id 50 now carries id 300's vector: querying WITH that vector
     // self-matches 50 exactly once; querying with 50's OLD vector no
@@ -499,7 +500,7 @@ class IvfSpec extends SparkSpec {
     // drain 2 over the same checkpoint: re-insert id 0 — LWW revives it
     emb.filter(col("vec_id") === 0).select("vec_id", "embedding")
       .write.mode("overwrite").parquet(srcDir)
-    graft.streaming.Streams.ivfCdcStream(
+    graft.streaming.Streams.cdcStream(graft.operators.IvfSearch,
       graft.streaming.Streams.fileStream(spark, srcDir, schema),
       "vec_id", "embedding", path, ckpt, compactEvery = 1).awaitTermination()
     assert(serveSelf(0L) == Seq(0L), "re-inserted id must serve again")
@@ -528,7 +529,7 @@ class IvfSpec extends SparkSpec {
     val schema = both.schema
     // unordered: ambiguous -> the micro-batch fails loudly
     val ckpt1 = java.nio.file.Files.createTempDirectory("graft_ivf_cdc2_ck1").toString
-    val q1 = graft.streaming.Streams.ivfCdcStream(
+    val q1 = graft.streaming.Streams.cdcStream(graft.operators.IvfSearch,
       graft.streaming.Streams.fileStream(spark, srcDir, schema)
         .select("vec_id", "embedding"),
       "vec_id", "embedding", path, ckpt1)
@@ -540,7 +541,7 @@ class IvfSpec extends SparkSpec {
     // replays under the fixed config) — the single-writer claim makes a
     // fresh checkpoint on an already-claimed store a refusal, and
     // restarting the owning checkpoint is the blessed remediation
-    graft.streaming.Streams.ivfCdcStream(
+    graft.streaming.Streams.cdcStream(graft.operators.IvfSearch,
       graft.streaming.Streams.fileStream(spark, srcDir, schema),
       "vec_id", "embedding", path, ckpt1, seqCol = Some("seq"))
       .awaitTermination()
@@ -590,7 +591,7 @@ class IvfSpec extends SparkSpec {
         .select(lit(50L).as("vec_id"), col("embedding"),
           lit(999).cast(schema("label").dataType).as("label")))
       .write.mode("overwrite").parquet(srcDir)
-    graft.streaming.Streams.ivfCdcStream(
+    graft.streaming.Streams.cdcStream(graft.operators.IvfSearch,
       graft.streaming.Streams.fileStream(spark, srcDir, schema),
       "vec_id", "embedding", path, ckpt).awaitTermination()
     val q300 = emb.filter(col("vec_id") === 300)
@@ -622,7 +623,7 @@ class IvfSpec extends SparkSpec {
     val schema2 = org.apache.spark.sql.types.StructType(schema.fields :+
       org.apache.spark.sql.types.StructField("seq",
         org.apache.spark.sql.types.LongType))
-    graft.streaming.Streams.ivfCdcStream(
+    graft.streaming.Streams.cdcStream(graft.operators.IvfSearch,
       graft.streaming.Streams.fileStream(spark, srcDir2, schema2),
       "vec_id", "embedding", s"$path2/idx",
       java.nio.file.Files.createTempDirectory("graft_ivf_cdcp_ck2").toString,

@@ -389,7 +389,7 @@ class LexicalSpec extends SparkSpec {
       .select(col("doc_id"), lit(null).cast("string").as("text"))
       .unionByName(donor.select(lit(10L).as("doc_id"), col("text")))
     changes.write.mode("overwrite").parquet(srcDir)
-    graft.streaming.Streams.lexCdcStream(
+    graft.streaming.Streams.cdcStream(graft.operators.LexicalIndex,
       graft.streaming.Streams.fileStream(spark, srcDir, changes.schema),
       "doc_id", "text", path, ckpt).awaitTermination()
     val terms = Seq((0L, "sort"), (0L, "merge"), (1L, "stream"), (1L, "dup"))
@@ -486,7 +486,7 @@ class LexicalSpec extends SparkSpec {
 
   test("delete replay AFTER the upsert's re-append subtracts nothing: " +
       "stats partials stay exact for still-served documents") {
-    // the at-least-once hazard inside lexCdcStream's sub-epoch dance: a
+    // the at-least-once hazard inside cdcStream's sub-epoch dance: a
     // crash after the 2e+1 append replays the batch, and the re-run
     // delete (tombstone epoch 2e) must NOT treat the just-appended live
     // rows (epoch 2e+1, which OUT-LIVE the tombstone) as victims — a

@@ -212,7 +212,8 @@ class PqSpec extends SparkSpec {
     val late = emb.filter(col("vec_id") >= 400)
     late.write.mode("overwrite").parquet(srcDir)
     val stream = graft.streaming.Streams.fileStream(spark, srcDir, late.schema)
-    graft.streaming.Streams.ivfPqIndexStream(stream, "vec_id", "embedding", path, ckpt)
+    graft.streaming.Streams.indexStream(graft.operators.IvfPqIndex,
+      stream, "vec_id", "embedding", path, ckpt)
       .awaitTermination()
     val modelAfter = spark.read.parquet(s"$path/codebooks").collect()
       .map(_.toString).sorted
@@ -368,7 +369,7 @@ class PqSpec extends SparkSpec {
       .unionByName(emb.filter(col("vec_id") === 300)
         .select(lit(50L).as("vec_id"), col("embedding")))
       .write.mode("overwrite").parquet(srcDir)
-    graft.streaming.Streams.ivfPqCdcStream(
+    graft.streaming.Streams.cdcStream(graft.operators.IvfPqIndex,
       graft.streaming.Streams.fileStream(spark, srcDir, schema),
       "vec_id", "embedding", path, ckpt).awaitTermination()
     assert(serveWith(0L, qVecOf = 0L) != Seq(0L), "tombstoned id still serves")
@@ -380,7 +381,7 @@ class PqSpec extends SparkSpec {
     // drain 2 over the same checkpoint: re-insert id 0 — LWW revives it
     emb.filter(col("vec_id") === 0).select("vec_id", "embedding")
       .write.mode("overwrite").parquet(srcDir)
-    graft.streaming.Streams.ivfPqCdcStream(
+    graft.streaming.Streams.cdcStream(graft.operators.IvfPqIndex,
       graft.streaming.Streams.fileStream(spark, srcDir, schema),
       "vec_id", "embedding", path, ckpt, compactEvery = 1).awaitTermination()
     assert(serveWith(0L, qVecOf = 0L) == Seq(0L), "re-inserted id must serve again")
@@ -409,7 +410,7 @@ class PqSpec extends SparkSpec {
     val schema = both.schema
     // unordered: ambiguous -> the micro-batch fails loudly
     val ckpt1 = java.nio.file.Files.createTempDirectory("graft_ivfpq_cdc2_ck1").toString
-    val q1 = graft.streaming.Streams.ivfPqCdcStream(
+    val q1 = graft.streaming.Streams.cdcStream(graft.operators.IvfPqIndex,
       graft.streaming.Streams.fileStream(spark, srcDir, schema)
         .select("vec_id", "embedding"),
       "vec_id", "embedding", path, ckpt1)
@@ -420,7 +421,7 @@ class PqSpec extends SparkSpec {
     // retry restarts the SAME checkpoint (the single-writer claim
     // refuses a fresh one; the failed batch never committed, so it
     // replays under the fixed config)
-    graft.streaming.Streams.ivfPqCdcStream(
+    graft.streaming.Streams.cdcStream(graft.operators.IvfPqIndex,
       graft.streaming.Streams.fileStream(spark, srcDir, schema),
       "vec_id", "embedding", path, ckpt1, seqCol = Some("seq"))
       .awaitTermination()

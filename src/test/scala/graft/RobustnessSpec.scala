@@ -476,16 +476,16 @@ class RobustnessSpec extends SparkSpec {
     val stream = graft.streaming.Streams.fileStream(spark, srcDir,
       emb.schema)
     // stream A claims the store and drains
-    graft.streaming.Streams.ivfIndexStream(stream, "vec_id", "embedding",
-      store, ckptA).awaitTermination()
+    graft.streaming.Streams.indexStream(graft.operators.IvfSearch,
+      stream, "vec_id", "embedding", store, ckptA).awaitTermination()
     // a RESTART of the same checkpoint re-claims idempotently
-    graft.streaming.Streams.ivfIndexStream(stream, "vec_id", "embedding",
-      store, ckptA).awaitTermination()
+    graft.streaming.Streams.indexStream(graft.operators.IvfSearch,
+      stream, "vec_id", "embedding", store, ckptA).awaitTermination()
     // a SECOND stream under a different checkpoint is refused at
     // construction — before any mis-ordered epoch lands
     val e = intercept[IllegalStateException] {
-      graft.streaming.Streams.ivfIndexStream(stream, "vec_id", "embedding",
-        store, ckptB)
+      graft.streaming.Streams.indexStream(graft.operators.IvfSearch,
+        stream, "vec_id", "embedding", store, ckptB)
     }
     assert(e.getMessage.contains("owned by writer namespace"), e.getMessage)
     // manual delete defaulting to the store's own maxEpochIn lands

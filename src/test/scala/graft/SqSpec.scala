@@ -190,7 +190,7 @@ class SqSpec extends SparkSpec {
         .select(lit(50L).as("vec_id"), col("embedding"),
           lit(999).cast(schema("label").dataType).as("label")))
       .write.mode("overwrite").parquet(srcDir)
-    graft.streaming.Streams.ivfSqCdcStream(
+    graft.streaming.Streams.cdcStream(graft.operators.IvfSqIndex,
       graft.streaming.Streams.fileStream(spark, srcDir, schema),
       "vec_id", "embedding", path, ckpt).awaitTermination()
     def serve(qid: Long, vecOf: Long, f: org.apache.spark.sql.Column): Seq[Long] =

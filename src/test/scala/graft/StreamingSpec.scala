@@ -312,7 +312,7 @@ class StreamingSpec extends SparkSpec {
     // the store must exist before any append — index once, append forever
     LexicalIndex.writeIndex(docs.filter(col("doc_id") < 20), "doc_id", "text", idx)
     def runOnce(): Unit = {
-      val q = Streams.lexicalIndexStream(
+      val q = Streams.indexStream(graft.operators.LexicalIndex,
         Streams.fileStream(spark, s"$src/*", docs.schema),
         "doc_id", "text", idx, ckpt)
       q.awaitTermination(120000)
@@ -358,7 +358,7 @@ class StreamingSpec extends SparkSpec {
     assert(pruned == full && pruned.nonEmpty)
     // appending to a missing store fails loudly, never creates it silently
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      Streams.lexicalIndexStream(
+      Streams.indexStream(graft.operators.LexicalIndex,
         Streams.fileStream(spark, s"$src/*", docs.schema),
         "doc_id", "text", tmp("graft_lex_missing") + "/nope",
         tmp("graft_lex_ckpt2")).awaitTermination(120000)
@@ -474,11 +474,13 @@ class StreamingSpec extends SparkSpec {
     val src = tmp("graft_lex_srcA")
     docs.filter(col("doc_id") >= 20 && col("doc_id") < 40).write.parquet(s"$src/a")
     docs.filter(col("doc_id") >= 40).write.parquet(s"$src/b")
-    Streams.lexicalIndexStream(Streams.fileStream(spark, s"$src/*", docs.schema),
+    Streams.indexStream(graft.operators.LexicalIndex,
+      Streams.fileStream(spark, s"$src/*", docs.schema),
       "doc_id", "text", idx, tmp("graft_lex_ckA")).awaitTermination(120000)
     // the second checkpoint is refused BEFORE any epoch lands
     val e = intercept[IllegalStateException] {
-      Streams.lexicalIndexStream(Streams.fileStream(spark, s"$src/*", docs.schema),
+      Streams.indexStream(graft.operators.LexicalIndex,
+        Streams.fileStream(spark, s"$src/*", docs.schema),
         "doc_id", "text", idx, tmp("graft_lex_ckB"))
     }
     assert(e.getMessage.contains("owned by writer namespace"), e.getMessage)
@@ -539,11 +541,11 @@ class StreamingSpec extends SparkSpec {
       .filter(col("doc_id") < 60).select(col("doc_id"), col("text"))
     LexicalIndex.writeIndex(docs.filter(col("doc_id") < 20), "doc_id", "text", idx)
     docs.filter(col("doc_id") >= 20 && col("doc_id") < 40).write.parquet(s"$src/a")
-    Streams.lexicalIndexStream(
+    Streams.indexStream(graft.operators.LexicalIndex,
       Streams.fileStream(spark, s"$src/*", docs.schema),
       "doc_id", "text", idx, ckpt, compactEvery = 1).awaitTermination(120000)
     docs.filter(col("doc_id") >= 40).write.parquet(s"$src/b")
-    Streams.lexicalIndexStream(
+    Streams.indexStream(graft.operators.LexicalIndex,
       Streams.fileStream(spark, s"$src/*", docs.schema),
       "doc_id", "text", idx, ckpt, compactEvery = 1).awaitTermination(120000)
     // every epoch compacted: at most one file per (bucket, segment) with
