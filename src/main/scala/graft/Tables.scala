@@ -48,8 +48,4 @@ object Tables {
       df.repartition(target)
     else df
   }
-
-  /** Register every table as a temp view (for the SQL surface). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
 }

@@ -63,6 +63,24 @@ trait CelledStore extends MaintainedStore[AppendStats] {
   private[graft] def buildIndex(corpus: DataFrame, cId: String, cVec: String,
       path: String, nList: Int, dim: => Int, payload: Seq[String]): Unit
 
+  /** The ranked serve all celled stores share: (qId, match_id, score,
+    * rank), rank 1 = best.
+    * A compressed store re-ranks its `numCandidates` survivors exactly
+    * against `corpus`; raw IVF reads neither.
+    */
+  def serveRanked(spark: SparkSession, path: String,
+      queries: DataFrame, qId: String, qVec: String,
+      corpus: DataFrame, cId: String, cVec: String,
+      k: Int, metric: String, nProbe: Int, numCandidates: Int,
+      maxQueries: Int, filter: Column): DataFrame
+
+  /** The radius serve all celled stores share (see [[radiusScan]]). */
+  def serveRadius(spark: SparkSession, path: String,
+      queries: DataFrame, qId: String, qVec: String,
+      corpus: DataFrame, cId: String, cVec: String,
+      threshold: Double, metric: String, nProbe: Int,
+      filter: Column): DataFrame
+
   def upsertTombstones: Boolean = true
   def append(df: DataFrame, idCol: String, valueCol: String, path: String,
       epoch: Long): AppendStats = appendToIndex(df, idCol, valueCol, path, epoch)
@@ -338,6 +356,22 @@ trait CompressedCelledStore[C] extends CelledStore {
       margin: Double = radiusMargin, filter: Column = lit(true)): DataFrame =
     radiusScan(spark, path, queries, qId, qVec, threshold, metric, nProbe,
       margin, filter, Some((corpus, cId, cVec)))
+
+  def serveRadius(spark: SparkSession, path: String,
+      queries: DataFrame, qId: String, qVec: String,
+      corpus: DataFrame, cId: String, cVec: String,
+      threshold: Double, metric: String, nProbe: Int,
+      filter: Column): DataFrame =
+    radiusIndex(spark, path, queries, qId, qVec, corpus, cId, cVec,
+      threshold, metric, nProbe, filter = filter)
+
+  def serveRanked(spark: SparkSession, path: String,
+      queries: DataFrame, qId: String, qVec: String,
+      corpus: DataFrame, cId: String, cVec: String,
+      k: Int, metric: String, nProbe: Int, numCandidates: Int,
+      maxQueries: Int, filter: Column): DataFrame =
+    searchIndex(spark, path, queries, qId, qVec, corpus, cId, cVec, k,
+      metric, nProbe, numCandidates, maxQueries, filter)
 
   /** Probe the store. The probed-cell union becomes an IN filter on the
     * partition column (directory pruning); the scan reads ONLY (id,

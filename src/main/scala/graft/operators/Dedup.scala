@@ -68,11 +68,6 @@ object Dedup {
     df.join(keepers.select(col("__keep")),
       df(idCol) === col("__keep"), "left_semi")
 
-  /** Exact-dup groups (group key + ids), for inspection/oracle checks. */
-  def exactGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.groupBy(normText(col(textCol)).as("norm_text"))
-      .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("keep_id"))
-
   /** MinHash+LSH candidate duplicate pairs (id1 < id2). Banding: split
     * the `numHashes` signature into `bands` bands of `numHashes/bands`
     * rows; docs colliding in ≥1 band become candidates; then the exact

@@ -357,6 +357,21 @@ object IvfSearch extends CelledStore {
     ranked(cellTopK(probed, liveVectors(live), qId, qVec, k, metric), qId)
   }
 
+  def serveRanked(spark: org.apache.spark.sql.SparkSession, path: String,
+      queries: DataFrame, qId: String, qVec: String,
+      corpus: DataFrame, cId: String, cVec: String,
+      k: Int, metric: String, nProbe: Int, numCandidates: Int,
+      maxQueries: Int, filter: Column): DataFrame =
+    searchIndex(spark, path, queries, qId, qVec, k, metric, nProbe, filter)
+
+  def serveRadius(spark: org.apache.spark.sql.SparkSession, path: String,
+      queries: DataFrame, qId: String, qVec: String,
+      corpus: DataFrame, cId: String, cVec: String,
+      threshold: Double, metric: String, nProbe: Int,
+      filter: Column): DataFrame =
+    radiusIndex(spark, path, queries, qId, qVec, threshold, metric, nProbe,
+      filter)
+
   private def liveVectors(live: DataFrame): DataFrame =
     live.select(col("id").as("match_id"), col("vec").as("__cvec"), col("cell"))
 

@@ -290,9 +290,18 @@ class TopicCatalog(spark: SparkSession, root: String) {
     * re-register after every produce/insert so `spark.sql` over the view
     * always sees the latest records. Public so streaming drivers can
     * restore the full view after shadowing it with a micro-batch slice.
+    * Runs under [[viewMonitor]].
     */
-  def refreshView(name: String): Unit =
+  def refreshView(name: String): Unit = viewMonitor.synchronized {
     table(name).createOrReplaceTempView(name)
+  }
+
+  /** Guards this catalog's topic views: [[refreshView]] re-binds under
+    * it, and a streaming micro-batch that shadows a view with its slice
+    * holds it until the view is restored, so no produce or insert
+    * re-binds a shadowed view mid-batch.
+    */
+  val viewMonitor = new Object
 
   /** Manual produce (S5): append RAW JSON records (one per line) — on
     * every topic shape. Partitioning must not change schema-on-read

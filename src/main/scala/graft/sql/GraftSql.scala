@@ -1,11 +1,8 @@
 package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
 
-import graft.functions.{HashEmbedder, TopKHeap}
-import graft.model.{ModelRegistry, StubLlm}
+import graft.model.ModelRegistry
 import graft.operators.VectorSearch
 import graft.sources.TopicCatalog
 
@@ -50,6 +47,7 @@ class GraftSql(
   extends GraftSqlRegistry with GraftSqlDialect {
 
   import GraftSql._
+  import SearchFamily._
 
   /** Register a connection from the reference's verbatim
     * `confluent flink connection create` CLI block (README.md:53-60).
@@ -70,22 +68,16 @@ class GraftSql(
 
   private[sql] val fedViewCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Families whose FILTERED serve comes from a persisted store (payload
-    * pushdown on the celled families, over-fetch post-filter on hnsw) —
-    * every other family takes the exact pre-filter fallback.
-    */
-  private[sql] val StoreFilteredFamilies = Set("ivf", "ivfpq", "ivfsq", "hnsw")
-
   /** THE family dispatch — one ranked (__qid, __rank [1-based], __cid)
     * serve for every facade search view (FEDERATED / FILTERED / the
     * HYBRID vector leg / MMR's candidate pool), so family #10 is one
     * case here instead of one per view.
     *
     * Unfiltered (`pred = None`) dispatches all 9 families: exact
-    * bounded-heap "flat", the in-flight ANN forms (ivf/pq/lsh/sq/bq
-    * with registration-cached codebooks/models), and the build-once
-    * persisted stores (ivfpq/ivfsq/hnsw). With a predicate, the
-    * [[StoreFilteredFamilies]] serve it from their stores — the celled
+    * bounded-heap "flat", the in-flight ANN forms (pq/lsh/sq/bq with
+    * registration-cached codebooks/models), and the build-once
+    * persisted stores (ivf/ivfpq/ivfsq/hnsw). With a predicate, the at-rest
+    * families ([[SearchFamily]]) serve it from their stores — the celled
     * families push it INTO the pruned cell/code scan as a parquet
     * PushedFilter, hnsw post-filters an over-fetched beam — the
     * in-flight ANN families (pq/sq/bq/lsh) serve the same over-fetch +
@@ -96,7 +88,7 @@ class GraftSql(
     * `metric` defaults to the reference's dot ranking; the hnsw graph
     * serves its build metric regardless (it comes from `_meta`).
     */
-  private[sql] def rankedForFamily(qv0: DataFrame, big: DfCorpus, k: Int,
+  private[sql] def rankedForFamily(qv0: DataFrame, big: Registration, k: Int,
       pred: Option[String] = None, metric: String = "dot",
       canon: DataFrame = null): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -112,22 +104,28 @@ class GraftSql(
     def nProbeFor = graft.operators.IvfSearch.probesForBudget(
       VectorSearch.estimatedRows(c, corpusDim(c, big.tag)), 16,
       big.numCandidates)
-    val ranked = (big.indexType, pred) match {
-      case ("ivf", p) =>
+    val ranked = (big.family, pred) match {
+      case (f: CelledFamily, p) =>
         // BOTH forms serve the build-once persisted store (filtered: the
         // predicate lands as a payload PushedFilter inside the
-        // partition-pruned probe scan). Serving unfiltered statements
-        // in-flight would re-train k-means and re-scan the corpus PER
-        // STATEMENT — the store exists precisely so repeated statements
-        // list only their probed cells' files. The k-within-budget
-        // contract the in-flight op enforced stays loud here.
-        require(k <= big.numCandidates,
-          s"k=$k exceeds the registration's numCandidates=${big.numCandidates}")
-        graft.operators.IvfSearch.searchIndex(spark,
-          celledStoreFor(big),
-          qv, "__qid", "__qvec", k, metric,
-          nProbe = nProbeFor, filter = p.map(expr).getOrElse(lit(true)))
-      case ("pq", None) =>
+        // partition-pruned probe or code scan). Serving unfiltered
+        // statements in-flight would re-train k-means and re-scan the
+        // corpus PER STATEMENT — the store exists precisely so repeated
+        // statements list only their probed cells' files. numCandidates
+        // sizes the probe budget (nProbe) and, on the compressed stores
+        // (FAISS IVFx,PQy / IVFx,SQ8), the pool of ADC/affine survivors
+        // re-ranked exactly against the canonical corpus by id — clamped
+        // so |queries|×pool stays inside the serve's per-task heap bound.
+        // Raw ivf has no pool, so the k-within-budget contract the
+        // in-flight op enforced stays loud here.
+        if (f.kWithinBudget)
+          require(k <= big.numCandidates,
+            s"k=$k exceeds the registration's numCandidates=${big.numCandidates}")
+        f.store.serveRanked(spark, storeFor(big),
+          qv, "__qid", "__qvec", c, "__cid", "__cvec", k, metric,
+          nProbe = nProbeFor, numCandidates = pool, maxQueries = 10000,
+          filter = p.map(expr).getOrElse(lit(true)))
+      case (Pq, None) =>
         // serve-only: codebooks come from the registration-scoped cache
         // (train-once at first statement, zero training jobs after) —
         // persist=false because the tag is registration-unique, not
@@ -137,10 +135,10 @@ class GraftSql(
         graft.operators.PqSearch.pqTopK(qv, "__qid", "__qvec",
           c, "__cid", "__cvec", k, cb, metric,
           numCandidates = big.numCandidates, maxQueries = 10000)
-      case ("lsh", None) =>
+      case (Lsh, None) =>
         VectorSearch.annTopKCandidates(qv, "__qid", "__qvec",
           c, "__cid", "__cvec", k, metric, numCandidates = big.numCandidates)
-      case ("sq", None) =>
+      case (Sq, None) =>
         // serve-only like "pq": the byte-quantizer bounds come from the
         // registration-scoped cache; dim derived from the data (the
         // facade accepts any vector width)
@@ -150,42 +148,21 @@ class GraftSql(
         graft.operators.SqSearch.sqTopK(qv, "__qid", "__qvec",
           c, "__cid", "__cvec", k, m, metric,
           numCandidates = big.numCandidates, maxQueries = 10000)
-      case ("bq", None) =>
+      case (Bq, None) =>
         val m = graft.operators.BqSearch.cachedModel(
           c, "__cvec", big.tag, dim = corpusDim(c, big.tag), persist = false)
         graft.operators.BqSearch.bqTopK(qv, "__qid", "__qvec",
           c, "__cid", "__cvec", k, m, metric,
           numCandidates = big.numCandidates, maxQueries = 10000)
-      case ("ivfpq", p) =>
-        // the composed at-rest family (FAISS IVFx,PQy): partition-pruned
-        // probe over compressed residual codes, exact re-rank of the
-        // ADC survivors joining the canonical corpus by id. numCandidates
-        // sizes both the probe budget (nProbe) and the survivor pool,
-        // the latter clamped so |queries|×pool stays inside the serve's
-        // per-task heap bound. A predicate rides the pruned ADC scan —
-        // same pushdown posture as "ivf" at 1/32 the scanned bytes.
-        graft.operators.IvfPqIndex.searchIndex(spark,
-          celledStoreFor(big),
-          qv, "__qid", "__qvec", c, "__cid", "__cvec", k, metric,
-          nProbe = nProbeFor, numCandidates = pool, maxQueries = 10000,
-          filter = p.map(expr).getOrElse(lit(true)))
-      case ("ivfsq", p) =>
-        // the SQ8 celled store: same probe/re-rank shape as "ivfpq" on
-        // 4x-compressed near-exact codes (per-dimension affine scan)
-        graft.operators.IvfSqIndex.searchIndex(spark,
-          celledStoreFor(big),
-          qv, "__qid", "__qvec", c, "__cid", "__cvec", k, metric,
-          nProbe = nProbeFor, numCandidates = pool, maxQueries = 10000,
-          filter = p.map(expr).getOrElse(lit(true)))
-      case ("hnsw", None) =>
+      case (Hnsw, None) =>
         // sharded small-world graphs (the Atlas/Lucene family the
         // reference's $vectorSearch actually runs on); numCandidates
         // maps to the layer-0 beam width, the HNSW recall knob.
-        graft.operators.HnswSearch.searchIndex(spark, hnswStoreFor(big),
+        graft.operators.HnswSearch.searchIndex(spark, storeFor(big),
           qv, "__qid", "__qvec", k,
           efSearch = math.max(k, math.min(big.numCandidates, 10000)),
           maxQueries = 10000)
-      case ("hnsw", Some(p)) =>
+      case (Hnsw, Some(p)) =>
         // a graph walk cannot pre-filter without breaking navigability:
         // the standard post-filter-with-over-fetch strategy against the
         // admitted-id set. overFetch 16 covers predicates down to
@@ -194,13 +171,13 @@ class GraftSql(
         // through the exact pre-filter route ([[healOverfetchCut]]).
         val admitted = admittedForPred(big, p)
         val cut = graft.operators.HnswSearch.searchIndexFiltered(spark,
-            hnswStoreFor(big), qv, "__qid", "__qvec",
+            storeFor(big), qv, "__qid", "__qvec",
             admitted.select("__cid"), "__cid",
             k, efSearch = math.max(k, math.min(big.numCandidates, 10000)),
             overFetch = 16, maxQueries = 10000)
           .select(col("__qid"), col("match_id"), col("rank").cast("int"))
-        healOverfetchCut(qv, cut, admitted, k, metric, big.indexType)
-      case ("pq" | "lsh" | "sq" | "bq", Some(p)) =>
+        healOverfetchCut(qv, cut, admitted, k, metric, big.family.name)
+      case (Pq | Lsh | Sq | Bq, Some(p)) =>
         // the in-flight compressed/bucketed families have no payload
         // store to push a predicate into; the old exact pre-filter
         // fallback silently paid the full corpus scan the registration
@@ -225,7 +202,7 @@ class GraftSql(
           .filter(col("rank") <= k)
           .select(col("__qid"), col("__cid").as("match_id"),
             col("rank").cast("int"))
-        healOverfetchCut(qv, cut, admitted, k, metric, big.indexType)
+        healOverfetchCut(qv, cut, admitted, k, metric, big.family.name)
       case (_, p) =>
         // exact bounded-heap ranking ("flat" and the pre-filter fallback
         // of the non-store families): map-side partial heaps, only ≤k
@@ -240,21 +217,6 @@ class GraftSql(
     }
     ranked.select(col("__qid"), col("rank").as("__rank"),
       col("match_id").as("__cid"))
-  }
-
-  /** The admitted rows of a predicate in canonical (__cid, __content,
-    * __cvec) form, for the over-fetch post-filter routes: the frozen
-    * source on a normal registration, the LIVE store (payload columns
-    * included in predicate scope) on a CDC-maintained one — an admitted
-    * set computed from the initial load would silently un-admit every
-    * CDC change.
-    */
-  private[sql] def admittedForPred(big: DfCorpus, p: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    if (big.cdcKeyed)
-      liveStoreCanon(big).filter(expr(p))
-        .select("__cid", "__content", "__cvec")
-    else canonCorpus(big.df.filter(expr(p)), big.contentCol, big.vecCol)
   }
 
   /** SELF-HEALING under-fill for the over-fetch post-filter routes
@@ -312,46 +274,34 @@ class GraftSql(
       .drop("__healed")
   }
 
-  private[sql] def fedSearchView(
-      table: String, vecExpr: String, big: DfCorpus, k: Int,
-      views: scala.collection.mutable.Buffer[String]): String = {
-    import org.apache.spark.sql.functions._
-    val base = spark.table(table)
-    val q = base.withColumn("__qid", xxhash64(expr(vecExpr)))
-    val c = canonServe(big)
-    val qv = q.select(col("__qid"), expr(vecExpr).as("__qvec"))
-    searchResultsView("fedsearch", q,
-      rankedForFamily(qv, big, k, canon = c), c, views)
-  }
-
-  /** Index-served FILTERED_SEARCH for a beyond-cap registration: the
-    * exact pre-filter path re-scans the corpus per statement, which at
-    * 100 TB is exactly what the registered index exists to avoid — so a
-    * corpus declared `'ivf'` probes its persisted store with the
-    * predicate PUSHED INTO the pruned cell scan
-    * ([[graft.operators.IvfSearch.searchIndex]]'s payload layout: a
-    * parquet PushedFilter stacked on the partition pruning), `'ivfpq'`
-    * and `'ivfsq'` push the same predicate into their pruned CODE scans
-    * (compressed payload stores — the Atlas filtered-$vectorSearch
-    * shape at 1/32 and 1/4 the scanned bytes), and
-    * `'hnsw'` serves the standard post-filter-with-over-fetch strategy
-    * ([[graft.operators.HnswSearch.searchIndexFiltered]]) against an
-    * admitted-id set that is predicate-selectivity-sized. The declared
-    * `numCandidates` budget counts PRE-filter scanned rows — for
+  /** FEDERATED_SEARCH over a beyond-cap registration, and with `pred`
+    * its index-served FILTERED_SEARCH: the exact pre-filter path
+    * re-scans the corpus per statement, which at 100 TB is exactly what
+    * the registered index exists to avoid — so a corpus declared
+    * `'ivf'` probes its persisted store with the predicate PUSHED INTO
+    * the pruned cell scan ([[graft.operators.IvfSearch.searchIndex]]'s
+    * payload layout: a parquet PushedFilter stacked on the partition
+    * pruning), `'ivfpq'` and `'ivfsq'` push the same predicate into
+    * their pruned CODE scans (compressed payload stores — the Atlas
+    * filtered-$vectorSearch shape at 1/32 and 1/4 the scanned bytes),
+    * and `'hnsw'` serves the standard post-filter-with-over-fetch
+    * strategy ([[graft.operators.HnswSearch.searchIndexFiltered]])
+    * against an admitted-id set that is predicate-selectivity-sized. The
+    * declared `numCandidates` budget counts PRE-filter scanned rows — for
     * selective predicates, register with a larger budget (the
     * 1/selectivity rule on the operator's Scaladoc).
     */
-  private[sql] def filteredIndexView(
-      table: String, vecExpr: String, big: DfCorpus, k: Int, pred: String,
-      src: DataFrame, contentCol: String, vecCol: String,
+  private[sql] def fedSearchView(
+      table: String, vecExpr: String, big: Registration, k: Int,
+      pred: Option[String],
       views: scala.collection.mutable.Buffer[String]): String = {
     import org.apache.spark.sql.functions._
     val base = spark.table(table)
     val q = base.withColumn("__qid", xxhash64(expr(vecExpr)))
-    val qv = q.select(col("__qid"), expr(vecExpr).as("__qvec"))
     val c = canonServe(big)
-    searchResultsView("filteredsearch", q,
-      rankedForFamily(qv, big, k, Some(pred), canon = c), c, views)
+    val qv = q.select(col("__qid"), expr(vecExpr).as("__qvec"))
+    searchResultsView(if (pred.isEmpty) "fedsearch" else "filteredsearch", q,
+      rankedForFamily(qv, big, k, pred, canon = c), c, views)
   }
 
   /** RADIUS_SEARCH: everything within a similarity threshold of each
@@ -362,9 +312,10 @@ class GraftSql(
     * so the array order is deterministic, but no rank is implied.
     * Routing follows the registration's posture: a collected
     * (in-memory-sized) corpus serves the exact [[VectorSearch
-    * .radiusFlat]]; a beyond-cap corpus declared `'ivf'` probes its
-    * persisted store ([[graft.operators.IvfSearch.radiusIndex]] — cell
-    * pruning, exact re-score); any other beyond-cap corpus takes the
+    * .radiusFlat]]; a beyond-cap corpus declared under a celled family
+    * probes its persisted store ([[graft.operators.CelledStore
+    * .serveRadius]] — cell pruning, exact re-score), an hnsw one its
+    * graphs; any other beyond-cap corpus takes the
     * LSH-bucketed scale path ([[VectorSearch.radiusLsh]] — equi-join on
     * (table, bucket), exact re-score, precision 1.0 with recall pinned
     * by its contract).
@@ -374,16 +325,12 @@ class GraftSql(
       nBits: Int, nTables: Int, pred: Option[String],
       views: scala.collection.mutable.Buffer[String]): String = {
     import org.apache.spark.sql.functions._
-    val resolved = resolveCorpus(corpusName)
-    val (src, contentCol, vecCol) = corpusSources(corpusName)
+    val big = resolveCorpus(corpusName)
     val base = spark.table(table)
     val q = base.withColumn("__qid", xxhash64(expr(vecExpr)))
     val qv = q.select(col("__qid"), expr(vecExpr).as("__qvec"))
       .dropDuplicates("__qid")
-    val c = resolved match {
-      case big: DfCorpus if big.cdcKeyed => canonServe(big)
-      case _ => canonCorpus(src, contentCol, vecCol)
-    }
+    val c = canonServe(big)
     // predicate resolution is checked loudly against the REGISTERED
     // source's columns (the FILTERED_SEARCH contract); exact/LSH routes
     // pre-filter the source, the index routes push it into the pruned
@@ -391,29 +338,23 @@ class GraftSql(
     val cAdmitted = pred.map(admittedCanon(corpusName, _, "RADIUS_SEARCH"))
       .getOrElse(c)
     val storeFilter = pred.map(expr).getOrElse(lit(true))
-    val hits = resolved match {
-      case _: InMemCorpus =>
+    val hits = (big.serve, big.family) match {
+      case (_: InMemCorpus, _) =>
         VectorSearch.radiusFlat(qv, "__qid", "__qvec",
           cAdmitted, "__cid", "__cvec", threshold, "cosine")
-      case big: DfCorpus if big.indexType == "ivf" =>
-        // a declared IVF family serves the radius from its persisted
-        // store (FAISS range_search posture): probed-cell pruning, exact
-        // re-score, precision 1.0 — nProbe 12/16 is the setting the
-        // radius recall contract measured (q_ivf_radius_recall)
-        graft.operators.IvfSearch.radiusIndex(spark,
-          celledStoreFor(big), qv, "__qid", "__qvec",
-          threshold, "cosine", nProbe = 12, filter = storeFilter)
-      case big: DfCorpus if GraftSql.CompressedStores.contains(big.indexType) =>
-        // the SQ8 / PQ stores serve the radius from their compressed
-        // cells: decoded relaxed-threshold pre-pass (the codec's own
-        // margin — wider for the lossy PQ codes), exact re-score cut at
-        // the true threshold (precision 1.0; recall contracted by
-        // q_ivfsq_radius_recall / q_ivfpq_radius_recall at the same nProbe)
-        GraftSql.CompressedStores(big.indexType).radiusIndex(spark,
-          celledStoreFor(big), qv, "__qid", "__qvec",
-          c, "__cid", "__cvec", threshold, "cosine", nProbe = 12,
-          filter = storeFilter)
-      case big: DfCorpus if big.indexType == "hnsw" =>
+      case (_, f: CelledFamily) =>
+        // a declared celled family serves the radius from its persisted
+        // store (FAISS range_search posture): probed-cell pruning and
+        // precision 1.0 — raw ivf scores exactly, the SQ8 / PQ stores
+        // admit decoded codes at a threshold relaxed by the codec's own
+        // margin (wider for the lossy PQ codes) and cut an exact re-score
+        // at the true one. nProbe 12/16 is the setting the radius recall
+        // contracts measured (q_ivf_radius_recall, q_ivfsq_radius_recall,
+        // q_ivfpq_radius_recall)
+        f.store.serveRadius(spark, storeFor(big),
+          qv, "__qid", "__qvec", c, "__cid", "__cvec", threshold, "cosine",
+          nProbe = 12, filter = storeFilter)
+      case (_, Hnsw) =>
         // graph radius (an hnsw registration previously fell to the LSH
         // raw-vector re-scan — a full corpus pass per statement on
         // exactly the corpora registered beyond-cap): probe the SAME
@@ -433,7 +374,7 @@ class GraftSql(
         // the contract measures exactly this.
         val kCap = math.max(16, math.min(big.numCandidates, 1000))
         graft.operators.HnswSearch.searchIndex(spark,
-            hnswStoreFor(big), qv, "__qid", "__qvec", k = kCap,
+            storeFor(big), qv, "__qid", "__qvec", k = kCap,
             efSearch = kCap, maxQueries = 10000)
           .select(col("__qid"), col("match_id"))
           .join(qv, "__qid")
@@ -449,23 +390,10 @@ class GraftSql(
           cAdmitted, "__cid", "__cvec", threshold, "cosine",
           nBits = nBits, nTables = nTables)
     }
-    // best-first deterministic order inside the set: sort_array on
-    // (-score, content) — the struct comparator gives score-desc with a
-    // content tie-break, then the rank field is projected away
-    val resolvedHits = hits
-      .select(col("__qid"), col("match_id").as("__cid"), col("score"))
-      .join(c.select("__cid", "__content"), "__cid")
-      .groupBy("__qid")
-      .agg(sort_array(collect_list(struct((-col("score")).as("__negscore"),
-        col("__content")))).as("__sorted"))
-      .select(col("__qid"),
-        transform(col("__sorted"), x =>
-          struct(x.getField("__content").as("content"))).as("search_results"))
-    val out = q.join(resolvedHits, Seq("__qid"), "left").drop("__qid")
-    val view = s"graft_radiussearch_${fedViewCounter.incrementAndGet()}"
-    out.createOrReplaceTempView(view)
-    views += view
-    view
+    // best-first deterministic order inside the set: -score ranks it,
+    // content breaks ties (searchResultsView's struct sort)
+    searchResultsView("radiussearch", q, hits.select(col("__qid"),
+      col("match_id").as("__cid"), (-col("score")).as("__rank")), c, views)
   }
 
   /** HYBRID_SEARCH: reciprocal-rank fusion (Cormack et al. 2009) of the
@@ -482,7 +410,7 @@ class GraftSql(
     * declared under any non-flat family serves its leg through the SAME
     * [[rankedForFamily]] ladder FEDERATED_SEARCH uses (in-flight ANN or
     * the build-once persisted stores; a predicate rides the store's
-    * payload pushdown on the [[StoreFilteredFamilies]]) — a hybrid
+    * payload pushdown on the at-rest families) — a hybrid
     * statement no longer pays the full exact vector scan the
     * registration was declared to avoid. Collected and flat
     * registrations keep the exact bounded-heap leg.
@@ -520,11 +448,11 @@ class GraftSql(
     // USER k beyond the declared budget must keep the ladder's loud
     // 'k exceeds numCandidates' error, never a silently shorter leg.
     val fuseDepth = math.max(k, 10)
-    val vRank = ref match {
-      case big: DfCorpus if big.indexType != "flat" =>
+    val vRank = ref.serve match {
+      case _: DfCorpus if ref.family != Flat =>
         rankedForFamily(qv.select(col("__qid"),
             col("__qvec").cast("array<float>").as("__qvec")),
-            big, math.max(k, math.min(fuseDepth, big.numCandidates)), pred)
+            ref, math.max(k, math.min(fuseDepth, ref.numCandidates)), pred)
           .select(col("__qid"), col("__cid").as("match_id"),
             col("__rank").as("rank"))
       case _ => null
@@ -612,7 +540,7 @@ class GraftSql(
     // content. A predicate admits MEMBER rows (metadata rides per
     // member), so groups rank by their best ADMITTED member and groups
     // with no admitted members vanish — member-level pre-filter
-    val (cdf, ref) = corpusContentDfWithRef(corpusName)
+    val (cdf, big) = corpusContentDfWithRef(corpusName)
     val allMembers = cdf.withColumn("__gid", xxhash64(col("__content")))
     val members = pred.map { p =>
       allMembers.join(
@@ -630,10 +558,10 @@ class GraftSql(
     // pushdown where the family supports it), exact cosine re-score,
     // group max over retrieved members only — the standard multi-vector
     // ANN approximation, recall governed by the candidate budget.
-    val ranked = (ref, pred) match {
-      case (big: DfCorpus, None) if big.indexType == "ivf" =>
+    val ranked = (big.serve, big.family, pred) match {
+      case (_: DfCorpus, Ivf, None) =>
         graft.operators.VectorSearch.groupMaxSimIndex(spark,
-            celledStoreFor(big),
+            storeFor(big),
             qv, "__qid", "__qvec",
             allMembers.select("__cid", "__gid"), "__cid", "__gid",
             k, "cosine",
@@ -643,7 +571,7 @@ class GraftSql(
               big.numCandidates))
           .select(col("query_id").as("__qid"), col("match_group").as("__cid"),
             col("rank").as("__rank"))
-      case (big: DfCorpus, p) if big.indexType != "flat" =>
+      case (_: DfCorpus, f, p) if f != Flat =>
         // member-pool budget: min(numCandidates, 1000) floor-raised to
         // k. When the USER's k exceeds the declared budget this exceeds
         // numCandidates on purpose — the ladder's 'k exceeds
@@ -697,12 +625,12 @@ class GraftSql(
       expr(vecExpr).cast("array<float>").as("__qvec"))
     // candidate pool from the registered family on a non-flat beyond-cap
     // registration (the predicate rides the store's payload pushdown on
-    // the StoreFilteredFamilies): pool IDS come from the ladder, the
+    // the at-rest families): pool IDS come from the ladder, the
     // relevance term is re-scored EXACTLY — queries × candN work — so
     // the selection quality degrades only through pool membership, the
     // same knob every ANN family is contracted on
-    val poolCand = ref match {
-      case big: DfCorpus if big.indexType != "flat" =>
+    val poolCand = ref.serve match {
+      case _: DfCorpus if ref.family != Flat =>
         // candN is the diversity pool knob, not the user's k: clamp it
         // to the registration's numCandidates budget (a short pool
         // degrades selection breadth, the knob the MMR contract already
@@ -711,8 +639,8 @@ class GraftSql(
         // the user's selectK, so k beyond the declared budget keeps the
         // ladder's loud 'k exceeds numCandidates' error instead of a
         // silently under-filled selection.
-        rankedForFamily(qv, big,
-            math.max(k, math.min(candN, big.numCandidates)),
+        rankedForFamily(qv, ref,
+            math.max(k, math.min(candN, ref.numCandidates)),
             pred, metric = "cosine")
           .select(col("__qid"), col("__cid").as("match_id"))
           .join(cAdmitted.select(col("__cid").as("match_id"), col("__cvec")),
@@ -740,82 +668,90 @@ class GraftSql(
 /** `search_results` element shape (ARRAY<ROW<content STRING>>). */
 case class SearchHit(content: String)
 
-/** Registered FEDERATED_SEARCH corpus states. */
+/** A registration's serve form. */
 private[sql] sealed trait CorpusRef
 /** Collected (content, vector) rows, content-sorted — per-row heap scan. */
 private[sql] final case class InMemCorpus(rows: Array[(String, Array[Float])])
   extends CorpusRef
-/** Beyond-cap corpus left distributed — searched via topKAgg ("flat")
-  * or an ANN family ("ivf" | "pq" | "lsh" | "sq" | "bq" | "hnsw") under the declared
-  * numCandidates budget. `tag` is the corpus identity for index
-  * artifacts (PQ codebooks): unique per registration, so a
-  * re-registered corpus retrains and repeat statements over one
+/** Beyond-cap corpus left distributed — served by the declared family
+  * under its numCandidates budget. `tag` is the corpus identity for index
+  * artifacts (PQ codebooks) and at-rest stores: unique per registration,
+  * so a re-registered corpus retrains and repeat statements over one
   * registration serve the cached artifact.
   */
-private[sql] final case class DfCorpus(
-  df: DataFrame, contentCol: String, vecCol: String,
-  indexType: String = "flat", numCandidates: Int = 10000,
-  tag: String = "", cdcKeyed: Boolean = false,
-  normalized: Boolean = false) extends CorpusRef
+private[sql] final case class DfCorpus(tag: String) extends CorpusRef
 /** External-connector CREATE TABLE corpus, backing relation (candidate
   * names in resolution order) bound at first search. */
-private[sql] final case class LazyCorpus(
-  backingCandidates: Seq[String], contentCol: String, vecCol: String,
-  indexType: String = "flat", numCandidates: Int = 10000,
-  normalize: Boolean = false, cdcKeyed: Boolean = false)
+private[sql] final case class LazyCorpus(backingCandidates: Seq[String])
   extends CorpusRef
 
-object GraftSql {
-  /** Search families an external table may declare via
-    * '<connector>.index.type'.
-    */
-  val IndexTypes: Set[String] =
-    Set("flat", "ivf", "pq", "lsh", "sq", "bq", "hnsw", "ivfpq", "ivfsq")
+/** One search-corpus registration, the single entry per name: the
+  * declared knobs, the SOURCE frame with every column (what a metadata
+  * predicate resolves against; absent while a lazy corpus is unbound),
+  * the declared lexical store's tag, and the serve form.
+  */
+private[sql] final case class Registration(
+    family: SearchFamily, numCandidates: Int, normalize: Boolean,
+    cdc: Boolean, lexicalIndex: Boolean,
+    source: Option[DataFrame], contentCol: String, vecCol: String,
+    lexTag: Option[String], serve: CorpusRef) {
+  def df: DataFrame = source.getOrElse(
+    throw new IllegalStateException("unreachable: resolveCorpus binds LazyCorpus"))
+  def tag: String = serve match {
+    case DfCorpus(t) => t
+    case other => throw new IllegalStateException(
+      s"unreachable: a $other registration has no store identity")
+  }
+}
 
-  /** Serializes check-then-build of the per-registration persisted hnsw
-    * index (see the "hnsw" federated-search route).
+/** THE search-family table: the one place a family declares its name,
+  * its kind and, for the celled kind, its store. In-flight families
+  * (flat, pq, sq, bq, lsh) serve from the source frame; the celled
+  * (ivf, ivfpq, ivfsq) and graph (hnsw) kinds keep an at-rest store, so
+  * only they may be `cdc=true`, take a predicate into the store scan,
+  * compact, and are retired with their registration.
+  */
+private[sql] sealed abstract class SearchFamily(val name: String) {
+  def atRest: Boolean = true
+}
+private[sql] sealed abstract class InFlightFamily(name: String)
+  extends SearchFamily(name) {
+  override def atRest: Boolean = false
+}
+/** `kWithinBudget`: the store ranks without a survivor pool (raw ivf
+  * scores exactly), so the registration's numCandidates bounds k itself;
+  * the compressed stores size their re-rank pool from it instead.
+  */
+private[sql] final case class CelledFamily(override val name: String,
+    store: graft.operators.CelledStore, kWithinBudget: Boolean)
+  extends SearchFamily(name)
+
+private[sql] object SearchFamily {
+  case object Flat extends InFlightFamily("flat")
+  case object Pq extends InFlightFamily("pq")
+  case object Lsh extends InFlightFamily("lsh")
+  case object Sq extends InFlightFamily("sq")
+  case object Bq extends InFlightFamily("bq")
+  case object Hnsw extends SearchFamily("hnsw")
+  val Ivf = CelledFamily("ivf", graft.operators.IvfSearch, kWithinBudget = true)
+  val IvfPq = CelledFamily("ivfpq", graft.operators.IvfPqIndex, kWithinBudget = false)
+  val IvfSq = CelledFamily("ivfsq", graft.operators.IvfSqIndex, kWithinBudget = false)
+
+  /** In the order an unknown-type refusal lists them. */
+  private val all = Seq(Hnsw, IvfSq, Flat, Bq, Lsh, Ivf, Sq, IvfPq, Pq)
+
+  def apply(name: String): SearchFamily = all.find(_.name == name).getOrElse(
+    throw new IllegalArgumentException(
+      s"index type '$name' not in ${all.map(_.name).mkString("/")}"))
+
+  val atRestNames: String = all.filter(_.atRest).map(_.name).sorted.mkString("/")
+}
+
+object GraftSql {
+  /** Serializes check-then-build and retirement of the per-registration
+    * at-rest stores (see [[GraftSqlRegistry.storeFor]]).
     */
   private[sql] val hnswBuildLock = new Object
-
-  /** Families whose registration mints a build-once persisted store
-    * under [[GraftSql!.storePath]] — retirement GC iterates exactly
-    * this list (plus the "lex" declared-index store), so adding a new
-    * at-rest family here wires it into DROP/re-registration cleanup
-    * automatically.
-    */
-  private[sql] val AtRestFamilies: Seq[String] =
-    Seq("hnsw", "ivf", "ivfpq", "ivfsq")
-
-  /** The celled families' stores by family name: the compressed pair,
-    * then all three.
-    */
-  private[sql] val CompressedStores
-      : Map[String, graft.operators.CompressedCelledStore[_]] =
-    Map("ivfpq" -> graft.operators.IvfPqIndex, "ivfsq" -> graft.operators.IvfSqIndex)
-  private[sql] val CelledStores: Map[String, graft.operators.CelledStore] =
-    CompressedStores + ("ivf" -> graft.operators.IvfSearch)
-
-  /** Families a cdc=true registration may declare — the payload stores
-    * whose CDC fronts replace vectors and metadata (ivf natively; the
-    * compressed pair carries the raw vector as payload so resolution
-    * and exact re-rank cover CDC-only contents; hnsw keeps a docs
-    * sidecar next to its graphs — the reference's actual Atlas index
-    * family, README.md:370-382).
-    */
-  private[sql] val CdcFamilies: Set[String] =
-    Set("ivf", "ivfpq", "ivfsq", "hnsw")
-
-  /** Per-source-topic monitor serializing streaming micro-batch
-    * execution: the foreachBatch body shadows the topic's temp view by
-    * name, so concurrent streams on ONE topic must not interleave their
-    * shadow/execute/restore sections (see [[GraftSql.executeStreaming]]).
-    * JVM-global like the build lock — two facades over one catalog share
-    * the session's temp-view namespace either way.
-    */
-  private[sql] val streamBatchLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-  private[sql] def streamBatchLock(source: String): Object =
-    streamBatchLocks.getOrElseUpdate(source, new Object)
 
   /** Registration generation counter feeding [[DfCorpus.tag]]. */
   private[sql] val corpusGen = new java.util.concurrent.atomic.AtomicLong(0)
@@ -930,12 +866,6 @@ object GraftSql {
       """`?(\w+)`?\s*\.\s*`?(\w+)`?\s*\+\s*INTERVAL\s*'(\d+)'\s*(\w+)""").r
   private[sql] val LateralRe =
     """(?is)\bFROM\s+(`?[\w.]+`?)\s*,\s*LATERAL\s+TABLE\s*\(\s*(ML_PREDICT|FEDERATED_SEARCH|FILTERED_SEARCH|RADIUS_SEARCH|HYBRID_SEARCH|PRF_SEARCH|MMR_SEARCH|MAXSIM_SEARCH)\b""".r
-
-  /** Candidate-pool bound, matching the reference's numCandidates rule:
-    * "must be less than or equal to 10,000" (README.md:368).
-    */
-  private[sql] def requireNumCandidates(n: Int): Unit =
-    graft.operators.VectorSearch.requireNumCandidates(n)
 
   /** First index of `needle` (case-insensitive) outside single-quoted
     * string literals, or -1.

@@ -1,13 +1,12 @@
 package graft.sql
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.{HashEmbedder, TopKHeap}
-import graft.model.{ModelRegistry, StubLlm}
+import graft.model.StubLlm
 import graft.operators.VectorSearch
-import graft.sources.TopicCatalog
 
 /** The statement surface of [[GraftSql]] (split mechanically from the
   * 2,600-line monolith, judge r15 task 4): routing by anchored leading-
@@ -229,21 +228,15 @@ private[sql] trait GraftSqlDialect { self: GraftSql =>
       // entry — collected corpora serve the exact broadcast scan
       // regardless of declared family, and that's worth seeing
       import spark.implicits._
-      corpora.toSeq.sortBy(_._1).map { case (name, ref) =>
-        val (declared, nc, norm, cdcK) =
-          corpusMeta.getOrElse(name, ("flat", 10000, false, false))
-        val lex = lexDeclared.getOrElse(name, false)
-        ref match {
-          case InMemCorpus(rows) =>
-            (name, "collected", declared, "exact-broadcast", nc,
-              rows.length.toLong, lex, norm, cdcK)
-          case big: DfCorpus =>
-            (name, "distributed", declared, big.indexType, big.numCandidates,
-              -1L, lex, norm, cdcK)
-          case lz: LazyCorpus =>
-            (name, "unbound", declared, lz.indexType, lz.numCandidates,
-              -1L, lex, norm, cdcK)
+      corpora.toSeq.sortBy(_._1).map { case (name, r) =>
+        val declared = r.family.name
+        val (posture, route, rows) = r.serve match {
+          case InMemCorpus(mem) => ("collected", "exact-broadcast", mem.length.toLong)
+          case _: DfCorpus => ("distributed", declared, -1L)
+          case _: LazyCorpus => ("unbound", declared, -1L)
         }
+        (name, posture, declared, route, r.numCandidates, rows,
+          r.lexicalIndex, r.normalize, r.cdc)
       }.toDF("name", "posture", "declared_index_type", "serving_route",
         "num_candidates", "collected_rows", "lexical_index",
         "normalize_at_build", "cdc_maintained")
@@ -289,27 +282,22 @@ private[sql] trait GraftSqlDialect { self: GraftSql =>
           // (README.md:310-316)
           options.collect { case (k, v) if k.endsWith(".connection") => v }
             .foreach(connections.resolve)
-          val nc = options.collectFirst {
-            case (key, v) if key.endsWith(".numcandidates") => v.trim.toInt
-          }.getOrElse(10000)
-          requireNumCandidates(nc)
-          val vecField = options.collectFirst {
-            case (key, v) if key.endsWith(".path") => v
-          }.getOrElse("vector")
+          // '<connector>.<suffix>' options; flags are 'true' to set
+          def opt(suffix: String) =
+            options.collectFirst { case (k, v) if k.endsWith(suffix) => v }
+          def flag(suffix: String) =
+            opt(suffix).exists(_.trim.equalsIgnoreCase("true"))
+          val nc = opt(".numcandidates").map(_.trim.toInt).getOrElse(10000)
+          VectorSearch.requireNumCandidates(nc)
+          val vecField = opt(".path").getOrElse("vector")
           // '<connector>.index.type' picks the distributed search family
-          // ('flat' exact | 'ivf' | 'pq' | 'lsh') — distinct from the
-          // reference's '<connector>.index', which names the remote index
+          // ([[SearchFamily]]) — distinct from the reference's
+          // '<connector>.index', which names the remote index
           // (README.md:362) and stays free-form
-          val idxType = options.collectFirst {
-            case (key, v) if key.endsWith(".index.type") => v.trim.toLowerCase
-          }.getOrElse("flat")
-          require(GraftSql.IndexTypes.contains(idxType),
-            s"index type '$idxType' not in ${GraftSql.IndexTypes.mkString("/")}")
-          val backing = (options.collectFirst {
-            case (key, v) if key.endsWith(".database") => v
-          }, options.collectFirst {
-            case (key, v) if key.endsWith(".collection") => v
-          }) match {
+          val idxType = opt(".index.type").map(_.trim.toLowerCase)
+            .getOrElse(SearchFamily.Flat.name)
+          val family = SearchFamily(idxType)
+          val backing = (opt(".database"), opt(".collection")) match {
             case (db, Some(coll)) => db.map(d => s"$d.$coll").toSeq :+ coll
             case _ => Seq(name)
           }
@@ -317,23 +305,20 @@ private[sql] trait GraftSqlDialect { self: GraftSql =>
           // '<connector>.lexical.index' = 'true' declares an at-rest
           // lexical index next to the vector one: worksheet BM25/PRF/
           // hybrid postings then serve from the persisted store
-          lexDeclared(name) = options.exists { case (key, v) =>
-            key.endsWith(".lexical.index") && v.trim.equalsIgnoreCase("true")
-          }
+          val lex = flag(".lexical.index")
           // '<connector>.index.normalize' = 'true': unit-norm vectors at
           // build (dot ≡ cosine — the Atlas cosine posture); the hnsw
           // norm-skew radius caveat is closed by declaring this
-          val norm = options.exists { case (key, v) =>
-            key.endsWith(".index.normalize") && v.trim.equalsIgnoreCase("true")
-          }
+          val norm = flag(".index.normalize")
           // '<connector>.index.cdc' = 'true': content-keyed CDC
           // maintenance declared at the table (see registerSearchCorpus)
-          val cdcOpt = options.exists { case (key, v) =>
-            key.endsWith(".index.cdc") && v.trim.equalsIgnoreCase("true")
-          }
-          corpusMeta(name) = (idxType, nc, norm, cdcOpt)
-          corpora(name) = LazyCorpus(backing, schema.head.name, vecField,
-            idxType, nc, normalize = norm, cdcKeyed = cdcOpt)
+          val cdcOpt = flag(".index.cdc")
+          // a re-declared name retires the previous registration's stores
+          // first, as re-registration does
+          if (corpora.contains(name)) retireCorpusStores(name, failOnClaim = false)
+          corpora(name) = Registration(family, nc, norm, cdcOpt, lex,
+            source = None, schema.head.name, vecField, lexTag = None,
+            LazyCorpus(backing))
           status(s"created external search table $name (connector=$conn, " +
             s"index=$idxType, numCandidates=$nc" +
             (if (norm) ", normalize=true" else "") + ")")
@@ -501,13 +486,15 @@ private[sql] trait GraftSqlDialect { self: GraftSql =>
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // the micro-batch shadows the SOURCE topic's view BY NAME, so two
-        // concurrent streaming statements reading one topic would race on
-        // the binding (statement A's batch could read statement B's
-        // slice) — a per-topic monitor serializes the shadow/execute/
-        // restore critical section; streams on different topics never
-        // contend
-        GraftSql.streamBatchLock(source).synchronized {
+        // the micro-batch shadows the SOURCE topic's view BY NAME, so no
+        // other thread may re-bind it until the batch restores it: not a
+        // second statement's micro-batch on the same topic (it would read
+        // this batch's slice), and not an insert or produce into the
+        // topic, whose refreshView would hand this batch the WHOLE topic
+        // (a chained stage writing this stage's source answers twice).
+        // The catalog's view monitor covers both: refreshView takes it
+        // too. Streams over different catalogs never contend.
+        topics.viewMonitor.synchronized {
           // shadow the topic view with this micro-batch's slice, run the
           // verbatim statement batch-style, then restore the full view.
           // The slice must be RE-BOUND to the facade session first:
@@ -778,34 +765,31 @@ private[sql] trait GraftSqlDialect { self: GraftSql =>
         val corpus = unquote(parts(0))
         val k = parts(1).trim.toInt
         val pred = unquote(parts(3))
-        val resolved = resolveCorpus(corpus) // binds lazy corpora -> corpusSources
-        val (src, contentCol, vecCol) = corpusSources.getOrElse(corpus,
-          throw new IllegalArgumentException(
-            s"unknown search corpus '$corpus' — CREATE TABLE ... WITH " +
-              "('connector'='mongodb', ...) or call registerSearchCorpus first"))
+        val reg = resolveCorpus(corpus) // binds lazy corpora
         val admitted =
-          try src.filter(org.apache.spark.sql.functions.expr(pred))
+          try reg.df.filter(org.apache.spark.sql.functions.expr(pred))
           catch { case e: org.apache.spark.sql.AnalysisException =>
             throw new IllegalArgumentException(
               s"FILTERED_SEARCH predicate '$pred' does not resolve against " +
-                s"corpus '$corpus' (${src.columns.mkString(", ")}): ${e.getMessage}")
+                s"corpus '$corpus' (${reg.df.columns.mkString(", ")}): ${e.getMessage}")
           }
-        resolved match {
+        reg.serve match {
           // a registered index family serves the filter from its index:
           // payload pushdown on the persisted celled stores, over-fetch
           // + post-filter on hnsw AND the in-flight ANN families
           // (pq/sq/bq/lsh) — the exact pre-filter below would pay the
           // full corpus scan the registration was declared to avoid
-          case big: DfCorpus if big.indexType != "flat" =>
-            s"${filteredIndexView(table, parts(2), big, k, pred,
-              src, contentCol, vecCol, views)} AS $alias"
+          case _: DfCorpus if reg.family != SearchFamily.Flat =>
+            s"${fedSearchView(table, parts(2), reg, k, Some(pred), views)} AS $alias"
           case _ =>
             // exact pre-filter: "flat" routes the view through the exact
             // bounded-heap ranking over the admitted subset;
             // registration-unique tag (serve-only)
-            val fc = DfCorpus(admitted, contentCol, vecCol, "flat", 10000,
-              tag = s"sqlf_${corpus}_g${GraftSql.corpusGen.incrementAndGet()}")
-            s"${fedSearchView(table, parts(2), fc, k, views)} AS $alias"
+            val fc = Registration(SearchFamily.Flat, 10000, normalize = false,
+              cdc = false, lexicalIndex = false, Some(admitted), reg.contentCol,
+              reg.vecCol, lexTag = None,
+              DfCorpus(s"sqlf_${corpus}_g${GraftSql.corpusGen.incrementAndGet()}"))
+            s"${fedSearchView(table, parts(2), fc, k, None, views)} AS $alias"
         }
       case "radius_search" =>
         // RADIUS_SEARCH('corpus', threshold, vectorCol [, nBits,
@@ -923,17 +907,16 @@ private[sql] trait GraftSqlDialect { self: GraftSql =>
           s"FEDERATED_SEARCH expects ('corpus', k, vectorCol), got: $args")
         val corpus = unquote(parts(0))
         val k = parts(1).trim.toInt
-        resolveCorpus(corpus) match {
+        val reg = resolveCorpus(corpus)
+        reg.serve match {
           case mem: InMemCorpus =>
             val call = s"${federatedSearchUdf(corpus, mem, k)}(${parts(2)})"
             s"(SELECT *, $call AS search_results FROM $table) AS $alias"
-          case big: DfCorpus =>
-            // beyond the driver-collect cap: distributed search via
-            // topKAgg, materialized as a temp view carrying the source
-            // columns + search_results
-            s"${fedSearchView(table, parts(2), big, k, views)} AS $alias"
-          case _: LazyCorpus =>
-            throw new IllegalStateException("unreachable: resolveCorpus resolves LazyCorpus")
+          case _ =>
+            // beyond the driver-collect cap: distributed search through
+            // the declared family, materialized as a temp view carrying
+            // the source columns + search_results
+            s"${fedSearchView(table, parts(2), reg, k, None, views)} AS $alias"
         }
     }
     rewriteLateral(s"$prefix FROM $replaced $suffix", views)

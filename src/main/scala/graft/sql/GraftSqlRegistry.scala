@@ -1,13 +1,9 @@
 package graft.sql
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
 
-import graft.functions.{HashEmbedder, TopKHeap}
-import graft.model.{ModelRegistry, StubLlm}
 import graft.operators.VectorSearch
-import graft.sources.TopicCatalog
 
 /** The registration/store-lifecycle half of [[GraftSql]] (split
   * mechanically from the 2,600-line monolith, judge r15 task 4): corpus
@@ -20,49 +16,15 @@ import graft.sources.TopicCatalog
 private[sql] trait GraftSqlRegistry { self: GraftSql =>
 
   import GraftSql._
-  /** Registered FEDERATED_SEARCH corpora. Small corpora are collected
-    * once (bounded) and scanned per row with a bounded heap — the shape
-    * of the reference's per-row lateral against its Atlas index
-    * (README.md:404-407). Beyond-cap corpora stay as DataFrames and the
-    * search routes through the distributed [[VectorSearch.topKAgg]]
-    * instead of refusing.
+  /** Registered FEDERATED_SEARCH corpora, one [[Registration]] per
+    * name. Small corpora are collected once (bounded) and scanned per
+    * row with a bounded heap — the shape of the reference's per-row
+    * lateral against its Atlas index (README.md:404-407). Beyond-cap
+    * corpora stay as DataFrames and the search routes through the
+    * declared family instead of refusing.
     */
   private[sql] val corpora =
-    scala.collection.concurrent.TrieMap.empty[String, CorpusRef]
-
-  /** The registered SOURCE frame per corpus (all its columns, not just
-    * content+vector) — what FILTERED_SEARCH's metadata predicate
-    * resolves against. Kept alongside [[corpora]] because the collected
-    * InMemCorpus form deliberately drops every non-search column.
-    */
-  private[sql] val corpusSources =
-    scala.collection.concurrent.TrieMap.empty[String, (DataFrame, String, String)]
-
-  /** Registrations that DECLARED an at-rest lexical index
-    * (`lexicalIndex = true` / `'<connector>.lexical.index' = 'true'`):
-    * their worksheet BM25/PRF/hybrid postings serve from a build-once
-    * persisted [[graft.operators.LexicalIndex]] instead of session-held
-    * checkpoint artifacts — see [[lexArtifactsFor]].
-    */
-  private[sql] val lexDeclared =
-    scala.collection.concurrent.TrieMap.empty[String, Boolean]
-
-  /** Registration-unique identity of a DECLARED lexical store, minted at
-    * registration time (re-registering rebuilds) — kept separately from
-    * [[DfCorpus.tag]] so the declaration is honored on COLLECTED
-    * registrations too, which have no DfCorpus identity.
-    */
-  private[sql] val lexTags =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Declared registration knobs per corpus, for `SHOW SEARCH CORPORA`
-    * (the reference's describe-everything surface, extended to the
-    * search registry): the resolved [[corpora]] entry deliberately
-    * drops what the route doesn't need, so the DECLARED shape is kept
-    * here.
-    */
-  private[sql] val corpusMeta =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Int, Boolean, Boolean)]
+    scala.collection.concurrent.TrieMap.empty[String, Registration]
 
   /** Register the backing corpus for `FEDERATED_SEARCH('<name>', k, v)`
     * statements — the in-engine stand-in for the reference's external
@@ -76,9 +38,8 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
       maxRows: Int = 100000, numCandidates: Int = 10000,
       indexType: String = "flat", lexicalIndex: Boolean = false,
       normalize: Boolean = false, cdc: Boolean = false): Unit = {
-    requireNumCandidates(numCandidates)
-    require(GraftSql.IndexTypes.contains(indexType),
-      s"index type '$indexType' not in ${GraftSql.IndexTypes.mkString("/")}")
+    VectorSearch.requireNumCandidates(numCandidates)
+    val family = SearchFamily(indexType)
     // cdc=true declares CONTENT-KEYED maintenance: the persisted store's
     // ids hash the content alone (not content+vector), so a keyed change
     // topic can upsert a content's vector / delete a content through the
@@ -92,9 +53,9 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     // contents too), and hnsw (graphs plus a docs sidecar — the
     // reference's actual Atlas index family, README.md:370-382, made
     // maintainable).
-    require(!cdc || GraftSql.CdcFamilies.contains(indexType),
+    require(!cdc || family.atRest,
       s"cdc maintenance is supported on the payload-store families " +
-        s"${GraftSql.CdcFamilies.toSeq.sorted.mkString("/")} (got " +
+        s"${SearchFamily.atRestNames} (got " +
         s"'$indexType') — their CDC fronts replace vectors AND metadata; " +
         "re-register under one of them or drop cdc")
     // cdc + lexicalIndex is the maintained TEXT corpus: MAINTAIN drives
@@ -127,12 +88,11 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     // (its path stays on the name's pending-retire list, so a later
     // DROP SEARCH CORPUS reclaims it once the claim clears).
     if (corpora.contains(name)) retireCorpusStores(name, failOnClaim = false)
-    lexDeclared(name) = lexicalIndex
-    if (lexicalIndex)
-      lexTags(name) = s"${name}_g${GraftSql.corpusGen.incrementAndGet()}"
-    corpusMeta(name) = (indexType, numCandidates, normalize, cdc)
-    corpusSources(name) = (df, contentCol, vecCol)
-    corpora(name) =
+    // the lexical store's identity is minted here, apart from the family
+    // tag, so the declaration is honored on COLLECTED registrations too
+    val lexTag = if (lexicalIndex)
+      Some(s"${name}_g${GraftSql.corpusGen.incrementAndGet()}") else None
+    val serve =
       if (!cdc && rows.length <= maxRows)
         // sorted by content so heap index tie-break == content tie-break,
         // independent of collect order. A collected corpus ignores the
@@ -141,13 +101,13 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
         // speed it can't gain here.
         InMemCorpus(rows.map(r => (r.getString(0), r.getSeq[Float](1).toArray))
           .sortBy(_._1))
-      else DfCorpus(df, contentCol, vecCol, indexType, numCandidates,
-        // registration-scoped identity: the per-registration counter
-        // alone guarantees uniqueness, so re-registering over
-        // regenerated data always retrains (the tag is deliberately NOT
-        // content-derived — see cachedCodebooks' persist=false contract)
-        tag = s"sql_${name}_g${GraftSql.corpusGen.incrementAndGet()}",
-        cdcKeyed = cdc, normalized = normalize)
+      // registration-scoped identity: the per-registration counter
+      // alone guarantees uniqueness, so re-registering over regenerated
+      // data always retrains (the tag is deliberately NOT
+      // content-derived — see cachedCodebooks' persist=false contract)
+      else DfCorpus(s"sql_${name}_g${GraftSql.corpusGen.incrementAndGet()}")
+    corpora(name) = Registration(family, numCandidates, normalize, cdc,
+      lexicalIndex, Some(df), contentCol, vecCol, lexTag, serve)
   }
 
   /** `DROP SEARCH CORPUS name` — the registration lifecycle's missing
@@ -159,8 +119,7 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     * loudly (stop the stream first) — nothing is deleted on refusal.
     */
   def dropSearchCorpus(name: String): DataFrame = {
-    require(corpora.contains(name) || corpusSources.contains(name),
-      s"unknown search corpus '$name'")
+    require(corpora.contains(name), s"unknown search corpus '$name'")
     // a still-running maintenance stream means a writer is live — the
     // claim check below would refuse anyway, but refuse HERE with the
     // actionable message (and before checkpoint deletion could strand a
@@ -177,8 +136,7 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
       val stale = lexArtifacts.remove(name)
       if (stale != null) unpersistLexArtifacts(stale)
     }
-    corpora.remove(name); corpusSources.remove(name)
-    lexDeclared.remove(name); lexTags.remove(name); corpusMeta.remove(name)
+    corpora.remove(name)
     maintStreams.remove(name)
     // maintenance checkpoints THIS facade minted go with the corpus
     // (judge r16 task 3: dropSearchCorpus cleared the map but stranded
@@ -262,13 +220,11 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     // first search — MAINTAIN must bind it too, or the advertised
     // CREATE TABLE flow fails telling the user to set the very option
     // they already set
-    val big = resolveCorpus(name) match {
-      case b: DfCorpus if b.cdcKeyed => b
-      case _ => throw new IllegalArgumentException(
-        s"search corpus '$name' was not registered with cdc=true — " +
-          "CDC maintenance needs content-keyed store ids; re-register " +
-          "with cdc=true (or '<connector>.index.cdc'='true')")
-    }
+    val big = resolveCorpus(name)
+    if (!big.cdc) throw new IllegalArgumentException(
+      s"search corpus '$name' was not registered with cdc=true — " +
+        "CDC maintenance needs content-keyed store ids; re-register " +
+        "with cdc=true (or '<connector>.index.cdc'='true')")
     // the store must exist before the first CDC batch (the CDC front
     // appends/tombstones, it never bootstraps)
     val path = storeFor(big)
@@ -301,7 +257,7 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
         .map(base => s"$base/maint_${name}_${big.tag}"), "graft_sql_maint_")
     // a normalized registration normalizes its upserts too (NULL
     // vectors — deletes — pass through untouched)
-    val recs0 = if (big.normalized)
+    val recs0 = if (big.normalize)
       GraftSql.l2Normalize(changes, big.vecCol) else changes
     // change records ALIGN to the registration source's column types by
     // name: the store's payload files carry the SOURCE types, and an
@@ -339,9 +295,8 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     // construction, proven exact by the lexical store's sub-epoch contract.
     // Its own store, its own claim, its own checkpoint namespace (an
     // explicit checkpointDir gets a caller-owned '/lex' sibling).
-    if (lexDeclared.getOrElse(name, false)) {
+    big.lexTag.foreach { lexTag =>
       try {
-        val lexTag = lexTags(name)
         val lexPath = lexStoreFor(canonSource(big), lexTag)
         val lexCkpt = mintCkpt(s"$name|lex|$lexTag",
           checkpointDir.map(d => s"$d/lex"),
@@ -381,12 +336,13 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     * worksheet).
     */
   def compactSearchCorpus(name: String): DataFrame = {
-    val big = resolveCorpus(name) match {
-      case b: DfCorpus if GraftSql.AtRestFamilies.contains(b.indexType) => b
-      case b: DfCorpus => throw new IllegalArgumentException(
-        s"search corpus '$name' (family '${b.indexType}') has no at-rest " +
+    val big = resolveCorpus(name)
+    big.serve match {
+      case _: DfCorpus if big.family.atRest => ()
+      case _: DfCorpus => throw new IllegalArgumentException(
+        s"search corpus '$name' (family '${big.family.name}') has no at-rest " +
           "store to compact — only the persisted families " +
-          s"${GraftSql.AtRestFamilies.mkString("/")} accumulate epochs")
+          s"${SearchFamily.atRestNames} accumulate epochs")
       case _ => throw new IllegalArgumentException(
         s"search corpus '$name' is collected in-memory — nothing to compact")
     }
@@ -396,16 +352,15 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
         "are still ACTIVE — compaction cannot know a live stream's " +
         "in-flight epoch; stop it (or let its AvailableNow drain " +
         "finish), compact, then re-issue MAINTAIN")
-    val famPath = storePath(big.indexType, big.tag)
+    val famPath = storePath(big.family.name, big.tag)
     val compacted = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
     if (graft.operators.FsUtil.exists(spark, famPath)) {
       val (b, a) = maintainedStoreFor(big).compact(spark, famPath,
         excludeEpoch = Long.MinValue)
-      compacted += ((big.indexType, b, a))
+      compacted += ((big.family.name, b, a))
     }
-    lexTags.get(name).map(t => storePath("lex", t))
-      .filter(p => lexDeclared.getOrElse(name, false) &&
-        graft.operators.FsUtil.exists(spark, p))
+    big.lexTag.map(t => storePath("lex", t))
+      .filter(graft.operators.FsUtil.exists(spark, _))
       .foreach { p =>
         val (b, a) = graft.operators.LexicalIndex.compactIndex(spark, p)
         compacted += (("lex", b, a))
@@ -439,7 +394,6 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
       s"search corpus '$name' still has ${live.size} ACTIVE maintenance " +
         "stream(s) — stop them (or let their AvailableNow drains finish) " +
         "before releasing writer claims")
-    val famTags = corpora.get(name).toSeq.collect { case b: DfCorpus => b.tag }
     val ownCkpts = maintCkpts.collect {
       case (k, v) if k.startsWith(s"$name|") => v }.toSet
     // pending-retire paths too: a claim this facade minted on a
@@ -448,9 +402,7 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     // the manual-sidecar surgery this API exists to replace. The
     // declared lexical store carries its own maintenance claim on a
     // cdc+lexicalIndex registration, so it is a candidate too.
-    val claimed = (famTags.flatMap(t =>
-        GraftSql.AtRestFamilies.map(f => storePath(f, t))) ++
-        lexTags.get(name).map(t => storePath("lex", t)) ++
+    val claimed = (storePaths(name) ++
         pendingRetire.getOrElse(name, Set.empty)).distinct
       .flatMap(p => graft.operators.IndexMaintenance
         .currentClaim(spark, p).map { case (_, owner) => (p, owner) })
@@ -492,11 +444,7 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     */
   private[sql] def retireCorpusStores(
       name: String, failOnClaim: Boolean): Seq[String] = {
-    val famTags = corpora.get(name).toSeq.collect { case b: DfCorpus => b.tag }
-    val candidates =
-      famTags.flatMap(t => GraftSql.AtRestFamilies.map(f => storePath(f, t))) ++
-      lexTags.get(name).map(t => storePath("lex", t)) ++
-      pendingRetire.getOrElse(name, Set.empty)
+    val candidates = storePaths(name) ++ pendingRetire.getOrElse(name, Set.empty)
     // claim-check + delete run under the SAME monitor every *StoreFor
     // builder holds for its exists-check-then-build: without it, a
     // retirement could delete a store mid-rebuild (leaving a _SUCCESS
@@ -539,12 +487,23 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     }
   }
 
+  /** The at-rest store paths `name`'s CURRENT registration may own: its
+    * family's store (a distributed at-rest registration) and its
+    * declared lexical store.
+    */
+  private[sql] def storePaths(name: String): Seq[String] =
+    corpora.get(name).toSeq.flatMap { r =>
+      (r.serve match {
+        case DfCorpus(tag) if r.family.atRest => Some(storePath(r.family.name, tag))
+        case _ => None
+      }) ++ r.lexTag.map(storePath("lex", _))
+    }
+
   /** THE path-minting rule for every build-once at-rest store — the
     * single source both the `*StoreFor` builders and
     * [[retireCorpusStores]] derive paths from, so a new store-backed
     * family cannot desync from retirement GC (the orphaned-store leak
-    * this shared helper exists to prevent). Families with at-rest
-    * stores are enumerated in [[GraftSql.AtRestFamilies]] (+ "lex").
+    * this shared helper exists to prevent).
     */
   private[sql] def storePath(family: String, tag: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_sql_${family}_" +
@@ -554,24 +513,26 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     * resolvable backing relation and re-registered via
     * [[registerSearchCorpus]] (collect if small, DataFrame otherwise).
     */
-  private[sql] def resolveCorpus(name: String): CorpusRef =
-    corpora.getOrElse(name, throw new IllegalArgumentException(
+  private[sql] def resolveCorpus(name: String): Registration = {
+    val reg = corpora.getOrElse(name, throw new IllegalArgumentException(
       s"unknown search corpus '$name' — CREATE TABLE ... WITH " +
-        "('connector'='mongodb', ...) or call registerSearchCorpus first")) match {
-      case LazyCorpus(candidates, contentCol, vecCol, idxType, nc, norm, cdcK) =>
+        "('connector'='mongodb', ...) or call registerSearchCorpus first"))
+    reg.serve match {
+      case LazyCorpus(candidates) =>
         val df = candidates.view.flatMap { ref =>
           try Some(spark.table(ref)) catch { case _: Exception => None }
         }.headOption.getOrElse(throw new IllegalArgumentException(
           s"search corpus '$name': no backing relation among " +
             candidates.mkString("[", ", ", "]")))
-        registerSearchCorpus(name, df, contentCol, vecCol,
-          numCandidates = nc, indexType = idxType,
-          // binding must not clobber the CREATE TABLE's declaration
-          lexicalIndex = lexDeclared.getOrElse(name, false),
-          normalize = norm, cdc = cdcK)
+        // binding keeps every knob the CREATE TABLE declared
+        registerSearchCorpus(name, df, reg.contentCol, reg.vecCol,
+          numCandidates = reg.numCandidates, indexType = reg.family.name,
+          lexicalIndex = reg.lexicalIndex, normalize = reg.normalize,
+          cdc = reg.cdc)
         corpora(name)
-      case c => c
+      case _ => reg
     }
+  }
   /** Vector dimensionality of a registered corpus, derived from the
     * data ONCE per registration tag (re-registration mints a fresh tag,
     * so a stale dim can never serve a regenerated corpus). An empty
@@ -600,11 +561,12 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     * because the id contract is what maps store hits back to contents.
     */
   private[sql] def canonCorpus(src: DataFrame, contentCol: String,
-      vecCol: String): DataFrame = {
+      vecCol: String, contentIds: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions._
     src.select(col(contentCol).as("__content"),
         col(vecCol).cast("array<float>").as("__cvec"))
-      .withColumn("__cid", xxhash64(col("__content"), col("__cvec")))
+      .withColumn("__cid", if (contentIds) xxhash64(col("__content"))
+        else xxhash64(col("__content"), col("__cvec")))
       .dropDuplicates("__cid")
   }
 
@@ -615,15 +577,8 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     * every store a cdc registration mints, and the initial load of its
     * declared lexical index.
     */
-  private[sql] def canonSource(big: DfCorpus): DataFrame =
-    if (!big.cdcKeyed) canonCorpus(big.df, big.contentCol, big.vecCol)
-    else {
-      import org.apache.spark.sql.functions._
-      big.df.select(col(big.contentCol).as("__content"),
-          col(big.vecCol).cast("array<float>").as("__cvec"))
-        .withColumn("__cid", xxhash64(col("__content")))
-        .dropDuplicates("__cid")
-    }
+  private[sql] def canonSource(big: Registration): DataFrame =
+    canonCorpus(big.df, big.contentCol, big.vecCol, contentIds = big.cdc)
 
   /** A CDC-maintained registration's LIVE store rows in canonical form
     * with every payload column alongside: (__cid, __content, __cvec,
@@ -637,10 +592,13 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     * (every CDC front self-tombstones changed ids, so the filtered scan
     * holds exactly one live row per id — no LWW aggregate at serve).
     */
-  private[sql] def liveStoreCanon(big: DfCorpus): DataFrame = {
+  private[sql] def liveStoreCanon(big: Registration): DataFrame = {
     import org.apache.spark.sql.functions._
     val path = storeFor(big)
-    val vecExpr = col(if (big.indexType == "ivf") "vec" else big.vecCol)
+    val vecExpr = col(big.family match {
+      case f: CelledFamily if f.store.storedCol == "vec" => "vec"
+      case _ => big.vecCol
+    })
     graft.operators.Tombstones.filterLive(spark, path,
         spark.read.parquet(s"$path/corpus"), "id", "epoch")
       .withColumn("__cid", col("id"))
@@ -655,92 +613,86 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     * the LIVE persisted store ([[liveStoreCanon]]). Everything else
     * keeps the registered source.
     */
-  private[sql] def canonServe(big: DfCorpus): DataFrame =
-    if (!big.cdcKeyed) canonCorpus(big.df, big.contentCol, big.vecCol)
+  private[sql] def canonServe(big: Registration): DataFrame =
+    if (!big.cdc) canonCorpus(big.df, big.contentCol, big.vecCol)
     else liveStoreCanon(big).select("__cid", "__content", "__cvec")
-
-  /** Build-once persisted HNSW store for a beyond-cap registration.
-    * Index-once/probe-many like the pq/sq/bq cached artifacts: the
-    * graphs persist per (application, registration) via writeIndex —
-    * repeated statements run ZERO build passes — and nShards is sized
-    * from the corpus count at build time so a beyond-cap corpus never
-    * trips the per-shard heap bound the in-flight defaults would
-    * (target ~1M rows per shard graph). Check-then-build runs under one
-    * monitor: two concurrent statements on a fresh registration must
-    * not both run the overwrite build on the shared path (the
-    * synchronized-ModelCache discipline the pq/sq/bq families get for
-    * free).
-    */
-  private[sql] def hnswStoreFor(big: DfCorpus): String = {
-    val path = storePath("hnsw", big.tag)
-    GraftSql.hnswBuildLock.synchronized {
-      if (!graft.operators.FsUtil.exists(spark, s"$path/_meta/_SUCCESS")) {
-        val c = if (big.cdcKeyed) {
-          // a cdc registration's graphs get a docs SIDECAR (`corpus/`,
-          // epoch-partitioned) carrying content + every payload column
-          // next to the adjacency: the graph stores only (id, vec), and
-          // a maintained registration must resolve hits and admitted
-          // sets from the LIVE store, not the frozen source. The sidecar
-          // lands before writeIndex so `_meta/_SUCCESS` (written last)
-          // still implies the whole store landed.
-          val (withIds, _) = payloadSource(big.df, big.contentCol,
-            big.vecCol, Set("id", "epoch"), "hnsw",
-            idFromContentOnly = true, keepVecPayload = true)
-          withIds.drop("__cvec").withColumnRenamed("__cid", "id")
-            .withColumn("epoch",
-              org.apache.spark.sql.functions.lit(-1L))
-            .write.mode("overwrite").partitionBy("epoch")
-            .parquet(s"$path/corpus")
-          withIds
-        } else canonSource(big)
-        val shards = graft.operators.HnswSearch.shardsFor(c.count())
-        graft.operators.HnswSearch.writeIndex(c, "__cid", "__cvec", path,
-          nShards = shards, m = 8, efConstruction = 64, metric = "dot")
-      }
-    }
-    path
-  }
 
   /** The maintenance sink of a store-backed registration's family (the
     * store itself is built by [[storeFor]]): the celled store, or the
     * hnsw graphs — with their docs sidecar on a cdc registration.
     */
   private[sql] def maintainedStoreFor(
-      big: DfCorpus): graft.operators.MaintainedStore[_] = big.indexType match {
-    case "hnsw" if big.cdcKeyed => graft.operators.HnswSearch.WithDocs
-    case "hnsw" => graft.operators.HnswSearch
-    case f => GraftSql.CelledStores(f)
+      big: Registration): graft.operators.MaintainedStore[_] = big.family match {
+    case f: CelledFamily => f.store
+    case SearchFamily.Hnsw if big.cdc => graft.operators.HnswSearch.WithDocs
+    case _ => graft.operators.HnswSearch
   }
 
-  /** The build-once persisted store of a store-backed registration. */
-  private[sql] def storeFor(big: DfCorpus): String =
-    if (big.indexType == "hnsw") hnswStoreFor(big) else celledStoreFor(big)
-
-  /** Build-once persisted celled store (ivf / ivfpq / ivfsq) for a
-    * beyond-cap registration, laid out for FILTERED serving: every
-    * non-reserved source column rides as PAYLOAD next to the vectors or
-    * codes, so a metadata predicate evaluates inside the
+  /** The build-once persisted store of a beyond-cap registration, built
+    * by its first serve. Index-once/probe-many like the pq/sq/bq cached
+    * artifacts: the store persists per (application, registration) —
+    * repeated statements run ZERO build passes. Check-then-build runs
+    * under one monitor: two concurrent statements on a fresh
+    * registration must not both run the overwrite build on the shared
+    * path (the synchronized-ModelCache discipline the pq/sq/bq families
+    * get for free). Each build writes its marker last (a celled store's
+    * stats, the graphs' `_meta`), so the marker's `_SUCCESS` implies the
+    * whole store landed.
+    *
+    * A celled store (ivf / ivfpq / ivfsq) is laid out for FILTERED
+    * serving: every non-reserved source column rides as PAYLOAD next to
+    * the vectors or codes, so a metadata predicate evaluates inside the
     * partition-pruned probe scan as a parquet PushedFilter — no join
     * back to the source corpus per statement (an unfiltered probe's
     * scan never reads them — parquet column pruning — so the unfiltered
-    * ladder pays nothing for the layout). Same build-once/lock
-    * discipline as [[hnswStoreFor]]; every celled `writeIndex` writes
-    * its stats last, so their _SUCCESS implies the whole store landed.
+    * ladder pays nothing for the layout). The hnsw graphs size nShards
+    * from the corpus count at build time so a beyond-cap corpus never
+    * trips the per-shard heap bound the in-flight defaults would
+    * (target ~1M rows per shard graph).
     */
-  private[sql] def celledStoreFor(big: DfCorpus): String = {
-    val store = GraftSql.CelledStores(big.indexType)
-    val path = storePath(big.indexType, big.tag)
+  private[sql] def storeFor(big: Registration): String = {
+    val path = storePath(big.family.name, big.tag)
+    val marker = big.family match {
+      case _: CelledFamily => "stats"
+      case SearchFamily.Hnsw => "_meta"
+      case f => throw new IllegalArgumentException(
+        s"family '${f.name}' keeps no at-rest store")
+    }
     GraftSql.hnswBuildLock.synchronized {
-      if (!graft.operators.FsUtil.exists(spark, s"$path/stats/_SUCCESS")) {
-        // a compressed store discards raw vectors, so a cdc one keeps
-        // them as payload (see payloadSource)
-        val (withIds, payload) = payloadSource(big.df, big.contentCol,
-          big.vecCol, store.reservedCols, big.indexType,
-          idFromContentOnly = big.cdcKeyed,
-          keepVecPayload = big.cdcKeyed && store.storedCol != "vec")
-        store.buildIndex(withIds, "__cid", "__cvec", path, nList = 16,
-          dim = corpusDim(withIds, big.tag), payload = payload)
-      }
+      if (!graft.operators.FsUtil.exists(spark, s"$path/$marker/_SUCCESS"))
+        big.family match {
+          case CelledFamily(_, store, _) =>
+            // a compressed store discards raw vectors, so a cdc one keeps
+            // them as payload (see payloadSource)
+            val (withIds, payload) = payloadSource(big.df, big.contentCol,
+              big.vecCol, store.reservedCols, big.family.name,
+              idFromContentOnly = big.cdc,
+              keepVecPayload = big.cdc && store.storedCol != "vec")
+            store.buildIndex(withIds, "__cid", "__cvec", path, nList = 16,
+              dim = corpusDim(withIds, big.tag), payload = payload)
+          case _ =>
+            val c = if (big.cdc) {
+              // a cdc registration's graphs get a docs SIDECAR (`corpus/`,
+              // epoch-partitioned) carrying content + every payload column
+              // next to the adjacency: the graph stores only (id, vec), and
+              // a maintained registration must resolve hits and admitted
+              // sets from the LIVE store, not the frozen source. The sidecar
+              // lands before writeIndex so `_meta/_SUCCESS` (written last)
+              // still implies the whole store landed.
+              val (withIds, _) = payloadSource(big.df, big.contentCol,
+                big.vecCol, Set("id", "epoch"), big.family.name,
+                idFromContentOnly = true, keepVecPayload = true)
+              withIds.drop("__cvec").withColumnRenamed("__cid", "id")
+                .withColumn("epoch",
+                  org.apache.spark.sql.functions.lit(-1L))
+                .write.mode("overwrite").partitionBy("epoch")
+                .parquet(s"$path/corpus")
+              withIds
+            } else canonSource(big)
+            val shards = graft.operators.HnswSearch.shardsFor(c.count())
+            graft.operators.HnswSearch.writeIndex(c, "__cid", "__cvec", path,
+              nShards = shards, m = 8, efConstruction = 64, metric = "dot")
+        }
     }
     path
   }
@@ -859,7 +811,7 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     }
   /** Build-once persisted lexical index for a registration that
     * DECLARED one — the at-rest twin of the session artifact cache,
-    * same build-once/lock discipline as [[hnswStoreFor]]. Stats are
+    * same build-once/lock discipline as [[storeFor]]. Stats are
     * written last, so their _SUCCESS implies the whole index landed.
     */
   private[sql] def lexStoreFor(c: DataFrame, tag: String): String = {
@@ -872,9 +824,9 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
   }
 
   private[sql] def lexArtifactsFor(
-      name: String, ref: AnyRef, c: DataFrame): (DataFrame, DataFrame) =
-    ref match {
-      case _ if lexDeclared.getOrElse(name, false) =>
+      name: String, ref: Registration, c: DataFrame): (DataFrame, DataFrame) =
+    ref.lexTag match {
+      case Some(lexTag) =>
         // declared at-rest lexical index: postings/stats are lazy scans
         // of the persisted store — zero tokenize jobs at serve time, a
         // driver-known term join prunes at the parquet reader, and the
@@ -889,11 +841,10 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
           val stale = lexArtifacts.remove(name)
           if (stale != null) unpersistLexArtifacts(stale)
         }
-        val path = lexStoreFor(c, lexTags.getOrElseUpdate(name,
-          s"${name}_g${GraftSql.corpusGen.incrementAndGet()}"))
+        val path = lexStoreFor(c, lexTag)
         (graft.operators.LexicalIndex.postings(spark, path),
           graft.operators.LexicalIndex.corpusStats(spark, path))
-      case _ => lexArtifacts.synchronized {
+      case None => lexArtifacts.synchronized {
         val cur = lexArtifacts.get(name)
         if (cur != null && (cur._1 eq ref)) (cur._2, cur._3)
         else {
@@ -911,27 +862,19 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     }
   /** A registered corpus as a slim (__cid, __content, __cvec) DataFrame
     * with content-derived ids — the shared front half of every
-    * corpus-reading lateral view, plus the resolved CorpusRef (the
+    * corpus-reading lateral view, plus the resolved registration (the
     * identity the per-registration artifact caches key on). An
     * in-memory corpus re-lifts to a DataFrame: the lexical/MMR sides
     * need distributed work either way.
     */
-  private[sql] def corpusContentDfWithRef(corpusName: String): (DataFrame, AnyRef) = {
-    import org.apache.spark.sql.functions._
+  private[sql] def corpusContentDfWithRef(
+      corpusName: String): (DataFrame, Registration) = {
     import spark.implicits._
     val ref = resolveCorpus(corpusName)
-    val (cdf, contentCol, vecCol) = ref match {
-      case InMemCorpus(rows) =>
-        (rows.toSeq.toDF("__content0", "__cvec0"), "__content0", "__cvec0")
-      case big: DfCorpus if big.cdcKeyed &&
-          lexDeclared.getOrElse(corpusName, false) =>
-        // cdc + declared lexical index: the content frame is the LIVE
-        // store ([[canonServe]] — already in canonical slim form) and
-        // the postings/stats come from the MAINTAINED persisted lexical
-        // index (lexArtifactsFor's declared branch reads the store
-        // lazily, so CDC changes are visible with zero re-tokenization)
-        return (canonServe(big), ref)
-      case big: DfCorpus if big.cdcKeyed =>
+    val slim = ref.serve match {
+      case InMemCorpus(rows) => canonCorpus(
+        rows.toSeq.toDF("__content0", "__cvec0"), "__content0", "__cvec0")
+      case _ if ref.cdc && !ref.lexicalIndex =>
         // without a declared lexical index, the text shapes would
         // re-tokenize a frame per statement — and the SESSION postings
         // cache keys on the frozen registration ref, silently ignoring
@@ -944,19 +887,14 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
             "postings), use FEDERATED_SEARCH / FILTERED_SEARCH / " +
             "RADIUS_SEARCH, or register a separate non-cdc corpus for " +
             "text retrieval")
-      case big: DfCorpus => (big.df, big.contentCol, big.vecCol)
-      case _: LazyCorpus =>
-        throw new IllegalStateException("unreachable: resolveCorpus resolves LazyCorpus")
+      // a cdc registration's content frame is the LIVE store and its
+      // postings/stats come from the MAINTAINED persisted lexical index
+      // (lexArtifactsFor's declared branch reads the store lazily, so
+      // CDC changes are visible with zero re-tokenization)
+      case _ => canonServe(ref)
     }
-    val slim = cdf.select(col(contentCol).as("__content"),
-        col(vecCol).cast("array<float>").as("__cvec"))
-      .withColumn("__cid", xxhash64(col("__content"), col("__cvec")))
-      .dropDuplicates("__cid")
     (slim, ref)
   }
-
-  private[sql] def corpusContentDf(corpusName: String): DataFrame =
-    corpusContentDfWithRef(corpusName)._1
 
   /** A metadata predicate resolved LOUDLY against a registered corpus's
     * SOURCE columns (the FILTERED_SEARCH contract), returned as the
@@ -966,37 +904,33 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     */
   private[sql] def admittedCanon(corpusName: String, pred: String,
       what: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val (src, contentCol, vecCol) = corpusSources.getOrElse(corpusName,
+    val reg = corpora.get(corpusName).filter(_.source.isDefined).getOrElse(
       throw new IllegalArgumentException(
         s"unknown search corpus '$corpusName'"))
-    // a CDC-maintained registration's admitted set resolves against the
-    // LIVE store's payload columns, not the frozen initial load — a
-    // predicate over metadata a change record re-wrote must see the
-    // change (caveat: a predicate naming a reserved STORE column —
-    // id/vec/cell/codes/epoch — resolves against store internals; those
-    // names were refused as source columns at registration, so every
-    // registered column is unambiguous)
-    corpora.get(corpusName) match {
-      case Some(b: DfCorpus) if b.cdcKeyed =>
-        val live = liveStoreCanon(b)
-        try live.filter(expr(pred)).select("__cid", "__content", "__cvec")
-        catch { case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalArgumentException(
-            s"$what predicate '$pred' does not resolve against " +
-              s"corpus '$corpusName' (${src.columns.mkString(", ")}): " +
-              e.getMessage)
-        }
-      case _ =>
-        val filtered =
-          try src.filter(expr(pred))
-          catch { case e: org.apache.spark.sql.AnalysisException =>
-            throw new IllegalArgumentException(
-              s"$what predicate '$pred' does not resolve against " +
-                s"corpus '$corpusName' (${src.columns.mkString(", ")}): " +
-                e.getMessage)
-          }
-        canonCorpus(filtered, contentCol, vecCol)
+    try admittedForPred(reg, pred)
+    catch { case e: org.apache.spark.sql.AnalysisException =>
+      throw new IllegalArgumentException(
+        s"$what predicate '$pred' does not resolve against " +
+          s"corpus '$corpusName' (${reg.df.columns.mkString(", ")}): " +
+          e.getMessage)
     }
+  }
+
+  /** The admitted rows of a predicate in canonical (__cid, __content,
+    * __cvec) form: the frozen source on a normal registration, the LIVE
+    * store (payload columns included in predicate scope) on a
+    * CDC-maintained one — an admitted set computed from the initial load
+    * would silently un-admit every CDC change (caveat: a predicate
+    * naming a reserved STORE column — id/vec/cell/codes/epoch — resolves
+    * against store internals; those names were refused as source
+    * columns at registration, so every registered column is
+    * unambiguous).
+    */
+  private[sql] def admittedForPred(big: Registration, p: String): DataFrame = {
+    import org.apache.spark.sql.functions._
+    if (big.cdc)
+      liveStoreCanon(big).filter(expr(p))
+        .select("__cid", "__content", "__cvec")
+    else canonCorpus(big.df.filter(expr(p)), big.contentCol, big.vecCol)
   }
 }

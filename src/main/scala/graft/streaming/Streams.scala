@@ -539,29 +539,21 @@ object Streams {
       idCol: String, textCol: String,
       outDir: String, storeDir: String, checkpointDir: String,
       threshold: Double = 0.7): StreamingQuery = {
-    import graft.operators.Dedup
-    import graft.functions.TextOps
     fileStream(spark, docsDir, schema).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        // within-batch near-dup closure, keep-lowest
-        val inBatch = Dedup.dedupPipeline(batch, idCol, textCol, threshold)
-        val sigs = inBatch.select(col(idCol).as("id"),
-          TextOps.minhash(col(textCol)).as("sig"))
-        // against the store of prior epochs (don't self-compare: a retry
-        // overwrites its own epoch dir, so exclude the current epoch)
-        val storeEpochs = storeEpochDirs(spark, storeDir, epoch)
-        val survivors =
-          (if (storeEpochs.nonEmpty) {
-            val store = spark.read.parquet(storeEpochs: _*)
-            val dupIds = Dedup.minhashDupsAgainst(sigs, store, threshold = threshold)
-            inBatch.join(dupIds.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
-          } else inBatch)
-            // the survivors DAG (dedup closure + store scan + banded join)
-            // feeds BOTH writes below — persist so the store scan and
-            // candidate join run once per epoch, not twice
-            .persist()
+        // within-batch exact dedup first (the dedupPipeline order),
+        // materialized once: the near-dup pair join and the closure's
+        // anti-join both read it
+        val exactDone = graft.operators.Dedup
+          .exactScalable(batch, idCol, textCol).localCheckpoint()
+        val (admitted, sigs) = nearDupStage(spark, exactDone, idCol,
+          textCol, storeDir, epoch, threshold)
+        // the survivors DAG (dedup closure + store scan + banded join)
+        // feeds BOTH writes below — persist so the store scan and
+        // candidate join run once per epoch, not twice
+        val survivors = admitted.persist()
         try {
           survivors.write.mode("overwrite").parquet(s"$outDir/epoch=$epoch")
           sigs.join(survivors.select(col(idCol).as("id")), "id")
@@ -570,6 +562,52 @@ object Streams {
         ()
       }
       .start()
+  }
+
+  /** The exact stage of the curation fronts: min-id per
+    * xxhash64(normText) key within the batch (the skew-proof groupBy +
+    * semi-join of Dedup.exact — never a window, even within a batch: a
+    * boilerplate flood arrives as ONE batch), then an anti-join against
+    * the hash store's prior epochs. The key `__h` is hashed once and
+    * kept for the hash-store write.
+    */
+  private def exactStage(spark: SparkSession, docs: DataFrame,
+      idCol: String, textCol: String, storeDir: String,
+      epoch: Long): DataFrame = {
+    val hashed = docs.withColumn("__h",
+      xxhash64(graft.operators.Dedup.normText(col(textCol))))
+    val keep = hashed.groupBy("__h").agg(min(col(idCol)).as("__keep"))
+    val inBatch = hashed.join(keep.select("__keep"),
+      hashed(idCol) === col("__keep"), "left_semi")
+    val storeEpochs = storeEpochDirs(spark, storeDir, epoch)
+    if (storeEpochs.isEmpty) inBatch
+    else inBatch.join(spark.read.parquet(storeEpochs: _*)
+      .select(col("h").as("__h")).distinct(), Seq("__h"), "left_anti")
+  }
+
+  /** The near-dup stage of the dedup fronts: the within-batch MinHash
+    * closure (keep-lowest), then the check against the signature store's
+    * prior epochs (banded equi-join, never batch × store). Returns
+    * (survivors, in-batch survivors' signatures).
+    */
+  private def nearDupStage(spark: SparkSession, docs: DataFrame,
+      idCol: String, textCol: String, storeDir: String, epoch: Long,
+      threshold: Double): (DataFrame, DataFrame) = {
+    import graft.operators.Dedup
+    val pairs = Dedup.minhashPairs(docs, idCol, textCol, threshold = threshold)
+    val removed = Dedup.clusterLabels(pairs)
+      .filter(col("id") =!= col("label")).select("id")
+    val inBatch = docs.join(removed.withColumnRenamed("id", idCol),
+      Seq(idCol), "left_anti")
+    val sigs = inBatch.select(col(idCol).as("id"),
+      graft.functions.TextOps.minhash(col(textCol)).as("sig"))
+    val storeEpochs = storeEpochDirs(spark, storeDir, epoch)
+    val survivors =
+      if (storeEpochs.isEmpty) inBatch
+      else inBatch.join(Dedup.minhashDupsAgainst(sigs,
+          spark.read.parquet(storeEpochs: _*), threshold = threshold)
+        .withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
+    (survivors, sigs)
   }
 
   /** Streaming front-end of the curation recipe (the batch composition
@@ -590,33 +628,14 @@ object Streams {
       idCol: String, textCol: String,
       outDir: String, storeDir: String, checkpointDir: String,
       minWords: Int = 20): StreamingQuery = {
-    import graft.operators.Dedup
-    import graft.functions.TextOps
     fileStream(spark, docsDir, schema).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val gated = batch.filter(TextOps.curationGate(col(textCol), minWords))
-        // hash ONCE, then min-id dedup on the precomputed key — running
-        // exactScalable and then re-deriving __h would make a second
-        // full normText+hash pass over every admitted document body
-        val hashed = gated.withColumn("__h",
-          xxhash64(Dedup.normText(col(textCol))))
-        // min-id per key via partial-agg groupBy + id-keyed semi-join —
-        // the skew-proof Dedup.exact shape (never a window over the
-        // content key, even within a micro-batch: a re-ingested
-        // boilerplate flood arrives as ONE batch)
-        val keep = hashed.groupBy("__h").agg(min(col(idCol)).as("__keep"))
-        val inBatch = hashed.join(keep.select("__keep"),
-          hashed(idCol) === col("__keep"), "left_semi")
-        val storeEpochs = storeEpochDirs(spark, storeDir, epoch)
-        val survivors =
-          (if (storeEpochs.nonEmpty) {
-            val store = spark.read
-              .parquet(storeEpochs: _*)
-              .select(col("h").as("__h")).distinct()
-            inBatch.join(store, Seq("__h"), "left_anti")
-          } else inBatch).persist()
+        val gated = batch.filter(
+          graft.functions.TextOps.curationGate(col(textCol), minWords))
+        val survivors = exactStage(spark, gated, idCol, textCol, storeDir,
+          epoch).persist()
         try {
           survivors.drop("__h")
             .write.mode("overwrite").parquet(s"$outDir/epoch=$epoch")
@@ -690,52 +709,20 @@ object Streams {
       idCol: String, textCol: String,
       outDir: String, storeDir: String, checkpointDir: String,
       minWords: Int = 20, threshold: Double = 0.7): StreamingQuery = {
-    import graft.operators.Dedup
-    import graft.functions.TextOps
     fileStream(spark, docsDir, schema).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val gated = batch.filter(TextOps.curationGate(col(textCol), minWords))
-        // exact stage: hash once, min-id per key within the batch (the
-        // skew-proof groupBy + semi-join-back shape of Dedup.exact), then
-        // anti-join the cross-epoch hash store (the curationFilterStream
-        // contract)
-        val hashed = gated.withColumn("__h",
-          xxhash64(Dedup.normText(col(textCol))))
-        val keep = hashed.groupBy("__h").agg(min(col(idCol)).as("__keep"))
-        val inBatchExact = hashed.join(keep.select("__keep"),
-          hashed(idCol) === col("__keep"), "left_semi")
-        val hashEpochs = storeEpochDirs(spark, s"$storeDir/hash", epoch)
-        val afterExact =
-          (if (hashEpochs.nonEmpty) {
-            val store = spark.read.parquet(hashEpochs: _*)
-              .select(col("h").as("__h")).distinct()
-            inBatchExact.join(store, Seq("__h"), "left_anti")
-          } else inBatchExact)
-            // feeds the within-batch pair join (twice via banding), the
-            // cross-epoch join, and the final write — materialize once
-            .persist()
+        val gated = batch.filter(
+          graft.functions.TextOps.curationGate(col(textCol), minWords))
+        // feeds the within-batch pair join (twice via banding), the
+        // cross-epoch join, and the final write — materialize once
+        val afterExact = exactStage(spark, gated, idCol, textCol,
+          s"$storeDir/hash", epoch).persist()
         try {
-          // near-dup stage: within-batch banded closure, keep-lowest
-          val pairs = Dedup.minhashPairs(afterExact, idCol, textCol,
-            threshold = threshold)
-          val ndRemoved = Dedup.clusterLabels(pairs)
-            .filter(col("id") =!= col("label")).select("id")
-          val inBatchNd = afterExact.join(
-            ndRemoved.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
-          // cross-epoch: against the signature store of admitted docs
-          val sigs = inBatchNd.select(col(idCol).as("id"),
-            TextOps.minhash(col(textCol)).as("sig"))
-          val sigEpochs = storeEpochDirs(spark, s"$storeDir/sig", epoch)
-          val survivors =
-            (if (sigEpochs.nonEmpty) {
-              val store = spark.read.parquet(sigEpochs: _*)
-              val dupIds = Dedup.minhashDupsAgainst(sigs, store,
-                threshold = threshold)
-              inBatchNd.join(dupIds.withColumnRenamed("id", idCol),
-                Seq(idCol), "left_anti")
-            } else inBatchNd).persist()
+          val (admitted, sigs) = nearDupStage(spark, afterExact, idCol,
+            textCol, s"$storeDir/sig", epoch, threshold)
+          val survivors = admitted.persist()
           try {
             survivors.drop("__h")
               .write.mode("overwrite").parquet(s"$outDir/epoch=$epoch")

@@ -991,12 +991,11 @@ lateral table (ml_predict('vector_encoding', content));""")
     assert(g.execute("SELECT count(*) FROM uqv_b").head.getLong(0) == 3)
   }
 
-  test("the reference's full pipeline cascades as streaming stages end-to-end") {
-    // question -> embed insert -> search insert -> LLM insert, each the
-    // verbatim worksheet statement run as its own incremental streaming
-    // query over the previous stage's topic — the composed run-forever
-    // deployment the reference describes (README.md:285,435,723)
-    val g = facade()
+  /** The reference's worksheet on `g`: both models, the four chained
+    * topics and the in-engine Atlas corpus. Returns the three perpetual
+    * INSERT statements (embed, search, answer) verbatim, in order.
+    */
+  private def referencePipeline(g: GraftSql): Seq[String] = {
     g.execute("""CREATE MODEL `vector_encoding`
 INPUT (input STRING) OUTPUT (vector ARRAY<FLOAT>)
 WITH('TASK' = 'embedding', 'PROVIDER' = 'openai',
@@ -1023,20 +1022,28 @@ WITH ('provider' = 'openai', 'task' = 'chat',
       .select(col("text").as("content"),
         graft.functions.HashEmbedder.embedCol(col("text")).as("vector"))
     g.registerSearchCorpus("mongodb_vector_search", corpus, "content", "vector")
-
-    val embedInsert =
+    Seq(
       """insert into `user_questions_vector` select `role`, `content`, `sessionid`, `vector` from `user_questions`,
-lateral table (ml_predict('vector_encoding', content));"""
-    val searchInsert = """Insert into user_prompts (role, content, sessionid, products)
+lateral table (ml_predict('vector_encoding', content));""",
+      """Insert into user_prompts (role, content, sessionid, products)
 SELECT user_questions_vector.role, user_questions_vector.content,
   user_questions_vector.sessionid, search_results as products
 FROM user_questions_vector,
-LATERAL TABLE(FEDERATED_SEARCH('mongodb_vector_search', 3, vector));"""
-    val llmInsert = """insert into llm_answers (role, content, sessionid, json_response)
+LATERAL TABLE(FEDERATED_SEARCH('mongodb_vector_search', 3, vector));""",
+      """insert into llm_answers (role, content, sessionid, json_response)
 SELECT role, content, sessionid, json_response FROM user_prompts,
 LATERAL TABLE(ML_PREDICT('retail_assistant', json_object(
       'role' VALUE role, 'content' VALUE content,
-      'products' VALUE cast(products as string))));"""
+      'products' VALUE cast(products as string))));""")
+  }
+
+  test("the reference's full pipeline cascades as streaming stages end-to-end") {
+    // question -> embed insert -> search insert -> LLM insert, each the
+    // verbatim worksheet statement run as its own incremental streaming
+    // query over the previous stage's topic — the composed run-forever
+    // deployment the reference describes (README.md:285,435,723)
+    val g = facade()
+    val Seq(embedInsert, searchInsert, llmInsert) = referencePipeline(g)
     val ck = java.nio.file.Files.createTempDirectory("graft_cascade_ck").toString
     def drainAll(): Unit = {
       g.executeStreaming(embedInsert, s"$ck/embed").awaitTermination()
@@ -1125,6 +1132,61 @@ LATERAL TABLE(ML_PREDICT('retail_assistant', json_object(
       assert(got("race_b") == all.filter(_ % 2 == 1).sorted,
         "stream B saw another statement's slice (or lost rows)")
     } finally { qa.stop(); qb.stop() }
+  }
+
+  test("the reference's three perpetual statements on ONE facade answer " +
+      "each question exactly once (no insert re-binds a view a " +
+      "micro-batch has shadowed)") {
+    // embed -> search -> answer, chained through topics and run forever
+    // on one facade: each stage's insert refreshes the view of the next
+    // stage's SOURCE topic, which that stage's micro-batch may have just
+    // shadowed with its slice — it must not then re-read the whole topic
+    val root = java.nio.file.Files.createTempDirectory("graft_sql_topics")
+    val g = new GraftSql(spark, new TopicCatalog(spark, root.toString))
+    val statements = referencePipeline(g)
+    val ck = java.nio.file.Files.createTempDirectory("graft_chain_race_ck").toString
+    val streams = statements.zipWithIndex.map { case (st, i) =>
+      g.executeStreaming(st, s"$ck/$i",
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    }
+    def sessions(topic: String): Seq[String] =
+      g.topics.table(topic).select("sessionid").collect().map(_.getString(0)).toSeq
+    // answered ids, read straight from the committed part files (no
+    // Spark job competing with the streams while polling)
+    val Sid = "\"sessionid\":\"([^\"]+)\"".r
+    def answered(): Set[String] = {
+      val files = java.nio.file.Files.list(root.resolve("llm_answers"))
+      try scala.jdk.CollectionConverters.IteratorHasAsScala(files.iterator).asScala
+        .filter(_.getFileName.toString.startsWith("part-"))
+        .flatMap(f => Sid.findAllMatchIn(new String(
+          java.nio.file.Files.readAllBytes(f), "UTF-8")).map(_.group(1)))
+        .toSet
+      finally files.close()
+    }
+    try {
+      val asked = scala.collection.mutable.ArrayBuffer.empty[String]
+      for (round <- 1 to 3) {
+        // one question at a time, so produces keep landing while the
+        // streams' micro-batches run
+        (1 to 15).foreach { i =>
+          val sid = s"r${round}q$i"
+          g.topics.produceJson("user_questions", Seq(
+            s"""{"role":"user","content":"warm gloves $sid","sessionid":"$sid"}"""))
+          asked += sid
+          Thread.sleep(5)
+        }
+        val deadline = System.nanoTime() + 60L * 1000000000L
+        while (!asked.forall(answered()) &&
+            System.nanoTime() < deadline && streams.forall(_.exception.isEmpty))
+          Thread.sleep(50)
+      }
+      streams.foreach(_.processAllAvailable())
+      val want = asked.toSeq.sorted
+      assert(sessions("llm_answers").sorted == want,
+        "each question must be answered exactly once")
+      assert(sessions("user_questions_vector").sorted == want)
+      assert(sessions("user_prompts").sorted == want)
+    } finally streams.foreach(_.stop())
   }
 
   test("connection CLI blocks parse verbatim; dangling refs fail with the reference's error (README.md:90-96,310-316)") {
@@ -1996,6 +2058,40 @@ LATERAL TABLE(FEDERATED_SEARCH('showc_ext', 1, qv));""").collect()
       .collect().map(r => r.getString(0) -> r.getBoolean(6)).toMap
     assert(!lex("showc_mem") && !lex("showc_ext"),
       "undeclared registrations must describe lexical_index = false")
+    // (posture, declared, route, numCandidates, lexical, normalize, cdc)
+    def knobs(name: String) = g.execute("SHOW SEARCH CORPORA;")
+      .filter(col("name") === name).collect().headOption.map(r =>
+        (r.getString(1), r.getString(2), r.getString(3), r.getInt(4),
+          r.getBoolean(6), r.getBoolean(7), r.getBoolean(8)))
+    // re-registering under another family with the lexical and normalize
+    // flags flipped, and back: no declared value of the earlier
+    // registration survives either replacement
+    g.registerSearchCorpus("showc_mem", src, "content", "vector", maxRows = 0,
+      numCandidates = 50, indexType = "ivf", lexicalIndex = true,
+      normalize = true)
+    assert(knobs("showc_mem") ==
+      Some(("distributed", "ivf", "ivf", 50, true, true, false)))
+    g.registerSearchCorpus("showc_mem", src, "content", "vector",
+      indexType = "hnsw")
+    assert(knobs("showc_mem") ==
+      Some(("collected", "hnsw", "exact-broadcast", 10000, false, false, false)))
+    // DROP removes the registration from the listing
+    g.execute("DROP SEARCH CORPUS showc_mem;")
+    assert(knobs("showc_mem").isEmpty, "a dropped corpus must not be listed")
+    // an external table binds with every knob it declared
+    g.execute("""CREATE TABLE `showc_ext2` (
+    `content` STRING,
+    `vector`  ARRAY<FLOAT>
+) WITH ('connector' = 'mongodb', 'mongodb.collection' = 'showc_backing',
+        'mongodb.numCandidates' = '200', 'mongodb.index.type' = 'ivf',
+        'mongodb.lexical.index' = 'true', 'mongodb.index.normalize' = 'true',
+        'mongodb.index.cdc' = 'true');""")
+    assert(knobs("showc_ext2") ==
+      Some(("unbound", "ivf", "ivf", 200, true, true, true)))
+    g.execute("""SELECT qv FROM showc_qs,
+LATERAL TABLE(FEDERATED_SEARCH('showc_ext2', 1, qv));""").collect()
+    assert(knobs("showc_ext2") ==
+      Some(("distributed", "ivf", "ivf", 200, true, true, true)))
   }
 
   test("RADIUS_SEARCH rejects a non-numeric threshold with the " +
