@@ -129,7 +129,7 @@ object HnswSearch extends MaintainedStore[(Long, Int)] {
     */
   private[operators] final class Graph(
       val ids: Array[Long], val vecs: Array[Array[Float]],
-      m: Int, efC: Int, metric: String) {
+      m: Int, efC: Int, metric: String) extends Serializable {
 
     private val n = ids.length
     private val mL = 1.0 / math.log(m.toDouble)
@@ -394,16 +394,9 @@ object HnswSearch extends MaintainedStore[(Long, Int)] {
     */
   private def collectQueryBatch(
       queries: DataFrame, qId: String, qVec: String, maxQueries: Int,
-      who: String): org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Float])]] = {
-    val qRows = queries
-      .select(col(qId).cast("long"), col(qVec).cast("array<float>"))
-      .filter(col(qId).isNotNull && col(qVec).isNotNull)
-      .limit(maxQueries + 1).collect()
-    require(qRows.length <= maxQueries,
-      s"$who: query batch exceeds maxQueries=$maxQueries — split the batch")
+      who: String): org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Float])]] =
     queries.sparkSession.sparkContext.broadcast(
-      qRows.map(r => (r.getLong(0), r.getSeq[Float](1).toArray)))
-  }
+      PqSearch.collectBatch(queries, qId, qVec, maxQueries, who))
 
   /** Slim (id, vec) corpus hash-repartitioned into `nShards` shards —
     * the deterministic shard assignment shared by build paths.
@@ -589,10 +582,7 @@ object HnswSearch extends MaintainedStore[(Long, Int)] {
       s"appendToIndex: epoch must be >= 0 (got $epoch) — an HNSW append " +
         "is always its own segment; epoch -1 is reserved for base graphs")
     val spark = df.sparkSession
-    val meta = spark.read.parquet(s"$path/_meta").head()
-    val (m, efc, metric) =
-      (meta.getAs[Int]("m"), meta.getAs[Int]("ef_construction"),
-        meta.getAs[String]("metric"))
+    val Meta(m, efc, metric) = resident(spark, path).meta
     val slim = df.select(col(cId).cast("long").as("id"),
         col(cVec).cast("array<float>").as("vec"))
       .filter(col("id").isNotNull && col("vec").isNotNull)
@@ -637,10 +627,7 @@ object HnswSearch extends MaintainedStore[(Long, Int)] {
       maxShardRows: Int = 2000000): (Long, Long) = {
     require(FsUtil.exists(spark, s"$path/_meta"),
       s"hnsw index at '$path' does not exist or is unreachable")
-    val meta = spark.read.parquet(s"$path/_meta").head()
-    val (m, efc, metric) =
-      (meta.getAs[Int]("m"), meta.getAs[Int]("ef_construction"),
-        meta.getAs[String]("metric"))
+    val Meta(m, efc, metric) = resident(spark, path).meta
     IndexMaintenance.withStoreLock(spark, path) {
       IndexMaintenance.recoverSwap(spark, s"$path/nodes")
       val before = IndexMaintenance.dataFiles(spark, s"$path/nodes")
@@ -711,22 +698,227 @@ object HnswSearch extends MaintainedStore[(Long, Int)] {
     Tombstones.deleteUnderLock(spark, path, "nodes", ids, idCol, epoch)
   }
 
-  /** Search a persisted index: graphs restore per shard from stored
-    * adjacency (no re-insertion — levels/entry recompute from ids) and
-    * serve the broadcast query batch; the same slim exact re-rank cuts
-    * the global top-k. Build parameters and metric come from the
-    * index's `_meta`, so a query cannot silently probe under a
+  /** A persisted store's build parameters, from its `_meta` table. */
+  private final case class Meta(m: Int, efConstruction: Int, metric: String)
+
+  /** One recursive listing of a store's `_meta/` and `nodes/`: every
+    * file's (path under its directory, length, mtime), sorted. Any write
+    * that can change what a serve reads — a base write, an append or a
+    * replayed epoch, a compaction's swap — lands files under new names,
+    * so an unchanged listing means an unchanged store (tombstones live
+    * outside both directories and are applied per statement).
+    */
+  private final case class Listing(meta: Vector[(String, Long, Long)],
+      nodes: Vector[(String, Long, Long)]) {
+    private def isData(p: String): Boolean = {
+      val name = p.substring(p.lastIndexOf('/') + 1)
+      !name.startsWith("_") && !name.startsWith(".")
+    }
+    /** The (shard, epoch) segments holding data files. */
+    val segments: Vector[(Int, Long)] = nodes.iterator.map(_._1).filter(isData)
+      .map { p =>
+        def part(k: String) = p.split('/').find(_.startsWith(s"$k="))
+          .getOrElse(throw new IllegalStateException(
+            s"hnsw node file outside a $k= partition: $p")).drop(k.length + 1)
+        (part("shard").toInt, part("epoch").toLong)
+      }.toVector.distinct.sorted
+    def multiEpoch: Boolean = segments.map(_._2).distinct.size > 1
+    def nodeBytes: Long = nodes.iterator.filter(f => isData(f._1)).map(_._2).sum
+  }
+
+  private def listStore(spark: org.apache.spark.sql.SparkSession,
+      path: String): Listing = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def files(dir: String): Vector[(String, Long, Long)] = {
+      val p = new Path(dir)
+      val fs = p.getFileSystem(conf)
+      if (!fs.exists(p)) Vector.empty
+      else {
+        val root = fs.makeQualified(p).toUri.getPath + "/"
+        val out = Vector.newBuilder[(String, Long, Long)]
+        val it = fs.listFiles(p, true)
+        while (it.hasNext) {
+          val st = it.next()
+          out += ((st.getPath.toUri.getPath.stripPrefix(root), st.getLen,
+            st.getModificationTime))
+        }
+        out.result().sorted
+      }
+    }
+    Listing(files(s"$path/_meta"), files(s"$path/nodes"))
+  }
+
+  /** One store version held RESIDENT: its `_meta` and its segment graphs
+    * restored once into a `MEMORY_ONLY` RDD of (epoch, Graph), one
+    * partition per segment. The RDD is defined by the first serve that
+    * needs it and materialized by that serve's own job — no job runs
+    * to create an entry. A restored [[Graph]] is read-only (every search
+    * allocates its own beam and visited flags), so the concurrent tasks
+    * of several statements may probe one cached graph at once.
+    */
+  private final class Resident(val sc: org.apache.spark.SparkContext,
+      val listing: Listing, val meta: Meta,
+      restore: () => org.apache.spark.rdd.RDD[(Long, Graph)]) {
+    private var rdd: org.apache.spark.rdd.RDD[(Long, Graph)] = null
+    def segments: org.apache.spark.rdd.RDD[(Long, Graph)] = synchronized {
+      if (rdd == null) rdd = restore()
+      rdd
+    }
+    /** Non-blocking: a serve still running on the blocks recomputes the
+      * missing partitions from the restore's shuffle output.
+      */
+    def release(): Unit = synchronized {
+      if (rdd != null && !sc.isStopped) rdd.unpersist(blocking = false)
+    }
+  }
+
+  /** Resident store versions: one per store path (the newest listing
+    * seen), LRU-bounded like [[ModelCache]] at 64 paths; an evicted or
+    * superseded version is unpersisted. An entry belongs to the
+    * SparkContext that restored it: a stopped context's entries are
+    * dropped, never served.
+    */
+  private val residents =
+    new java.util.LinkedHashMap[String, Resident](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, Resident]): Boolean = {
+        val evict = size() > 64
+        if (evict) e.getValue.release()
+        evict
+      }
+    }
+
+  /** The resident version of the store at `path`, as its listing now
+    * reads. A changed listing replaces the entry (keeping `_meta` when
+    * only `nodes/` changed); the `_meta` read, the only Spark work here,
+    * runs outside the map's lock.
+    */
+  private def resident(spark: org.apache.spark.sql.SparkSession,
+      path: String): Resident = {
+    val sc = spark.sparkContext
+    val listing = listStore(spark, path)
+    val cur = residents.synchronized {
+      residents.values.removeIf(_.sc.isStopped)
+      Option(residents.get(path)).filter(_.sc eq sc)
+    }
+    cur.filter(_.listing == listing).getOrElse {
+      val meta = cur.filter(_.listing.meta == listing.meta).map(_.meta)
+        .getOrElse(readMeta(spark, path))
+      val fresh = new Resident(sc, listing, meta,
+        () => restoreSegments(spark, path, listing, meta))
+      val (kept, superseded) = residents.synchronized {
+        val now = residents.get(path)
+        if (now != null && (now.sc eq sc) && now.listing == listing) (now, null)
+        else { residents.put(path, fresh); (fresh, now) }
+      }
+      if (superseded != null) superseded.release()
+      kept
+    }
+  }
+
+  /** Release the resident version of the store at `path` (its owner
+    * retired or deleted the store).
+    */
+  private[graft] def releaseResident(path: String): Unit =
+    Option(residents.synchronized(residents.remove(path))).foreach(_.release())
+
+  /** Release every resident version, so the next serve restores cold. */
+  private[graft] def clearResident(): Unit = {
+    val all = residents.synchronized {
+      val v = residents.values.toArray(Array.empty[Resident])
+      residents.clear()
+      v
+    }
+    all.foreach(_.release())
+  }
+
+  private def readMeta(spark: org.apache.spark.sql.SparkSession,
+      path: String): Meta = {
+    val r = spark.read
+      .schema("m INT, ef_construction INT, metric STRING, n_shards INT")
+      .parquet(s"$path/_meta").head()
+    Meta(r.getInt(0), r.getInt(1), r.getString(2))
+  }
+
+  /** Every segment — a (shard, epoch) pair: base graphs plus any
+    * append-time epoch graphs — restored from its stored adjacency (no
+    * re-insertion: levels and the entry point recompute from the ids),
+    * one partition per listed segment, persisted `MEMORY_ONLY`.
+    */
+  private def restoreSegments(spark: org.apache.spark.sql.SparkSession,
+      path: String, listing: Listing,
+      meta: Meta): org.apache.spark.rdd.RDD[(Long, Graph)] = {
+    val segs = listing.segments
+    if (segs.isEmpty) return spark.sparkContext.emptyRDD[(Long, Graph)]
+    val slot = segs.zipWithIndex.toMap
+    val Meta(mm, efc, met) = meta
+    // a segment appended after the listing lands in some partition too;
+    // rows arrive segment-contiguous (sorted by key), so a partition
+    // restores ONE segment at a time
+    val bySegment = new org.apache.spark.Partitioner {
+      override def numPartitions: Int = slot.size
+      override def getPartition(key: Any): Int = {
+        val seg = key.asInstanceOf[(Int, Long)]
+        slot.getOrElse(seg, math.floorMod(seg.hashCode, slot.size))
+      }
+    }
+    spark.read
+      .schema("id BIGINT, vec ARRAY<FLOAT>, links ARRAY<ARRAY<BIGINT>>, " +
+        "shard INT, epoch BIGINT")
+      .parquet(s"$path/nodes")
+      .select("shard", "epoch", "id", "vec", "links")
+      .queryExecution.toRdd
+      .map { r =>
+        val links = r.getArray(4)
+        ((r.getInt(0), r.getLong(1)), (r.getLong(2), r.getArray(3).toFloatArray(),
+          Array.tabulate(links.numElements())(l => links.getArray(l).toLongArray())))
+      }
+      .repartitionAndSortWithinPartitions(bySegment)
+      .mapPartitions { it =>
+        val buf = it.buffered
+        new Iterator[(Long, Graph)] {
+          def hasNext: Boolean = buf.hasNext
+          def next(): (Long, Graph) = {
+            val key = buf.head._1
+            val seg = scala.collection.mutable.ArrayBuffer
+              .empty[(Long, Array[Float], Array[Array[Long]])]
+            while (buf.hasNext && buf.head._1 == key) seg += buf.next()._2
+            val rows = seg.toArray
+            java.util.Arrays.sort(rows,
+              Ordering.by[(Long, Array[Float], Array[Array[Long]]), Long](_._1))
+            val ids = rows.map(_._1)
+            val adj: Array[Array[Array[Int]]] = rows.map(_._3.map(layer =>
+              layer.map { nid =>
+                val idx = java.util.Arrays.binarySearch(ids, nid)
+                require(idx >= 0, s"searchIndex: dangling neighbor id $nid")
+                idx
+              }))
+            (key._2, new Graph(ids, rows.map(_._2), mm, efc, met).restore(adj))
+          }
+        }
+      }
+      .setName(s"hnsw segments $path")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+  }
+
+  /** Search a persisted index: the store's resident segment graphs (see
+    * [[Resident]]) serve the broadcast query batch; the same slim exact
+    * re-rank cuts the global top-k. Build parameters and metric come
+    * from the index's `_meta`, so a query cannot silently probe under a
     * different geometry than the graphs were built for.
     */
   def searchIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, qId: String, qVec: String,
-      k: Int, efSearch: Int = 32, maxQueries: Int = 10000): DataFrame = {
-    import spark.implicits._
-    val meta = spark.read.parquet(s"$path/_meta").head()
-    val (m, efc, metric) =
-      (meta.getAs[Int]("m"), meta.getAs[Int]("ef_construction"),
-        meta.getAs[String]("metric"))
+      k: Int, efSearch: Int = 32, maxQueries: Int = 10000): DataFrame =
+    serve(spark, path, resident(spark, path), queries, qId, qVec, k,
+      efSearch, maxQueries)
+
+  private def serve(
+      spark: org.apache.spark.sql.SparkSession, path: String, r: Resident,
+      queries: DataFrame, qId: String, qVec: String,
+      k: Int, efSearch: Int, maxQueries: Int): DataFrame = {
+    import org.apache.spark.sql.types._
     val bc = collectQueryBatch(queries, qId, qVec, maxQueries, "searchIndex")
     // live tombstones occupy result slots the post-filter then empties —
     // a segment's top-k could be ALL dead and the true alive neighbors
@@ -743,59 +935,27 @@ object HnswSearch extends MaintainedStore[(Long, Int)] {
     // steady-state serving runs NO Spark job for it.
     val deadLive: Int =
       Tombstones.liveDeadCount(spark, path, s"$path/nodes", "id", "epoch")
-    val (mm, efs, kk, met) = (m, efSearch + deadLive, k + deadLive, metric)
-
-    // every SEGMENT — a (shard, epoch) pair: base graphs plus any
-    // append-time epoch graphs — restores and probes independently
-    val candidates = spark.read.parquet(s"$path/nodes")
-      .select(col("shard").cast("int"), col("epoch").cast("long"),
-        col("id").cast("long"), col("vec").cast("array<float>"),
-        col("links").cast("array<array<bigint>>"))
-      .repartition(col("shard"), col("epoch"))
-      .sortWithinPartitions("shard", "epoch")
-      .as[(Int, Long, Long, Seq[Float], Seq[Seq[Long]])]
-      .mapPartitions { it =>
-        // a task may hold several segments after the repartition; rows
-        // arrive segment-contiguous (the within-partition sort), so
-        // materialize ONE segment at a time — task heap stays at
-        // single-build-task scale no matter how many small append
-        // epochs accumulated since the last compaction
-        val buf = it.buffered
-        new Iterator[Iterator[(Long, Long, Double, Long)]] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): Iterator[(Long, Long, Double, Long)] = {
-            val key = (buf.head._1, buf.head._2)
-            val seg = scala.collection.mutable.ArrayBuffer
-              .empty[(Long, Array[Float], Seq[Seq[Long]])]
-            while (buf.hasNext && (buf.head._1, buf.head._2) == key) {
-              val r = buf.next()
-              seg += ((r._3, r._4.toArray, r._5))
-            }
-            val rows = seg.toArray
-            java.util.Arrays.sort(rows,
-              Ordering.by[(Long, Array[Float], Seq[Seq[Long]]), Long](_._1))
-            val ids = rows.map(_._1)
-            val adj: Array[Array[Array[Int]]] = rows.map(_._3.map(layer =>
-              layer.map { nid =>
-                val idx = java.util.Arrays.binarySearch(ids, nid)
-                require(idx >= 0, s"searchIndex: dangling neighbor id $nid")
-                idx
-              }.toArray).toArray)
-            val g = new Graph(ids, rows.map(_._2), mm, efc, met).restore(adj)
-            val segEpoch = key._2
-            // explicit per-segment ef budget: a small append-epoch
-            // segment cannot hold more than its own row count in the
-            // search beam, so after heavy append traffic (many small
-            // epochs before compaction) total serve cost is Σ min(ef,
-            // segment rows), not segments × ef. Identical results — a
-            // beam as wide as the segment already visits every node —
-            // floored at k so the segment can still fill its top-k.
-            val segEf = math.max(kk, math.min(efs, rows.length))
-            serveShard(g, bc.value, kk, segEf, met)
-              .map { case (q, mId, s) => (q, mId, s, segEpoch) }
-          }
-        }.flatten
-      }.toDF(qId, "match_id", "score", "epoch")
+    val (efs, kk, met) = (efSearch + deadLive, k + deadLive, r.meta.metric)
+    val probed = r.segments.mapPartitions(_.flatMap { case (segEpoch, g) =>
+      // explicit per-segment ef budget: a small append-epoch segment
+      // cannot hold more than its own row count in the search beam, so
+      // after heavy append traffic (many small epochs before compaction)
+      // total serve cost is Σ min(ef, segment rows), not segments × ef.
+      // Identical results — a beam as wide as the segment already visits
+      // every node — floored at k so the segment can still fill its top-k.
+      val segEf = math.max(kk, math.min(efs, g.ids.length))
+      serveShard(g, bc.value, kk, segEf, met).map { case (q, mId, s) =>
+        org.apache.spark.sql.catalyst.InternalRow(q, mId, s, segEpoch)
+      }
+    })
+    // at most queries × segments × (k + T) rows of four 8-byte fields:
+    // the estimate keeps the joins onto the result broadcast
+    val candidates = org.apache.spark.sql.graftshim.Shim.sizedFrame(spark,
+      probed, StructType(Seq(StructField(qId, LongType, nullable = false),
+        StructField("match_id", LongType, nullable = false),
+        StructField("score", DoubleType, nullable = false),
+        StructField("epoch", LongType, nullable = false))),
+      BigInt(bc.value.length) * r.listing.segments.size * kk * 40)
 
     // an id re-ingested across epochs supersedes its older vectors: the
     // LATEST epoch wins (the same last-writer-wins rule compactIndex
@@ -805,30 +965,11 @@ object HnswSearch extends MaintainedStore[(Long, Int)] {
     // when the re-ingested vector is far from a query, the newest
     // segment's own top-k omits the id and only the stale row surfaces —
     // so superseded rows are filtered against the store's per-id max
-    // epoch. That table comes from a scan of the node store pruned to
-    // the id column (epoch is a partition value, vec/links never read)
-    // and restricted to ids appearing in >1 epoch, so it is
+    // epoch. That table comes from the resident graphs' ids (no file is
+    // read) restricted to ids appearing in >1 epoch, so its shuffle is
     // append-churn-sized; single-epoch stores (every base-only or
-    // freshly compacted index) skip the join entirely on the
-    // partition-listing check, keeping searchIndex ≡ hnswTopK there.
-    // epoch is a partition DIRECTORY (nodes/shard=S/epoch=E/), so the
-    // single-vs-multi-epoch question is answered by listing those
-    // directories through the Hadoop FS — pure driver-side metadata, no
-    // Spark job per query batch (a DataFrame distinct over the epoch
-    // column would pay a scan-job even though it reads no data columns)
-    val nodesRoot = new Path(s"$path/nodes")
-    val nodesFs =
-      nodesRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val epochDirs = nodesFs.listStatus(nodesRoot).iterator
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("shard="))
-      .flatMap(sh => nodesFs.listStatus(sh.getPath).iterator
-        .filter(e => e.isDirectory && e.getPath.getName.startsWith("epoch=")))
-      .map(_.getPath.getName)
-      .toSet
-    val multiEpoch = epochDirs.size > 1
-    lazy val nodesSlim = spark.read.parquet(s"$path/nodes")
-      .select(col("id").cast("long").as("match_id"),
-        col("epoch").cast("long").as("__node_epoch"))
+    // freshly compacted index) skip the join entirely on the listing,
+    // keeping searchIndex ≡ hnswTopK there.
     // tombstoned candidates die first (see [[Tombstones]]): a deleted
     // id may still live in stored graphs until the next compaction, but
     // must never fill a top-k slot; survivors are rows NEWER than their
@@ -836,17 +977,23 @@ object HnswSearch extends MaintainedStore[(Long, Int)] {
     val alive = Tombstones.filterLive(spark, path, candidates,
       "match_id", "epoch")
     val lww =
-      if (!multiEpoch) alive
+      if (!r.listing.multiEpoch) alive
       else {
         // checkpointed: the slim survivor set (queries × segments × k)
         // feeds BOTH the candidate-id restriction and the filter join —
         // without it the whole probe subtree would evaluate twice
         val cand = alive.localCheckpoint(false)
+        val nodeIds = org.apache.spark.sql.graftshim.Shim.sizedFrame(spark,
+          r.segments.mapPartitions(_.flatMap { case (segEpoch, g) =>
+            g.ids.iterator.map(id =>
+              org.apache.spark.sql.catalyst.InternalRow(id, segEpoch))
+          }), StructType(Seq(StructField("match_id", LongType, nullable = false),
+            StructField("__node_epoch", LongType, nullable = false))),
+          r.listing.nodeBytes)
         // restrict the max-epoch aggregation to candidate-TOUCHED ids
         // (a semi-join keeps every epoch row of those ids): the shuffle
-        // is candidate-sized, not index-sized — the id column scan is
-        // the only full-store pass, and it is column-pruned
-        val superseded = nodesSlim
+        // is candidate-sized, not index-sized
+        val superseded = nodeIds
           .join(cand.select("match_id").distinct(), Seq("match_id"), "left_semi")
           .groupBy("match_id")
           .agg(max(col("__node_epoch")).as("__max_epoch"),
@@ -858,9 +1005,10 @@ object HnswSearch extends MaintainedStore[(Long, Int)] {
       }
     // after the filter every surviving (query, id) group holds rows of
     // one epoch — one hash shard per id per epoch — so max is a plain
-    // dedup, deterministic by construction
-    rerank(lww.groupBy(col(qId), col("match_id"))
-      .agg(max(col("score")).as("score")), qId, metric, k)
+    // dedup, deterministic by construction. ONE exchange on the query id
+    // serves both the dedup aggregate and the rank window.
+    rerank(lww.repartition(col(qId)).groupBy(col(qId), col("match_id"))
+      .agg(max(col("score")).as("score")), qId, met, k)
   }
 
   /** FILTERED serve over a persisted index: only ids present in
@@ -887,17 +1035,16 @@ object HnswSearch extends MaintainedStore[(Long, Int)] {
       k: Int, efSearch: Int = 32, overFetch: Int = 4,
       maxQueries: Int = 10000): DataFrame = {
     require(overFetch >= 1, s"overFetch must be >= 1, got $overFetch")
-    val metric = spark.read.parquet(s"$path/_meta").head()
-      .getAs[String]("metric")
+    val r = resident(spark, path)
     // the beam must carry the whole over-fetched pool per segment or
     // the widened k is a no-op at the graph layer
-    val wide = searchIndex(spark, path, queries, qId, qVec,
+    val wide = serve(spark, path, r, queries, qId, qVec,
       k * overFetch, math.max(efSearch, k * overFetch), maxQueries)
     val ids = allowed
       .select(col(allowedId).cast("long").as("match_id")).distinct()
     rerank(
       wide.join(ids, Seq("match_id"), "left_semi")
         .select(col(qId), col("match_id"), col("score")),
-      qId, metric, k)
+      qId, r.meta.metric, k)
   }
 }

@@ -276,15 +276,30 @@ object PqSearch {
   private[operators] def collectQueries(queries: DataFrame, qId: String,
       qVec: String, maxQueries: Int, numCandidates: Int,
       who: String): Array[(Long, Array[Float])] = {
-    val qRows = queries
-      .select(col(qId).cast("long"), col(qVec).cast("array<float>"))
-      .filter(col(qId).isNotNull && col(qVec).isNotNull)
-      .limit(maxQueries + 1).collect()
-    require(qRows.length <= maxQueries,
-      s"$who: query batch exceeds maxQueries=$maxQueries — split the batch")
+    val qRows = collectBatch(queries, qId, qVec, maxQueries, who)
     require(qRows.length.toLong * numCandidates <= 10000000L,
       s"$who: |queries|*numCandidates = ${qRows.length.toLong * numCandidates} " +
         "exceeds 10M (per-task heap bound) — split the batch or narrow the budget")
+    qRows
+  }
+
+  /** The non-null (id, vector) rows of a query batch, refused past
+    * `maxQueries`: the rows `limit(maxQueries + 1).collect()` returns, in
+    * the same order, from ONE Spark job — each partition keeps its first
+    * maxQueries + 1 rows and the driver keeps the first maxQueries + 1 in
+    * partition order. (CollectLimit's incremental take scans one
+    * partition, then the rest: two jobs on every multi-file micro-batch.)
+    */
+  private[operators] def collectBatch(queries: DataFrame, qId: String,
+      qVec: String, maxQueries: Int, who: String): Array[(Long, Array[Float])] = {
+    val slim = queries
+      .select(col(qId).cast("long"), col(qVec).cast("array<float>"))
+      .filter(col(qId).isNotNull && col(qVec).isNotNull)
+    val n = maxQueries + 1
+    val qRows = slim.mapPartitions(_.take(n))(
+      org.apache.spark.sql.Encoders.row(slim.schema)).collect().take(n)
+    require(qRows.length <= maxQueries,
+      s"$who: query batch exceeds maxQueries=$maxQueries — split the batch")
     qRows.map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
   }
 

@@ -672,7 +672,19 @@ case class SearchHit(content: String)
 private[sql] sealed trait CorpusRef
 /** Collected (content, vector) rows, content-sorted — per-row heap scan. */
 private[sql] final case class InMemCorpus(rows: Array[(String, Array[Float])])
-  extends CorpusRef
+  extends CorpusRef {
+  @transient private var shipped: org.apache.spark.broadcast.Broadcast[
+    Array[(String, Array[Float])]] = _
+  /** The rows broadcast once per registration: a UDF closure reading
+    * `.value` ships a handle, not the corpus, with every task.
+    */
+  def broadcast(sc: org.apache.spark.SparkContext)
+      : org.apache.spark.broadcast.Broadcast[Array[(String, Array[Float])]] =
+    synchronized {
+      if (shipped == null) shipped = sc.broadcast(rows)
+      shipped
+    }
+}
 /** Beyond-cap corpus left distributed — served by the declared family
   * under its numCandidates budget. `tag` is the corpus identity for index
   * artifacts (PQ codebooks) and at-rest stores: unique per registration,

@@ -947,9 +947,10 @@ private[sql] trait GraftSqlDialect { self: GraftSql =>
     * breaks score ties by index asc).
     */
   private[sql] def federatedSearchUdf(corpus: String, mem: InMemCorpus, k: Int): String = {
-    val rows = mem.rows
+    val bc = mem.broadcast(spark.sparkContext)
     val fname = s"federated_search__${corpus}__$k".replaceAll("[^\\w]", "_")
     spark.udf.register(fname, (v: Seq[Float]) => {
+      val rows = bc.value
       val q = if (v == null) Array.empty[Float] else v.toArray
       val heap = new TopKHeap(k, ascending = false)
       var i = 0

@@ -453,7 +453,7 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     // registration BEFORE it was re-registered/dropped may still fail
     // lazily after retirement — that is the documented lifecycle (the
     // old registration's identity is gone).
-    GraftSql.hnswBuildLock.synchronized {
+    val retired = GraftSql.hnswBuildLock.synchronized {
       val existing = candidates.distinct.filter(p =>
         graft.operators.FsUtil.exists(spark, p))
       val (claimed, free) = existing.partition(p =>
@@ -485,6 +485,15 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
       else pendingRetire.remove(name)
       free
     }
+    // what is cached of the registration goes with it (non-blocking, no
+    // job, outside the monitor): its frozen canonical frame and its
+    // stores' resident graphs
+    corpora.get(name).map(_.serve).foreach {
+      case DfCorpus(tag) => frozenCanon.remove(tag).foreach(_.unpersist(blocking = false))
+      case _ => ()
+    }
+    candidates.foreach(graft.operators.HnswSearch.releaseResident)
+    retired
   }
 
   /** The at-rest store paths `name`'s CURRENT registration may own: its
@@ -614,8 +623,42 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     * keeps the registered source.
     */
   private[sql] def canonServe(big: Registration): DataFrame =
-    if (!big.cdc) canonCorpus(big.df, big.contentCol, big.vecCol)
-    else liveStoreCanon(big).select("__cid", "__content", "__cvec")
+    if (big.cdc) liveStoreCanon(big).select("__cid", "__content", "__cvec")
+    else big.serve match {
+      case DfCorpus(tag) if big.family == SearchFamily.Hnsw =>
+        // cached under a plan no other frame has (the registration tag
+        // rides as a literal column), so the session's cache serves these
+        // rows to this registration alone: another registration over the
+        // same source keeps its own plan and size estimate. The dedupe
+        // over the cached rows is a local aggregate (they are
+        // hash-partitioned on __cid already, so it adds no exchange) that
+        // keeps __cid a DISTINCT KEY of the plan: the planner then sizes a
+        // join onto the frame as the sum of its sides, not their product,
+        // and the join of a serve's results back onto its query batch
+        // stays a broadcast
+        frozenCanon.getOrElseUpdate(tag,
+          canonCorpus(big.df, big.contentCol, big.vecCol)
+            .withColumn("__reg", org.apache.spark.sql.functions.lit(tag))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY))
+          .dropDuplicates("__cid").drop("__reg")
+      case _ => canonCorpus(big.df, big.contentCol, big.vecCol)
+    }
+
+  /** The canonical frame of each BUILD-ONCE graph registration (hnsw,
+    * not cdc, left distributed), by registration tag: derived by the
+    * first serve and cached (`MEMORY_ONLY`, lazily — the first serve
+    * materializes it), so later statements resolve hits without
+    * re-deriving the corpus (re-embedding a model-computed vector
+    * column, the dedupe exchange). The store is frozen at its first
+    * build, so its ids resolve consistently against a frozen frame; a
+    * cdc registration keeps reading its live store. The celled families
+    * keep deriving theirs: they size the probe budget from the frame's
+    * plan estimate ([[rankedForFamily]]), which a cached frame would
+    * change. Released with the registration's stores
+    * ([[retireCorpusStores]]).
+    */
+  private[sql] val frozenCanon =
+    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
 
   /** The maintenance sink of a store-backed registration's family (the
     * store itself is built by [[storeFor]]): the celled store, or the
@@ -637,7 +680,8 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
     * path (the synchronized-ModelCache discipline the pq/sq/bq families
     * get for free). Each build writes its marker last (a celled store's
     * stats, the graphs' `_meta`), so the marker's `_SUCCESS` implies the
-    * whole store landed.
+    * whole store landed, so a serve that finds the marker skips the
+    * monitor.
     *
     * A celled store (ivf / ivfpq / ivfsq) is laid out for FILTERED
     * serving: every non-reserved source column rides as PAYLOAD next to
@@ -658,8 +702,11 @@ private[sql] trait GraftSqlRegistry { self: GraftSql =>
       case f => throw new IllegalArgumentException(
         s"family '${f.name}' keeps no at-rest store")
     }
-    GraftSql.hnswBuildLock.synchronized {
-      if (!graft.operators.FsUtil.exists(spark, s"$path/$marker/_SUCCESS"))
+    // a built store serves without the lock: only a missing one takes
+    // it, so a serve never waits behind another registration's build
+    def built = graft.operators.FsUtil.exists(spark, s"$path/$marker/_SUCCESS")
+    if (!built) GraftSql.hnswBuildLock.synchronized {
+      if (!built)
         big.family match {
           case CelledFamily(_, store, _) =>
             // a compressed store discards raw vectors, so a cdc one keeps

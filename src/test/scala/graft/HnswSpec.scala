@@ -562,4 +562,106 @@ LATERAL TABLE(RADIUS_SEARCH('hnsw_normed', 0.3, qv));""")
     }
     g.execute("DROP SEARCH CORPUS hnsw_normed;").collect()
   }
+
+  test("resident segments: every serve over a seeded build/append/delete/" +
+      "compact/re-register history equals a cold restore, an unchanged " +
+      "store serves without reading nodes/ or _meta/, DROP releases every " +
+      "persisted RDD") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    val emb = Tables(spark, sf, "embeddings")
+    val rng = new scala.util.Random(9)
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft_hnsw_resident_idx"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+    val q = queries
+    // every SQL execution's physical plan, through the (asynchronous)
+    // listener bus; a marker query's arrival flushes what ran before it
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          d: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def storeScans(): Seq[String] = {
+      val tag = s"flush_${System.nanoTime()}"
+      spark.range(1).select(lit(tag)).collect()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!plans.asScala.exists(_.toString.contains(tag)) &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+      val seen = plans.asScala.toSeq
+      plans.clear()
+      seen.flatMap(p => Aqe.collect(p) { case s: FileSourceScanExec =>
+        s.relation.location.rootPaths.map(_.toUri.getPath) }.flatten)
+        .filter(r => r.startsWith(s"$path/nodes") || r.startsWith(s"$path/_meta"))
+    }
+    def serve(): Seq[(Long, Int, Long, Double)] = HnswSearch.searchIndex(spark,
+        path, q, "query_id", "qv", k = 5, efSearch = 24)
+      .select("query_id", "rank", "match_id", "score")
+      .as[(Long, Int, Long, Double)].collect().sorted.toSeq
+    def check(step: String): Unit = {
+      val warm = serve()
+      assert(warm.nonEmpty, s"$step: empty serve")
+      assert(spark.sparkContext.getRDDStorageInfo.exists(i =>
+        i.name == s"hnsw segments $path" && i.numCachedPartitions == i.numPartitions),
+        s"$step: the segments are not resident after a serve")
+      storeScans()
+      assert(serve() == warm, s"$step: a second serve diverged")
+      val scans = storeScans()
+      assert(scans.isEmpty, s"$step: an unchanged store was read again: $scans")
+      HnswSearch.clearResident()
+      assert(serve() == warm, s"$step: the resident serve differs from a cold restore")
+    }
+    def subset(mod: Int, r: Int) = emb.filter(col("vec_id") % mod === r)
+    spark.listenerManager.register(listener)
+    try {
+      HnswSearch.writeIndex(subset(3, 0).union(subset(3, 1)), "vec_id",
+        "embedding", path, nShards = 2)
+      check("build")
+      HnswSearch.appendToIndex(subset(3, 2), "vec_id", "embedding", path,
+        epoch = rng.nextInt(5).toLong)
+      check("append epoch")
+      val victims = rng.shuffle((0 until 200).toList).take(12).map(_.toLong)
+      HnswSearch.deleteFromIndex(spark, path, victims.toDF("id"), "id")
+      check("delete")
+      HnswSearch.compactIndex(spark, path)
+      check("compact")
+      HnswSearch.writeIndex(subset(2, rng.nextInt(2)), "vec_id", "embedding",
+        path, nShards = 3)
+      check("re-register")
+    } finally spark.listenerManager.unregister(listener)
+
+    // the SQL facade: a build-once registration keeps its canonical
+    // frame and graphs resident; re-registration and DROP release them
+    val g = new graft.sql.GraftSql(spark, new graft.sources.TopicCatalog(
+      spark, java.nio.file.Files.createTempDirectory("graft_hnsw_res").toString))
+    // RDD ids, not a count: the context holds persisted RDDs weakly, so
+    // an unrelated, unreachable one may leave the map at any time
+    def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted()
+    def register(c: org.apache.spark.sql.DataFrame): Unit =
+      g.registerSearchCorpus("hnsw_resident", c.select(
+          col("vec_id").cast("string").as("content"), col("embedding").as("vector")),
+        "content", "vector", maxRows = 0, numCandidates = 50, indexType = "hnsw")
+    q.createOrReplaceTempView("hnsw_resident_qs")
+    def fed(): Seq[(Long, Seq[String])] = g.execute("""SELECT query_id, search_results
+FROM hnsw_resident_qs, LATERAL TABLE(FEDERATED_SEARCH('hnsw_resident', 3, qv))""")
+      .select(col("query_id"), col("search_results.content"))
+      .as[(Long, Seq[String])].collect().sortBy(_._1).toSeq
+    register(subset(2, 0))
+    val first = fed()
+    assert(first.forall(_._2.forall(_.toLong % 2 == 0)))
+    assert(fed() == first)
+    assert((persisted() -- before).nonEmpty, "nothing stayed resident")
+    register(subset(2, 1))
+    val again = fed()
+    assert(again.forall(_._2.forall(_.toLong % 2 == 1)),
+      "a re-registered corpus served the previous registration's frame")
+    HnswSearch.clearResident()
+    assert(fed() == again)
+    g.execute("DROP SEARCH CORPUS hnsw_resident;").collect()
+    val left = persisted() -- before
+    assert(left.isEmpty, s"DROP SEARCH CORPUS left persisted RDDs $left behind")
+  }
 }
