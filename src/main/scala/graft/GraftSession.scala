@@ -52,6 +52,17 @@ object GraftSession {
         (1L << 33).toString)
       .config("spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
         (1L << 29).toString)
+      // Partition discovery lists a level of more than 32 directories
+      // (the default threshold) as a Spark job with one task per
+      // directory, and that job holds every core. The engine's stores
+      // fan out wider than that at one level (64 lexical `bucket=` dirs,
+      // nList `cell=` dirs), and a maintenance micro-batch reads them
+      // every batch; listing a few hundred directories on the driver
+      // takes milliseconds.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+      // local files and dirs get their permissions without a `chmod`
+      // process each (see NioLocalFileSystem)
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
 
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)): SparkSession = {

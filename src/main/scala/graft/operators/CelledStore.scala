@@ -89,9 +89,12 @@ trait CelledStore extends MaintainedStore[AppendStats] {
   def compact(spark: SparkSession, path: String, excludeEpoch: Long): (Long, Long) =
     compactIndex(spark, path, excludeEpoch)
 
+  /** The trained centroids in cell order: one collect, sorted on the
+    * driver (there are nList rows).
+    */
   def loadCentroids(spark: SparkSession, path: String): Array[Array[Float]] =
-    spark.read.parquet(s"$path/centroids").orderBy("cell").collect()
-      .map(_.getSeq[Float](1).toArray)
+    FsUtil.readStore(spark, s"$path/centroids").select("cell", "centroid")
+      .collect().sortBy(_.getInt(0)).map(_.getSeq[Float](1).toArray)
 
   protected def saveCentroids(spark: SparkSession, path: String,
       centroids: Array[Array[Float]]): Unit = {
@@ -137,7 +140,7 @@ trait CelledStore extends MaintainedStore[AppendStats] {
     // under a filtered probe, and a mixed-type column fails the whole
     // store at compaction. The store's own schema (not caller memory)
     // is the contract ([[IndexMaintenance.requirePayloadCompatible]]).
-    val storeSchema = spark.read.parquet(s"$path/corpus").schema
+    val storeSchema = FsUtil.readStore(spark, s"$path/corpus").schema
     val payloadCols = storeSchema.fieldNames
       .filterNot(Set("id", storedCol, "cell", "epoch")).toSeq
     IndexMaintenance.requirePayloadCompatible(storeSchema, df.schema,
@@ -228,7 +231,7 @@ trait CelledStore extends MaintainedStore[AppendStats] {
   private[operators] def liveCells(spark: SparkSession, path: String,
       cells: Seq[Int], filter: Column): DataFrame =
     Tombstones.filterLive(spark, path,
-      spark.read.parquet(s"$path/corpus")
+      FsUtil.readStore(spark, s"$path/corpus")
         .filter(col("cell").isin(cells.map(Int.box): _*))
         .filter(filter),
       "id", "epoch")

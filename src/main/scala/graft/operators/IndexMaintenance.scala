@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Small-file compaction for persisted index stores — the maintenance
@@ -205,12 +205,25 @@ object IndexMaintenance {
     * contract is ENFORCED here, not merely documented: a namespaced
     * epoch from a namespace other than the store's claimed writer is
     * refused before any bytes land ([[claimWriter]]).
+    *
+    * A write keyed by more than the epoch (`bucket`, `cell`, `shard`)
+    * is hash-spread over `spark.sql.shuffle.partitions` tasks on its
+    * non-epoch partition columns: every partition dir's rows land in
+    * one task, so each dir still gets exactly one file per epoch, and
+    * the explicit partition count keeps AQE from coalescing the write
+    * back into a single task that opens every file in turn. A write
+    * keyed by the epoch alone has one dir to fill and stays as it is.
     */
   def epochWrite(df: DataFrame, partitionCols: Seq[String], epoch: Long,
       dir: String): Unit = {
     validateEpochNamespace(df.sparkSession,
       new Path(dir).getParent.toString, epoch, s"append to $dir")
-    val w = df.write.partitionBy(partitionCols: _*)
+    val spread = partitionCols.filterNot(_ == "epoch")
+    val w = (if (spread.isEmpty) df
+      else df.repartition(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        spread.map(col): _*))
+      .write.partitionBy(partitionCols: _*)
     (if (epoch >= 0)
        w.option("partitionOverwriteMode", "dynamic").mode("overwrite")
      else w.mode("append")).parquet(dir)
@@ -440,7 +453,7 @@ object IndexMaintenance {
     require(FsUtil.exists(spark, dir), s"compact: no store at '$dir'")
     val before = dataFiles(spark, dir)
     val staged = stagingFor(dir)
-    transform(spark.read.parquet(dir))
+    transform(FsUtil.readStore(spark, dir))
       .repartition(math.max(fanout, 1), partitionCols.map(col): _*)
       .write.partitionBy(partitionCols: _*).mode("overwrite").parquet(staged)
     swapIn(spark, dir, staged)
@@ -460,7 +473,7 @@ object IndexMaintenance {
       rewrite: DataFrame => DataFrame): Unit = {
     require(FsUtil.exists(spark, dir), s"compact: no store at '$dir'")
     val staged = stagingFor(dir)
-    val w = rewrite(spark.read.parquet(dir)).write.mode("overwrite")
+    val w = rewrite(FsUtil.readStore(spark, dir)).write.mode("overwrite")
     (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
       .parquet(staged)
     swapIn(spark, dir, staged)
@@ -493,9 +506,23 @@ object IndexMaintenance {
   def unpersistCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
+        org.apache.spark.sql.graftshim.Shim.releaseBlocks(lr.rdd)
       case _ => ()
     }
+
+  /** `df` eagerly localCheckpointed, plus the aggregate `metrics` over
+    * its rows, taken by the checkpoint job itself (`observe`) instead of
+    * a second job over the blocks. The metrics sit at the top of the
+    * plan, in the job's result stage, whose accumulator updates count
+    * once per partition even when a task is retried. Release the
+    * checkpoint with [[unpersistCheckpoint]].
+    */
+  def checkpointObserved(df: DataFrame, metrics: Column*): (DataFrame, Row) = {
+    val name = s"checkpoint_${java.util.UUID.randomUUID()}"
+    val observed = df.observe(name, metrics.head, metrics.tail: _*)
+    val checkpointed = observed.localCheckpoint()
+    (checkpointed, observed.queryExecution.observedMetrics(name))
+  }
 
   /** Recursive `.parquet` data-file count under `dir` — the decay metric
     * compaction manages (and what callers alert on).

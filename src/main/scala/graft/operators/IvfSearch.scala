@@ -286,7 +286,7 @@ object IvfSearch extends CelledStore {
   private[operators] def loadStats(
       spark: org.apache.spark.sql.SparkSession, path: String): Option[(Double, Double)] =
     if (!FsUtil.exists(spark, s"$path/stats")) None
-    else spark.read.parquet(s"$path/stats").collect().headOption
+    else FsUtil.readStore(spark, s"$path/stats").collect().headOption
       .map(r => (r.getDouble(0), r.getDouble(1)))
 
   /** Compare one batch's stats to the stored baseline. The occupancy

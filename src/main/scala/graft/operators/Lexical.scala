@@ -87,7 +87,18 @@ object Lexical {
     * holding its term and aggregate THAT.
     */
   def postings(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    postingsOf(tokenized(docs, idCol, textCol))
+
+  /** One (id, __tk) row per document: its token array, null for a null
+    * text — the input of [[postingsOf]].
+    */
+  private[graft] def tokenized(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
     docs.select(col(idCol).as("id"), toks(col(textCol)).as("__tk"))
+
+  /** The posting list of [[tokenized]] documents (see [[postings]]). */
+  private[graft] def postingsOf(tokenized: DataFrame): DataFrame =
+    tokenized
       .select(col("id"), size(col("__tk")).as("dl"), explode(col("__tk")).as("tok"))
       .groupBy("id", "dl", "tok").agg(count(lit(1)).as("tf"))
 

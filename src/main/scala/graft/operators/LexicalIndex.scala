@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** At-rest lexical index: the persisted, APPEND-ONLY form of the three
@@ -72,23 +72,25 @@ object LexicalIndex extends MaintainedStore[Long] {
     */
   val BaseEpoch = -1L
 
-  private def bucketed(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    Lexical.postings(docs, idCol, textCol)
+  private def bucketed(posts: DataFrame): DataFrame =
+    posts
       // int, not long: partition-directory values infer back as int, and
       // the serve-time IN filter must hit the inferred type exactly for
       // the pruning to happen at file-listing time (a cast around a
       // partition column defeats pruning)
       .withColumn("bucket", pmod(xxhash64(col("tok")), lit(NBuckets)).cast("int"))
 
-  /** (n, ndl) of a batch — no tokenization: `count(textCol)` counts
-    * non-null texts, which is precisely the denominator the batch
-    * `avg(size(toks(text)))` uses (size of a null tokenization is null
-    * and drops out of avg).
+  /** The (n, ndl, sumdl) aggregates over [[Lexical.tokenized]] rows: n
+    * counts every document, ndl those with a non-null text (a null text
+    * tokenizes to null) — precisely the denominator the batch
+    * `avg(size(toks(text)))` uses — and sumdl their tokens. A token-less
+    * document adds the 0 it adds to the batch sum.
     */
-  private def docCounts(docs: DataFrame, textCol: String): (Long, Long) = {
-    val r = docs.agg(count(lit(1)), count(col(textCol))).head()
-    (r.getLong(0), r.getLong(1))
-  }
+  private val docStats: Seq[Column] = Seq(count(lit(1)), count(col("__tk")),
+    sum(when(col("__tk").isNotNull, size(col("__tk")))))
+
+  private def statsOf(r: Row): (Long, Long, Double) =
+    (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) 0.0 else r.getLong(2).toDouble)
 
   private def writeStatsRow(spark: SparkSession, path: String,
       n: Long, ndl: Long, sumdl: Double, epoch: Long, replace: Boolean): Unit = {
@@ -98,32 +100,20 @@ object LexicalIndex extends MaintainedStore[Long] {
       Seq("epoch"), if (replace) epoch else -1L, s"$path/stats")
   }
 
-  /** Total token count of a posting frame: each document's dl rides on
-    * every one of its posting rows, so sum once per distinct id.
-    * Token-less documents have no posting rows and contribute exactly
-    * the 0 they would have added.
-    */
-  private def sumDl(posts: DataFrame): Double = {
-    val r = posts.groupBy("id").agg(first(col("dl")).as("__dl"))
-      .agg(sum(col("__dl")).cast("double")).head()
-    if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-  }
-
   /** Build (or rebuild) the index from a corpus — the offline "index
     * once" half; [[appendToIndex]] is the online "append forever" half.
-    * The corpus is tokenized ONCE: the stats pass re-reads the parquet
-    * just written (the [[IvfSearch.writeIndex]] rule) plus one
-    * tokenize-free count over the source. Stats are written LAST, so
-    * their `_SUCCESS` implies the whole index landed.
+    * The stats come from one aggregate over the tokenized corpus. Stats
+    * are written LAST, so their `_SUCCESS` implies the whole index
+    * landed.
     */
   def writeIndex(docs: DataFrame, idCol: String, textCol: String,
       path: String): Unit = {
     val spark = docs.sparkSession
-    bucketed(docs, idCol, textCol).withColumn("epoch", lit(BaseEpoch))
+    val tokens = Lexical.tokenized(docs, idCol, textCol)
+    bucketed(Lexical.postingsOf(tokens)).withColumn("epoch", lit(BaseEpoch))
       .write.partitionBy("bucket", "epoch").mode("overwrite")
       .parquet(s"$path/postings")
-    val (n, ndl) = docCounts(docs, textCol)
-    val sumdl = sumDl(spark.read.parquet(s"$path/postings"))
+    val (n, ndl, sumdl) = statsOf(tokens.agg(docStats.head, docStats.tail: _*).head())
     // fresh build: drop any previous stats dir wholesale
     val statsPath = new org.apache.hadoop.fs.Path(s"$path/stats")
     statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -148,29 +138,28 @@ object LexicalIndex extends MaintainedStore[Long] {
   def appendToIndex(batch: DataFrame, idCol: String, textCol: String,
       path: String, epoch: Long = BaseEpoch): Long = {
     val spark = batch.sparkSession
-    // tokenize ONCE (outside the lock — pure compute): the materialized
-    // posting batch feeds the partition write and the dl sum, and
-    // nothing else re-scans the text
-    val posts = bucketed(batch, idCol, textCol)
-      .withColumn("epoch", lit(epoch)).localCheckpoint()
-    val (n, ndl) = docCounts(batch, textCol)
-    val sumdl = sumDl(posts)
+    // tokenize ONCE (outside the lock — pure compute): the checkpoint
+    // job also takes the stats partial, and the posting write reads the
+    // materialized tokens, so nothing re-scans the text
+    val (tokens, stats) = IndexMaintenance.checkpointObserved(
+      Lexical.tokenized(batch, idCol, textCol), docStats: _*)
+    val (n, ndl, sumdl) = statsOf(stats)
     // writes run under the store lease, and swap recovery runs FIRST:
     // a replayed append after a compactor crashed mid-swap must restore
     // the retired/staged store before writing — a bare write would
     // CREATE a fresh dir holding only this epoch, and the next
     // compaction's recovery would then discard the real store as debris
-    IndexMaintenance.withStoreLock(spark, path) {
+    try IndexMaintenance.withStoreLock(spark, path) {
       IndexMaintenance.recoverSwap(spark, s"$path/postings")
       IndexMaintenance.recoverSwap(spark, s"$path/stats")
       require(FsUtil.exists(spark, s"$path/stats"),
         s"lexical index at '$path' does not exist or is unreachable — " +
           "writeIndex first (appending to a missing store would serve empty postings)")
-      IndexMaintenance.epochWrite(posts, Seq("bucket", "epoch"), epoch,
-        s"$path/postings")
+      IndexMaintenance.epochWrite(
+        bucketed(Lexical.postingsOf(tokens)).withColumn("epoch", lit(epoch)),
+        Seq("bucket", "epoch"), epoch, s"$path/postings")
       writeStatsRow(spark, path, n, ndl, sumdl, epoch, replace = epoch >= 0)
-    }
-    IndexMaintenance.unpersistCheckpoint(posts)
+    } finally IndexMaintenance.unpersistCheckpoint(tokens)
     n
   }
 
@@ -182,7 +171,7 @@ object LexicalIndex extends MaintainedStore[Long] {
     */
   def postings(spark: SparkSession, path: String): DataFrame =
     Tombstones.filterLive(spark, path,
-      spark.read.parquet(s"$path/postings"), "id", "epoch")
+      FsUtil.readStore(spark, s"$path/postings"), "id", "epoch")
       .select("id", "dl", "tok", "tf")
 
   /** Delete documents from a persisted lexical index without rewriting
@@ -200,7 +189,10 @@ object LexicalIndex extends MaintainedStore[Long] {
     * Documents whose text tokenized to nothing have no posting rows and
     * keep their +1 in `n` (they are unretrievable either way — the
     * residue affects only the idf constant and clears at the next full
-    * [[writeIndex]]). Returns the tombstone epoch used.
+    * [[writeIndex]]). `ids` is read twice, by the correction's posting
+    * scan and by the tombstone write, so pass a frame that is cheap and
+    * deterministic to re-read (the maintenance front passes its
+    * checkpointed batch). Returns the tombstone epoch used.
     */
   def deleteFromIndex(spark: SparkSession, path: String,
       ids: DataFrame, idCol: String, epoch: Option[Long] = None): Long = {
@@ -210,10 +202,9 @@ object LexicalIndex extends MaintainedStore[Long] {
       IndexMaintenance.recoverSwap(spark, s"$path/postings")
       IndexMaintenance.recoverSwap(spark, s"$path/stats")
       val e = epoch.getOrElse(Tombstones.maxEpochIn(spark, s"$path/postings"))
-      val victims = ids.select(col(idCol).cast("long").as("__del")).distinct()
-        .localCheckpoint()
+      val victims = ids.select(col(idCol).cast("long").as("__del"))
       val alive = Tombstones.filterLive(spark, path,
-          spark.read.parquet(s"$path/postings"), "id", "epoch")
+          FsUtil.readStore(spark, s"$path/postings"), "id", "epoch")
         // only rows the tombstone at epoch e actually kills: rows with a
         // LATER epoch out-live it (LWW), so subtracting their stats here
         // would undercount n/avgdl — and a replayed delete that lands
@@ -238,7 +229,6 @@ object LexicalIndex extends MaintainedStore[Long] {
         writeStatsRow(spark, path, -nDel, -nDel, -r.getDouble(1), e,
           replace = false)
       }
-      IndexMaintenance.unpersistCheckpoint(victims)
       e
     }
   }
@@ -304,7 +294,7 @@ object LexicalIndex extends MaintainedStore[Long] {
       .select(pmod(xxhash64(col("t")), lit(NBuckets)).cast("int")).distinct()
       .collect().map(r => r.getInt(0): Any).toSeq
     Tombstones.filterLive(spark, path,
-        spark.read.parquet(s"$path/postings")
+        FsUtil.readStore(spark, s"$path/postings")
           .filter(col("bucket").isin(buckets: _*)),
         "id", "epoch")
       .select("id", "dl", "tok", "tf")
@@ -316,7 +306,7 @@ object LexicalIndex extends MaintainedStore[Long] {
     * denominator.
     */
   def corpusStats(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/stats")
+    FsUtil.readStore(spark, s"$path/stats")
       .agg(sum(col("n")).cast("double").as("n"),
         (sum(col("sumdl")) / sum(col("ndl"))).as("avgdl"))
 

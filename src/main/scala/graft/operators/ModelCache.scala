@@ -1,6 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Bounded LRU cache for trained serve-time models (PQ codebooks, SQ/BQ
   * quantizer bounds, classifier weights). Overflow evicts the LEAST
@@ -47,5 +52,37 @@ private[graft] object FsUtil {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .create(p, true).close()
+  }
+
+  /** Read a parquet store dir the engine wrote, with no schema-inference
+    * job: `spark.read.parquet(dir)` infers the schema in a Spark job
+    * that opens a data file's footer, while this opens the footer of the
+    * first data file found on the driver and reads the Spark schema the
+    * writer stored there. Partition columns are still discovered from
+    * the directory names, as before. A dir with no such footer falls
+    * back to inference (and its usual error on a dir with no data).
+    */
+  def readStore(spark: SparkSession, dir: String): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    // depth first to one data file; `_` and `.` entries are not data
+    def firstFile(d: Path): Option[Path] = {
+      val (dirs, files) = fs.listStatus(d)
+        .filterNot(st => st.getPath.getName.startsWith("_") ||
+          st.getPath.getName.startsWith("."))
+        .partition(_.isDirectory)
+      files.map(_.getPath).find(_.getName.endsWith(".parquet"))
+        .orElse(dirs.iterator.map(st => firstFile(st.getPath))
+          .collectFirst { case Some(f) => f })
+    }
+    val schema = (if (fs.isDirectory(root)) firstFile(root) else None).flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get(ParquetReadSupport.SPARK_METADATA_KEY))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+      finally reader.close()
+    }
+    schema.fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir))
   }
 }

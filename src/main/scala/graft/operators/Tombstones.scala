@@ -43,7 +43,11 @@ object Tombstones {
   /** Record `ids` as deleted at `epoch`. Caller holds the store lock
     * (the write is an append of a fresh epoch partition — idempotent
     * re-delete of the same ids at the same epoch is harmless but the
-    * lock serializes it against compaction's swap).
+    * lock serializes it against compaction's swap). One job: the ids
+    * land as given (a repeated id only repeats a row [[maxPerId]]
+    * groups away), and an empty delete stays a no-op — its zero-row
+    * write adds no `epoch=` partition, and a tombstones dir left
+    * without one is removed.
     */
   def write(spark: SparkSession, root: String, ids: DataFrame,
       idCol: String, epoch: Long): Unit = {
@@ -51,17 +55,21 @@ object Tombstones {
     // tombstone on a claimed store cannot kill/spare coherently
     IndexMaintenance.validateEpochNamespace(spark, root, epoch,
       s"delete from $root")
-    val slim = ids.select(col(idCol).cast("long").as("id")).distinct()
-      .localCheckpoint()
-    try {
-      // an empty delete must be a NO-OP, not a schema trap: a zero-row
-      // partitioned write leaves a tombstones dir with no data files, and
-      // every later maxPerId read would die on schema inference (the
-      // emptiness probe is over the just-checkpointed blocks — bounded)
-      if (!slim.isEmpty)
-        slim.withColumn("epoch", lit(epoch))
-          .write.partitionBy("epoch").mode("append").parquet(dir(root))
-    } finally IndexMaintenance.unpersistCheckpoint(slim)
+    ids.select(col(idCol).cast("long").as("id"), lit(epoch).as("epoch"))
+      .write.partitionBy("epoch").mode("append").parquet(dir(root))
+    dropIfNoEpochs(spark, root)
+  }
+
+  /** Remove a tombstones dir that holds no `epoch=` partition: with no
+    * tombstones dir a serve stays join-free, and a dir without data
+    * files could not be read.
+    */
+  private def dropIfNoEpochs(spark: SparkSession, root: String): Unit = {
+    val p = new Path(dir(root))
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p) && fs.listStatus(p).forall(s =>
+      !(s.isDirectory && s.getPath.getName.startsWith("epoch="))))
+      fs.delete(p, true)
   }
 
   // (root, metadata fingerprint) -> count; LRU-bounded. Serve-time
@@ -139,7 +147,7 @@ object Tombstones {
     val hit = deadCountCache.get(key)
     if (hit != null) return hit.intValue()
     val tomb = maxPerId(spark, root)
-    val rows = spark.read.parquet(storeDir)
+    val rows = FsUtil.readStore(spark, storeDir)
       .select(col(idCol).cast("long").as("__sid"),
         col(epochCol).cast("long").as("__sep"))
     val n = math.min(
@@ -154,7 +162,7 @@ object Tombstones {
     * joins against: `(id, __tomb_epoch)`.
     */
   def maxPerId(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(dir(root))
+    FsUtil.readStore(spark, dir(root))
       .groupBy(col("id"))
       .agg(max(col("epoch").cast("long")).as("__tomb_epoch"))
 
@@ -223,10 +231,7 @@ object Tombstones {
         n.stripPrefix("epoch=").toLong < excludeEpoch)
         fs.delete(st.getPath, true)
     }
-    // nothing retained -> no tombstones dir (serve-time stays join-free)
-    if (fs.listStatus(p).forall(s =>
-      !(s.isDirectory && s.getPath.getName.startsWith("epoch="))))
-      fs.delete(p, true)
+    dropIfNoEpochs(spark, root)
   }
 
   /** Newest segment epoch present under a partitioned store dir (any

@@ -283,11 +283,13 @@ object Streams {
     * would be a wrong-answer machine. (A per-id tombstone + upsert pair
     * counts as two changes; provide seqCol to express "replace".)
     * localCheckpoint: the resolved set feeds both the tombstone write
-    * and the append.
+    * and the append. The checkpoint job also counts the resolved
+    * records and those with a non-null `valueCol`, so the front needs
+    * no emptiness job of its own.
     */
-  private def resolveCdc(batch: DataFrame, idCol: String,
-      seqCol: Option[String]): DataFrame =
-    (seqCol match {
+  private def resolveCdc(batch: DataFrame, idCol: String, valueCol: String,
+      seqCol: Option[String]): (DataFrame, Long, Long) = {
+    val resolved = seqCol match {
       case Some(sc) =>
         // per-id LATEST record, ALL columns — not just the value: a
         // filtered-search store carries payload columns next to its
@@ -305,7 +307,11 @@ object Streams {
             s"(e.g. ${dup.select(idCol).take(3).mkString(", ")}) — pass " +
             "seqCol so the latest change per id is well-defined")
         batch
-    }).localCheckpoint()
+    }
+    val (checkpointed, counts) = graft.operators.IndexMaintenance
+      .checkpointObserved(resolved, count(lit(1)), count(col(valueCol)))
+    (checkpointed, counts.getLong(0), counts.getLong(1))
+  }
 
   /** CDC upsert/delete propagation into a persisted `store` — the
     * missing half of [[indexStream]]'s append-only posture: a keyed
@@ -349,20 +355,22 @@ object Streams {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
         val spark = batch.sparkSession
-        val resolved = resolveCdc(batch, idCol, seqCol)
+        val (resolved, records, liveRecords) =
+          resolveCdc(batch, idCol, valueCol, seqCol)
         try {
-          // resolveCdc leaves ONE record per id, so the null split is total
-          val victims =
-            if (store.upsertTombstones) resolved.select(idCol).distinct()
-            else resolved.filter(col(valueCol).isNull).select(idCol)
+          // resolveCdc leaves ONE record per id, so the ids are distinct
+          // and the null split is total
+          val (victims, anyVictims) =
+            if (store.upsertTombstones) (resolved.select(idCol), records > 0)
+            else (resolved.filter(col(valueCol).isNull).select(idCol),
+              records > liveRecords)
           val live = resolved.filter(col(valueCol).isNotNull)
-          val anyVictims = !victims.isEmpty
           if (anyVictims)
             store.delete(spark, indexPath, victims, idCol,
               epochKey(checkpointDir, 2 * epoch))
           // with upsert tombstones every live id is a victim too: no
           // victims means nothing to append
-          if ((anyVictims || !store.upsertTombstones) && !live.isEmpty)
+          if ((anyVictims || !store.upsertTombstones) && liveRecords > 0)
             onAppend(store.append(live, idCol, valueCol, indexPath,
               epochKey(checkpointDir, 2 * epoch + 1)))
           if (compactsAfter(epoch, compactEvery))

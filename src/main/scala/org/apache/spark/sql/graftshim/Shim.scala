@@ -32,4 +32,12 @@ object Shim {
     classic.Dataset.ofRows(session, LogicalRDD(DataTypeUtils.toAttributes(schema),
       rdd)(session, Some(Statistics(sizeInBytes.max(1)))))
   }
+
+  /** Drop `rdd`'s stored blocks now. This is what `RDD.unpersist` does,
+    * without the warning it logs for every locally checkpointed RDD
+    * (that its lineage is gone and it cannot be recomputed): callers
+    * release a checkpoint only once nothing reads it again.
+    */
+  def releaseBlocks(rdd: RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

@@ -243,6 +243,169 @@ class MaintainedStoreSpec extends SparkSpec {
     finally pool.shutdown()
   }
 
+  /** A base corpus wide enough to touch every lexical bucket and every
+    * one of 16 cells, and 40 changes on it (upserts, deletes, inserts).
+    */
+  private def wideBase(rnd: scala.util.Random): Model = {
+    val words = (0 until 400).map(i => s"w$i")
+    (0L until 200L).map { id =>
+      id -> (Array.fill(Dim)(rnd.nextGaussian().toFloat),
+        Seq.fill(12)(words(rnd.nextInt(words.size))).mkString(" "))
+    }.toMap
+  }
+
+  private def wideChanges(base: Model, from: Long, seq0: Long,
+      rnd: scala.util.Random): Seq[Change] = (0 until 40).map { i =>
+    val v = (Array.fill(Dim)(rnd.nextGaussian().toFloat),
+      Seq.fill(12)(s"w${rnd.nextInt(400)}").mkString(" "))
+    if (i % 5 == 0) Change(from + i, seq0 + i, Some(v))
+    else Change(base.keys.toSeq.sorted.apply(rnd.nextInt(base.size)), seq0 + i,
+      if (i % 5 == 1) None else Some(v))
+  }
+
+  test("a steady-state cdcStream micro-batch stays within its job budget, " +
+      "and no job of it runs more tasks than the shuffle partitions") {
+    val rnd = new scala.util.Random(31)
+    val base = wideBase(rnd)
+    val baseRows = records(base.toSeq.map { case (id, v) => Change(id, 0L, Some(v)) })
+      .drop("seq")
+    val ivf = tmp("graft_budget_ivf")
+    val lex = tmp("graft_budget_lex")
+    IvfSearch.writeIndex(baseRows, "id", "vec", ivf, nList = 16, dim = Dim)
+    LexicalIndex.writeIndex(baseRows, "id", "text", lex)
+    val src = tmp("graft_budget_src")
+    // per job: (stream, batch) and tasks run
+    val jobOf = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val tasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p =>
+          Option(p.getProperty("streaming.sql.batchId")).map(b =>
+            (p.getProperty("sql.streaming.queryId"), b.toLong)))
+          .foreach { qb =>
+            jobOf.put(js.jobId, qb)
+            js.stageIds.foreach(stageJob.put(_, js.jobId))
+          }
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(stageJob.get(te.stageId)).foreach(j => tasks.merge(j, 1, _ + _))
+    }
+    val streams = Seq(
+      ("ivf", IvfSearch, "vec", Seq(col("id"), col("seq"), col("vec")), ivf, 11),
+      ("lex", LexicalIndex, "text", Seq(col("id"), col("seq"), col("text")), lex, 16))
+    val queryIds = scala.collection.mutable.Map.empty[String, String]
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // the third batch is the steady state: the second compacted the
+      // stores, sparing its own epoch, so tombstones and an append epoch
+      // are in the stores (as between the compactions of a maintained
+      // registration), and the code paths are warm
+      (0 until 3).foreach { b =>
+        records(wideChanges(base, 1000L + 100 * b, 100L * b, rnd))
+          .write.mode("append").parquet(src)
+        streams.foreach { case (name, store, valueCol, cols, path, _) =>
+          val q = Streams.cdcStream(store,
+            Streams.fileStream(spark, src, recordSchema).select(cols: _*),
+            "id", valueCol, path, s"$path-ck", seqCol = Some("seq"),
+            compactEvery = 2)
+          q.awaitTermination()
+          queryIds(name) = q.id.toString
+        }
+      }
+      drainListenerBus()
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    import scala.jdk.CollectionConverters._
+    streams.foreach { case (name, _, _, _, _, budget) =>
+      val jobs = jobOf.asScala.filter(_._2 == (queryIds(name), 2L)).keys.toSeq
+      assert(jobs.nonEmpty, s"$name: no job of batch 2 seen")
+      assert(jobs.size <= budget,
+        s"$name: a steady-state micro-batch ran ${jobs.size} jobs (budget $budget)")
+      jobs.foreach { j =>
+        val n = tasks.getOrDefault(j, 0)
+        assert(n <= shufflePartitions,
+          s"$name: job $j ran $n tasks (> $shufflePartitions shuffle partitions) — " +
+            "a parallel listing job is back")
+      }
+    }
+  }
+
+  test("epochWrite spreads a bucket/cell append over tasks: one data file " +
+      "per touched partition dir per epoch, a replay replaces them, rows " +
+      "and serves unchanged") {
+    val rnd = new scala.util.Random(37)
+    val base = wideBase(rnd)
+    val rows = (m: Model) =>
+      records(m.toSeq.map { case (id, v) => Change(id, 0L, Some(v)) }).drop("seq")
+    val batch = rows((1000L until 1200L).map(_ -> value(rnd)).toMap
+      .map { case (id, (v, _)) =>
+        id -> (v, Seq.fill(12)(s"w${rnd.nextInt(400)}").mkString(" ")) })
+    val ivf = tmp("graft_spread_ivf")
+    val lex = tmp("graft_spread_lex")
+    IvfSearch.writeIndex(rows(base), "id", "vec", ivf, nList = 16, dim = Dim)
+    LexicalIndex.writeIndex(rows(base), "id", "text", lex)
+    val epoch = 7L
+    /** The epoch's data files, by partition dir. */
+    def epochFiles(dir: String): Map[String, Seq[String]] = {
+      val it = org.apache.hadoop.fs.FileSystem.getLocal(
+        spark.sparkContext.hadoopConfiguration).listFiles(
+        new org.apache.hadoop.fs.Path(dir), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+        .filter(p => p.getName.endsWith(".parquet") &&
+          p.getParent.getName == s"epoch=$epoch")
+        .toSeq.groupBy(_.getParent.getParent.getName)
+        .map { case (d, ps) => d -> ps.map(_.getName) }
+    }
+    def lexServe(): Set[(Long, Long, Double)] = {
+      import spark.implicits._
+      Lexical.bm25TopK(Seq((0L, "w1"), (0L, "w2"), (1L, "w3")).toDF("q", "term"),
+          "q", "term", null, "id", "text", k = 50,
+          post = LexicalIndex.postings(spark, lex),
+          stats = LexicalIndex.corpusStats(spark, lex))
+        .select(col("query_id").cast("long"), col("match_id").cast("long"), col("score"))
+        .as[(Long, Long, Double)].collect().toSet
+    }
+    def ivfServe(): Set[(Long, Long, Double)] = {
+      import spark.implicits._
+      IvfSearch.searchIndex(spark, ivf, qFrame, "qid", "qv", k = 5,
+          metric = "dot", nProbe = 16)
+        .select(col("qid").cast("long"), col("match_id").cast("long"),
+          col("score").cast("double"))
+        .as[(Long, Long, Double)].collect().toSet
+    }
+    val stores = Seq[(String, String, String, () => Any)](
+      ("lex", s"$lex/postings", "bucket",
+        () => LexicalIndex.appendToIndex(batch, "id", "text", lex, epoch)),
+      ("ivf", s"$ivf/corpus", "cell",
+        () => IvfSearch.appendToIndex(batch, "id", "vec", ivf, epoch)))
+    stores.foreach { case (name, dir, partCol, append) =>
+      def count() = spark.read.parquet(dir).count()
+      append()
+      val first = epochFiles(dir)
+      val touched = spark.read.parquet(dir).filter(col("epoch") === epoch)
+        .select(partCol).distinct().count()
+      assert(first.size == touched && touched >= 12,
+        s"$name: ${first.size} partition dirs hold the epoch's files, " +
+          s"$touched $partCol values hold its rows")
+      assert(first.values.forall(_.size == 1),
+        s"$name: a partition dir holds more than one file for the epoch: $first")
+      // Spark names a file after its write task: more than one task wrote
+      assert(first.values.flatten.map(_.split("-")(1)).toSet.size > 1,
+        s"$name: one task wrote every partition dir")
+      val (rowsBefore, serveBefore) =
+        (count(), if (name == "lex") lexServe() else ivfServe())
+      append() // an at-least-once replay of the same epoch
+      val replayed = epochFiles(dir)
+      assert(replayed.keySet == first.keySet && replayed.values.forall(_.size == 1),
+        s"$name: the replay left $replayed")
+      assert(replayed.values.flatten.toSet.intersect(first.values.flatten.toSet).isEmpty,
+        s"$name: the replay did not replace the epoch's files")
+      assert(count() == rowsBefore, s"$name: the replay changed the row count")
+      assert((if (name == "lex") lexServe() else ivfServe()) == serveBefore,
+        s"$name: the replay changed the serve")
+    }
+  }
+
   test("celled stores refuse wrong-width appends and queries, naming both widths") {
     val rnd = new scala.util.Random(5)
     def vecs(n: Int, dim: Int, from: Long) = spark.createDataFrame(

@@ -350,19 +350,6 @@ class RobustnessSpec extends SparkSpec {
     assert(hit.toSeq == Seq(21L))
   }
 
-  /** Flush pending SparkListener events so job-count assertions are
-    * deterministic (reflective: LiveListenerBus.waitUntilEmpty is
-    * private[spark]); falls back to a grace sleep.
-    */
-  private def drainListenerBus(): Unit = try {
-    val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-      .invoke(spark.sparkContext)
-    bus.getClass.getMethods
-      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-      .get.invoke(bus)
-    ()
-  } catch { case scala.util.control.NonFatal(_) => Thread.sleep(1500) }
-
   test("candidate budget maths hold at representative scales") {
     // 1M vectors, 16 cells, 10k budget: expected pool per probe is 62.5k,
     // so only the query's own cell is probed

@@ -20,4 +20,17 @@ trait SparkSpec extends AnyFunSuite {
   // works in subclasses.
   lazy val spark: SparkSession = SparkSpec.spark
   def sf: String = SparkSpec.Sf
+
+  /** Flush pending SparkListener events so job-count assertions are
+    * deterministic (reflective: LiveListenerBus.waitUntilEmpty is
+    * private[spark]); falls back to a grace sleep.
+    */
+  def drainListenerBus(): Unit = try {
+    val bus = spark.sparkContext.getClass.getMethod("listenerBus")
+      .invoke(spark.sparkContext)
+    bus.getClass.getMethods
+      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
+      .get.invoke(bus)
+    ()
+  } catch { case scala.util.control.NonFatal(_) => Thread.sleep(1500) }
 }

@@ -5,10 +5,11 @@
 
 Reads an uncompressed event log and prints, per streaming query (named by
 its first source): batches, jobs per batch and the median job span per batch
-(first job submitted to last job finished). For the median batch of the
-busiest stream (most job time) it lists each job: offset from the batch
-start, duration, tasks run, the root of the SQL plan it ran under and, in
-parentheses, the operator its last stage ends in.
+(first job submitted to last job finished). Then, for the median batch of
+every stream (streams that share a source each wait on their own batch), it
+lists each job: offset from the batch start, duration, tasks run, the root
+of the SQL plan it ran under and, in parentheses, the operator its last
+stage ends in.
 """
 import json
 import os
@@ -52,26 +53,30 @@ def main(path):
     for jid, j in sorted((jid, j) for jid, j in jobs.items() if j["end"] is not None):
         batches[j["q"]][j["b"]].append((jid, j))
     span = lambda js: max(j["end"] for _, j in js) - min(j["start"] for _, j in js)  # noqa: E731
-    busy = {}
     for q, bs in batches.items():
         counts = [len(js) for js in bs.values()]
         print(f"stream {q[:8]} ({source.get(q, '?')}): {len(bs)} batches, jobs/batch median "
               f"{statistics.median(counts)} (min {min(counts)}, max {max(counts)}), "
               f"median job span {statistics.median(span(js) for js in bs.values()):.0f} ms")
-        busy[q] = sum(j["end"] - j["start"] for js in bs.values() for _, j in js)
-    if not busy:
+    if not batches:
         sys.exit("no streaming jobs in the log")
-    q = max(busy, key=busy.get)
-    b, js = sorted(batches[q].items(), key=lambda kv: span(kv[1]))[len(batches[q]) // 2]
-    t0 = min(j["start"] for _, j in js)
-    print(f"\nmedian batch {b} of stream {q[:8]} ({source.get(q, '?')}), span {span(js)} ms:")
-    print(f"{'job':>5} {'offset':>7} {'ms':>6} {'tasks':>5}  plan root (last operator)")
-    for jid, j in js:
-        print(f"{jid:>5} {j['start'] - t0:>7} {j['end'] - j['start']:>6} {tasks[jid]:>5}  "
-              f"{roots.get(j['x'], '-')} ({j['op']})")
+    for q, bs in batches.items():
+        b, js = sorted(bs.items(), key=lambda kv: span(kv[1]))[len(bs) // 2]
+        t0 = min(j["start"] for _, j in js)
+        print(f"\nmedian batch {b} of stream {q[:8]} ({source.get(q, '?')}), span {span(js)} ms:")
+        print(f"{'job':>5} {'offset':>7} {'ms':>6} {'tasks':>5}  plan root (last operator)")
+        for jid, j in js:
+            print(f"{jid:>5} {j['start'] - t0:>7} {j['end'] - j['start']:>6} {tasks[jid]:>5}  "
+                  f"{roots.get(j['x'], '-')} ({j['op']})")
 
 
 if __name__ == "__main__":
     if len(sys.argv) != 2:
         sys.exit(__doc__)
-    main(sys.argv[1])
+    try:
+        main(sys.argv[1])
+        sys.stdout.flush()
+    except BrokenPipeError:
+        # the reader closed the pipe (`| head`): stop quietly, and keep the
+        # interpreter's final flush from raising on the closed stdout
+        os.dup2(os.open(os.devnull, os.O_WRONLY), sys.stdout.fileno())
