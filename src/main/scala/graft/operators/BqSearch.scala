@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Binary-quantization ANN (the 1-bit-per-dimension rung below SQ8 —
@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * (`v_d > thr_d`), so a float32 vector compresses 32× and candidate
   * scanning is XOR + popcount on machine words — the cheapest scan of
   * the whole family ladder (LSH probe cost / IVF partition pruning /
-  * PQ ADC / SQ8 byte dot / BQ bit hamming), completing it at the
+  * PQ ADC / SQ8 byte dot / BQ bit Hamming), completing it at the
   * memory-extreme end.
   *
   * Thresholds are per-dimension MIDRANGE `(min+max)/2` from one
@@ -22,12 +22,10 @@ import org.apache.spark.sql.functions._
   *    floats (broadcast-sized), persisted like the PQ codebooks.
   *  - encode: one narrow map; codes are ONE long per 64 dims at rest.
   *  - search: the query batch (bounded by `maxQueries`) broadcasts
-  *    with its codes; the scan is `bit_count(code XOR qcode)` — a pure
-  *    codegen expression for dim ≤ 64 (single-long fast path) — into
-  *    the bounded per-query heap ([[graft.functions.TopKByScore]]);
-  *    survivors re-rank exactly via the shared
-  *    [[PqSearch.cutAndRerank]] tail. The corpus side stays fully
-  *    distributed and ships only (id, code).
+  *    with its codes into the one quantized scan ([[CodeScan.topK]]);
+  *    the kernel is XOR + popcount per word ([[Hamming]]) into one
+  *    bounded heap per query, and the survivors re-rank exactly. The
+  *    corpus side stays fully distributed and ships only (id, codes).
   */
 object BqSearch {
 
@@ -46,23 +44,13 @@ object BqSearch {
   private val modelCache = new ModelCache[BqModel]()
 
   /** Train-once/serve-many thresholds for the corpus identified by
-    * `tag` — the [[PqSearch.cachedCodebooks]] contract: at most one
-    * training pass per JVM per (tag, dim), persisted content-addressed
-    * under the JVM tmpdir so a fresh JVM over the same corpus reloads
-    * instead of retraining. Overflow evicts LRU entries only
-    * ([[ModelCache]]), never unrelated tags' hot models.
+    * `tag` ([[ModelCache.trainOnce]]): at most one training pass per JVM
+    * per (tag, dim).
     */
   def cachedModel(corpus: DataFrame, cVec: String,
       tag: String, dim: Int = 64, persist: Boolean = true): BqModel =
-    modelCache.getOrElseUpdate(s"${tag}_d$dim") {
-      val key = s"${tag}_d$dim"
-      if (persist) {
-        val path = s"${System.getProperty("java.io.tmpdir")}/graft_bq_model_$key"
-        if (!FsUtil.exists(corpus.sparkSession, s"$path/_SUCCESS"))
-          saveModel(corpus.sparkSession, path, trainModel(corpus, cVec, dim))
-        loadModel(corpus.sparkSession, path)
-      } else trainModel(corpus, cVec, dim)
-    }
+    modelCache.trainOnce(corpus.sparkSession, s"bq_model_${tag}_d$dim",
+      persist, saveModel, loadModel)(trainModel(corpus, cVec, dim))
 
   /** Per-dimension midrange threshold in ONE partial-agg pass. */
   def trainModel(corpus: DataFrame, cVec: String, dim: Int): BqModel = {
@@ -117,28 +105,18 @@ object BqSearch {
     out
   }
 
-  /** The coded corpus: (match_id, code) — one BIGINT for dim ≤ 64 (the
-    * codegen fast path), ARRAY<BIGINT> beyond.
+  /** The coded corpus: (match_id, codes ARRAY<BIGINT>), one long per
+    * 64 dims.
     */
   def encode(corpus: DataFrame, cId: String, cVec: String,
       m: BqModel): DataFrame = {
     val local = m
-    if (m.words == 1) {
-      val enc = udf((v: Seq[Float]) => encodeVec(local, v.toArray)(0))
-      corpus.select(col(cId).cast("long").as("match_id"), enc(col(cVec)).as("code"))
-    } else {
-      val enc = udf((v: Seq[Float]) => encodeVec(local, v.toArray))
-      corpus.select(col(cId).cast("long").as("match_id"), enc(col(cVec)).as("code"))
-    }
+    val enc = udf((v: Seq[Float]) => encodeVec(local, v.toArray))
+    corpus.select(col(cId).cast("long").as("match_id"), enc(col(cVec)).as("codes"))
   }
 
-  private def hamming(words: Int)(code: Column, qcode: Column): Column =
-    if (words == 1) bit_count(code.bitwiseXOR(qcode)).cast("double")
-    else aggregate(zip_with(code, qcode, (a, b) => bit_count(a.bitwiseXOR(b))),
-      lit(0), (acc, x) => acc + x).cast("double")
-
   /** BQ top-k with exact re-rank: candidates are the `numCandidates`
-    * lowest-hamming codes per query (ties by lower id), re-ranked
+    * lowest-Hamming codes per query (ties by lower id), re-ranked
     * exactly on the true `metric` over full vectors — the
     * [[SqSearch.sqTopK]] contract at 1 bit per dimension. Output
     * (qId, match_id, score, rank), rank 1 best.
@@ -148,27 +126,33 @@ object BqSearch {
       corpus: DataFrame, cId: String, cVec: String,
       k: Int, model: BqModel, metric: String = "dot",
       numCandidates: Int = 100, maxQueries: Int = 10000): DataFrame = {
-    VectorSearch.requireNumCandidates(numCandidates)
-    require(k <= numCandidates, s"k=$k exceeds numCandidates=$numCandidates")
     val spark = queries.sparkSession
     import spark.implicits._
+    CodeScan.flatTopK(new Hamming(model), encode(corpus, cId, cVec, model),
+      queries, qId, qVec, corpus, cId, cVec, k, metric, numCandidates,
+      maxQueries, "bqTopK")
+  }
 
-    val coded = encode(corpus, cId, cVec, model)
+  /** The XOR-popcount scan kernel: a code row's approximate score is
+    * its Hamming distance to the query's sign code, lower is better
+    * under every metric.
+    */
+  private[operators] class Hamming(m: BqModel) extends CodeKernel[Array[Long]] {
+    def width: Int = m.dim
+    override def ascending(metric: String): Boolean = true
+    def prepare(qVecs: Array[Array[Float]], probes: Array[Array[Int]],
+        metric: String): RowKernel[Array[Long]] =
+      new HammingRows(qVecs.map(encodeVec(m, _)))
+  }
 
-    val qRows = PqSearch.collectQueries(queries, qId, qVec, maxQueries,
-      numCandidates, "bqTopK").toSeq
-    val qCoded =
-      if (model.words == 1)
-        qRows.map { case (id, q) => (id, encodeVec(model, q)(0)) }.toDF(qId, "__qcode")
-      else
-        qRows.map { case (id, q) => (id, encodeVec(model, q)) }.toDF(qId, "__qcode")
-
-    val candidates = coded
-      .crossJoin(broadcast(qCoded))
-      .withColumn("__approx", hamming(model.words)(col("code"), col("__qcode")))
-      .select(col(qId), col("match_id"), col("__approx"))
-
-    PqSearch.cutAndRerank(candidates, queries, qId, qVec, corpus, cId, cVec,
-      k, metric, numCandidates, asc = true)
+  private final class HammingRows(qCodes: Array[Array[Long]])
+      extends RowKernel[Array[Long]] {
+    def score(qi: Int, cell: Int, code: Array[Long]): Double = {
+      val q = qCodes(qi)
+      var bits = 0
+      var w = 0
+      while (w < q.length) { bits += java.lang.Long.bitCount(code(w) ^ q(w)); w += 1 }
+      bits.toDouble
+    }
   }
 }

@@ -1,39 +1,172 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TopKHeap
 import graft.operators.VectorSearch.scoreCol
 
 /** A celled store's vector codec, bound to one store's trained model:
-  * how a raw vector becomes the stored value column, and how a stored
-  * value decodes back to floats for a radius threshold. Raw IVF stores
-  * the vector itself; IVF-PQ stores residual PQ codes, IVF-SQ SQ8 codes.
+  * how a raw vector becomes the stored value column, how a stored value
+  * decodes back to floats for a radius threshold, and how the model
+  * persists beside the store. Raw IVF stores the vector itself and
+  * trains nothing; IVF-PQ stores residual PQ codes, IVF-SQ SQ8 codes.
   */
 private[operators] trait CellCodec {
   /** The stored value of raw vector `v` assigned to `cell`. */
   def encode(v: Column, cell: Column): Column
   /** A stored value as ARRAY<FLOAT> (exact for raw vectors). */
   def decode(stored: Column, cell: Column): Column
+  /** Persist the trained model beside the store at `path`. */
+  def save(spark: SparkSession, path: String): Unit
 }
 
-/** A compressed codec's top-k scan over stored codes of type `C`. */
-private[operators] trait CodeScan[C] extends CellCodec {
+/** The scoring half of a quantized codec over codes of type `C`: all
+  * the one quantized scan ([[CodeScan.topK]]) needs. The kernels live
+  * next to their models: PQ ADC ([[PqSearch.Adc]]), SQ8 affine
+  * ([[SqSearch.Affine]]) and BQ hamming ([[BqSearch.Hamming]]).
+  */
+private[operators] trait CodeKernel[C] {
   /** The vector width the model encodes. */
   def width: Int
+  /** Whether a LOWER approximate score is better under `metric`. */
+  def ascending(metric: String): Boolean = metric == "l2"
   /** Per-(query, probed cell) scoring state for one query batch, built
     * once before the scan; the returned kernel scores a stored code row
     * for one query inside the scan.
     */
   def prepare(qVecs: Array[Array[Float]], probes: Array[Array[Int]],
       metric: String): RowKernel[C]
-  /** Persist the trained model beside the store at `path`. */
-  def save(spark: SparkSession, path: String): Unit
 }
 
 private[operators] trait RowKernel[C] extends Serializable {
   def score(qi: Int, cell: Int, code: C): Double
+}
+
+/** A compressed celled store's codec: stored codes that score through
+  * a [[CodeKernel]].
+  */
+private[operators] trait CodeScan[C] extends CellCodec with CodeKernel[C]
+
+/** The one quantized shortlist (Jégou et al.'s IVFADC scan, TPAMI 2011,
+  * whose exhaustive ADC scan is its one-list case): every quantized
+  * serve — in-flight PQ, SQ and BQ, and the IVF-PQ / IVF-SQ stores —
+  * collects the query batch, builds the kernel's per-query state once,
+  * scans the code rows into one bounded heap per query and re-ranks the
+  * `numCandidates` survivors exactly.
+  */
+private[operators] object CodeScan {
+
+  /** Top-k over the code rows `scan(cells)` yields, (id, code, cell),
+    * for the union of the cells `probe` picks per query; a row scores
+    * only for the queries that probed its cell. `kernel` is built after
+    * the argument checks; a query whose width differs from the model's
+    * fails. Output (qId, match_id, score, rank), rank 1 best; heaps keep
+    * the better score, then the lower id.
+    */
+  def topK[C](kernel: => CodeKernel[C], queries: DataFrame, qId: String,
+      qVec: String, corpus: DataFrame, cId: String, cVec: String, k: Int,
+      metric: String, numCandidates: Int, maxQueries: Int, who: String)(
+      probe: Array[Float] => Array[Int],
+      scan: Array[Int] => Dataset[(Long, C, Int)]): DataFrame = {
+    VectorSearch.requireNumCandidates(numCandidates)
+    require(k <= numCandidates, s"k=$k exceeds numCandidates=$numCandidates")
+    val codec = kernel
+    val (qIds, qVecs) = collectQueries(queries, qId, qVec, maxQueries,
+      numCandidates, who).unzip
+    qVecs.foreach(q => require(q.length == codec.width,
+      s"$who: query vector has ${q.length} dims, the model expects ${codec.width}"))
+    val probes = qVecs.map(probe)
+    val cells = probes.flatten.distinct.sorted
+    // probersOf(cell): the positions of the queries that probe `cell`
+    val byCell = probes.indices.flatMap(qi => probes(qi).map(_ -> qi))
+      .groupMap(_._1)(_._2)
+    val probersOf = Array.tabulate(cells.lastOption.fold(0)(_ + 1))(cell =>
+      byCell.get(cell).fold(Array.emptyIntArray)(_.toArray))
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(
+      (qIds, codec.prepare(qVecs, probes, metric), probersOf))
+    val cand = numCandidates; val asc = codec.ascending(metric)
+
+    val candidates = scan(cells).mapPartitions { it =>
+      val (ids, rows, probers) = bc.value
+      val heaps = new Array[TopKHeap](ids.length)
+      it.foreach { case (mid, code, cell) =>
+        val qis = probers(cell)
+        var j = 0
+        while (j < qis.length) {
+          val qi = qis(j)
+          if (heaps(qi) == null) heaps(qi) = new TopKHeap(cand, asc)
+          heaps(qi).insert(mid, rows.score(qi, cell, code))
+          j += 1
+        }
+      }
+      heaps.iterator.zipWithIndex.filter(_._1 != null).flatMap { case (h, qi) =>
+        (0 until h.n).map(i => (ids(qi), h.ids(i), h.scores(i)))
+      }
+    }.toDF(qId, "match_id", "__approx")
+
+    cutAndRerank(candidates, queries, qId, qVec, corpus, cId, cVec,
+      k, metric, numCandidates, asc)
+  }
+
+  /** [[topK]] over an uncelled coded corpus (match_id, codes): the
+    * one-cell case, where every query probes cell 0 and it holds every
+    * row.
+    */
+  def flatTopK[C](kernel: CodeKernel[C], coded: DataFrame, queries: DataFrame,
+      qId: String, qVec: String, corpus: DataFrame, cId: String, cVec: String,
+      k: Int, metric: String, numCandidates: Int, maxQueries: Int, who: String)(
+      implicit rows: Encoder[(Long, C, Int)]): DataFrame =
+    topK(kernel, queries, qId, qVec, corpus, cId, cVec, k, metric,
+      numCandidates, maxQueries, who)(_ => Array(0),
+      _ => coded.select(col("match_id"), col("codes"), lit(0)).as(rows))
+
+  /** The (id, vector) query batch, bounded by `maxQueries` and by
+    * |queries| × numCandidates — per-task heap memory is |Q| ×
+    * numCandidates × 16 B, so the PRODUCT is bounded, not just the
+    * factors (10k × 10k would be 1.6 GB per task).
+    */
+  private def collectQueries(queries: DataFrame, qId: String,
+      qVec: String, maxQueries: Int, numCandidates: Int,
+      who: String): Array[(Long, Array[Float])] = {
+    val qRows = PqSearch.collectBatch(queries, qId, qVec, maxQueries, who)
+    require(qRows.length.toLong * numCandidates <= 10000000L,
+      s"$who: |queries|*numCandidates = ${qRows.length.toLong * numCandidates} " +
+        "exceeds 10M (per-task heap bound) — split the batch or narrow the budget")
+    qRows
+  }
+
+  /** Cut the per-partition survivors to the global `numCandidates` best
+    * per query BY APPROXIMATE SCORE, then re-rank exactly on the true
+    * metric over full vectors (numCandidates rows per query — a
+    * point-lookup join at scale). Output (qId, match_id, score, rank),
+    * rank 1 best.
+    */
+  private def cutAndRerank(
+      candidates: DataFrame, queries: DataFrame, qId: String, qVec: String,
+      corpus: DataFrame, cId: String, cVec: String,
+      k: Int, metric: String, numCandidates: Int, asc: Boolean): DataFrame = {
+    val globalCand = candidates
+      .groupBy(col(qId))
+      .agg(graft.functions.TopKByScore.topK(col("match_id"), col("__approx"),
+        numCandidates, asc).as("cs"))
+      .select(col(qId), explode(col("cs")).as("c"))
+      .select(col(qId), col("c.id").as("match_id"))
+    globalCand
+      .join(corpus.select(col(cId).cast("long").as("match_id"),
+        col(cVec).as("__cvec")), "match_id")
+      .join(broadcast(queries.select(col(qId).cast("long").as(qId),
+        col(qVec).as("__qvec"))), qId)
+      .withColumn("score", scoreCol(metric)(col("__qvec"), col("__cvec")))
+      .groupBy(col(qId))
+      .agg(graft.functions.TopKByScore.topK(col("match_id"), col("score"), k,
+        metric == "l2").as("matches"))
+      .select(col(qId), posexplode(col("matches")).as(Seq("rank0", "mt")))
+      .select(col(qId), col("mt.id").as("match_id"), col("mt.score").as("score"),
+        (col("rank0") + 1).cast("int").as("rank"))
+  }
 }
 
 /** The persisted IVF layout shared by [[IvfSearch]], [[IvfPqIndex]] and
@@ -147,7 +280,7 @@ trait CelledStore extends MaintainedStore[AppendStats] {
       payloadCols, path)
     // assign cells once; the partition write and the drift aggregation
     // both read the materialized assignment
-    val celled = df.select(storeId(col(cId)) +: col(cVec).as("v") +:
+    val celled = df.select(storeId(col(cId)) +: col(cVec).as("__v") +:
         IvfSearch.nearestCell(centroids)(col(cVec)).as("cell") +:
         payloadCols.map(col): _*)
       .localCheckpoint()
@@ -161,7 +294,7 @@ trait CelledStore extends MaintainedStore[AppendStats] {
     // discard the real store as debris.
     try {
       val rows = celled.select(col("id") +:
-          codec.encode(col("v"), col("cell")).as(storedCol) +: col("cell") +:
+          codec.encode(col("__v"), col("cell")).as(storedCol) +: col("cell") +:
           payloadCols.map(col): _*)
         .withColumn("epoch", lit(epoch))
       IndexMaintenance.withStoreLock(spark, path) {
@@ -171,7 +304,7 @@ trait CelledStore extends MaintainedStore[AppendStats] {
       }
       IvfSearch.driftVerdict(
         IvfSearch.celledStats(celled.withColumn("__dist",
-          IvfSearch.cellDist(centroids)(col("v"), col("cell"))), centroids.length),
+          IvfSearch.cellDist(centroids)(col("__v"), col("cell"))), centroids.length),
         centroids.length, IvfSearch.loadStats(spark, path))
       // per-batch caller (the maintenance streams): release this batch's
       // checkpoint blocks in the finally, not at a future GC — even when
@@ -219,6 +352,48 @@ trait CelledStore extends MaintainedStore[AppendStats] {
       Tombstones.clearApplied(spark, path, excludeEpoch)
       res
     }
+  }
+
+  /** Extra columns materialized with the celled rows for training. */
+  protected def trainingCols(centroids: Array[Array[Float]]): Seq[Column] = Nil
+
+  /** The one celled build: `nList` trained centroids assign cells,
+    * `train` fits the codec over the celled rows (id, cell, `__v` the
+    * raw vector, payload…, [[trainingCols]]; raw IVF trains nothing) —
+    * materialized once, because training, the encode pass
+    * and the drift-baseline aggregation all read them — and the stored
+    * values land partitioned by (cell, epoch -1) next to the codec
+    * model and the centroids. The base build is epoch -1; streamed
+    * appends land as dynamic overwrites of their own epoch dirs
+    * ([[appendToIndex]]). The drift-baseline stats are written LAST,
+    * so their `_SUCCESS` implies a complete index.
+    */
+  protected def writeCoded(corpus: DataFrame, cId: String, cVec: String,
+      path: String, nList: Int, iters: Int, dim: Int, payload: Seq[String])(
+      train: (DataFrame, Array[Array[Float]]) => CellCodec): Unit = {
+    val spark = corpus.sparkSession
+    requirePayload(payload)
+    val centroids = IvfSearch.trainCentroids(corpus, cVec, cId, nList, iters, dim)
+    val celled = corpus.select((storeId(col(cId)) +:
+        IvfSearch.nearestCell(centroids)(col(cVec)).as("cell") +:
+        col(cVec).as("__v") +: payload.map(col)) ++ trainingCols(centroids): _*)
+      .localCheckpoint()
+    // finally: a failed training pass, parquet write, or drift
+    // aggregation must not pin the checkpointed blocks for the session
+    // lifetime (the [[Tombstones.write]] rule)
+    try {
+      val codec = train(celled, centroids)
+      celled.select(col("id") +: codec.encode(col("__v"), col("cell")).as(storedCol) +:
+          col("cell") +: payload.map(col): _*)
+        .withColumn("epoch", lit(-1L))
+        .write.partitionBy("cell", "epoch").mode("overwrite")
+        .parquet(s"$path/corpus")
+      codec.save(spark, path)
+      saveCentroids(spark, path, centroids)
+      IvfSearch.writeStats(spark, path, IvfSearch.celledStats(
+        celled.withColumn("__dist",
+          IvfSearch.cellDist(centroids)(col("__v"), col("cell"))), nList))
+    } finally IndexMaintenance.unpersistCheckpoint(celled)
   }
 
   /** The live rows of the probed `cells`: the IN filter on the
@@ -304,44 +479,6 @@ trait CompressedCelledStore[C] extends CelledStore {
   protected def codeRow: Encoder[(Long, C, Int)]
   /** Default radius admission margin: the codec's worst-case error. */
   protected def radiusMargin: Double
-  /** Extra columns materialized with the celled rows for training. */
-  protected def trainingCols(centroids: Array[Array[Float]]): Seq[Column] = Nil
-
-  /** Build + persist: `nList` trained centroids assign cells, `train`
-    * fits the codec over the celled rows — materialized once, because
-    * training, the encode pass and the drift-baseline aggregation all
-    * read them — and the codes land partitioned by (cell, epoch -1)
-    * next to the codec model and the centroids. The drift-baseline
-    * stats are written LAST, so their `_SUCCESS` implies a complete
-    * index.
-    */
-  protected def writeCoded(corpus: DataFrame, cId: String, cVec: String,
-      path: String, nList: Int, iters: Int, dim: Int, payload: Seq[String])(
-      train: (DataFrame, Array[Array[Float]]) => CodeScan[C]): Unit = {
-    val spark = corpus.sparkSession
-    requirePayload(payload)
-    val centroids = IvfSearch.trainCentroids(corpus, cVec, cId, nList, iters, dim)
-    val celled = corpus.select((storeId(col(cId)) +:
-        IvfSearch.nearestCell(centroids)(col(cVec)).as("cell") +:
-        col(cVec).as("v") +: payload.map(col)) ++ trainingCols(centroids): _*)
-      .localCheckpoint()
-    // finally: a failed training pass, parquet write, or drift
-    // aggregation must not pin the checkpointed blocks for the session
-    // lifetime (the [[Tombstones.write]] rule)
-    try {
-      val codec = train(celled, centroids)
-      celled.select(col("id") +: codec.encode(col("v"), col("cell")).as("codes") +:
-          col("cell") +: payload.map(col): _*)
-        .withColumn("epoch", lit(-1L))
-        .write.partitionBy("cell", "epoch").mode("overwrite")
-        .parquet(s"$path/corpus")
-      codec.save(spark, path)
-      saveCentroids(spark, path, centroids)
-      IvfSearch.writeStats(spark, path, IvfSearch.celledStats(
-        celled.withColumn("__dist",
-          IvfSearch.cellDist(centroids)(col("v"), col("cell"))), nList))
-    } finally IndexMaintenance.unpersistCheckpoint(celled)
-  }
 
   /** RADIUS search from the persisted compressed store (FAISS
     * `range_search` posture): probe cells, DECODE each scanned code row
@@ -394,50 +531,12 @@ trait CompressedCelledStore[C] extends CelledStore {
       k: Int, metric: String = "dot", nProbe: Int = 4,
       numCandidates: Int = 100, maxQueries: Int = 10000,
       filter: Column = lit(true)): DataFrame = {
-    VectorSearch.requireNumCandidates(numCandidates)
-    require(k <= numCandidates, s"k=$k exceeds numCandidates=$numCandidates")
-    import spark.implicits._
-    val centroids = loadCentroids(spark, path)
     // shape comes from the persisted model, never from the caller
-    val codec = codecAt(spark, path, centroids)
-
-    val (qIds, qVecs) = PqSearch.collectQueries(queries, qId, qVec, maxQueries,
-      numCandidates, "searchIndex").unzip
-    qVecs.foreach(q => require(q.length == codec.width,
-      s"searchIndex: query vector has ${q.length} dims, the store's model " +
-        s"expects ${codec.width}"))
-
-    // probe set per query (collected: |Q| bounded, nList small)
-    val probes = qVecs.map(IvfSearch.probeCells(centroids, _, nProbe))
-    val cells = probes.flatten.distinct.sorted
-    val probersOf: Map[Int, Array[Int]] =
-      cells.map(cell => cell ->
-        qVecs.indices.filter(qi => probes(qi).contains(cell)).toArray).toMap
-    val bc = spark.sparkContext.broadcast(
-      (qIds, codec.prepare(qVecs, probes, metric), probersOf))
-    val cand = numCandidates; val asc = metric == "l2"
-
-    val candidates = liveCells(spark, path, cells.toIndexedSeq, filter)
-      .select(col("id"), col("codes"), col("cell"))
-      .as(codeRow).mapPartitions { it =>
-        val (ids, kernel, probers) = bc.value
-        val heaps = scala.collection.mutable.HashMap.empty[Int, TopKHeap]
-        it.foreach { case (mid, codes, cell) =>
-          val qis = probers.getOrElse(cell, Array.emptyIntArray)
-          var j = 0
-          while (j < qis.length) {
-            val qi = qis(j)
-            heaps.getOrElseUpdate(qi, new TopKHeap(cand, asc))
-              .insert(mid, kernel.score(qi, cell, codes))
-            j += 1
-          }
-        }
-        heaps.iterator.flatMap { case (qi, h) =>
-          (0 until h.n).map(i => (ids(qi), h.ids(i), h.scores(i)))
-        }
-      }.toDF(qId, "match_id", "__approx")
-
-    PqSearch.cutAndRerank(candidates, queries, qId, qVec, corpus, cId, cVec,
-      k, metric, numCandidates, asc)
+    lazy val centroids = loadCentroids(spark, path)
+    CodeScan.topK(codecAt(spark, path, centroids), queries, qId, qVec,
+      corpus, cId, cVec, k, metric, numCandidates, maxQueries, "searchIndex")(
+      IvfSearch.probeCells(centroids, _, nProbe),
+      cells => liveCells(spark, path, cells.toIndexedSeq, filter)
+        .select(col("id"), col("codes"), col("cell")).as(codeRow))
   }
 }

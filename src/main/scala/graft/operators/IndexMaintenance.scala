@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
 object IndexMaintenance {
 
   /** Lease age beyond which an existing lock is a crashed compactor's
-    * leftover (same policy as `TopicCatalog.CompactionLeaseMillis`).
+    * leftover.
     */
   val CompactionLeaseMillis: Long = 10L * 60 * 1000
 
@@ -57,13 +57,13 @@ object IndexMaintenance {
   private case object LockVanished extends LockRead
   private case object LockUnreadable extends LockRead
 
-  /** Enforce ONE active compactor per index store — the same protocol
-    * the topic compactor uses: in-process compactions serialize on a
-    * per-store monitor, and an on-disk `.compact.lock` lease (atomic
-    * no-overwrite create through the Hadoop FS, stale after
-    * [[CompactionLeaseMillis]]) makes a compactor in another process
-    * fail fast instead of racing the rename swap. Dot-prefixed, so
-    * readers never see it.
+  /** Enforce ONE active compactor per store — an index store, or a
+    * topic directory (topic compaction and expiry take it too):
+    * in-process compactions serialize on a per-store monitor, and an
+    * on-disk `.compact.lock` lease (atomic no-overwrite create through
+    * the Hadoop FS, stale after [[CompactionLeaseMillis]]) makes a
+    * compactor in another process fail fast instead of racing the
+    * rename swap. Dot-prefixed, so readers never see it.
     *
     * Cross-process discipline the lease file itself must honor:
     *  - the lock file carries a per-acquisition OWNER TOKEN, and release
@@ -115,7 +115,7 @@ object IndexMaintenance {
         catch { case _: java.io.IOException => Long.MaxValue } // vanished: stale
         if (age < CompactionLeaseMillis)
           throw new IllegalStateException(
-            s"compaction already in progress on index store $root " +
+            s"compaction already in progress on store $root " +
               s"(lock $lock, age ${age / 1000}s < lease ${CompactionLeaseMillis / 1000}s)")
         // stale: crashed compactor. Exactly one contender wins the rename
         // of the old lock to its own tombstone; losers fall through to the
@@ -126,7 +126,7 @@ object IndexMaintenance {
         if (wonTakeover) fs.delete(tomb, false)
         if (!tryCreate())
           throw new IllegalStateException(
-            s"lost the compaction-lock race on index store $root")
+            s"lost the compaction-lock race on store $root")
       }
       val t0 = System.currentTimeMillis()
       var stillOwned = true
@@ -157,7 +157,7 @@ object IndexMaintenance {
         }
       if (!stillOwned)
         throw new IllegalStateException(
-          s"compaction on index store $root held the lease for " +
+          s"compaction on store $root held the lease for " +
             s"${(System.currentTimeMillis() - t0) / 1000}s (lease " +
             s"${CompactionLeaseMillis / 1000}s) and was usurped by another " +
             "compactor — its writes may have raced the takeover; verify the " +

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.VectorSearch.scoreF32
-
 /** IVF-PQ: the composed at-rest ANN layout for corpora where BOTH scan
   * pruning and memory compression matter (Jégou 2011 §V; the layout
   * FAISS calls `IVFx,PQy`). Coarse IVF centroids split the corpus into
@@ -33,7 +31,7 @@ object IvfPqIndex extends CompressedCelledStore[Array[Int]] {
   protected def radiusMargin: Double = 0.2
   protected def codecAt(spark: SparkSession, path: String,
       centroids: Array[Array[Float]]): CodeScan[Array[Int]] =
-    PqCodec(loadCodebooks(spark, path), centroids)
+    new PqCodec(loadCodebooks(spark, path), centroids)
 
   private[graft] def buildIndex(corpus: DataFrame, cId: String, cVec: String,
       path: String, nList: Int, dim: => Int, payload: Seq[String]): Unit =
@@ -41,15 +39,12 @@ object IvfPqIndex extends CompressedCelledStore[Array[Int]] {
 
   /** Residual PQ codes: a vector is coded as the PQ codes of its
     * residual against its cell centroid; decoding reconstructs centroid +
-    * residual sub-centroids; the scan scores codes through one ADC lookup
-    * table per (query, probed cell), built from the query's residual
-    * (l2 decomposes over residual subspaces; dot(q, c + r) =
-    * dot(q, c) + dot(q, r) — the LUT on q against the residual books plus
-    * a per-cell constant, so scores stay comparable ACROSS cells).
+    * residual sub-centroids; the scan is [[PqSearch.Adc]] bound to the
+    * store's centroids.
     */
-  private final case class PqCodec(cb: PqSearch.Codebooks,
-      centroids: Array[Array[Float]]) extends CodeScan[Array[Int]] {
-    def width: Int = centroids.headOption.map(_.length).getOrElse(cb.m * cb.dsub)
+  private final class PqCodec(cb: PqSearch.Codebooks,
+      centroids: Array[Array[Float]])
+      extends PqSearch.Adc(cb, centroids) with CodeScan[Array[Int]] {
     def encode(v: Column, cell: Column): Column =
       PqSearch.encodeUdf(cb)(residualUdf(centroids)(v, cell))
     def decode(codes: Column, cell: Column): Column = {
@@ -67,31 +62,8 @@ object IvfPqIndex extends CompressedCelledStore[Array[Int]] {
         out
       }).apply(codes, cell)
     }
-    def prepare(qVecs: Array[Array[Float]], probes: Array[Array[Int]],
-        metric: String): RowKernel[Array[Int]] = {
-      val m = cb.m; val kCodes = cb.kCodes
-      val adcMetric = if (metric == "l2") "l2" else "dot"
-      val lutOf = new scala.collection.mutable.HashMap[(Int, Int), (Array[Double], Double)]
-      for (qi <- qVecs.indices; cell <- probes(qi)) {
-        val q = qVecs(qi)
-        val base = if (adcMetric == "l2")
-          Array.tabulate(width)(i => q(i) - centroids(cell)(i)) else q
-        val lut = PqSearch.adcLut(base, cb, adcMetric)
-        val const = if (adcMetric == "dot") scoreF32("dot", q, centroids(cell)) else 0.0
-        lutOf((qi, cell)) = (lut, const)
-      }
-      new AdcKernel(lutOf.toMap, m, kCodes)
-    }
     def save(spark: SparkSession, path: String): Unit =
       PqSearch.saveCodebooks(spark, s"$path/codebooks", cb)
-  }
-
-  private final class AdcKernel(luts: Map[(Int, Int), (Array[Double], Double)],
-      m: Int, kCodes: Int) extends RowKernel[Array[Int]] {
-    def score(qi: Int, cell: Int, codes: Array[Int]): Double = {
-      val (lut, const) = luts((qi, cell))
-      PqSearch.adcScore(lut, const, codes, m, kCodes)
-    }
   }
 
   /** Build + persist: `path/corpus` is (id, codes) parquet partitioned
@@ -104,7 +76,7 @@ object IvfPqIndex extends CompressedCelledStore[Array[Int]] {
       nList: Int = 16, m: Int = 8, kCodes: Int = 16, iters: Int = 2,
       dim: Int = 64, payload: Seq[String] = Nil): Unit =
     writeCoded(corpus, cId, cVec, path, nList, iters, dim, payload) {
-      (celled, centroids) => PqCodec(PqSearch.trainCodebooks(
+      (celled, centroids) => new PqCodec(PqSearch.trainCodebooks(
         celled.select(col("id"), col("rv")), "id", "rv", m, kCodes, iters, dim),
         centroids)
     }
@@ -113,7 +85,7 @@ object IvfPqIndex extends CompressedCelledStore[Array[Int]] {
     * since training scans them `iters` times.
     */
   override protected def trainingCols(centroids: Array[Array[Float]]): Seq[Column] =
-    Seq(residualUdf(centroids)(col("v"), col("cell")).as("rv"))
+    Seq(residualUdf(centroids)(col("__v"), col("cell")).as("rv"))
 
   private def residualUdf(centroids: Array[Array[Float]]) = {
     val cs = centroids

@@ -56,10 +56,11 @@ object IvfSearch extends CelledStore {
   protected def codecAt(spark: org.apache.spark.sql.SparkSession, path: String,
       centroids: Array[Array[Float]]): CellCodec = RawCodec
 
-  /** Raw vectors: stored as-is, decoded as-is. */
+  /** Raw vectors: stored as-is, decoded as-is; no model to persist. */
   private object RawCodec extends CellCodec {
     def encode(v: Column, cell: Column): Column = v
     def decode(stored: Column, cell: Column): Column = stored
+    def save(spark: org.apache.spark.sql.SparkSession, path: String): Unit = ()
   }
 
   private[graft] def buildIndex(corpus: DataFrame, cId: String, cVec: String,
@@ -228,27 +229,8 @@ object IvfSearch extends CelledStore {
   def writeIndex(
       corpus: DataFrame, cId: String, cVec: String, path: String,
       nList: Int = 16, iters: Int = 2, dim: Int = 64,
-      payload: Seq[String] = Nil): Unit = {
-    val spark = corpus.sparkSession
-    requirePayload(payload)
-    val centroids = trainCentroids(corpus, cVec, cId, nList, iters, dim)
-    val celled = corpus.select(col(cId).as("id") +: col(cVec).as("vec") +:
-      nearestCell(centroids)(col(cVec)).as("cell") +: payload.map(col): _*)
-    // inner epoch partition level: the base build is epoch -1; streamed
-    // appends land as dynamic overwrites of their own epoch dirs, making
-    // at-least-once foreachBatch replays idempotent (see appendToIndex)
-    celled.withColumn("epoch", lit(-1L))
-      .write.partitionBy("cell", "epoch").mode("overwrite")
-      .parquet(s"$path/corpus")
-    saveCentroids(spark, path, centroids)
-    // training baseline for online-append drift detection — aggregated
-    // over the parquet just written, not the source plan, so the build
-    // never pays a second corpus scan + assignment pass
-    val persisted = spark.read.parquet(s"$path/corpus")
-    writeStats(spark, path, celledStats(
-      persisted.withColumn("__dist", cellDist(centroids)(col("vec"), col("cell"))),
-      centroids.length))
-  }
+      payload: Seq[String] = Nil): Unit =
+    writeCoded(corpus, cId, cVec, path, nList, iters, dim, payload)((_, _) => RawCodec)
 
   /** Distance of a vector to its ASSIGNED centroid — the same L2 the
     * assignment minimized, so drift is measured in assignment units.

@@ -29,7 +29,7 @@ object IvfSqIndex extends CompressedCelledStore[Array[Byte]] {
   protected def radiusMargin: Double = 0.05
   protected def codecAt(spark: SparkSession, path: String,
       centroids: Array[Array[Float]]): CodeScan[Array[Byte]] =
-    SqCodec(SqSearch.loadModel(spark, s"$path/sqmodel"))
+    new SqCodec(SqSearch.loadModel(spark, s"$path/sqmodel"))
 
   private[graft] def buildIndex(corpus: DataFrame, cId: String, cVec: String,
       path: String, nList: Int, dim: => Int, payload: Seq[String]): Unit =
@@ -39,8 +39,8 @@ object IvfSqIndex extends CompressedCelledStore[Array[Byte]] {
   /** SQ8 codes over the raw vector (out-of-range values saturate — the
     * SQ clamp rule). Decoding dequantizes ([[SqSearch.decodeVec]] — the
     * affine raw-dot decomposition can't bound cosine/l2 thresholds); the
-    * scan is [[SqSearch.sqTopK]]'s per-query affine kernel: dot ->
-    * (const, w), l2 compares against the dequantized value directly.
+    * scan is [[SqSearch.Affine]], the in-flight [[SqSearch.sqTopK]]'s
+    * kernel.
     *
     * Metric contract (the [[SqSearch.sqTopK]] family rule): "cosine"
     * SELECTS candidates by raw dot over the affine codes and re-ranks
@@ -49,23 +49,12 @@ object IvfSqIndex extends CompressedCelledStore[Array[Byte]] {
     * stored/query vectors or widen `numCandidates`. Only "l2" switches
     * the scan itself; every other metric scans affinely on dot.
     */
-  private final case class SqCodec(m: SqSearch.SqModel)
-      extends CodeScan[Array[Byte]] {
-    def width: Int = m.dim
+  private final class SqCodec(m: SqSearch.SqModel)
+      extends SqSearch.Affine(m) with CodeScan[Array[Byte]] {
     def encode(v: Column, cell: Column): Column = SqSearch.encodeUdfOf(m)(v)
     def decode(codes: Column, cell: Column): Column = SqSearch.decodeUdfOf(m)(codes)
-    def prepare(qVecs: Array[Array[Float]], probes: Array[Array[Int]],
-        metric: String): RowKernel[Array[Byte]] =
-      new AffineKernel(qVecs.map(SqSearch.affinePrep(_, m, metric == "l2")), m,
-        metric == "l2")
     def save(spark: SparkSession, path: String): Unit =
       SqSearch.saveModel(spark, s"$path/sqmodel", m)
-  }
-
-  private final class AffineKernel(qs: Array[(Double, Array[Double])],
-      model: SqSearch.SqModel, l2: Boolean) extends RowKernel[Array[Byte]] {
-    def score(qi: Int, cell: Int, codes: Array[Byte]): Double =
-      SqSearch.affineScore(qs(qi), codes, model, l2)
   }
 
   /** Build + persist: `path/corpus` is (id, codes BINARY[, payload])
@@ -79,6 +68,6 @@ object IvfSqIndex extends CompressedCelledStore[Array[Byte]] {
       nList: Int = 16, iters: Int = 2, dim: Int = 64,
       payload: Seq[String] = Nil): Unit =
     writeCoded(corpus, cId, cVec, path, nList, iters, dim, payload) {
-      (celled, _) => SqCodec(SqSearch.trainModel(celled, "v", dim))
+      (celled, _) => new SqCodec(SqSearch.trainModel(celled, "__v", dim))
     }
 }

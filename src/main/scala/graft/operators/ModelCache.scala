@@ -28,6 +28,27 @@ private[operators] final class ModelCache[V](maxEntries: Int = 64) {
     else { val v = f; m.put(key, v); v }
   }
 
+  /** Train-once/serve-many: the model `name` is trained at most once per
+    * JVM while cached and, when `persist`, saved under the JVM tmpdir as
+    * `graft_<name>` (complete once its `_SUCCESS` exists) so a fresh JVM
+    * over the same corpus RELOADS instead of retraining. `name` must
+    * carry every hyperparameter the model depends on. Pass `persist =
+    * false` when the name is only unique per registration (not derived
+    * from the data's content): a persisted artifact under a non-content
+    * name could outlive the data it was trained on.
+    */
+  def trainOnce(spark: SparkSession, name: String, persist: Boolean,
+      save: (SparkSession, String, V) => Unit, load: (SparkSession, String) => V)(
+      train: => V): V =
+    getOrElseUpdate(name) {
+      if (!persist) train
+      else {
+        val path = s"${System.getProperty("java.io.tmpdir")}/graft_$name"
+        if (!FsUtil.exists(spark, s"$path/_SUCCESS")) save(spark, path, train)
+        load(spark, path)
+      }
+    }
+
   private[operators] def size: Int = m.synchronized(m.size())
   private[operators] def contains(key: String): Boolean =
     m.synchronized(m.containsKey(key))

@@ -3,8 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TopKHeap
-import graft.operators.VectorSearch.{scoreCol, scoreF32}
+import graft.operators.VectorSearch.scoreF32
 
 /** Product-quantization ANN (Jégou, Douze, Schmid: "Product Quantization
   * for Nearest Neighbor Search", IEEE TPAMI 2011) — the third index
@@ -28,11 +27,12 @@ import graft.operators.VectorSearch.{scoreCol, scoreF32}
   *    accumulation exactly like [[IvfSearch.trainCentroids]] — means are
   *    bit-identical regardless of partitioning).
   *  - encode: one narrow map over the corpus (codebooks broadcast).
-  *  - search: the query batch (bounded, like the reference's worksheet
-  *    searches) broadcasts WITH precomputed LUTs; a mapPartitions scan
-  *    over the coded corpus keeps one bounded heap per query — the
+  *  - search: the one quantized scan ([[CodeScan.topK]]) with the
+  *    [[Adc]] kernel — the query batch (bounded, like the reference's
+  *    worksheet searches) broadcasts WITH precomputed LUTs, the scan
+  *    over the coded corpus keeps one bounded heap per query (the
   *    |Q|x|C| relation never materializes, and the corpus side only
-  *    ships (id, codes). Exact re-rank joins the numCandidates
+  *    ships (id, codes)), and exact re-rank joins the numCandidates
   *    survivors back to their full vectors.
   */
 object PqSearch {
@@ -47,18 +47,11 @@ object PqSearch {
     */
   val trainInvocations = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** In-process codebook cache backing [[cachedCodebooks]], keyed by
-    * corpus identity tag.
-    */
   private val cbCache = new ModelCache[Codebooks]()
 
   /** Train-once/serve-many codebooks for the corpus identified by
-    * `tag`: trained at most once per JVM (in-process cache) and, when
-    * `persist`, written content-addressed under the JVM tmpdir so a
-    * fresh JVM over the same corpus RELOADS instead of retraining.
-    * Pass `persist = false` when `tag` is only unique per registration
-    * (not derived from the data's content) — a persisted artifact under
-    * a non-content tag could outlive the data it was trained on.
+    * `tag` ([[ModelCache.trainOnce]], which also holds the `persist`
+    * contract).
     *
     * This is the one sanctioned route from a query body to codebooks:
     * the reference's PQ index is prebuilt at declaration time
@@ -70,21 +63,11 @@ object PqSearch {
       persist: Boolean = true): Codebooks =
     // hyperparameters are part of the identity: the same corpus tag
     // under a different PQ shape must train (and persist) separately,
-    // never serve mismatched codebooks. Registration-scoped tags
-    // (persist=false) are never reused, so a long-lived session would
-    // otherwise grow one dead Codebooks per re-registration: the
-    // bounded [[ModelCache]] evicts LRU entries only (persisted
-    // entries reload from disk; the rest retrain at most once more).
-    cbCache.getOrElseUpdate(s"${tag}_m${m}_k${kCodes}_i${iters}_d$dim") {
-      val key = s"${tag}_m${m}_k${kCodes}_i${iters}_d$dim"
-      if (persist) {
-        val path = s"${System.getProperty("java.io.tmpdir")}/graft_pq_cb_$key"
-        if (!FsUtil.exists(corpus.sparkSession, s"$path/_SUCCESS"))
-          saveCodebooks(corpus.sparkSession, path,
-            trainCodebooks(corpus, cId, cVec, m, kCodes, iters, dim))
-        loadCodebooks(corpus.sparkSession, path)
-      } else trainCodebooks(corpus, cId, cVec, m, kCodes, iters, dim)
-    }
+    // never serve mismatched codebooks
+    cbCache.trainOnce(corpus.sparkSession,
+      s"pq_cb_${tag}_m${m}_k${kCodes}_i${iters}_d$dim", persist,
+      saveCodebooks, loadCodebooks)(
+      trainCodebooks(corpus, cId, cVec, m, kCodes, iters, dim))
 
   /** Deterministic per-subspace k-means. Init: the first `kCodes`
     * vectors by id donate their subvectors (arbitrary but stable; Lloyd
@@ -225,62 +208,11 @@ object PqSearch {
       corpus: DataFrame, cId: String, cVec: String,
       k: Int, cb: Codebooks, metric: String,
       numCandidates: Int, maxQueries: Int): DataFrame = {
-    VectorSearch.requireNumCandidates(numCandidates)
-    require(k <= numCandidates, s"k=$k exceeds numCandidates=$numCandidates")
     val spark = queries.sparkSession
     import spark.implicits._
-    val m = cb.m; val kCodes = cb.kCodes
-
-    val coded = encode(corpus, cId, cVec, cb)
-
-    val qRows = collectQueries(queries, qId, qVec, maxQueries, numCandidates,
-      "pqTopK")
-    val adcMetric = if (metric == "l2") "l2" else "dot"
-    val asc = adcMetric == "l2"
-    val luts = qRows.map { case (id, q) =>
-      require(q.length == m * cb.dsub,
-        s"pqTopK: query vector has ${q.length} dims, codebooks expect ${m * cb.dsub}")
-      (id, adcLut(q, cb, adcMetric))
-    }
-    val bc = spark.sparkContext.broadcast(luts)
-    val mm = m; val kk = kCodes; val cand = numCandidates
-
-    // ADC scan: per partition, one bounded heap per query; only
-    // (query_id, match_id, approx) survivors leave the partition
-    val candidates = coded.as[(Long, Seq[Int])].mapPartitions { it =>
-      val qs = bc.value
-      val heaps = qs.map { case (id, _) => (id, new TopKHeap(cand, asc)) }
-      it.foreach { case (mid, codesSeq) =>
-        val codes = codesSeq.toArray
-        var qi = 0
-        while (qi < qs.length) {
-          heaps(qi)._2.insert(mid, adcScore(qs(qi)._2, 0.0, codes, mm, kk))
-          qi += 1
-        }
-      }
-      heaps.iterator.flatMap { case (qid, h) =>
-        (0 until h.n).map(i => (qid, h.ids(i), h.scores(i)))
-      }
-    }.toDF(qId, "match_id", "__approx")
-
-    cutAndRerank(candidates, queries, qId, qVec, corpus, cId, cVec,
-      k, metric, numCandidates, asc)
-  }
-
-  /** Shared head of every broadcast code scan: the (id, vector) query
-    * batch, bounded by `maxQueries` and by |queries| × numCandidates —
-    * per-task heap memory is |Q| × numCandidates × 16 B, so the PRODUCT
-    * is bounded, not just the factors (10k × 10k would be 1.6 GB per
-    * task).
-    */
-  private[operators] def collectQueries(queries: DataFrame, qId: String,
-      qVec: String, maxQueries: Int, numCandidates: Int,
-      who: String): Array[(Long, Array[Float])] = {
-    val qRows = collectBatch(queries, qId, qVec, maxQueries, who)
-    require(qRows.length.toLong * numCandidates <= 10000000L,
-      s"$who: |queries|*numCandidates = ${qRows.length.toLong * numCandidates} " +
-        "exceeds 10M (per-task heap bound) — split the batch or narrow the budget")
-    qRows
+    CodeScan.flatTopK(new Adc(cb, Array.empty), encode(corpus, cId, cVec, cb),
+      queries, qId, qVec, corpus, cId, cVec, k, metric, numCandidates,
+      maxQueries, "pqTopK")
   }
 
   /** The non-null (id, vector) rows of a query batch, refused past
@@ -289,6 +221,8 @@ object PqSearch {
     * maxQueries + 1 rows and the driver keeps the first maxQueries + 1 in
     * partition order. (CollectLimit's incremental take scans one
     * partition, then the rest: two jobs on every multi-file micro-batch.)
+    * A null ELEMENT inside a vector is refused: unboxed, it would read
+    * as 0 and score silently wrong.
     */
   private[operators] def collectBatch(queries: DataFrame, qId: String,
       qVec: String, maxQueries: Int, who: String): Array[(Long, Array[Float])] = {
@@ -300,67 +234,82 @@ object PqSearch {
       org.apache.spark.sql.Encoders.row(slim.schema)).collect().take(n)
     require(qRows.length <= maxQueries,
       s"$who: query batch exceeds maxQueries=$maxQueries — split the batch")
-    qRows.map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-  }
-
-  /** The ADC lookup table of query `q`: lut(s * kCodes + c) = partial
-    * score of the query's subspace-s slice against codebook entry c.
-    */
-  private[operators] def adcLut(q: Array[Float], cb: Codebooks,
-      adcMetric: String): Array[Double] = {
-    val lut = new Array[Double](cb.m * cb.kCodes)
-    var s = 0
-    while (s < cb.m) {
-      val sub = java.util.Arrays.copyOfRange(q, s * cb.dsub, (s + 1) * cb.dsub)
-      var c = 0
-      while (c < cb.kCodes) {
-        lut(s * cb.kCodes + c) = scoreF32(adcMetric, sub, cb.books(s)(c))
-        c += 1
-      }
-      s += 1
+    qRows.map { r =>
+      val v = r.getSeq[java.lang.Float](1)
+      val bad = v.indexOf(null)
+      require(bad < 0,
+        s"$who: query ${r.getLong(0)} has a null vector element at index $bad")
+      (r.getLong(0), v.map(_.floatValue).toArray)
     }
-    lut
   }
 
-  /** The ADC approximate score of one code row: `const` plus the code's
-    * LUT entry per subspace.
+  /** The ADC scan kernel of codebooks `cb`: per (query, probed cell)
+    * one `m x kCodes` lookup table of partial scores, then `m` table
+    * lookups per code row. "dot" and "l2" decompose additively over
+    * subspaces; "cosine" scans as dot. With coarse `centroids` (IVF-PQ)
+    * the codes are RESIDUALS against their cell's centroid: an l2
+    * table is built from the query's residual, and dot(q, c + r) =
+    * dot(q, c) + dot(q, r) adds a per-cell constant, so scores stay
+    * comparable ACROSS cells. With none (in-flight PQ) there is one
+    * cell and no constant.
     */
-  private[operators] def adcScore(lut: Array[Double], const: Double,
-      codes: Array[Int], m: Int, kCodes: Int): Double = {
-    var approx = const
-    var s = 0
-    while (s < m) { approx += lut(s * kCodes + codes(s)); s += 1 }
-    approx
+  private[operators] class Adc(cb: Codebooks, centroids: Array[Array[Float]])
+      extends CodeKernel[Array[Int]] {
+    def width: Int = centroids.headOption.map(_.length).getOrElse(cb.m * cb.dsub)
+    def prepare(qVecs: Array[Array[Float]], probes: Array[Array[Int]],
+        metric: String): RowKernel[Array[Int]] = {
+      val adcMetric = if (metric == "l2") "l2" else "dot"
+      val luts = qVecs.indices.toArray.map { qi =>
+        val q = qVecs(qi)
+        probes(qi).map { cell =>
+          lut(if (adcMetric == "l2" && centroids.nonEmpty)
+            Array.tabulate(width)(i => q(i) - centroids(cell)(i)) else q, adcMetric)
+        }
+      }
+      val consts = qVecs.indices.toArray.map { qi =>
+        probes(qi).map { cell =>
+          if (adcMetric == "dot" && centroids.nonEmpty)
+            scoreF32("dot", qVecs(qi), centroids(cell))
+          else 0.0
+        }
+      }
+      new AdcRows(probes, luts, consts, cb.m, cb.kCodes)
+    }
+
+    /** lut(s * kCodes + c) = partial score of `q`'s subspace-s slice
+      * against codebook entry c.
+      */
+    private def lut(q: Array[Float], adcMetric: String): Array[Double] = {
+      val out = new Array[Double](cb.m * cb.kCodes)
+      var s = 0
+      while (s < cb.m) {
+        val sub = java.util.Arrays.copyOfRange(q, s * cb.dsub, (s + 1) * cb.dsub)
+        var c = 0
+        while (c < cb.kCodes) {
+          out(s * cb.kCodes + c) = scoreF32(adcMetric, sub, cb.books(s)(c))
+          c += 1
+        }
+        s += 1
+      }
+      out
+    }
   }
 
-  /** Shared tail of every ADC scan ([[pqTopK]], [[IvfPqIndex
-    * .searchIndex]]): cut the per-partition survivors to the global
-    * `numCandidates` best per query BY APPROXIMATE SCORE, then re-rank
-    * exactly on the true metric over full vectors (numCandidates rows
-    * per query — a point-lookup join at scale). Output
-    * (qId, match_id, score, rank), rank 1 best.
+  /** A code row's ADC score for query `qi` in `cell`: the cell's
+    * constant plus the code's table entry per subspace.
     */
-  private[operators] def cutAndRerank(
-      candidates: DataFrame, queries: DataFrame, qId: String, qVec: String,
-      corpus: DataFrame, cId: String, cVec: String,
-      k: Int, metric: String, numCandidates: Int, asc: Boolean): DataFrame = {
-    val globalCand = candidates
-      .groupBy(col(qId))
-      .agg(graft.functions.TopKByScore.topK(col("match_id"), col("__approx"),
-        numCandidates, asc).as("cs"))
-      .select(col(qId), explode(col("cs")).as("c"))
-      .select(col(qId), col("c.id").as("match_id"))
-    globalCand
-      .join(corpus.select(col(cId).cast("long").as("match_id"),
-        col(cVec).as("__cvec")), "match_id")
-      .join(broadcast(queries.select(col(qId).cast("long").as(qId),
-        col(qVec).as("__qvec"))), qId)
-      .withColumn("score", scoreCol(metric)(col("__qvec"), col("__cvec")))
-      .groupBy(col(qId))
-      .agg(graft.functions.TopKByScore.topK(col("match_id"), col("score"), k,
-        metric == "l2").as("matches"))
-      .select(col(qId), posexplode(col("matches")).as(Seq("rank0", "mt")))
-      .select(col(qId), col("mt.id").as("match_id"), col("mt.score").as("score"),
-        (col("rank0") + 1).cast("int").as("rank"))
+  private final class AdcRows(probes: Array[Array[Int]],
+      luts: Array[Array[Array[Double]]], consts: Array[Array[Double]], m: Int,
+      kCodes: Int) extends RowKernel[Array[Int]] {
+    def score(qi: Int, cell: Int, codes: Array[Int]): Double = {
+      val cells = probes(qi)
+      var j = 0
+      while (cells(j) != cell) j += 1
+      val lut = luts(qi)(j)
+      var approx = consts(qi)(j)
+      var s = 0
+      while (s < m) { approx += lut(s * kCodes + codes(s)); s += 1 }
+      approx
+    }
   }
 }

@@ -96,25 +96,16 @@ object QualityClassifier {
   private val modelCache = new ModelCache[Model]()
 
   /** Train-once/serve-many model for the (corpus, labeling) identified
-    * by `tag` — the [[PqSearch.cachedCodebooks]] contract: at most one
-    * training run per JVM per key, persisted content-addressed under
-    * the JVM tmpdir so a fresh JVM over the same corpus reloads
-    * instead of retraining. The tag MUST identify the label column's
-    * definition too (a model is a function of corpus AND labels).
+    * by `tag` ([[ModelCache.trainOnce]]): at most one training run per
+    * JVM per key. The tag MUST identify the label column's definition
+    * too (a model is a function of corpus AND labels).
     */
   def cachedModel(df: DataFrame, idCol: String, textCol: String,
       label: Column, tag: String, dimBits: Int = 12, iters: Int = 30,
       lr: Double = 4.0, persist: Boolean = true): Model =
-    modelCache.getOrElseUpdate(s"${tag}_b${dimBits}_i${iters}_lr$lr") {
-      val key = s"${tag}_b${dimBits}_i${iters}_lr$lr"
-      if (persist) {
-        val path = s"${System.getProperty("java.io.tmpdir")}/graft_qc_model_$key"
-        if (!FsUtil.exists(df.sparkSession, s"$path/_SUCCESS"))
-          saveModel(df.sparkSession, path,
-            train(df, idCol, textCol, label, dimBits, iters, lr))
-        loadModel(df.sparkSession, path)
-      } else train(df, idCol, textCol, label, dimBits, iters, lr)
-    }
+    modelCache.trainOnce(df.sparkSession,
+      s"qc_model_${tag}_b${dimBits}_i${iters}_lr$lr", persist, saveModel, loadModel)(
+      train(df, idCol, textCol, label, dimBits, iters, lr))
 
   /** Persist as (f, w) parquet rows — the model is an offline artifact
     * like the PQ codebooks; dimBits is derived back from the row count

@@ -3,9 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TopKHeap
-import graft.operators.VectorSearch.scoreF32
-
 /** Scalar-quantization ANN (the SQ8 index family of FAISS; the uniform
   * per-dimension quantizer goes back to Gray & Neuhoff, "Quantization",
   * IEEE IT 1998): each dimension is affinely mapped to one unsigned
@@ -34,11 +31,10 @@ import graft.operators.VectorSearch.scoreF32
   *    dot metric the approximate score decomposes affinely,
   *    `Σ_d q_d·(lo_d + code_d·Δ_d) = Σ_d q_d·lo_d + Σ_d (q_d·Δ_d)·code_d`,
   *    so each query precomputes a constant plus `dim` scaled weights
-  *    and the scan is a pure int-byte dot product. The query batch
-  *    broadcasts with those weights; a mapPartitions scan keeps one
-  *    bounded heap per query (same contract as [[PqSearch.pqTopK]]);
-  *    survivors re-rank exactly via the shared
-  *    [[PqSearch.cutAndRerank]] tail.
+  *    and the scan is a pure int-byte dot product ([[Affine]]). The
+  *    query batch broadcasts with those weights into the one quantized
+  *    scan ([[CodeScan.topK]]): one bounded heap per query, survivors
+  *    re-ranked exactly.
   */
 object SqSearch {
 
@@ -58,24 +54,14 @@ object SqSearch {
 
   private val modelCache = new ModelCache[SqModel]()
 
-  /** Train-once/serve-many bounds for the corpus identified by `tag` —
-    * the [[PqSearch.cachedCodebooks]] contract: at most one training
-    * pass per JVM per (tag, dim), persisted content-addressed under the
-    * JVM tmpdir so a fresh JVM over the same corpus reloads instead of
-    * retraining.
+  /** Train-once/serve-many bounds for the corpus identified by `tag`
+    * ([[ModelCache.trainOnce]]): at most one training pass per JVM per
+    * (tag, dim).
     */
   def cachedModel(corpus: DataFrame, cId: String, cVec: String,
       tag: String, dim: Int = 64, persist: Boolean = true): SqModel =
-    modelCache.getOrElseUpdate(s"${tag}_d$dim") {
-      val key = s"${tag}_d$dim"
-      if (persist) {
-        val path = s"${System.getProperty("java.io.tmpdir")}/graft_sq_model_$key"
-        if (!FsUtil.exists(corpus.sparkSession, s"$path/_SUCCESS"))
-          saveModel(corpus.sparkSession, path,
-            trainModel(corpus, cVec, dim))
-        loadModel(corpus.sparkSession, path)
-      } else trainModel(corpus, cVec, dim)
-    }
+    modelCache.trainOnce(corpus.sparkSession, s"sq_model_${tag}_d$dim",
+      persist, saveModel, loadModel)(trainModel(corpus, cVec, dim))
 
   /** Per-dimension [min, max] in ONE partial-agg pass over slim (d, v)
     * rows. min/max are order- and partition-independent, so the model is
@@ -200,92 +186,70 @@ object SqSearch {
     * weights, bounded exactly like the PQ path; the corpus side stays
     * fully distributed and ships only (id, codes).
     */
-  /** Per-query scan state: for dot, (const = Σ q·lo, w_d = q_d·Δ_d/255)
-    * so approx = const + Σ w_d·code_d; for l2, (0, q) and the dequantized
-    * value lo_d + code_d·Δ_d/255 is compared directly.
-    */
-  private[operators] def affinePrep(q: Array[Float], m: SqModel,
-      l2: Boolean): (Double, Array[Double]) =
-    if (l2) (0.0, q.map(_.toDouble))
-    else {
-      var const = 0.0
-      val w = new Array[Double](m.dim)
-      var d = 0
-      while (d < m.dim) {
-        const += q(d).toDouble * m.lo(d)
-        w(d) = q(d).toDouble * (m.hi(d) - m.lo(d)) / 255.0
-        d += 1
-      }
-      (const, w)
-    }
-
-  /** The approximate score of one code row under [[affinePrep]]'s state
-    * (l2: squared distance to the dequantized row).
-    */
-  private[operators] def affineScore(prep: (Double, Array[Double]),
-      codes: Array[Byte], m: SqModel, l2: Boolean): Double = {
-    val (const, w) = prep
-    var approx = const
-    var d = 0
-    if (l2) {
-      while (d < codes.length) {
-        val c = codes(d) & 0xff
-        val delta = m.hi(d) - m.lo(d)
-        val dv = m.lo(d) + c * delta / 255.0
-        val diff = w(d) - dv
-        approx += diff * diff
-        d += 1
-      }
-    } else {
-      while (d < codes.length) {
-        approx += w(d) * (codes(d) & 0xff)
-        d += 1
-      }
-    }
-    approx
-  }
-
   def sqTopK(
       queries: DataFrame, qId: String, qVec: String,
       corpus: DataFrame, cId: String, cVec: String,
       k: Int, model: SqModel, metric: String = "dot",
       numCandidates: Int = 100, maxQueries: Int = 10000): DataFrame = {
-    VectorSearch.requireNumCandidates(numCandidates)
-    require(k <= numCandidates, s"k=$k exceeds numCandidates=$numCandidates")
     val spark = queries.sparkSession
     import spark.implicits._
-    val dim = model.dim
+    CodeScan.flatTopK(new Affine(model), encode(corpus, cId, cVec, model),
+      queries, qId, qVec, corpus, cId, cVec, k, metric, numCandidates,
+      maxQueries, "sqTopK")
+  }
 
-    val coded = encode(corpus, cId, cVec, model)
-
-    val l2 = metric == "l2"
-    val prepped = PqSearch.collectQueries(queries, qId, qVec, maxQueries,
-        numCandidates, "sqTopK").map { case (id, q) =>
-      require(q.length == dim,
-        s"sqTopK: query vector has ${q.length} dims, model expects $dim")
-      (id, affinePrep(q, model, l2))
-    }
-    val bcQ = spark.sparkContext.broadcast(prepped)
-    val bcM = spark.sparkContext.broadcast(model)
-    val cand = numCandidates
-
-    val candidates = coded.as[(Long, Array[Byte])].mapPartitions { it =>
-      val qs = bcQ.value
-      val m = bcM.value
-      val heaps = qs.map { case (id, _) => (id, new TopKHeap(cand, l2)) }
-      it.foreach { case (mid, codes) =>
-        var qi = 0
-        while (qi < qs.length) {
-          heaps(qi)._2.insert(mid, affineScore(qs(qi)._2, codes, m, l2))
-          qi += 1
+  /** The SQ8 scan kernel, one cell or many (the model is global, so a
+    * cell never changes a score). Per query: for dot, (const = Σ q·lo,
+    * w_d = q_d·Δ_d/255) so approx = const + Σ w_d·code_d; for l2, (0,
+    * q) and the dequantized value lo_d + code_d·Δ_d/255 is compared
+    * directly (squared distance).
+    */
+  private[operators] class Affine(m: SqModel) extends CodeKernel[Array[Byte]] {
+    def width: Int = m.dim
+    def prepare(qVecs: Array[Array[Float]], probes: Array[Array[Int]],
+        metric: String): RowKernel[Array[Byte]] = {
+      val l2 = metric == "l2"
+      val consts = new Array[Double](qVecs.length)
+      val ws = qVecs.indices.toArray.map { qi =>
+        val q = qVecs(qi)
+        if (l2) q.map(_.toDouble)
+        else {
+          val w = new Array[Double](m.dim)
+          var d = 0
+          while (d < m.dim) {
+            consts(qi) += q(d).toDouble * m.lo(d)
+            w(d) = q(d).toDouble * (m.hi(d) - m.lo(d)) / 255.0
+            d += 1
+          }
+          w
         }
       }
-      heaps.iterator.flatMap { case (qid, h) =>
-        (0 until h.n).map(i => (qid, h.ids(i), h.scores(i)))
-      }
-    }.toDF(qId, "match_id", "__approx")
+      new AffineRows(consts, ws, m, l2)
+    }
+  }
 
-    PqSearch.cutAndRerank(candidates, queries, qId, qVec, corpus, cId, cVec,
-      k, metric, numCandidates, l2)
+  private final class AffineRows(consts: Array[Double], ws: Array[Array[Double]],
+      m: SqModel, l2: Boolean) extends RowKernel[Array[Byte]] {
+    def score(qi: Int, cell: Int, codes: Array[Byte]): Double = {
+      val w = ws(qi)
+      var approx = consts(qi)
+      var d = 0
+      if (l2) {
+        while (d < codes.length) {
+          val c = codes(d) & 0xff
+          val delta = m.hi(d) - m.lo(d)
+          val dv = m.lo(d) + c * delta / 255.0
+          val diff = w(d) - dv
+          approx += diff * diff
+          d += 1
+        }
+      } else {
+        while (d < codes.length) {
+          approx += w(d) * (codes(d) & 0xff)
+          d += 1
+        }
+      }
+      approx
+    }
   }
 }

@@ -273,7 +273,7 @@ class TopicCatalog(spark: SparkSession, root: String) {
     partitionFieldOf(name).getOrElse(throw new IllegalArgumentException(
       s"expirePartitions $name: topic has no 'partition.by' config"))
     val topicDir = Paths.get(dir(name))
-    withCompactionLock(name, topicDir) {
+    withCompactionLock(topicDir) {
       recoverCompactions(topicDir)
       val expired = listDir(topicDir).filter { p =>
         val n = p.getFileName.toString
@@ -510,10 +510,12 @@ class TopicCatalog(spark: SparkSession, root: String) {
     * duplicating every record of a plain compaction. Serialization is
     * two-level: a JVM-wide monitor keyed by the topic directory (all
     * catalog instances in one process queue up), plus an on-disk
-    * `.compact.lock` lease (atomic CREATE_NEW; dot-prefixed so readers
-    * skip it) that makes a compactor in ANOTHER process fail fast
-    * instead of corrupting. A crashed compactor's lock expires after
-    * [[TopicCatalog.CompactionLeaseMillis]] and is taken over; its
+    * `.compact.lock` lease (atomic no-overwrite create; dot-prefixed so
+    * readers skip it) that makes a compactor in ANOTHER process fail
+    * fast instead of corrupting ([[withCompactionLock]]). A crashed
+    * compactor's lock expires after
+    * [[graft.operators.IndexMaintenance.CompactionLeaseMillis]] and is
+    * taken over; its
     * staging is then rolled back/forward by [[recoverCompactions]],
     * which only ever runs with the lock held — so an un-manifested
     * staging dir seen there is always dead, never a live peer's.
@@ -522,7 +524,7 @@ class TopicCatalog(spark: SparkSession, root: String) {
       targetFiles: Int): Int = {
     val readSchema = schemaOf(name) // existence check
     val topicDir = Paths.get(dir(name))
-    withCompactionLock(name, topicDir) {
+    withCompactionLock(topicDir) {
       recoverCompactions(topicDir)
       val originals = listJson(topicDir)
       if (originals.isEmpty) { refreshView(name); 0 }
@@ -564,45 +566,17 @@ class TopicCatalog(spark: SparkSession, root: String) {
     }
   }
 
-  /** The two-level single-writer protocol shared by compaction AND
-    * partition expiry (both delete topic files): JVM-wide monitor keyed
-    * by the topic directory, plus the on-disk `.compact.lock` lease
-    * ([[acquireCompactionLock]]) against writers in other processes.
+  /** The single-writer protocol shared by compaction AND partition
+    * expiry (both delete topic files): the index stores' lease
+    * ([[graft.operators.IndexMaintenance.withStoreLock]] — a JVM-wide
+    * monitor keyed by the topic directory, plus the on-disk
+    * `.compact.lock` lease against writers in other processes, taken
+    * over from a crashed holder by rename and released only by its
+    * owner). Topics are local directories, so the lease is a `file:` path.
     */
-  private def withCompactionLock[T](name: String,
-      topicDir: java.nio.file.Path)(body: => T): T =
-    TopicCatalog.compactionMonitor(topicDir).synchronized {
-      val lockFile = topicDir.resolve(".compact.lock")
-      acquireCompactionLock(name, lockFile)
-      try body
-      finally Files.deleteIfExists(lockFile)
-    }
-
-  /** Take the on-disk compaction lease: atomic create wins; an existing
-    * lock younger than the lease means a LIVE compactor in another
-    * process (fail fast — running anyway would corrupt, see
-    * [[runCompaction]]); an older one is a crashed compactor's leftover
-    * and is taken over.
-    */
-  private def acquireCompactionLock(name: String,
-      lockFile: java.nio.file.Path): Unit = {
-    val id = s"${ProcessHandle.current().pid()}\n".getBytes("UTF-8")
-    def tryCreate(): Boolean =
-      try { Files.write(lockFile, id, StandardOpenOption.CREATE_NEW); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    if (tryCreate()) return
-    val age = try
-      System.currentTimeMillis() - Files.getLastModifiedTime(lockFile).toMillis
-    catch { case _: java.io.IOException => Long.MaxValue } // vanished: stale
-    if (age < TopicCatalog.CompactionLeaseMillis)
-      throw new IllegalStateException(
-        s"compaction already in progress on topic $name (lock $lockFile, " +
-          s"age ${age / 1000}s < lease ${TopicCatalog.CompactionLeaseMillis / 1000}s)")
-    Files.deleteIfExists(lockFile) // stale: crashed compactor — take over
-    if (!tryCreate())
-      throw new IllegalStateException(
-        s"compaction already in progress on topic $name (lost lock race)")
-  }
+  private def withCompactionLock[T](topicDir: java.nio.file.Path)(body: => T): T =
+    graft.operators.IndexMaintenance.withStoreLock(spark,
+      s"file:${topicDir.toAbsolutePath.normalize}")(body)
 
   /** Produce a CDC-style tombstone: the record that deletes `key` under
     * keyed compaction. Kafka's tombstone is key + null value; a delete
@@ -669,20 +643,6 @@ class TopicCatalog(spark: SparkSession, root: String) {
 object TopicCatalog {
   /** The implicit Kafka record key on every topic table (README.md:551). */
   val KeyField: StructField = StructField("key", BinaryType, nullable = true)
-
-  /** In-process compaction serialization: one monitor per topic
-    * directory, shared by every catalog instance in the JVM.
-    */
-  private val compactionMonitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private[sources] def compactionMonitor(d: java.nio.file.Path): Object =
-    compactionMonitors.computeIfAbsent(
-      d.toAbsolutePath.normalize.toString, _ => new Object)
-
-  /** A crashed compactor's on-disk `.compact.lock` goes stale (and is
-    * taken over) after this; live compactions here run in seconds.
-    */
-  private[sources] val CompactionLeaseMillis: Long = 10 * 60 * 1000L
 
   /** Derived partition-directory column of a partitioned topic (never in
     * the value schema; `partitionBy` consumes it at write time). The dir

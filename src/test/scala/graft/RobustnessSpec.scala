@@ -41,6 +41,28 @@ class RobustnessSpec extends SparkSpec {
     }
   }
 
+  test("a null element inside a query vector is refused by name, never read as 0") {
+    import graft.operators.{BqSearch, PqSearch, SqSearch}
+    val corpus = vdf(Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f)), (3L, Seq(1f, 1f))))
+    val queries = spark.createDataFrame(java.util.Arrays.asList(
+        org.apache.spark.sql.Row(7L, Seq[java.lang.Float](1f, null))), vecSchema)
+      .select(col("id").as("qid"), col("v").as("qv"))
+    val cb = PqSearch.trainCodebooks(corpus, "id", "v", m = 1, kCodes = 2,
+      iters = 1, dim = 2)
+    val serves = Seq[(String, () => Unit)](
+      "pqTopK" -> (() => PqSearch.pqTopK(queries, "qid", "qv", corpus, "id",
+        "v", 1, cb, "dot", 2, 10).collect()),
+      "sqTopK" -> (() => SqSearch.sqTopK(queries, "qid", "qv", corpus, "id",
+        "v", 1, SqSearch.trainModel(corpus, "v", 2), "dot", 2, 10).collect()),
+      "bqTopK" -> (() => BqSearch.bqTopK(queries, "qid", "qv", corpus, "id",
+        "v", 1, BqSearch.trainModel(corpus, "v", 2), "dot", 2, 10).collect()))
+    for ((who, serve) <- serves) {
+      val e = intercept[IllegalArgumentException](serve())
+      assert(e.getMessage.contains(s"$who: query 7 has a null vector element at index 1"),
+        e.getMessage)
+    }
+  }
+
   test("empty corpus returns zero matches, not an error") {
     val corpus = vdf(Seq.empty)
     val queries = vdf(Seq((1L, Seq(1f, 0f))))

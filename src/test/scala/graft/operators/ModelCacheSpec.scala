@@ -1,14 +1,16 @@
 package graft.operators
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.SparkSession
 
 /** The serve-model cache contract behind [[PqSearch.cachedCodebooks]],
-  * [[SqSearch.cachedModel]] and [[BqSearch.cachedModel]]: overflow in a
-  * long-lived session (many registration-scoped tags) evicts ONLY the
-  * least-recently-used entry — never the whole map, which would dump
-  * every other corpus's hot model and force a retrain storm.
+  * [[SqSearch.cachedModel]], [[BqSearch.cachedModel]] and
+  * [[QualityClassifier.cachedModel]]: overflow in a long-lived session
+  * (many registration-scoped tags) evicts ONLY the least-recently-used
+  * entry — never the whole map, which would dump every other corpus's
+  * hot model and force a retrain storm; a persisted model reloads in a
+  * fresh cache instead of retraining.
   */
-class ModelCacheSpec extends AnyFunSuite {
+class ModelCacheSpec extends graft.SparkSpec {
 
   test("inserting the 65th model keeps the 64 hottest; only the LRU entry leaves") {
     val c = new ModelCache[Int](maxEntries = 64)
@@ -35,5 +37,33 @@ class ModelCacheSpec extends AnyFunSuite {
     assert(c.contains("b") && c.contains("c"))
     assert(c.getOrElseUpdate("a")(train(4)) == 4, "evicted key must retrain")
     assert(runs == 4)
+  }
+
+  test("trainOnce: a persisted model reloads in a fresh cache; persist = false writes nothing") {
+    import spark.implicits._
+    var runs = 0
+    def train(v: Double): Double = { runs += 1; v }
+    def save(s: SparkSession, path: String, v: Double): Unit =
+      Seq(v).toDF("w").write.mode("overwrite").parquet(path)
+    def load(s: SparkSession, path: String): Double =
+      s.read.parquet(path).head().getDouble(0)
+    val name = s"spec_model_${java.util.UUID.randomUUID()}"
+    val dir = new java.io.File(System.getProperty("java.io.tmpdir"), s"graft_$name")
+    try {
+      assert(new ModelCache[Double]().trainOnce(spark, name, persist = true,
+        save, load)(train(2.5)) == 2.5)
+      assert(runs == 1 && new java.io.File(dir, "_SUCCESS").exists,
+        "a persisted model must land complete under the JVM tmpdir")
+      // a fresh cache stands for a fresh JVM: it reloads, never retrains
+      assert(new ModelCache[Double]().trainOnce(spark, name, persist = true,
+        save, load)(train(-1.0)) == 2.5)
+      assert(runs == 1, "a persisted model was retrained")
+      val transient = s"${name}_transient"
+      assert(new ModelCache[Double]().trainOnce(spark, transient,
+        persist = false, save, load)(train(4.0)) == 4.0)
+      assert(runs == 2)
+      assert(!new java.io.File(System.getProperty("java.io.tmpdir"),
+        s"graft_$transient").exists, "persist = false must write no artifact")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 }
